@@ -1765,11 +1765,12 @@ class PostingsIndex:
         version and the fold retries clean. Same stale-replay caveat
         as the band index's compact."""
         from iheardai_data_pipeline_spark.streaming.stores import (
+            OCC_MAX_RETRIES,
             StoreVersionConflict,
         )
 
         ic = self.id_col
-        for _ in range(self._store.max_retries):
+        for _ in range(OCC_MAX_RETRIES):
             v = self._store.current_version()
             doclens = self._store.read("doclens", version=v)
             live = (
@@ -1808,7 +1809,7 @@ class PostingsIndex:
             except StoreVersionConflict:
                 continue  # recompute the snapshot at the new version
         raise RuntimeError(
-            f"compact on {self.path} lost {self._store.max_retries} "
+            f"compact on {self.path} lost {OCC_MAX_RETRIES} "
             "consecutive commit races"
         )
 

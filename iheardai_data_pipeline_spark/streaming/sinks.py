@@ -5,8 +5,9 @@ refreshes the touched-session aggregate, and updates Redis session state
 (enhanced_kpi_consumer.py:137-250). The Spark restatement is one
 ``foreachBatch`` that (a) merges facts, (b) recomputes the per-session
 aggregate for the batch's touched keys, (c) maintains a session-state
-table with a seq guard. Here the stores are parquet snapshots (Delta
-MERGE in production — the functions isolate that choice).
+table with a seq guard. The stores are the OCC parquet backends of
+:mod:`streaming.stores` (Delta MERGE in production — the functions
+isolate that choice).
 """
 
 from __future__ import annotations
@@ -17,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from iheardai_data_pipeline_spark.operators.mutations import merge_upsert
+from iheardai_data_pipeline_spark.streaming.stores import (
+    BucketedTransactionalStore,
+    DeltaMergeStore,
+    TransactionalParquetStore,
+)
 
 
 def harness_checkpoint_dir(prefix: str = "ckpt_") -> str:
@@ -62,44 +67,8 @@ def archive_sink(
     return writer.start()
 
 
-class ParquetUpsertStore:
-    """Keyed parquet snapshot store with last-writer-wins merge — the
-    single-writer test-rig stand-in for a Delta table / Postgres upsert
-    target. For concurrent-writer safety or real MERGE, use the
-    drop-in backends in :mod:`streaming.stores`
-    (``TransactionalParquetStore`` / ``DeltaMergeStore``) — same
-    ``read``/``merge``/``write_snapshot`` interface."""
-
-    def __init__(self, spark: SparkSession, path: str, key_cols: list[str], order_cols: list[str]):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-
-    def read(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
-
-    def merge(self, updates: DataFrame) -> None:
-        current = self.read()
-        if current is None:
-            merged = updates
-        else:
-            merged = merge_upsert(current, updates, self.key_cols, self.order_cols)
-        self.write_snapshot(merged)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        # write-then-swap so a crash never leaves a half-written snapshot
-        # (the input may read from self.path, so materialize to tmp first)
-        tmp = self.path + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-
-
 def session_kpis_foreach_batch(
-    store: ParquetUpsertStore,
+    store: TransactionalParquetStore | BucketedTransactionalStore | DeltaMergeStore,
     user_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
@@ -138,8 +107,8 @@ def session_kpis_foreach_batch(
         # `apply_keyed` (bucketed — the per-user fold is key-local, so
         # only touched buckets rewrite) or `apply` (full snapshot).
         # Either way a lost commit race re-reads and re-merges instead
-        # of clobbering the winner. The plain single-writer store keeps
-        # the read+replace path.
+        # of clobbering the winner. The read+replace branch serves only
+        # DeltaMergeStore, which has no OCC read-modify-write here.
         if hasattr(store, "apply_keyed"):
             # the per-user fold is key-local, so partial rewrites apply
             store.apply_keyed(partial, merge_fn)
@@ -151,7 +120,10 @@ def session_kpis_foreach_batch(
     return apply
 
 
-def session_state_foreach_batch(store: ParquetUpsertStore, seq_col: str = "seq"):
+def session_state_foreach_batch(
+    store: TransactionalParquetStore | BucketedTransactionalStore | DeltaMergeStore,
+    seq_col: str = "seq",
+):
     """J4/K5/W3: per-key mutable session state with a monotonic seq guard
     (reference Redis HSET + seq compare, enhanced_kpi_consumer.py:638-673).
 
@@ -174,7 +146,8 @@ def session_state_foreach_batch(store: ParquetUpsertStore, seq_col: str = "seq")
 
         # OCC stores re-read + re-merge on a lost commit race (see
         # session_kpis_foreach_batch); the seq-guard LWW is key-local,
-        # so the bucketed store's partial rewrite applies too
+        # so the bucketed store's partial rewrite applies too;
+        # DeltaMergeStore takes the read+replace path
         if hasattr(store, "apply_keyed"):
             store.apply_keyed(newest, lambda current, upd: merge_fn(current))
         elif hasattr(store, "apply"):

@@ -1,13 +1,9 @@
 """Pluggable keyed upsert stores for foreachBatch sinks (§3.2, K2/K4/M1-M4).
 
 The reference's upserts are transactional (``ON CONFLICT ... DO UPDATE``
-inside a connection transaction, enhanced_kpi_consumer.py:395-434). The
-rig's original ``ParquetUpsertStore`` (sinks.py) is rewrite-on-merge
-WITHOUT concurrent-writer safety — fine for a single-writer test rig,
-wrong for production. This module closes that gap with two backends
-behind one interface (``read`` / ``merge`` / ``write_snapshot``), plus a
-partial-rewrite variant (:class:`BucketedTransactionalStore`) that
-removes the full-snapshot scale limitation:
+inside a connection transaction, enhanced_kpi_consumer.py:395-434). This
+module provides three backends behind one interface (``read`` /
+``merge`` / ``write_snapshot``), selected by :func:`make_upsert_store`:
 
 - :class:`TransactionalParquetStore` — optimistic concurrency control on
   a plain filesystem: every commit stages a complete snapshot under a
@@ -19,19 +15,22 @@ removes the full-snapshot scale limitation:
   versions, so reads are snapshot-isolated and a crash mid-write leaves
   at most an unreferenced staging dir (cleaned by :meth:`vacuum`).
 
+- :class:`BucketedTransactionalStore` — the same OCC claim, but the key
+  space is hash-bucketed and a merge rewrites ONLY the buckets it
+  touches (the commit manifest inherits untouched buckets by pointer —
+  the same idea as Delta's file-level MERGE), which removes the
+  full-snapshot rewrite that limits the plain store at 100 TB. It is a
+  one-relation view of :class:`MultiRelationTransactionalStore`, the
+  bucketed commit log the indexes use for N relations per commit.
+
 - :class:`DeltaMergeStore` — a real Delta Lake ``MERGE INTO`` when the
   ``delta-spark`` package is installed (it is not in this rig's
   container, so the class import-gates and its test skips; the MERGE
   condition reproduces the same last-writer-wins ordering the parquet
   stores implement).
 
-At 100 TB a full-snapshot rewrite per merge is the scale limitation;
-:class:`BucketedTransactionalStore` closes it on plain parquet by
-hash-bucketing the key space and rewriting ONLY the buckets a merge
-touches (the commit manifest inherits untouched buckets by pointer —
-the same idea as Delta's file-level MERGE). The interface isolates the
-backend choice from the foreachBatch logic, which is identical across
-all of them.
+The interface isolates the backend choice from the foreachBatch logic,
+which is identical across all of them.
 """
 
 from __future__ import annotations
@@ -58,8 +57,13 @@ except ImportError:
 
 
 # -- shared OCC commit-log primitives ----------------------------------------------
-# One implementation of the claim protocol for both parquet stores: any
-# future fix (new OSError case, durability tweak) lands once.
+# One implementation of the claim protocol for both parquet commit logs:
+# any future fix (new OSError case, durability tweak) lands once.
+
+# Consecutive lost commit races a writer retries before giving up. Every
+# retry re-reads the winner's commit, so only a writer starved by
+# unserialized contenders on one store ever reaches the limit.
+OCC_MAX_RETRIES = 10
 
 
 def _occ_current_version(commits_dir: str) -> int:
@@ -108,13 +112,8 @@ def _staged_write_tasks(spark, n_groups: int) -> int:
     non-CPU executor time at batch sizes where the whole write is
     <3 MB — guide §2.2/§6 scale-adaptive partitioning). On a real
     cluster defaultParallelism >= n_groups and the count is identical
-    to the old one-task-per-group shape. Override with
-    SPARK_GRAFT_WRITE_TASKS for deployments where the write tasks
-    should not track scheduler parallelism."""
-    cap = int(os.environ.get("SPARK_GRAFT_WRITE_TASKS", "0"))
-    if cap <= 0:
-        cap = spark.sparkContext.defaultParallelism
-    return max(1, min(n_groups, cap))
+    to the old one-task-per-group shape."""
+    return max(1, min(n_groups, spark.sparkContext.defaultParallelism))
 
 
 # Retired-epoch records are IMMUTABLE once published (write→fsync→
@@ -348,13 +347,11 @@ class TransactionalParquetStore:
         path: str,
         key_cols: list[str],
         order_cols: list[str],
-        max_retries: int = 10,
     ):
         self.spark = spark
         self.path = path
         self.key_cols = key_cols
         self.order_cols = order_cols
-        self.max_retries = max_retries
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
 
@@ -421,7 +418,7 @@ class TransactionalParquetStore:
         loop, so a lost race against a same-epoch twin resolves to
         exactly one merge.
         """
-        for _ in range(self.max_retries):
+        for _ in range(OCC_MAX_RETRIES):
             if epoch is not None and epoch in _occ_committed_epochs(
                 self._commits_dir()
             ):
@@ -437,8 +434,8 @@ class TransactionalParquetStore:
                 os.path.join(self.path, "_snapshots", name), ignore_errors=True
             )
         raise RuntimeError(
-            f"apply on {self.path} lost {self.max_retries} consecutive "
-            f"commit races — raise max_retries or serialize the writers"
+            f"apply on {self.path} lost {OCC_MAX_RETRIES} consecutive "
+            "commit races — serialize the writers"
         )
 
     def merge(self, updates: DataFrame) -> None:
@@ -570,17 +567,12 @@ def make_upsert_store(
     path: str,
     key_cols: list[str],
     order_cols: list[str],
-    fmt: str = "parquet",
+    fmt: str = "parquet_txn",
 ):
-    """Factory over the upsert backends: ``parquet`` (single-writer
-    snapshot rewrite), ``parquet_txn`` (OCC-versioned parquet),
-    ``parquet_bucketed`` (OCC + partial bucket rewrites — the scale
-    path on plain parquet), ``delta`` (real MERGE; raises ImportError
-    where delta-spark is absent)."""
-    if fmt == "parquet":
-        from iheardai_data_pipeline_spark.streaming.sinks import ParquetUpsertStore
-
-        return ParquetUpsertStore(spark, path, key_cols, order_cols)
+    """Factory over the upsert backends: ``parquet_txn`` (OCC-versioned
+    parquet), ``parquet_bucketed`` (OCC + partial bucket rewrites — the
+    scale path on plain parquet), ``delta`` (real MERGE; raises
+    ImportError where delta-spark is absent)."""
     if fmt == "parquet_txn":
         return TransactionalParquetStore(spark, path, key_cols, order_cols)
     if fmt == "parquet_bucketed":
@@ -588,329 +580,6 @@ def make_upsert_store(
     if fmt == "delta":
         return DeltaMergeStore(spark, path, key_cols, order_cols)
     raise ValueError(f"unknown store format {fmt!r}")
-
-
-class BucketedTransactionalStore:
-    """OCC upsert store with PARTIAL rewrites: Delta-style file-level
-    MERGE on plain parquet.
-
-    The plain :class:`TransactionalParquetStore` rewrites the whole
-    snapshot per merge — its documented 100 TB limitation. Here the key
-    space hash-partitions into ``n_buckets``; a merge rewrites ONLY the
-    buckets containing updated keys and the commit marker carries a
-    MANIFEST mapping bucket -> snapshot dir, so untouched buckets are
-    inherited by pointer, never copied. A 1-key update into a 10 TB
-    store rewrites ~1/n_buckets of it. Same exclusive-hard-link commit
-    claim and read-snapshot isolation as the full-snapshot store;
-    conflicts resolve by re-read + re-merge at version granularity.
-
-    Layout under ``path``::
-
-        _meta.json                       {"n_buckets": N} — pinned at
-                                         creation; every writer MUST use
-                                         the same bucketing or merges
-                                         would read the wrong buckets
-        _snapshots/<uuid>/__bucket=NN/   parquet for the buckets that
-                                         version rewrote
-        _commits/<N>                     {"manifest": {"NN": "<uuid>", ...}}
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        order_cols: list[str],
-        n_buckets: int | None = None,
-        max_retries: int = 10,
-    ):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-        self.max_retries = max_retries
-        # Cached parquet file schema of this store's staged files: every
-        # commit writes the same row schema (the merge/fold contract), so
-        # schema inference — a per-`spark.read.parquet` driver cost of
-        # ~100-200ms (footer read + file listing) — needs to run at most
-        # ONCE per store instance; writes prime it for free from the
-        # staged frame (guide §5: keep the driver out of the data path).
-        self._file_schema = None
-        os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-        # n_buckets is part of the on-disk layout: a writer opening an
-        # existing store with a different value would hash keys into the
-        # WRONG buckets and silently duplicate them. The first creator
-        # pins it in _meta.json; later opens inherit (n_buckets=None) or
-        # must match.
-        meta_path = os.path.join(path, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)["n_buckets"]
-            if n_buckets is not None and n_buckets != persisted:
-                raise ValueError(
-                    f"store at {path} was created with n_buckets={persisted}; "
-                    f"got {n_buckets} — pass None to inherit"
-                )
-            self.n_buckets = persisted
-        else:
-            self.n_buckets = 16 if n_buckets is None else n_buckets
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump({"n_buckets": self.n_buckets}, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    self.n_buckets = json.load(fh)["n_buckets"]
-            finally:
-                os.unlink(tmp)
-
-    # -- commit-log primitives (shared protocol, see _occ_* helpers) ----------
-
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def current_version(self) -> int:
-        return _occ_current_version(self._commits_dir())
-
-    def _manifest(self, version: int) -> dict[str, str] | None:
-        marker = os.path.join(self._commits_dir(), str(version))
-        if version <= 0 or not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            return json.load(fh)["manifest"]
-
-    def _try_commit(
-        self, version: int, manifest: dict[str, str], epoch=None
-    ) -> bool:
-        payload: dict = {"manifest": manifest}
-        if epoch is not None:
-            payload["epoch"] = epoch
-        return _occ_try_claim(self._commits_dir(), version, payload)
-
-    def _read_parquet(self, *paths: str) -> DataFrame:
-        """Parquet read with the store's cached file schema (all commits
-        share one row schema — the merge/fold contract — so inference
-        runs at most once per instance; staged writes prime the cache)."""
-        if self._file_schema is None:
-            df = self.spark.read.parquet(*paths)
-            self._file_schema = _nullable_schema(df.schema)
-            return df
-        return self.spark.read.schema(self._file_schema).parquet(*paths)
-
-    # the partition column/dir uses a dunder name so a data column named
-    # "bucket" is never clobbered, and the underscore prefix hides the
-    # dirs from accidental recursive partition discovery
-    def _bucket_path(self, snapshot: str, bucket: str) -> str:
-        return os.path.join(self.path, "_snapshots", snapshot, f"__bucket={bucket}")
-
-    def _written_buckets(self, snapshot: str) -> set[str]:
-        d = os.path.join(self.path, "_snapshots", snapshot)
-        return {
-            e.split("=", 1)[1] for e in os.listdir(d) if e.startswith("__bucket=")
-        }
-
-    def _bucket_expr(self):
-        from pyspark.sql import functions as F
-
-        return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.n_buckets)).cast("int")
-
-    # -- store interface ------------------------------------------------------
-
-    def read(self) -> DataFrame | None:
-        return self.read_version(self.current_version())
-
-    def read_version(self, version: int) -> DataFrame | None:
-        """None for an uncommitted version AND for a committed-empty
-        manifest (zero rows write zero bucket dirs, so there is no
-        parquet schema to surface — callers treat both as 'no rows',
-        and merge()'s first-commit path is semantically identical)."""
-        manifest = self._manifest(version)
-        if not manifest:
-            return None
-        paths = [self._bucket_path(s, b) for b, s in manifest.items()]
-        return self._read_parquet(*paths)
-
-    def read_keys(
-        self, keys: DataFrame, version: int | None = None
-    ) -> DataFrame | None:
-        """Bucket-pruned keyed lookup: scan ONLY the buckets the
-        requested keys hash to, then LEFT SEMI the key set.
-
-        A point lookup in an N-bucket store therefore reads ~1/N of its
-        files — the serving-path read the bucketed layout exists for
-        (the write side already rewrites only touched buckets; this is
-        the symmetric read optimization). The bucket set is a bounded
-        collect (<= n_buckets rows, same bound as apply_keyed); the
-        semi-join's key side is the caller's key set, typically tiny —
-        broadcastable. Returns None when the store is empty or no
-        requested bucket has data (no rows either way).
-        """
-        manifest = self._manifest(
-            self.current_version() if version is None else version
-        )
-        if not manifest:
-            return None
-        kd = keys.select(*self.key_cols).distinct()
-        touched = {
-            str(r["__bucket"])
-            for r in kd.withColumn("__bucket", self._bucket_expr())
-            .select("__bucket")
-            .distinct()
-            .collect()
-        }
-        paths = [
-            self._bucket_path(s, b) for b, s in manifest.items() if b in touched
-        ]
-        if not paths:
-            return None
-        return self._read_parquet(*paths).join(kd, self.key_cols, "left_semi")
-
-    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
-        """OCC partial-rewrite read-modify-write:
-        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``.
-
-        ``fn`` MUST be key-local — a key's output rows derive only from
-        that key's current + update rows (upserts, per-key aggregate
-        folds). That property is what makes restricting ``current`` to
-        the touched buckets exact; a cross-key fn needs the
-        full-snapshot store's ``apply``. A lost commit race re-reads the
-        new base manifest and re-applies ``fn``, so concurrent commits
-        (including to the same bucket) are never lost.
-
-        ``epoch``: idempotent-commit marker, same contract as
-        :meth:`TransactionalParquetStore.apply`.
-        """
-        upd = updates.withColumn("__bucket", self._bucket_expr())
-        # bounded collect: at most n_buckets rows
-        touched = sorted(
-            str(r["__bucket"]) for r in upd.select("__bucket").distinct().collect()
-        )
-        if not touched:
-            return
-        upd_data = upd.drop("__bucket")
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                return
-            base_version = self.current_version()
-            base = self._manifest(base_version) or {}
-            cur_paths = [
-                self._bucket_path(s, b) for b, s in base.items() if b in touched
-            ]
-            current = self._read_parquet(*cur_paths) if cur_paths else None
-            merged = fn(current, upd_data)
-            name = uuid.uuid4().hex
-            self._file_schema = _nullable_schema(merged.schema)
-            (
-                merged.withColumn("__bucket", self._bucket_expr())
-                # co-locate each bucket before partitionBy: ONE file per
-                # rewritten bucket per commit instead of (tasks x buckets)
-                # shards — the bucket-sized shuffle is tiny next to
-                # listing/opening hundreds of micro-files on every
-                # subsequent read. Task count is parallelism-capped
-                # (_staged_write_tasks): same files, fewer write tasks.
-                .repartition(
-                    _staged_write_tasks(self.spark, len(touched)), "__bucket"
-                )
-                .write.partitionBy("__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            # manifest entries come from the dirs the write ACTUALLY
-            # produced: a key-local fn may legitimately empty a touched
-            # bucket (deletion fold), and pointing the manifest at a
-            # nonexistent dir would make every subsequent read() throw
-            written = self._written_buckets(name)
-            manifest = dict(base)
-            for b in touched:
-                if b in written:
-                    manifest[b] = name
-                else:
-                    manifest.pop(b, None)
-            if self._try_commit(base_version + 1, manifest, epoch=epoch):
-                return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(
-            f"apply_keyed on {self.path} lost {self.max_retries} consecutive commit races"
-        )
-
-    def merge(self, updates: DataFrame) -> None:
-        """Partial-rewrite last-writer-wins merge: stage only the touched
-        buckets, inherit the rest from the base manifest by pointer."""
-
-        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
-            if current is None:
-                return last_write_wins(upd, self.key_cols, self.order_cols)
-            return merge_upsert(current, upd, self.key_cols, self.order_cols)
-
-        self.apply_keyed(updates, fn)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        """Full replace: every bucket rewritten into one snapshot dir."""
-        for _ in range(self.max_retries):
-            base_version = self.current_version()
-            name = uuid.uuid4().hex
-            self._file_schema = _nullable_schema(df.schema)
-            (
-                df.withColumn("__bucket", self._bucket_expr())
-                # one file per bucket (see apply_keyed)
-                .repartition(
-                    _staged_write_tasks(self.spark, self.n_buckets), "__bucket"
-                )
-                .write.partitionBy("__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            manifest = {b: name for b in self._written_buckets(name)}
-            if self._try_commit(base_version + 1, manifest):
-                return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(f"write_snapshot on {self.path} lost every commit race")
-
-    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Reclaim snapshot dirs no LIVE manifest references (a dir stays
-        live while ANY retained version's manifest points at one of its
-        buckets — partial rewrites share dirs across versions), plus
-        stale unreferenced staging dirs past the grace period."""
-        import time
-
-        if keep < 1:
-            # see TransactionalParquetStore.vacuum — keep=0 would reset
-            # the store to empty; refuse rather than destroy.
-            raise ValueError(f"vacuum keep must be >= 1, got {keep}")
-        versions = sorted(
-            int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
-        )
-        live = set(versions[-keep:])
-        _occ_retire_epochs(
-            self._commits_dir(), [v for v in versions if v not in live]
-        )
-        referenced: set[str] = set()
-        for v in versions:
-            manifest = self._manifest(v) or {}
-            if v in live:
-                referenced.update(manifest.values())
-            else:
-                os.unlink(os.path.join(self._commits_dir(), str(v)))
-        snaps = os.path.join(self.path, "_snapshots")
-        now = time.time()
-        for name in os.listdir(snaps):
-            if name in referenced:
-                continue
-            p = os.path.join(snaps, name)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= grace_seconds:
-                shutil.rmtree(p, ignore_errors=True)
 
 
 class MultiRelationTransactionalStore:
@@ -924,27 +593,37 @@ class MultiRelationTransactionalStore:
     claim links — and a crash between them leaves the relations
     inconsistent. Here each relation keeps its own key columns and
     bucket hashing, but one commit stages ALL relations' touched
-    buckets under one snapshot dir (``__rel=<name>/__bucket=<NN>``
+    buckets under one snapshot dir (``__rel=<tag>/__bucket=<NN>``
     partition dirs, written by ONE job over the relations' unioned
     frames) and one exclusive hard link publishes a manifest covering
     every relation. Halves the per-batch fixed cost and makes the
     cross-relation state transactional.
 
-    A bucket's manifest entry is a LIST of snapshot dirs (Delta's
-    add-file model): :meth:`append_keyed` — the ingest hot path —
-    stages ONLY the update rows and appends a pointer, so an append
-    commit costs O(batch) however big the store is (reading + rewriting
-    the touched buckets, as :meth:`apply_keyed` folds do, would make
-    every append O(store)). Reads concatenate a bucket's dir list;
-    :meth:`compact` folds each list back to one dir on the maintenance
-    cadence, bounding small-file growth.
+    The key space of each relation hash-partitions into ``n_buckets``,
+    so a key-local fold (:meth:`apply_keyed`) reads and rewrites ONLY
+    the buckets holding updated keys, and the manifest inherits every
+    untouched bucket by pointer: a 1-key update into a 10 TB store
+    rewrites ~1/n_buckets of it. A bucket's manifest entry is a LIST of
+    snapshot dirs (Delta's add-file model): :meth:`append_keyed` — the
+    ingest hot path — stages ONLY the update rows and appends a
+    pointer, so an append commit costs O(batch) however big the store
+    is. Reads concatenate a bucket's dir list; :meth:`compact` folds
+    each list back to one dir on the maintenance cadence, bounding
+    small-file growth.
 
     Layout under ``path``::
 
-        _meta.json                  {"n_buckets": N, "relations": [...]}
-        _snapshots/<uuid>/__rel=<name>/__bucket=<NN>/  touched buckets
+        _meta.json                  {"n_buckets": N, "relations": {name: key_cols}}
+                                    — pinned by the first creator; every
+                                    writer MUST use the same bucketing or
+                                    merges would read the wrong buckets
+        _snapshots/<uuid>/__rel=<tag>/__bucket=<NN>/  touched buckets
         _commits/<N>                {"manifest": {rel: {"NN": ["<uuid>", ...]}},
                                      "epoch": optional idempotence marker}
+
+    A relation's ``<tag>`` is its index among the sorted relation names
+    (the order ``_meta.json`` pins): staging an int partition value is
+    measurably cheaper than staging the name string.
 
     Constraints:
     - every :meth:`apply_keyed` / :meth:`append_keyed` call passes
@@ -963,55 +642,57 @@ class MultiRelationTransactionalStore:
         path: str,
         relations: dict[str, list[str]],
         n_buckets: int | None = None,
-        max_retries: int = 10,
     ):
         if not relations:
             raise ValueError("need at least one relation")
         self.spark = spark
         self.path = path
         self.relations = dict(relations)
-        self.max_retries = max_retries
-        # cached UNION file schema (see BucketedTransactionalStore
-        # _read_parquet): every commit stages the same union schema —
-        # a documented constraint of this store — so per-read footer
-        # inference is pure repeated driver cost; writes prime it
+        self._rel_names = sorted(self.relations)
+        # Cached parquet file schema of the staged files: every commit
+        # stages the same union schema (a documented constraint of this
+        # store), so schema inference — a per-`spark.read.parquet` driver
+        # cost of ~100-200ms (footer read + file listing) — runs at most
+        # ONCE per store instance; writes prime it for free from the
+        # staged frame (guide §5: keep the driver out of the data path).
         self._file_schema = None
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-        # layout constants pinned by the first creator (see
-        # BucketedTransactionalStore: wrong n_buckets = wrong buckets)
+        # n_buckets and the relations are part of the on-disk layout: a
+        # writer opening an existing store with another bucketing would
+        # hash keys into the WRONG buckets and silently duplicate them.
+        # The first creator pins both in _meta.json; later opens inherit
+        # n_buckets (None) or must match, and must name the same
+        # relations with the same keys.
         meta_path = os.path.join(path, "_meta.json")
         want = {
             "n_buckets": 16 if n_buckets is None else n_buckets,
-            "relations": {r: list(k) for r, k in sorted(relations.items())},
+            "relations": {r: list(self.relations[r]) for r in self._rel_names},
         }
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted["relations"] != want["relations"]:
-                raise ValueError(
-                    f"store at {path} has relations {persisted['relations']}; "
-                    f"got {want['relations']}"
-                )
-            if n_buckets is not None and persisted["n_buckets"] != n_buckets:
-                raise ValueError(
-                    f"store at {path} was created with "
-                    f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
-                    "pass None to inherit"
-                )
-            self.n_buckets = persisted["n_buckets"]
-        else:
-            self.n_buckets = want["n_buckets"]
+        if not os.path.exists(meta_path):
             tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as fh:
                 json.dump(want, fh)
             try:
                 os.link(tmp, meta_path)  # exclusive: first creator wins
             except FileExistsError:
-                with open(meta_path) as fh:
-                    self.n_buckets = json.load(fh)["n_buckets"]
+                pass
             finally:
                 os.unlink(tmp)
+        with open(meta_path) as fh:
+            persisted = json.load(fh)
+        if persisted.get("relations") != want["relations"]:
+            raise ValueError(
+                f"store at {path} has relations {persisted.get('relations')}; "
+                f"got {want['relations']}"
+            )
+        if n_buckets is not None and persisted["n_buckets"] != n_buckets:
+            raise ValueError(
+                f"store at {path} was created with "
+                f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
+                "pass None to inherit"
+            )
+        self.n_buckets = persisted["n_buckets"]
 
     # -- commit-log primitives (shared OCC protocol) ---------------------------
 
@@ -1059,9 +740,18 @@ class MultiRelationTransactionalStore:
             payload["epoch"] = epoch
         return _occ_try_claim(self._commits_dir(), version, payload)
 
+    def _snapshot_dir(self, snapshot: str) -> str:
+        return os.path.join(self.path, "_snapshots", snapshot)
+
+    # the partition columns/dirs use dunder names so a data column named
+    # "bucket" is never clobbered, and the underscore prefix hides the
+    # dirs from accidental recursive partition discovery
+    def _rel_dir(self, rel: str) -> str:
+        return f"__rel={self._rel_names.index(rel)}"
+
     def _bucket_path(self, snapshot: str, rel: str, bucket: str) -> str:
         return os.path.join(
-            self.path, "_snapshots", snapshot, f"__rel={rel}", f"__bucket={bucket}"
+            self._snapshot_dir(snapshot), self._rel_dir(rel), f"__bucket={bucket}"
         )
 
     def _read_parquet(self, *paths: str) -> DataFrame:
@@ -1074,35 +764,84 @@ class MultiRelationTransactionalStore:
             return df
         return self.spark.read.schema(self._file_schema).parquet(*paths)
 
-    def _prime_file_schema(self, all_df: DataFrame) -> None:
-        """Derive the union FILE schema from a staged frame: partitionBy
-        moves __rel/__bucket into directory names, so the files hold
-        exactly the remaining columns. Primed BEFORE the commit claim:
-        sound only because every commit stages the same union schema
-        (the class's documented constraint), so a schema from a write
-        that later fails or loses its claim still describes every
-        committed file (ADVICE r14)."""
-        drop = {"__rel", "__bucket"}
-        from pyspark.sql.types import StructType
-
-        self._file_schema = _nullable_schema(
-            StructType([f for f in all_df.schema if f.name not in drop])
-        )
-
-    def _written_buckets(self, snapshot: str, rel: str) -> set[str]:
-        d = os.path.join(self.path, "_snapshots", snapshot, f"__rel={rel}")
-        if not os.path.isdir(d):
-            return set()
-        return {
-            e.split("=", 1)[1] for e in os.listdir(d) if e.startswith("__bucket=")
-        }
-
     def _bucket_expr(self, rel: str):
         from pyspark.sql import functions as F
 
         return F.pmod(
             F.xxhash64(*self.relations[rel]), F.lit(self.n_buckets)
         ).cast("int")
+
+    def _check_relations(self, op: str, frames: dict[str, DataFrame]) -> None:
+        if set(frames) != set(self.relations):
+            raise ValueError(
+                f"{op} needs updates for every relation "
+                f"{self._rel_names}; got {sorted(frames)}"
+            )
+
+    def _stage(
+        self, frames: dict[str, DataFrame], n_groups: int
+    ) -> tuple[str, dict[str, set[str]]]:
+        """Stage every relation's rows under ONE new snapshot dir with
+        ONE Spark write job; returns the dir name and, per relation of
+        the store, the buckets the write actually produced.
+
+        Each (rel, bucket) group is co-located before partitionBy, so a
+        commit writes ONE file per group instead of (tasks x groups)
+        shards — the group-sized shuffle is tiny next to listing and
+        opening hundreds of micro-files on every later read. The task
+        count is parallelism-capped (_staged_write_tasks): same files,
+        fewer write tasks. The file schema cache is primed from the
+        staged frame BEFORE the commit claim: partitionBy moves
+        __rel/__bucket into directory names, so the files hold exactly
+        the remaining columns, and since every commit stages the same
+        union schema (the class's documented constraint) a schema from a
+        write that later fails or loses its claim still describes every
+        committed file (ADVICE r14)."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        parts = [
+            frames[rel]
+            .withColumn("__rel", F.lit(self._rel_names.index(rel)))
+            .withColumn("__bucket", self._bucket_expr(rel))
+            for rel in self._rel_names
+            if rel in frames
+        ]
+        all_df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
+        self._file_schema = _nullable_schema(
+            StructType(
+                [f for f in all_df.schema if f.name not in ("__rel", "__bucket")]
+            )
+        )
+        name = uuid.uuid4().hex
+        (
+            all_df.repartition(
+                _staged_write_tasks(self.spark, n_groups), "__rel", "__bucket"
+            )
+            .write.partitionBy("__rel", "__bucket")
+            .mode("overwrite")
+            .parquet(self._snapshot_dir(name))
+        )
+        written = {}
+        for rel in self._rel_names:
+            d = os.path.join(self._snapshot_dir(name), self._rel_dir(rel))
+            written[rel] = (
+                {
+                    e.split("=", 1)[1]
+                    for e in os.listdir(d)
+                    if e.startswith("__bucket=")
+                }
+                if os.path.isdir(d)
+                else set()
+            )
+        return name, written
+
+    def _drop_snapshot(self, snapshot: str) -> None:
+        shutil.rmtree(self._snapshot_dir(snapshot), ignore_errors=True)
 
     # -- store interface --------------------------------------------------------
 
@@ -1113,7 +852,12 @@ class MultiRelationTransactionalStore:
         postings + forward sequence) pin ``current_version()`` once and
         pass it to every read so a concurrent commit mid-sequence
         cannot split the serve across two states (snapshot isolation
-        is per-read by default, not per-serve)."""
+        is per-read by default, not per-serve).
+
+        None for an uncommitted version AND for a relation the manifest
+        lists no bucket of (zero rows write zero bucket dirs, so there
+        is no parquet schema to surface — callers treat both as 'no
+        rows')."""
         manifest = self._manifest(
             self.current_version() if version is None else version
         )
@@ -1134,8 +878,16 @@ class MultiRelationTransactionalStore:
         broadcast_keys: bool = False,
         version: int | None = None,
     ) -> DataFrame | None:
-        """Bucket-pruned keyed lookup on one relation — identical
-        contract to BucketedTransactionalStore.read_keys.
+        """Bucket-pruned keyed lookup on one relation: scan ONLY the
+        buckets the requested keys hash to, then LEFT SEMI the key set.
+
+        A point lookup in an N-bucket store therefore reads ~1/N of its
+        files — the serving-path read the bucketed layout exists for
+        (the write side already rewrites only touched buckets; this is
+        the symmetric read optimization). The bucket set is a bounded
+        collect (<= n_buckets rows, same bound as apply_keyed). Returns
+        None when the store is empty or no requested bucket has data
+        (no rows either way).
 
         ``prune=False`` skips the touched-bucket collect and lists every
         bucket dir lazily (the LEFT SEMI still filters the rows — the
@@ -1196,98 +948,78 @@ class MultiRelationTransactionalStore:
         )
 
     def apply_keyed(self, updates: dict[str, DataFrame], fn, epoch=None) -> None:
-        """Atomic multi-relation OCC read-modify-write.
+        """Atomic multi-relation OCC partial-rewrite read-modify-write.
 
         ``updates`` maps EVERY relation name to its update frame;
         ``fn(rel, current_touched_or_None, upd) -> merged_touched`` must
-        be key-local per relation (same contract as the single-relation
-        store). One touched-bucket collect, ONE staged write job over
-        all relations, one commit claim. ``epoch`` = idempotent-commit
-        marker (see TransactionalParquetStore.apply).
+        be key-local per relation — a key's output rows derive only from
+        that key's current + update rows (upserts, per-key aggregate
+        folds). That property is what makes restricting ``current`` to
+        the touched buckets exact. One touched-bucket collect, ONE
+        staged write job over all relations, one commit claim. A lost
+        commit race re-reads the new base manifest and re-applies
+        ``fn``, so concurrent commits (including to the same bucket) are
+        never lost. ``epoch`` = idempotent-commit marker (see
+        TransactionalParquetStore.apply).
         """
         from functools import reduce
 
         from pyspark.sql import functions as F
 
-        if set(updates) != set(self.relations):
-            raise ValueError(
-                f"apply_keyed needs updates for every relation "
-                f"{sorted(self.relations)}; got {sorted(updates)}"
-            )
+        self._check_relations("apply_keyed", updates)
         upd = {
             rel: df.withColumn("__bucket", self._bucket_expr(rel))
             for rel, df in updates.items()
         }
         # ONE bounded collect across all relations (<= n_rel * n_buckets)
         tagged = [
-            df.select(F.lit(rel).alias("__rel"), "__bucket").distinct()
+            df.select(
+                F.lit(self._rel_names.index(rel)).alias("__rel"), "__bucket"
+            ).distinct()
             for rel, df in upd.items()
         ]
         touched: dict[str, list[str]] = {rel: [] for rel in self.relations}
         for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
-            touched[r["__rel"]].append(str(r["__bucket"]))
+            touched[self._rel_names[r["__rel"]]].append(str(r["__bucket"]))
         n_touched = sum(len(v) for v in touched.values())
         if n_touched == 0:
             return
         upd_data = {rel: df.drop("__bucket") for rel, df in upd.items()}
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
+        for _ in range(OCC_MAX_RETRIES):
+            if self.epoch_committed(epoch):
                 return
             base_version = self.current_version()
             base = self._manifest(base_version) or {}
-            parts = []
-            for rel in sorted(self.relations):
-                rel_base = base.get(rel, {})
+            merged = {}
+            for rel in self._rel_names:
                 cur_paths = [
                     self._bucket_path(s, rel, b)
-                    for b, names in rel_base.items()
+                    for b, names in base.get(rel, {}).items()
                     if b in touched[rel]
                     for s in names
                 ]
                 current = (
                     self._read_parquet(*cur_paths) if cur_paths else None
                 )
-                merged = fn(rel, current, upd_data[rel])
-                parts.append(
-                    merged.withColumn("__rel", F.lit(rel)).withColumn(
-                        "__bucket", self._bucket_expr(rel)
-                    )
-                )
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                # one file per (rel, bucket) per commit — see
-                # BucketedTransactionalStore.apply_keyed
-                all_df.repartition(
-                    _staged_write_tasks(self.spark, n_touched),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
+                merged[rel] = fn(rel, current, upd_data[rel])
+            name, written = self._stage(merged, n_touched)
+            # manifest entries come from the dirs the write ACTUALLY
+            # produced: a key-local fn may legitimately empty a touched
+            # bucket (deletion fold), and pointing the manifest at a
+            # nonexistent dir would make every subsequent read() throw
             manifest = {rel: dict(base.get(rel, {})) for rel in self.relations}
             for rel in self.relations:
-                written = self._written_buckets(name, rel)
                 for b in touched[rel]:
-                    if b in written:
+                    if b in written[rel]:
                         # a fold REPLACES the bucket's whole dir list
                         manifest[rel][b] = [name]
                     else:
                         manifest[rel].pop(b, None)
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
         raise RuntimeError(
-            f"apply_keyed on {self.path} lost {self.max_retries} consecutive commit races"
+            f"apply_keyed on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
 
     def append_keyed(
@@ -1311,59 +1043,18 @@ class MultiRelationTransactionalStore:
         append duplicates rows (harmless only if the reader's semantics
         tolerate duplicates — the band index's do).
         """
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if set(updates) != set(self.relations):
-            raise ValueError(
-                f"append_keyed needs updates for every relation "
-                f"{sorted(self.relations)}; got {sorted(updates)}"
-            )
-        parts = [
-            updates[rel]
-            .withColumn("__rel", F.lit(rel))
-            .withColumn("__bucket", self._bucket_expr(rel))
-            for rel in sorted(self.relations)
-        ]
-        all_df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        self._check_relations("append_keyed", updates)
+        name, written = self._stage(
+            updates, len(self.relations) * self.n_buckets
         )
-        name = uuid.uuid4().hex
-        self._prime_file_schema(all_df)
-        (
-            # one file per (rel, bucket); the staged data is batch-sized,
-            # so the group count is parallelism-capped (see
-            # _staged_write_tasks — same files, fewer write tasks)
-            all_df.repartition(
-                _staged_write_tasks(
-                    self.spark, len(self.relations) * self.n_buckets
-                ),
-                "__rel",
-                "__bucket",
-            )
-            .write.partitionBy("__rel", "__bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, "_snapshots", name))
-        )
-        written = {
-            rel: self._written_buckets(name, rel) for rel in self.relations
-        }
         if not any(written.values()):
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
             return None
         # the staged dir is version-independent (pure batch rows), so a
         # lost race only re-points the manifest — nothing is re-staged
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                shutil.rmtree(
-                    os.path.join(self.path, "_snapshots", name),
-                    ignore_errors=True,
-                )
+        for _ in range(OCC_MAX_RETRIES):
+            if self.epoch_committed(epoch):
+                self._drop_snapshot(name)
                 return None
             base_version = self.current_version()
             base = self._manifest(base_version) or {}
@@ -1373,11 +1064,9 @@ class MultiRelationTransactionalStore:
                     manifest[rel][b] = manifest[rel].get(b, []) + [name]
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return base_version + 1
-        shutil.rmtree(
-            os.path.join(self.path, "_snapshots", name), ignore_errors=True
-        )
+        self._drop_snapshot(name)
         raise RuntimeError(
-            f"append_keyed on {self.path} lost {self.max_retries} consecutive commit races"
+            f"append_keyed on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
 
     def compact(self, epoch=None) -> None:
@@ -1408,14 +1097,8 @@ class MultiRelationTransactionalStore:
         closure, so a lost race would fold fresh rows against a stale
         snapshot — the caller instead recomputes the closure at the
         new version and calls again."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
+        for _ in range(OCC_MAX_RETRIES):
+            if self.epoch_committed(epoch):
                 return
             base_version = self.current_version()
             if require_version is not None and base_version != require_version:
@@ -1427,9 +1110,8 @@ class MultiRelationTransactionalStore:
             base = self._manifest(base_version) or {}
             if not any(base.get(rel) for rel in self.relations):
                 return
-            parts = []
-            touched = {rel: sorted(base.get(rel, {})) for rel in self.relations}
-            for rel in sorted(self.relations):
+            merged = {}
+            for rel in self._rel_names:
                 rel_base = base.get(rel, {})
                 if not rel_base:
                     continue
@@ -1438,95 +1120,48 @@ class MultiRelationTransactionalStore:
                     for b, names in rel_base.items()
                     for s in names
                 ]
-                current = self._read_parquet(*cur_paths)
-                merged = fn(rel, current, None)
-                parts.append(
-                    merged.withColumn("__rel", F.lit(rel)).withColumn(
-                        "__bucket", self._bucket_expr(rel)
-                    )
-                )
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            n_touched = sum(len(v) for v in touched.values())
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                all_df.repartition(
-                    _staged_write_tasks(self.spark, max(n_touched, 1)),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            manifest = {rel: {} for rel in self.relations}
-            for rel in self.relations:
-                for b in self._written_buckets(name, rel):
-                    manifest[rel][b] = [name]
+                merged[rel] = fn(rel, self._read_parquet(*cur_paths), None)
+            n_touched = sum(len(base.get(rel, {})) for rel in self.relations)
+            name, written = self._stage(merged, n_touched)
+            manifest = {
+                rel: {b: [name] for b in written[rel]} for rel in self.relations
+            }
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
         raise RuntimeError(
-            f"compaction on {self.path} lost {self.max_retries} consecutive commit races"
+            f"compaction on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
 
     def write_snapshot(self, dfs: dict[str, DataFrame]) -> None:
-        """Full replace of EVERY relation in one atomic commit."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if set(dfs) != set(self.relations):
-            raise ValueError(
-                f"write_snapshot needs every relation {sorted(self.relations)}"
-            )
-        for _ in range(self.max_retries):
+        """Full replace of EVERY relation in one atomic commit (replace
+        semantics: a lost race re-stages the same frames)."""
+        self._check_relations("write_snapshot", dfs)
+        for _ in range(OCC_MAX_RETRIES):
             base_version = self.current_version()
-            parts = [
-                df.withColumn("__rel", F.lit(rel)).withColumn(
-                    "__bucket", self._bucket_expr(rel)
-                )
-                for rel, df in sorted(dfs.items())
-            ]
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                all_df.repartition(
-                    _staged_write_tasks(
-                        self.spark, len(self.relations) * self.n_buckets
-                    ),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
+            name, written = self._stage(
+                dfs, len(self.relations) * self.n_buckets
             )
             manifest = {
-                rel: {b: [name] for b in self._written_buckets(name, rel)}
-                for rel in self.relations
+                rel: {b: [name] for b in written[rel]} for rel in self.relations
             }
             if self._try_commit(base_version + 1, manifest):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
         raise RuntimeError(f"write_snapshot on {self.path} lost every commit race")
 
     def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Same retention contract as BucketedTransactionalStore.vacuum;
-        a snapshot dir stays live while ANY retained version's manifest
-        references it from ANY relation."""
+        """Reclaim snapshot dirs no LIVE manifest references — a dir
+        stays live while ANY retained version's manifest points at one
+        of its buckets from ANY relation (partial rewrites and appends
+        share dirs across versions) — plus stale unreferenced staging
+        dirs past the grace period (see TransactionalParquetStore.vacuum
+        for why young unreferenced dirs must survive)."""
         import time
 
         if keep < 1:
+            # see TransactionalParquetStore.vacuum — keep=0 would reset
+            # the store to empty; refuse rather than destroy.
             raise ValueError(f"vacuum keep must be >= 1, got {keep}")
         versions = sorted(
             int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
@@ -1556,3 +1191,91 @@ class MultiRelationTransactionalStore:
                 continue
             if age >= grace_seconds:
                 shutil.rmtree(p, ignore_errors=True)
+
+
+class BucketedTransactionalStore:
+    """Keyed upsert store with PARTIAL rewrites: Delta-style file-level
+    MERGE on plain parquet, as a one-relation view of
+    :class:`MultiRelationTransactionalStore`.
+
+    The plain :class:`TransactionalParquetStore` rewrites the whole
+    snapshot per merge — its documented 100 TB limitation. Here a merge
+    rewrites ONLY the buckets containing updated keys and inherits the
+    rest by pointer (see the multi-relation store for the commit
+    protocol and layout). The store's single relation is named
+    ``rows``, keyed on ``key_cols``; ``order_cols`` orders
+    :meth:`merge`'s last-writer-wins.
+    """
+
+    _REL = "rows"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        key_cols: list[str],
+        order_cols: list[str],
+        n_buckets: int | None = None,
+    ):
+        self.spark = spark
+        self.path = path
+        self.key_cols = key_cols
+        self.order_cols = order_cols
+        self._store = MultiRelationTransactionalStore(
+            spark, path, {self._REL: key_cols}, n_buckets
+        )
+
+    @property
+    def n_buckets(self) -> int:
+        return self._store.n_buckets
+
+    def current_version(self) -> int:
+        return self._store.current_version()
+
+    def _manifest(self, version: int) -> dict[str, list[str]] | None:
+        """{bucket: [snapshot, ...]} of the relation at ``version``."""
+        manifest = self._store._manifest(version)
+        return None if manifest is None else manifest.get(self._REL, {})
+
+    def read(self) -> DataFrame | None:
+        return self._store.read(self._REL)
+
+    def read_version(self, version: int) -> DataFrame | None:
+        return self._store.read(self._REL, version)
+
+    def read_keys(
+        self, keys: DataFrame, version: int | None = None
+    ) -> DataFrame | None:
+        """Bucket-pruned keyed lookup (see
+        :meth:`MultiRelationTransactionalStore.read_keys`)."""
+        return self._store.read_keys(self._REL, keys, version=version)
+
+    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
+        """OCC partial-rewrite read-modify-write:
+        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``.
+        ``fn`` MUST be key-local; a cross-key fn needs the full-snapshot
+        store's ``apply``. ``epoch``: idempotent-commit marker, same
+        contract as :meth:`TransactionalParquetStore.apply`."""
+        self._store.apply_keyed(
+            {self._REL: updates},
+            lambda _rel, current, upd: fn(current, upd),
+            epoch=epoch,
+        )
+
+    def merge(self, updates: DataFrame) -> None:
+        """Partial-rewrite last-writer-wins merge: stage only the touched
+        buckets, inherit the rest from the base manifest by pointer."""
+
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
+            if current is None:
+                return last_write_wins(upd, self.key_cols, self.order_cols)
+            return merge_upsert(current, upd, self.key_cols, self.order_cols)
+
+        self.apply_keyed(updates, fn)
+
+    def write_snapshot(self, df: DataFrame) -> None:
+        """Full replace: every bucket rewritten into one snapshot dir."""
+        self._store.write_snapshot({self._REL: df})
+
+    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
+        self._store.vacuum(keep=keep, grace_seconds=grace_seconds)

@@ -38,7 +38,7 @@ class WarehouseBatchLoader:
     (``target`` = dbtable, ``connector_options`` = sfURL/sfUser/... as
     documented by the connector) with append-only / at-least-once
     delivery (see module doc); any :func:`make_upsert_store` format
-    (``parquet``, ``parquet_txn``, ``parquet_bucketed``, ``delta``)
+    (``parquet_txn``, ``parquet_bucketed``, ``delta``)
     makes ``target`` a local path and gives real keyed-upsert,
     replay-idempotent semantics — the same K2 pattern the coverage doc
     promised for K6.

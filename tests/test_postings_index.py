@@ -229,7 +229,8 @@ def test_serve_reads_only_probed_term_buckets(spark, tmp_path):
     out = idx.topk(_queries(spark, [(0, "dog")]), k=3)
     rows = out.collect()
     assert rows and rows[0]["doc_id"] in (1, 2, 5)
-    files = [f for f in out.inputFiles() if "__rel=postings" in f]
+    rel_dir = f"/{idx._store._rel_dir('postings')}/"
+    files = [f for f in out.inputFiles() if rel_dir in f]
     buckets = {
         f.split("__bucket=")[1].split("/")[0]
         for f in files
@@ -303,7 +304,8 @@ def test_phrase_serve_reads_only_probed_term_buckets(spark, tmp_path):
     )
     rows = out.collect()
     assert rows and rows[0]["doc_id"] in (1, 2)
-    files = [f for f in out.inputFiles() if "__rel=postings" in f]
+    rel_dir = f"/{idx._store._rel_dir('postings')}/"
+    files = [f for f in out.inputFiles() if rel_dir in f]
     buckets = {
         f.split("__bucket=")[1].split("/")[0]
         for f in files

@@ -31,10 +31,10 @@ def test_merge_last_writer_wins_and_versions(spark, tmp_path):
     got = {r["k"]: (r["seq"], r["v"]) for r in st.read().collect()}
     assert got == {"a": (2, "a2"), "b": (1, "b1"), "c": (1, "c1")}
     assert st.current_version() == 2
-    # merge() is UPDATE-PRIORITY (M3 semantics, same as merge_upsert /
-    # ParquetUpsertStore): the updates batch beats the target even on a
-    # lower seq. Seq-GUARDED state maintenance instead goes through
-    # last_write_wins + write_snapshot (session_state_foreach_batch).
+    # merge() is UPDATE-PRIORITY (M3 semantics, same as merge_upsert):
+    # the updates batch beats the target even on a lower seq. Seq-GUARDED
+    # state maintenance instead goes through last_write_wins +
+    # write_snapshot (session_state_foreach_batch).
     st.merge(spark.createDataFrame([("a", 1, "LATEST-BATCH")], SCHEMA))
     assert {r["k"]: r["v"] for r in st.read().collect()}["a"] == "LATEST-BATCH"
 
@@ -252,7 +252,7 @@ def test_bucketed_vacuum_keeps_shared_dirs(spark, tmp_path):
 
     bkt = _bstore(spark, tmp_path, n_buckets=8)
     bkt.merge(spark.createDataFrame([(f"k{i}", 1, f"v{i}") for i in range(40)], SCHEMA))
-    first_name = set(bkt._manifest(1).values()).pop()
+    (first_name,) = {s for names in bkt._manifest(1).values() for s in names}
     bkt.merge(spark.createDataFrame([("k0", 2, "x")], SCHEMA))  # partial rewrite v2
     bkt.vacuum(keep=1, grace_seconds=0.0)
     # v2's manifest still points most buckets at v1's dir: it must survive
@@ -278,6 +278,19 @@ def test_bucketed_n_buckets_pinned_in_meta(spark, tmp_path):
     # an explicit mismatch is an error, not silent corruption
     with pytest.raises(ValueError):
         BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=4)
+
+
+def test_bucketed_refuses_multi_relation_store_path(spark, tmp_path):
+    """A bucketed store opened on a path whose _meta.json pins other
+    relations must refuse it, not inherit n_buckets and misread the
+    foreign manifests."""
+    from iheardai_data_pipeline_spark.streaming.stores import (
+        BucketedTransactionalStore,
+    )
+
+    _multi(spark, tmp_path, n_buckets=4)
+    with pytest.raises(ValueError, match="relations"):
+        BucketedTransactionalStore(spark, str(tmp_path / "m"), ["k"], ["seq"])
 
 
 def test_bucketed_preserves_user_bucket_column(spark, tmp_path):
@@ -498,7 +511,7 @@ def test_multi_relation_read_keys_prunes_buckets(spark, tmp_path):
     assert [r["doc_id"] for r in got.collect()] == [5]
     # the pruned read touches one bucket dir of the bands relation only
     files = got.inputFiles()
-    assert files and all("__rel=bands" in f for f in files)
+    assert files and all(f"/{st._rel_dir('bands')}/" in f for f in files)
     assert len({f.split("__bucket=")[1].split("/")[0] for f in files}) == 1
     # missing key -> None or empty
     missing = st.read_keys(

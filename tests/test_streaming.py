@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from iheardai_data_pipeline_spark.sources.batch import load_table
 from iheardai_data_pipeline_spark.streaming.readers import read_events_stream
 from iheardai_data_pipeline_spark.streaming.sinks import (
-    ParquetUpsertStore,
     archive_sink,
     session_kpis_foreach_batch,
     session_state_foreach_batch,
@@ -23,7 +22,7 @@ from iheardai_data_pipeline_spark.streaming.stores import (
 from iheardai_data_pipeline_spark.streaming.windows import dedup_within_watermark
 
 # every upsert backend must satisfy the same foreachBatch contract
-STORE_BACKENDS = ["parquet", "parquet_txn", "parquet_bucketed"] + (
+STORE_BACKENDS = ["parquet_txn", "parquet_bucketed"] + (
     ["delta"] if HAS_DELTA else []
 )
 
