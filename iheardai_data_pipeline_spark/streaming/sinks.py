@@ -5,9 +5,10 @@ refreshes the touched-session aggregate, and updates Redis session state
 (enhanced_kpi_consumer.py:137-250). The Spark restatement is one
 ``foreachBatch`` that (a) merges facts, (b) recomputes the per-session
 aggregate for the batch's touched keys, (c) maintains a session-state
-table with a seq guard. The stores are the OCC parquet backends of
-:mod:`streaming.stores` (Delta MERGE in production — the functions
-isolate that choice).
+table with a seq guard. The stores are the OCC commit-log views of
+:mod:`streaming.stores`; each sink makes one ``apply_keyed`` call per
+micro-batch, so a lost commit race re-reads and re-merges instead of
+clobbering the winner.
 """
 
 from __future__ import annotations
@@ -18,11 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from iheardai_data_pipeline_spark.streaming.stores import (
-    BucketedTransactionalStore,
-    DeltaMergeStore,
-    TransactionalParquetStore,
-)
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
+
+# the staged type of the KPI money sum, wide enough for any fold of it
+_MONEY = "decimal(38,2)"
 
 
 def harness_checkpoint_dir(prefix: str = "ckpt_") -> str:
@@ -67,8 +67,21 @@ def archive_sink(
     return writer.start()
 
 
+def _stream_epoch(batch_df: DataFrame, epoch_id: int):
+    """Idempotent-commit marker for one foreachBatch call: the batch id,
+    namespaced by the streaming query's id so two streams sharing a
+    store cannot take each other's batches for replays. Spark sets the
+    id as a local property of the thread that runs foreachBatch, and it
+    is stable across restarts from one checkpoint. Outside a stream (a
+    direct call) the marker is the bare batch id."""
+    query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId"
+    )
+    return epoch_id if query_id is None else f"{query_id}:{epoch_id}"
+
+
 def session_kpis_foreach_batch(
-    store: TransactionalParquetStore | BucketedTransactionalStore | DeltaMergeStore,
+    store: BucketedTransactionalStore,
     user_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
@@ -80,6 +93,12 @@ def session_kpis_foreach_batch(
     Batch analog: aggregate the micro-batch per key, then merge into the
     snapshot combining counts/sums/min/max associatively — the streaming
     equivalent of recompute-touched-keys without rereading the base table.
+
+    The fold sums, so a replayed batch would double-count: each commit
+    carries the batch's epoch (see :func:`_stream_epoch`) and a replay
+    is a no-op. The partial and the fold stage the same column types
+    (``bigint`` count, ``decimal(38,2)`` money), as the store requires
+    of every commit.
     """
 
     def merge_fn(current: DataFrame | None, partial: DataFrame) -> DataFrame:
@@ -89,8 +108,8 @@ def session_kpis_foreach_batch(
             current.unionByName(partial)
             .groupBy(user_col)
             .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value_dec").alias("sum_value_dec"),
+                F.sum("n_events").cast("bigint").alias("n_events"),
+                F.sum("sum_value_dec").cast(_MONEY).alias("sum_value_dec"),
                 F.min("started_at_s").alias("started_at_s"),
                 F.max("ended_at_s").alias("ended_at_s"),
             )
@@ -98,30 +117,21 @@ def session_kpis_foreach_batch(
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         partial = batch_df.groupBy(user_col).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col(value_col).cast("decimal(18,2)")).alias("sum_value_dec"),
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum(F.col(value_col).cast("decimal(18,2)"))
+            .cast(_MONEY)
+            .alias("sum_value_dec"),
             F.min(F.unix_seconds(F.col(ts_col))).alias("started_at_s"),
             F.max(F.unix_seconds(F.col(ts_col))).alias("ended_at_s"),
         )
-        # concurrent-writer-safe stores expose an OCC read-modify-write:
-        # `apply_keyed` (bucketed — the per-user fold is key-local, so
-        # only touched buckets rewrite) or `apply` (full snapshot).
-        # Either way a lost commit race re-reads and re-merges instead
-        # of clobbering the winner. The read+replace branch serves only
-        # DeltaMergeStore, which has no OCC read-modify-write here.
-        if hasattr(store, "apply_keyed"):
-            # the per-user fold is key-local, so partial rewrites apply
-            store.apply_keyed(partial, merge_fn)
-        elif hasattr(store, "apply"):
-            store.apply(lambda current: merge_fn(current, partial))
-        else:
-            store.write_snapshot(merge_fn(store.read(), partial))
+        # the per-user fold is key-local, so only touched buckets rewrite
+        store.apply_keyed(partial, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
 
     return apply
 
 
 def session_state_foreach_batch(
-    store: TransactionalParquetStore | BucketedTransactionalStore | DeltaMergeStore,
+    store: BucketedTransactionalStore,
     seq_col: str = "seq",
 ):
     """J4/K5/W3: per-key mutable session state with a monotonic seq guard
@@ -129,7 +139,9 @@ def session_state_foreach_batch(
 
     Each batch keeps only its own max-seq row per key, then merges with
     the store keeping the larger seq — stale updates are dropped exactly
-    like the reference's `seq <= current` check.
+    like the reference's `seq <= current` check. The seq-guard
+    last-write-wins is key-local and idempotent, so the bucketed
+    partial rewrite applies and a replayed batch changes nothing.
     """
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -137,23 +149,14 @@ def session_state_foreach_batch(
 
         newest = last_write_wins(batch_df, store.key_cols, [seq_col])
 
-        def merge_fn(current: DataFrame | None) -> DataFrame:
+        def merge_fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return newest
+                return upd
             return last_write_wins(
-                current.unionByName(newest), store.key_cols, [seq_col]
+                current.unionByName(upd), store.key_cols, [seq_col]
             )
 
-        # OCC stores re-read + re-merge on a lost commit race (see
-        # session_kpis_foreach_batch); the seq-guard LWW is key-local,
-        # so the bucketed store's partial rewrite applies too;
-        # DeltaMergeStore takes the read+replace path
-        if hasattr(store, "apply_keyed"):
-            store.apply_keyed(newest, lambda current, upd: merge_fn(current))
-        elif hasattr(store, "apply"):
-            store.apply(merge_fn)
-        else:
-            store.write_snapshot(merge_fn(store.read()))
+        store.apply_keyed(newest, merge_fn)
 
     return apply
 

@@ -1,36 +1,33 @@
-"""Pluggable keyed upsert stores for foreachBatch sinks (§3.2, K2/K4/M1-M4).
+"""Keyed upsert stores for foreachBatch sinks (§3.2, K2/K4/M1-M4).
 
 The reference's upserts are transactional (``ON CONFLICT ... DO UPDATE``
 inside a connection transaction, enhanced_kpi_consumer.py:395-434). This
-module provides three backends behind one interface (``read`` /
-``merge`` / ``write_snapshot``), selected by :func:`make_upsert_store`:
+module restates them as ONE optimistic-concurrency commit log on a plain
+filesystem, :class:`MultiRelationTransactionalStore`: every commit stages
+its rows under a unique snapshot directory, then atomically claims the
+next version number with an exclusive hard link (``os.link`` fails with
+EEXIST if the version is taken — the same claim primitive Delta's log
+protocol relies on for its ``_delta_log/N.json`` files). A losing writer
+re-reads the new base, re-applies its fold, and retries; readers only
+ever see fully-committed versions, so reads are snapshot-isolated and a
+crash mid-write leaves at most an unreferenced staging dir (reclaimed by
+``vacuum``).
 
-- :class:`TransactionalParquetStore` — optimistic concurrency control on
-  a plain filesystem: every commit stages a complete snapshot under a
-  unique directory, then atomically claims the next version number with
-  an exclusive hard link (``os.link`` fails with EEXIST if the version
-  is taken — the same claim primitive Delta's log protocol relies on for
-  its ``_delta_log/N.json`` files). A losing writer re-reads the new
-  base, re-merges, and retries; readers only ever see fully-committed
-  versions, so reads are snapshot-isolated and a crash mid-write leaves
-  at most an unreferenced staging dir (cleaned by :meth:`vacuum`).
+Two one-relation views of that log serve the keyed upserts, selected by
+:func:`make_upsert_store`:
 
-- :class:`BucketedTransactionalStore` — the same OCC claim, but the key
+- :class:`BucketedTransactionalStore` (``parquet_bucketed``) — the key
   space is hash-bucketed and a merge rewrites ONLY the buckets it
   touches (the commit manifest inherits untouched buckets by pointer —
-  the same idea as Delta's file-level MERGE), which removes the
-  full-snapshot rewrite that limits the plain store at 100 TB. It is a
-  one-relation view of :class:`MultiRelationTransactionalStore`, the
-  bucketed commit log the indexes use for N relations per commit.
+  the same idea as Delta's file-level MERGE).
 
-- :class:`DeltaMergeStore` — a real Delta Lake ``MERGE INTO`` when the
-  ``delta-spark`` package is installed (it is not in this rig's
-  container, so the class import-gates and its test skips; the MERGE
-  condition reproduces the same last-writer-wins ordering the parquet
-  stores implement).
+- :class:`TransactionalParquetStore` (``parquet_txn``) — the same view
+  pinned to ONE bucket: every commit rewrites the whole snapshot, which
+  is what lets :meth:`TransactionalParquetStore.apply` run a fold that
+  is not key-local.
 
-The interface isolates the backend choice from the foreachBatch logic,
-which is identical across all of them.
+Both expose ``read`` / ``merge`` / ``apply_keyed`` / ``write_snapshot``
+/ ``vacuum``, so the foreachBatch logic is identical across them.
 """
 
 from __future__ import annotations
@@ -47,18 +44,15 @@ from iheardai_data_pipeline_spark.operators.mutations import (
     merge_upsert,
 )
 
-try:  # pragma: no cover - exercised only where delta-spark is installed
-    from delta.tables import DeltaTable  # type: ignore
 
-    HAS_DELTA = True
-except ImportError:
-    DeltaTable = None
-    HAS_DELTA = False
+# -- OCC commit-log primitives ------------------------------------------------------
+# MultiRelationTransactionalStore's version listing, epoch bookkeeping
+# and exclusive claim.
 
-
-# -- shared OCC commit-log primitives ----------------------------------------------
-# One implementation of the claim protocol for both parquet commit logs:
-# any future fix (new OSError case, durability tweak) lands once.
+# On-disk layout version, pinned in _meta.json by a store's creator.
+# Every open refuses any other version (and a store without one) instead
+# of guessing how to read it; bump it whenever the layout changes.
+LAYOUT_VERSION = 1
 
 # Consecutive lost commit races a writer retries before giving up. Every
 # retry re-reads the winner's commit, so only a writer starved by
@@ -190,8 +184,9 @@ def _read_epoch_record(path: str) -> list:
 
 
 def _occ_committed_epochs(commits_dir: str) -> set:
-    """Epochs recorded by already-committed versions (see ``apply``'s
-    ``epoch`` param) PLUS epochs retired into ``_epochs/`` by vacuum —
+    """Epochs recorded by already-committed versions (see the ``epoch``
+    param of :meth:`MultiRelationTransactionalStore.apply_keyed`) PLUS
+    epochs retired into ``_epochs/`` by vacuum —
     so the idempotence window is the store's whole history, not just
     the marker-retention window (a replay of an epoch older than
     ``vacuum(keep=...)`` must still no-op, or t15/t17/t19's sum-folds
@@ -317,6 +312,14 @@ def _occ_try_claim(commits_dir: str, version: int, payload: dict) -> bool:
         os.unlink(tmp)
 
 
+def _layout_error(path: str, found) -> ValueError:
+    return ValueError(
+        f"store at {path} has layout version {found}; this code reads "
+        f"layout version {LAYOUT_VERSION} only. Stores of another layout "
+        "are not migrated: rebuild the store from its source."
+    )
+
+
 class StoreVersionConflict(RuntimeError):
     """A writer that pinned ``require_version`` found the store moved
     past it before its attempt could commit. The caller owns the
@@ -324,262 +327,6 @@ class StoreVersionConflict(RuntimeError):
     pinned version, so retrying with the SAME closure would fold fresh
     rows against a stale snapshot (the compact-race hazard) — rebuild
     the snapshot-derived state at the new version, then try again."""
-
-
-class TransactionalParquetStore:
-    """Keyed upsert store with optimistic-concurrency commits on parquet.
-
-    Layout under ``path``::
-
-        _snapshots/<uuid>/   complete parquet snapshot per committed (or
-                             in-flight) version
-        _commits/<N>         content = the snapshot dir name for version N;
-                             created atomically via exclusive hard link
-
-    ``merge`` semantics match :func:`operators.mutations.merge_upsert`
-    last-writer-wins on ``order_cols`` per ``key_cols`` — the reference's
-    ``ON CONFLICT DO UPDATE WHERE excluded.seq > current.seq`` shape.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        order_cols: list[str],
-    ):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-        os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-
-    # -- commit-log primitives ------------------------------------------------
-
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def current_version(self) -> int:
-        """Highest committed version, or 0 if the store is empty."""
-        return _occ_current_version(self._commits_dir())
-
-    def _snapshot_dir(self, version: int) -> str | None:
-        marker = os.path.join(self._commits_dir(), str(version))
-        if not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            name = json.load(fh)["snapshot"]
-        return os.path.join(self.path, "_snapshots", name)
-
-    def _try_commit(
-        self, version: int, snapshot_name: str, epoch=None
-    ) -> bool:
-        payload: dict = {"snapshot": snapshot_name}
-        if epoch is not None:
-            payload["epoch"] = epoch
-        return _occ_try_claim(self._commits_dir(), version, payload)
-
-    def _stage_snapshot(self, df: DataFrame) -> str:
-        name = uuid.uuid4().hex
-        df.write.mode("overwrite").parquet(os.path.join(self.path, "_snapshots", name))
-        return name
-
-    # -- store interface ------------------------------------------------------
-
-    def read(self) -> DataFrame | None:
-        """Latest committed snapshot (snapshot-isolated), or None if empty."""
-        return self.read_version(self.current_version())
-
-    def read_version(self, version: int) -> DataFrame | None:
-        """Time travel: any still-vacuum-retained committed version."""
-        if version <= 0:
-            return None
-        d = self._snapshot_dir(version)
-        return None if d is None else self.spark.read.parquet(d)
-
-    def apply(self, fn, epoch=None) -> None:
-        """OCC read-modify-write: ``fn(current_df_or_None) -> merged_df``.
-
-        The ONLY safe way to compose a merge from the latest state: the
-        loop re-reads the newest committed snapshot and RE-APPLIES ``fn``
-        on every retry, so a writer that loses a commit race folds the
-        winner's changes into its next attempt instead of clobbering
-        them. (A bare read → compute → :meth:`write_snapshot` sequence
-        would retry with its stale result and silently lose the
-        concurrent update.)
-
-        ``epoch`` makes the commit IDEMPOTENT per epoch (Delta's txn
-        appId/version idea): the epoch is recorded in the commit marker,
-        and an apply whose epoch some committed version already carries
-        is a no-op — so a non-idempotent fold (e.g. a CMS sum-merge)
-        replayed by an at-least-once foreachBatch can pass its batch_id
-        and never double-counts. The check re-runs inside the retry
-        loop, so a lost race against a same-epoch twin resolves to
-        exactly one merge.
-        """
-        for _ in range(OCC_MAX_RETRIES):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                return
-            base_version = self.current_version()
-            merged = fn(self.read_version(base_version))
-            name = self._stage_snapshot(merged)
-            if self._try_commit(base_version + 1, name, epoch=epoch):
-                return
-            # lost the race: another writer committed base_version+1 first;
-            # drop our stale staging dir, re-read, re-apply
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(
-            f"apply on {self.path} lost {OCC_MAX_RETRIES} consecutive "
-            "commit races — serialize the writers"
-        )
-
-    def merge(self, updates: DataFrame) -> None:
-        """Transactional last-writer-wins merge with OCC retry."""
-
-        def fn(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                # first commit: still LWW-dedup within the batch itself
-                return last_write_wins(updates, self.key_cols, self.order_cols)
-            return merge_upsert(current, updates, self.key_cols, self.order_cols)
-
-        self.apply(fn)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        """Full-REPLACE commit through the versioned protocol.
-
-        Replace semantics ignore concurrent state by design (the retry
-        re-claims with the same df — last replace wins). For
-        read-modify-write, use :meth:`apply`, never read +
-        ``write_snapshot``.
-        """
-        self.apply(lambda _current: df)
-
-    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Drop snapshots (and markers) older than the newest ``keep``
-        committed versions, plus unreferenced staging dirs older than
-        ``grace_seconds``.
-
-        The grace period exists because an unreferenced directory is not
-        necessarily garbage: a concurrent writer stages its snapshot
-        BEFORE claiming a version, so deleting young unreferenced dirs
-        would corrupt that writer's about-to-commit version. Only dirs
-        that have sat unclaimed longer than any plausible stage-to-commit
-        window are reclaimed (crash leftovers).
-        """
-        import time
-
-        if keep < 1:
-            # keep=0 would unlink every commit marker — silently emptying
-            # the store and restarting the version counter. Vacuum is a
-            # retention tool, not a drop-table; refuse.
-            raise ValueError(f"vacuum keep must be >= 1, got {keep}")
-        versions = sorted(
-            int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
-        )
-        live = versions[-keep:]
-        _occ_retire_epochs(
-            self._commits_dir(), [v for v in versions if v not in live]
-        )
-        referenced = set()
-        for v in versions:
-            d = self._snapshot_dir(v)
-            if v in live and d is not None:
-                referenced.add(os.path.basename(d))
-                continue
-            if d is not None:
-                shutil.rmtree(d, ignore_errors=True)
-            os.unlink(os.path.join(self._commits_dir(), str(v)))
-        snaps = os.path.join(self.path, "_snapshots")
-        now = time.time()
-        for name in os.listdir(snaps):
-            if name in referenced:
-                continue
-            p = os.path.join(snaps, name)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= grace_seconds:
-                shutil.rmtree(p, ignore_errors=True)
-
-
-class DeltaMergeStore:
-    """Delta Lake ``MERGE INTO`` upsert store (requires delta-spark).
-
-    Mirrors reference enhanced_kpi_consumer.py:395-434 (``ON CONFLICT DO
-    UPDATE``): matched rows take the update batch's values, unmatched
-    rows insert — the same UPDATE-PRIORITY semantics as
-    :func:`operators.mutations.merge_upsert`, so the three backends are
-    drop-in interchangeable. (Seq-GUARDED maintenance lives a layer up:
-    session_state_foreach_batch pre-resolves with last_write_wins and
-    calls ``write_snapshot``.) Within the update batch itself, the newest
-    row per key on ``order_cols`` is applied. Delta gives the production
-    properties the parquet stores approximate: file-level MERGE (no full
-    rewrite) and its own OCC on the log.
-    """
-
-    def __init__(
-        self, spark: SparkSession, path: str, key_cols: list[str], order_cols: list[str]
-    ):
-        if not HAS_DELTA:
-            raise ImportError(
-                "delta-spark is not installed; use TransactionalParquetStore "
-                "(same interface, same merge semantics) instead"
-            )
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-
-    def read(self) -> DataFrame | None:
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            return None
-        return self.spark.read.format("delta").load(self.path)
-
-    def merge(self, updates: DataFrame) -> None:
-        # MERGE requires unique keys on the source side: pre-resolve the
-        # batch to its newest row per key (same as merge_upsert's window)
-        resolved = last_write_wins(updates, self.key_cols, self.order_cols)
-        if self.read() is None:
-            resolved.write.format("delta").save(self.path)
-            return
-        tbl = DeltaTable.forPath(self.spark, self.path)
-        on = " AND ".join(f"t.`{k}` = u.`{k}`" for k in self.key_cols)
-        (
-            tbl.alias("t")
-            .merge(resolved.alias("u"), on)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        df.write.format("delta").mode("overwrite").save(self.path)
-
-
-def make_upsert_store(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    fmt: str = "parquet_txn",
-):
-    """Factory over the upsert backends: ``parquet_txn`` (OCC-versioned
-    parquet), ``parquet_bucketed`` (OCC + partial bucket rewrites — the
-    scale path on plain parquet), ``delta`` (real MERGE; raises
-    ImportError where delta-spark is absent)."""
-    if fmt == "parquet_txn":
-        return TransactionalParquetStore(spark, path, key_cols, order_cols)
-    if fmt == "parquet_bucketed":
-        return BucketedTransactionalStore(spark, path, key_cols, order_cols)
-    if fmt == "delta":
-        return DeltaMergeStore(spark, path, key_cols, order_cols)
-    raise ValueError(f"unknown store format {fmt!r}")
 
 
 class MultiRelationTransactionalStore:
@@ -593,7 +340,7 @@ class MultiRelationTransactionalStore:
     claim links — and a crash between them leaves the relations
     inconsistent. Here each relation keeps its own key columns and
     bucket hashing, but one commit stages ALL relations' touched
-    buckets under one snapshot dir (``__rel=<tag>/__bucket=<NN>``
+    buckets under one snapshot dir (``__rel=<tag>/__bucket=<b>``
     partition dirs, written by ONE job over the relations' unioned
     frames) and one exclusive hard link publishes a manifest covering
     every relation. Halves the per-batch fixed cost and makes the
@@ -613,17 +360,34 @@ class MultiRelationTransactionalStore:
 
     Layout under ``path``::
 
-        _meta.json                  {"n_buckets": N, "relations": {name: key_cols}}
+        _meta.json                  {"layout": LAYOUT_VERSION, "n_buckets": N,
+                                     "relations": {name: key_cols}}
                                     — pinned by the first creator; every
                                     writer MUST use the same bucketing or
                                     merges would read the wrong buckets
-        _snapshots/<uuid>/__rel=<tag>/__bucket=<NN>/  touched buckets
-        _commits/<N>                {"manifest": {rel: {"NN": ["<uuid>", ...]}},
+        _snapshots/<uuid>/__rel=<tag>/__bucket=<b>/  touched buckets
+        _commits/<N>                {"manifest": {rel: {"<b>": ["<uuid>", ...]}},
                                      "epoch": optional idempotence marker}
+        _commits/_epochs/           epochs of vacuumed markers (see vacuum)
 
     A relation's ``<tag>`` is its index among the sorted relation names
     (the order ``_meta.json`` pins): staging an int partition value is
-    measurably cheaper than staging the name string.
+    measurably cheaper than staging the name string. ``<b>`` is the
+    bucket number, ``0 <= b < n_buckets``.
+
+    Every open checks the layout version: a ``_meta.json`` with another
+    version or none, and a ``_commits/`` holding markers with no
+    ``_meta.json`` beside it (the full-snapshot store's former layout),
+    are refused with ``ValueError``. Stores of an older layout are not
+    migrated; rebuild them from their source.
+
+    Every commit may carry an ``epoch``, which makes it IDEMPOTENT per
+    epoch (Delta's txn appId/version idea): the epoch is recorded in the
+    commit marker, and a commit whose epoch some committed version
+    already carries is a no-op — so a non-idempotent fold (a sum-merge)
+    replayed by an at-least-once foreachBatch can pass its batch id and
+    never double-counts. The check re-runs inside the retry loop, so a
+    lost race against a same-epoch twin resolves to exactly one commit.
 
     Constraints:
     - every :meth:`apply_keyed` / :meth:`append_keyed` call passes
@@ -656,16 +420,27 @@ class MultiRelationTransactionalStore:
         # ONCE per store instance; writes prime it for free from the
         # staged frame (guide §5: keep the driver out of the data path).
         self._file_schema = None
+        meta_path = os.path.join(path, "_meta.json")
+        commits = os.path.join(path, "_commits")
+        # markers are listed BEFORE the meta is looked for: this layout
+        # publishes _meta.json before its first commit, so markers with
+        # no meta beside them were written by the retired layout
+        if (
+            os.path.isdir(commits)
+            and any(f.isdigit() for f in os.listdir(commits))
+            and not os.path.exists(meta_path)
+        ):
+            raise _layout_error(path, "none (commit markers without _meta.json)")
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
+        os.makedirs(commits, exist_ok=True)
         # n_buckets and the relations are part of the on-disk layout: a
         # writer opening an existing store with another bucketing would
         # hash keys into the WRONG buckets and silently duplicate them.
         # The first creator pins both in _meta.json; later opens inherit
         # n_buckets (None) or must match, and must name the same
         # relations with the same keys.
-        meta_path = os.path.join(path, "_meta.json")
         want = {
+            "layout": LAYOUT_VERSION,
             "n_buckets": 16 if n_buckets is None else n_buckets,
             "relations": {r: list(self.relations[r]) for r in self._rel_names},
         }
@@ -681,6 +456,8 @@ class MultiRelationTransactionalStore:
                 os.unlink(tmp)
         with open(meta_path) as fh:
             persisted = json.load(fh)
+        if persisted.get("layout") != LAYOUT_VERSION:
+            raise _layout_error(path, persisted.get("layout", "none"))
         if persisted.get("relations") != want["relations"]:
             raise ValueError(
                 f"store at {path} has relations {persisted.get('relations')}; "
@@ -753,6 +530,17 @@ class MultiRelationTransactionalStore:
         return os.path.join(
             self._snapshot_dir(snapshot), self._rel_dir(rel), f"__bucket={bucket}"
         )
+
+    def _read_rel(self, manifest: dict, rel: str, buckets=None) -> DataFrame | None:
+        """``rel``'s rows in ``manifest`` (only those of ``buckets``,
+        when given), or None when no bucket dir is listed."""
+        paths = [
+            self._bucket_path(s, rel, b)
+            for b, names in manifest.get(rel, {}).items()
+            if buckets is None or b in buckets
+            for s in names
+        ]
+        return self._read_parquet(*paths) if paths else None
 
     def _read_parquet(self, *paths: str) -> DataFrame:
         """Parquet read with the cached union file schema (all staged
@@ -861,14 +649,7 @@ class MultiRelationTransactionalStore:
         manifest = self._manifest(
             self.current_version() if version is None else version
         )
-        if not manifest or not manifest.get(rel):
-            return None
-        paths = [
-            self._bucket_path(s, rel, b)
-            for b, names in manifest[rel].items()
-            for s in names
-        ]
-        return self._read_parquet(*paths)
+        return self._read_rel(manifest or {}, rel)
 
     def read_keys(
         self,
@@ -917,6 +698,7 @@ class MultiRelationTransactionalStore:
         if not manifest or not manifest.get(rel):
             return None
         kd = keys.select(*self.relations[rel]).distinct()
+        touched = None
         if prune:
             touched = {
                 str(r["__bucket"])
@@ -925,27 +707,14 @@ class MultiRelationTransactionalStore:
                 .distinct()
                 .collect()
             }
-            paths = [
-                self._bucket_path(s, rel, b)
-                for b, names in manifest[rel].items()
-                if b in touched
-                for s in names
-            ]
-        else:
-            paths = [
-                self._bucket_path(s, rel, b)
-                for b, names in manifest[rel].items()
-                for s in names
-            ]
-        if not paths:
+        rows = self._read_rel(manifest, rel, touched)
+        if rows is None:
             return None
         if broadcast_keys:
             from pyspark.sql import functions as F
 
             kd = F.broadcast(kd)
-        return self._read_parquet(*paths).join(
-            kd, self.relations[rel], "left_semi"
-        )
+        return rows.join(kd, self.relations[rel], "left_semi")
 
     def apply_keyed(self, updates: dict[str, DataFrame], fn, epoch=None) -> None:
         """Atomic multi-relation OCC partial-rewrite read-modify-write.
@@ -959,8 +728,8 @@ class MultiRelationTransactionalStore:
         staged write job over all relations, one commit claim. A lost
         commit race re-reads the new base manifest and re-applies
         ``fn``, so concurrent commits (including to the same bucket) are
-        never lost. ``epoch`` = idempotent-commit marker (see
-        TransactionalParquetStore.apply).
+        never lost. ``epoch`` = idempotent-commit marker (see the class
+        docstring).
         """
         from functools import reduce
 
@@ -990,18 +759,10 @@ class MultiRelationTransactionalStore:
                 return
             base_version = self.current_version()
             base = self._manifest(base_version) or {}
-            merged = {}
-            for rel in self._rel_names:
-                cur_paths = [
-                    self._bucket_path(s, rel, b)
-                    for b, names in base.get(rel, {}).items()
-                    if b in touched[rel]
-                    for s in names
-                ]
-                current = (
-                    self._read_parquet(*cur_paths) if cur_paths else None
-                )
-                merged[rel] = fn(rel, current, upd_data[rel])
+            merged = {
+                rel: fn(rel, self._read_rel(base, rel, touched[rel]), upd_data[rel])
+                for rel in self._rel_names
+            }
             name, written = self._stage(merged, n_touched)
             # manifest entries come from the dirs the write ACTUALLY
             # produced: a key-local fn may legitimately empty a touched
@@ -1085,8 +846,11 @@ class MultiRelationTransactionalStore:
         self, fn, epoch=None, require_version: int | None = None
     ) -> None:
         """Run a key-local fold over EVERY populated bucket of every
-        relation (compaction, retention sweeps). Same commit protocol as
-        apply_keyed, but 'touched' = all buckets in the base manifest.
+        relation (compaction, retention sweeps): ``fn(rel, current,
+        None)`` runs once per relation that has rows — never with a
+        None ``current`` — and an empty store commits nothing. Same
+        commit protocol as apply_keyed, but 'touched' = all buckets in
+        the base manifest.
 
         ``require_version``: abort with :class:`StoreVersionConflict`
         (no commit, no retry) if the store's current version is not
@@ -1097,6 +861,29 @@ class MultiRelationTransactionalStore:
         closure, so a lost race would fold fresh rows against a stale
         snapshot — the caller instead recomputes the closure at the
         new version and calls again."""
+
+        def fold(base):
+            merged = {
+                rel: fn(rel, self._read_rel(base, rel), None)
+                for rel in self._rel_names
+                if base.get(rel)
+            }
+            return merged or None
+
+        self._rewrite_all(fold, epoch=epoch, require_version=require_version)
+
+    def write_snapshot(self, dfs: dict[str, DataFrame]) -> None:
+        """Full replace of EVERY relation in one atomic commit (replace
+        semantics: a lost race re-stages the same frames)."""
+        self._check_relations("write_snapshot", dfs)
+        self._rewrite_all(lambda _base: dfs)
+
+    def _rewrite_all(self, fold, epoch=None, require_version=None) -> None:
+        """The full-rewrite commit loop. ``fold(base_manifest)`` returns
+        ``{rel: rows}``, each relation's WHOLE new contents (a relation
+        it leaves out is committed empty), or None to commit nothing. A
+        lost race re-reads the new base and re-runs ``fold``; see
+        :meth:`apply_keyed_all_buckets` for ``require_version``."""
         for _ in range(OCC_MAX_RETRIES):
             if self.epoch_committed(epoch):
                 return
@@ -1108,21 +895,13 @@ class MultiRelationTransactionalStore:
                     "snapshot-derived fold state and retry"
                 )
             base = self._manifest(base_version) or {}
-            if not any(base.get(rel) for rel in self.relations):
+            merged = fold(base)
+            if merged is None:
                 return
-            merged = {}
-            for rel in self._rel_names:
-                rel_base = base.get(rel, {})
-                if not rel_base:
-                    continue
-                cur_paths = [
-                    self._bucket_path(s, rel, b)
-                    for b, names in rel_base.items()
-                    for s in names
-                ]
-                merged[rel] = fn(rel, self._read_parquet(*cur_paths), None)
-            n_touched = sum(len(base.get(rel, {})) for rel in self.relations)
-            name, written = self._stage(merged, n_touched)
+            # one write task per populated bucket; n_buckets for a
+            # relation that has none yet
+            n_groups = sum(len(base.get(rel, ())) or self.n_buckets for rel in merged)
+            name, written = self._stage(merged, n_groups)
             manifest = {
                 rel: {b: [name] for b in written[rel]} for rel in self.relations
             }
@@ -1130,38 +909,30 @@ class MultiRelationTransactionalStore:
                 return
             self._drop_snapshot(name)
         raise RuntimeError(
-            f"compaction on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
+            f"full rewrite of {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
-
-    def write_snapshot(self, dfs: dict[str, DataFrame]) -> None:
-        """Full replace of EVERY relation in one atomic commit (replace
-        semantics: a lost race re-stages the same frames)."""
-        self._check_relations("write_snapshot", dfs)
-        for _ in range(OCC_MAX_RETRIES):
-            base_version = self.current_version()
-            name, written = self._stage(
-                dfs, len(self.relations) * self.n_buckets
-            )
-            manifest = {
-                rel: {b: [name] for b in written[rel]} for rel in self.relations
-            }
-            if self._try_commit(base_version + 1, manifest):
-                return
-            self._drop_snapshot(name)
-        raise RuntimeError(f"write_snapshot on {self.path} lost every commit race")
 
     def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
         """Reclaim snapshot dirs no LIVE manifest references — a dir
         stays live while ANY retained version's manifest points at one
         of its buckets from ANY relation (partial rewrites and appends
         share dirs across versions) — plus stale unreferenced staging
-        dirs past the grace period (see TransactionalParquetStore.vacuum
-        for why young unreferenced dirs must survive)."""
+        dirs past the grace period.
+
+        The grace period exists because an unreferenced directory is not
+        necessarily garbage: a concurrent writer stages its snapshot
+        BEFORE claiming a version, so deleting young unreferenced dirs
+        would corrupt that writer's about-to-commit version. Only dirs
+        that have sat unclaimed longer than any plausible stage-to-commit
+        window are reclaimed (crash leftovers). Epochs of the pruned
+        markers are retired into ``_commits/_epochs/`` first, so
+        retention never shrinks the idempotence window."""
         import time
 
         if keep < 1:
-            # see TransactionalParquetStore.vacuum — keep=0 would reset
-            # the store to empty; refuse rather than destroy.
+            # keep=0 would unlink every commit marker — silently emptying
+            # the store and restarting the version counter. Vacuum is a
+            # retention tool, not a drop-table; refuse.
             raise ValueError(f"vacuum keep must be >= 1, got {keep}")
         versions = sorted(
             int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
@@ -1198,13 +969,15 @@ class BucketedTransactionalStore:
     MERGE on plain parquet, as a one-relation view of
     :class:`MultiRelationTransactionalStore`.
 
-    The plain :class:`TransactionalParquetStore` rewrites the whole
-    snapshot per merge — its documented 100 TB limitation. Here a merge
-    rewrites ONLY the buckets containing updated keys and inherits the
-    rest by pointer (see the multi-relation store for the commit
-    protocol and layout). The store's single relation is named
-    ``rows``, keyed on ``key_cols``; ``order_cols`` orders
-    :meth:`merge`'s last-writer-wins.
+    A merge rewrites ONLY the buckets containing updated keys and
+    inherits the rest by pointer (see the multi-relation store for the
+    commit protocol, the epoch contract and the layout). The store's
+    single relation is named ``rows``, keyed on ``key_cols``;
+    ``order_cols`` orders :meth:`merge`'s last-writer-wins.
+
+    ``merge`` semantics match :func:`operators.mutations.merge_upsert`
+    last-writer-wins on ``order_cols`` per ``key_cols`` — the reference's
+    ``ON CONFLICT DO UPDATE WHERE excluded.seq > current.seq`` shape.
     """
 
     _REL = "rows"
@@ -1253,9 +1026,10 @@ class BucketedTransactionalStore:
     def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
         """OCC partial-rewrite read-modify-write:
         ``fn(current_touched_df_or_None, updates) -> merged_touched_df``.
-        ``fn`` MUST be key-local; a cross-key fn needs the full-snapshot
-        store's ``apply``. ``epoch``: idempotent-commit marker, same
-        contract as :meth:`TransactionalParquetStore.apply`."""
+        ``fn`` MUST be key-local; a cross-key fn needs
+        :meth:`TransactionalParquetStore.apply`. ``epoch``:
+        idempotent-commit marker (see
+        :class:`MultiRelationTransactionalStore`)."""
         self._store.apply_keyed(
             {self._REL: updates},
             lambda _rel, current, upd: fn(current, upd),
@@ -1279,3 +1053,69 @@ class BucketedTransactionalStore:
 
     def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
         self._store.vacuum(keep=keep, grace_seconds=grace_seconds)
+
+
+class TransactionalParquetStore(BucketedTransactionalStore):
+    """Full-snapshot keyed upsert store: a
+    :class:`BucketedTransactionalStore` pinned to ONE bucket, so every
+    commit rewrites the whole relation.
+
+    What the single bucket buys is :meth:`apply`, a read-modify-write
+    whose fold sees the WHOLE current snapshot and so need not be
+    key-local (the t14–t19 streaming sketches merge their bounded
+    state this way). :meth:`apply_keyed` (and so :meth:`merge`) runs
+    through :meth:`apply`, so every call commits a version, as the
+    full-snapshot store always did; every other method is the bucketed
+    view's. A commit whose rows are empty reads back as None, like an
+    empty store.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        key_cols: list[str],
+        order_cols: list[str],
+    ):
+        super().__init__(spark, path, key_cols, order_cols, n_buckets=1)
+
+    def apply(self, fn, epoch=None) -> None:
+        """OCC read-modify-write: ``fn(current_df_or_None) -> merged_df``.
+
+        The ONLY safe way to compose a merge from the latest state: a
+        writer that loses a commit race re-reads the newest committed
+        snapshot and RE-APPLIES ``fn``, so it folds the winner's changes
+        into its next attempt instead of clobbering them. (A bare read →
+        compute → :meth:`write_snapshot` sequence would retry with its
+        stale result and silently lose the concurrent update.) ``epoch``:
+        idempotent-commit marker (see
+        :class:`MultiRelationTransactionalStore`).
+        """
+        store = self._store
+        store._rewrite_all(
+            lambda base: {self._REL: fn(store._read_rel(base, self._REL))},
+            epoch=epoch,
+        )
+
+    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
+        """:meth:`BucketedTransactionalStore.apply_keyed` as a full
+        rewrite: the one bucket is touched by every commit, so the
+        touched-bucket collect job is skipped."""
+        self.apply(lambda current: fn(current, updates), epoch=epoch)
+
+
+def make_upsert_store(
+    spark: SparkSession,
+    path: str,
+    key_cols: list[str],
+    order_cols: list[str],
+    fmt: str = "parquet_txn",
+) -> BucketedTransactionalStore:
+    """Factory over the two views of the commit log: ``parquet_txn``
+    (one bucket, full-snapshot rewrites) and ``parquet_bucketed``
+    (partial bucket rewrites — the scale path)."""
+    if fmt == "parquet_txn":
+        return TransactionalParquetStore(spark, path, key_cols, order_cols)
+    if fmt == "parquet_bucketed":
+        return BucketedTransactionalStore(spark, path, key_cols, order_cols)
+    raise ValueError(f"unknown store format {fmt!r}")

@@ -6,7 +6,7 @@ per-topic warehouse table (chunked, keyed tables). The Spark
 restatement is a foreachBatch-able loader with the same split the Kafka
 reader uses (``streaming/readers.py:read_kafka_stream``): the
 engine-side semantics — in-batch last-write-wins dedup on the key,
-and, for every ``make_upsert_store`` format, exactly-once via the
+and, for both ``make_upsert_store`` formats, exactly-once via the
 stream checkpoint + idempotent keyed merge — are real and tested.
 The ``snowflake`` format is connector-lazy (resolved at write time;
 this rig has no warehouse) and is a plain ``mode('append')`` save:
@@ -37,10 +37,9 @@ class WarehouseBatchLoader:
     ``fmt='snowflake'`` targets the spark-snowflake connector
     (``target`` = dbtable, ``connector_options`` = sfURL/sfUser/... as
     documented by the connector) with append-only / at-least-once
-    delivery (see module doc); any :func:`make_upsert_store` format
-    (``parquet_txn``, ``parquet_bucketed``, ``delta``)
-    makes ``target`` a local path and gives real keyed-upsert,
-    replay-idempotent semantics — the same K2 pattern the coverage doc
+    delivery (see module doc); either :func:`make_upsert_store` format
+    (``parquet_txn``, ``parquet_bucketed``) makes ``target`` a local
+    path and gives real keyed-upsert, replay-idempotent semantics — the same K2 pattern the coverage doc
     promised for K6.
     """
 

@@ -1,6 +1,6 @@
-"""TransactionalParquetStore: OCC commit protocol, snapshot isolation,
-retry-on-conflict, vacuum. The foreachBatch contract itself is covered
-backend-parametrized in test_streaming.py."""
+"""The OCC stores: commit protocol, snapshot isolation,
+retry-on-conflict, vacuum, layout versioning. The foreachBatch contract
+itself is covered backend-parametrized in test_streaming.py."""
 
 from __future__ import annotations
 
@@ -10,9 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iheardai_data_pipeline_spark.streaming.stores import (
-    HAS_DELTA,
     BucketedTransactionalStore,
-    DeltaMergeStore,
     TransactionalParquetStore,
 )
 
@@ -33,8 +31,8 @@ def test_merge_last_writer_wins_and_versions(spark, tmp_path):
     assert st.current_version() == 2
     # merge() is UPDATE-PRIORITY (M3 semantics, same as merge_upsert):
     # the updates batch beats the target even on a lower seq. Seq-GUARDED
-    # state maintenance instead goes through last_write_wins +
-    # write_snapshot (session_state_foreach_batch).
+    # state maintenance instead folds with last_write_wins in
+    # apply_keyed (session_state_foreach_batch).
     st.merge(spark.createDataFrame([("a", 1, "LATEST-BATCH")], SCHEMA))
     assert {r["k"]: r["v"] for r in st.read().collect()}["a"] == "LATEST-BATCH"
 
@@ -47,10 +45,10 @@ def test_first_commit_dedups_within_batch(spark, tmp_path):
 
 
 def test_commit_claim_is_exclusive(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    assert st._try_commit(1, "snap-a")
-    assert not st._try_commit(1, "snap-b")  # version already owned
-    assert st._try_commit(2, "snap-c")
+    log = _store(spark, tmp_path)._store  # the commit log under the view
+    assert log._try_commit(1, {"rows": {"0": ["snap-a"]}})
+    assert not log._try_commit(1, {"rows": {"0": ["snap-b"]}})  # version already owned
+    assert log._try_commit(2, {"rows": {"0": ["snap-c"]}})
 
 
 def test_lost_race_retries_against_new_base(spark, tmp_path):
@@ -63,17 +61,17 @@ def test_lost_race_retries_against_new_base(spark, tmp_path):
 
     # interleave: while A is mid-merge (after reading its base, before
     # committing), B commits — A's first claim must fail and retry
-    real_stage = a._stage_snapshot
+    real_stage = a._store._stage
     fired = []
 
-    def stage_with_interleaved_writer(df):
-        name = real_stage(df)  # A's snapshot of the OLD base is staged
+    def stage_with_interleaved_writer(frames, n_groups):
+        staged = real_stage(frames, n_groups)  # A's snapshot of the OLD base is staged
         if not fired:
             fired.append(True)
             b.merge(spark.createDataFrame([("b", 1, "from-b")], SCHEMA))
-        return name
+        return staged
 
-    a._stage_snapshot = stage_with_interleaved_writer
+    a._store._stage = stage_with_interleaved_writer
     a.merge(spark.createDataFrame([("a", 2, "from-a")], SCHEMA))
     got = {r["k"]: r["v"] for r in a.read().collect()}
     assert got == {"a": "from-a", "b": "from-b"}  # neither write lost
@@ -119,17 +117,6 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     assert st.read().collect()[0]["v"] == "v2"  # store untouched by refusal
 
 
-@pytest.mark.skipif(not HAS_DELTA, reason="delta-spark not installed in this rig")
-def test_delta_merge_backend(spark, tmp_path):  # pragma: no cover
-    st = DeltaMergeStore(spark, str(tmp_path / "d"), ["k", "seq"], ["seq"])
-    st.merge(spark.createDataFrame([("a", 1, "a1")], SCHEMA))
-    st.merge(spark.createDataFrame([("a", 2, "a2"), ("b", 1, "b1")], SCHEMA))
-    # update-priority: the newest batch's row replaces the match
-    st.merge(spark.createDataFrame([("a", 2, "a2x")], SCHEMA))
-    got = {(r["k"], r["seq"]): r["v"] for r in st.read().collect()}
-    assert got == {("a", 1): "a1", ("a", 2): "a2x", ("b", 1): "b1"}
-
-
 def test_apply_rereads_and_remerges_on_lost_race(spark, tmp_path):
     """A read-modify-write that loses the commit race must fold the
     winner's commit into its retry — the lost-update scenario a bare
@@ -166,7 +153,9 @@ def test_vacuum_grace_spares_inflight_staging(spark, tmp_path):
     st = _store(spark, tmp_path)
     st.merge(spark.createDataFrame([("a", 1, "v1")], SCHEMA))
     # simulate another writer's staged-but-not-yet-committed snapshot
-    inflight = st._stage_snapshot(spark.createDataFrame([("b", 1, "bv")], SCHEMA))
+    inflight, _ = st._store._stage(
+        {"rows": spark.createDataFrame([("b", 1, "bv")], SCHEMA)}, 1
+    )
     st.vacuum(keep=1)  # default grace: the young dir must survive
     snaps = os.path.join(st.path, "_snapshots")
     assert inflight in os.listdir(snaps)
@@ -816,7 +805,7 @@ def test_retired_epochs_fold_to_one_record_and_survive_cold_cache(
     for ep in range(1, 7):
         st.apply(fn, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-5 together
-    epochs_dir = _os.path.join(st._commits_dir(), "_epochs")
+    epochs_dir = _os.path.join(st._store._commits_dir(), "_epochs")
     records = [f for f in _os.listdir(epochs_dir) if not f.startswith(".")]
     assert len(records) == 1  # folded, not one file per epoch
     # simulate a fresh process: drop the in-process cache entirely
@@ -1006,7 +995,7 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     got = sorted(tuple(r) for r in store.read().collect())
     assert got == sorted(all_rows)
     # every epoch committed exactly once, 8 commits total
-    commits_dir = store._commits_dir()
+    commits_dir = store._store._commits_dir()
     epochs = []
     for f in _os.listdir(commits_dir):
         if f.isdigit():
@@ -1018,3 +1007,62 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
         f"w{w}-{b}" for w in (1, 2) for b in range(4)
     )
     assert store.current_version() == 8
+
+
+# --- layout versioning ---------------------------------------------------------------
+
+
+def test_open_refuses_store_without_layout_version(spark, tmp_path):
+    """A _meta.json without a layout version (written before the layout
+    was versioned) is refused, naming the path and both versions."""
+    import json
+    import os
+
+    from iheardai_data_pipeline_spark.streaming import stores as st_mod
+
+    path = str(tmp_path / "unversioned")
+    os.makedirs(path)
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        json.dump({"n_buckets": 4, "relations": {"rows": ["k"]}}, fh)
+    with pytest.raises(ValueError, match="layout version none") as err:
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert path in str(err.value)
+    assert f"layout version {st_mod.LAYOUT_VERSION} only" in str(err.value)
+
+
+def test_open_refuses_unknown_layout_version(spark, tmp_path):
+    import json
+    import os
+
+    from iheardai_data_pipeline_spark.streaming import stores as st_mod
+
+    path = str(tmp_path / "future")
+    os.makedirs(path)
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        json.dump({"layout": 999, "n_buckets": 4, "relations": {"rows": ["k"]}}, fh)
+    with pytest.raises(ValueError, match="layout version 999") as err:
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert path in str(err.value)
+    assert f"layout version {st_mod.LAYOUT_VERSION} only" in str(err.value)
+
+
+def test_open_refuses_commit_markers_without_meta(spark, tmp_path):
+    """The retired full-snapshot layout (``_commits/<N>`` markers naming
+    a snapshot dir, no ``_meta.json``) is refused by either view — not
+    stamped with a fresh _meta.json and then misread."""
+    import json
+    import os
+
+    path = str(tmp_path / "retired")
+    os.makedirs(os.path.join(path, "_commits"))
+    os.makedirs(os.path.join(path, "_snapshots", "abc"))
+    with open(os.path.join(path, "_commits", "1"), "w") as fh:
+        json.dump({"snapshot": "abc"}, fh)
+    for view in (
+        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
+        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
+    ):
+        with pytest.raises(ValueError, match="without _meta.json") as err:
+            view()
+        assert path in str(err.value)
+    assert not os.path.exists(os.path.join(path, "_meta.json"))

@@ -14,17 +14,11 @@ from iheardai_data_pipeline_spark.streaming.sinks import (
     session_kpis_foreach_batch,
     session_state_foreach_batch,
 )
-from iheardai_data_pipeline_spark.streaming.stores import (
-    HAS_DELTA,
-    TransactionalParquetStore,
-    make_upsert_store,
-)
+from iheardai_data_pipeline_spark.streaming.stores import make_upsert_store
 from iheardai_data_pipeline_spark.streaming.windows import dedup_within_watermark
 
 # every upsert backend must satisfy the same foreachBatch contract
-STORE_BACKENDS = ["parquet_txn", "parquet_bucketed"] + (
-    ["delta"] if HAS_DELTA else []
-)
+STORE_BACKENDS = ["parquet_txn", "parquet_bucketed"]
 
 
 def test_t5_watermark_dedup(spark, sf_dir, tmp_path):
@@ -105,3 +99,84 @@ def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
     fb(b2, 1)
     got = {r["session_id"]: (r["seq"], r["stage"]) for r in store.read().collect()}
     assert got == {"s1": (3, "engaged"), "s2": (5, "converted")}
+
+
+def _kpi_batch(spark, rows):
+    """(user_id, epoch seconds, value) rows as an events micro-batch."""
+    return spark.createDataFrame(
+        rows, "user_id string, t long, value double"
+    ).withColumn("ts", F.timestamp_seconds("t"))
+
+
+def _kpis(store):
+    return {
+        r["user_id"]: (r["n_events"], float(r["sum_value_dec"]))
+        for r in store.read().collect()
+    }
+
+
+@pytest.mark.parametrize("fmt", STORE_BACKENDS)
+def test_foreachbatch_session_kpis_replay_is_exactly_once(spark, tmp_path, fmt):
+    """foreachBatch is at-least-once: a batch replayed after a crash
+    must not add its counts and money to the summed KPIs a second time."""
+    store = make_upsert_store(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt=fmt
+    )
+    fb = session_kpis_foreach_batch(store)
+    fb(_kpi_batch(spark, [("u0", 100, 1.25)]), 0)
+    b1 = _kpi_batch(spark, [("u0", 200, 2.0), ("u1", 150, 0.5)])
+    fb(b1, 1)
+    assert _kpis(store) == {"u0": (2, 3.25), "u1": (1, 0.5)}
+    fb(b1, 1)  # the replay
+    assert _kpis(store) == {"u0": (2, 3.25), "u1": (1, 0.5)}
+    assert store.current_version() == 2
+
+
+@pytest.mark.parametrize("fmt", STORE_BACKENDS)
+def test_foreachbatch_session_kpis_second_handle_reads_every_commit(
+    spark, tmp_path, fmt
+):
+    """Every KPI commit stages the same column types, so a second handle
+    that read (and cached the file schema of) the store after the first
+    commit still reads it after the fold of the second."""
+    path = str(tmp_path / "kpis")
+    store = make_upsert_store(spark, path, ["user_id"], ["ended_at_s"], fmt=fmt)
+    fb = session_kpis_foreach_batch(store)
+    fb(_kpi_batch(spark, [("u0", 100, 1.25)]), 0)
+    reader = make_upsert_store(spark, path, ["user_id"], ["ended_at_s"], fmt=fmt)
+    assert _kpis(reader) == {"u0": (1, 1.25)}
+    fb(_kpi_batch(spark, [("u0", 200, 2.0)]), 1)
+    assert _kpis(reader) == {"u0": (2, 3.25)}
+
+
+def test_foreachbatch_session_kpis_streams_sharing_a_store(spark, tmp_path):
+    """Two streams folding into ONE KPI store both start at batch id 0:
+    their epochs are namespaced by query id, so neither stream's batch
+    is skipped as a replay of the other's."""
+    import json
+
+    store = make_upsert_store(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"],
+        fmt="parquet_bucketed",
+    )
+    fb = session_kpis_foreach_batch(store)
+    for w, rows in ((1, [("u0", 100, 1.25)]), (2, [("u0", 200, 2.0)])):
+        src = str(tmp_path / f"src{w}")
+        _kpi_batch(spark, rows).write.parquet(src)
+        (
+            spark.readStream.schema("user_id string, t long, value double, ts timestamp")
+            .parquet(src)
+            .writeStream.foreachBatch(fb)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / f"ckpt{w}"))
+            .start()
+            .awaitTermination()
+        )
+    assert _kpis(store) == {"u0": (2, 3.25)}
+    commits = store._store._commits_dir()
+    epochs = []
+    for f in sorted(os.listdir(commits)):
+        if f.isdigit():
+            with open(os.path.join(commits, f)) as fh:
+                epochs.append(json.load(fh)["epoch"])
+    assert len(set(epochs)) == 2 and all(e.endswith(":0") for e in epochs)
