@@ -45,7 +45,7 @@ Query anatomy (:meth:`topk`), at any corpus size:
    constant, never a Spark job),
 2. read ONLY the ``nprobe`` probed clusters' code buckets
    (``read_keys`` bucket pruning — the 100 TB layout; rig-small
-   layouts scan-all per the shared ``_prune_probes`` rule),
+   layouts scan-all per the store's ``prunes_probes`` rule),
 3. ADC-rank those codes against the query's m x k lookup table
    (``pq_adc_topk`` — the identical fold the in-memory path runs),
 4. fetch the shortlist's vectors from the SAME probed buckets and
@@ -75,14 +75,13 @@ for point reads; here the key is the IVF list).
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iheardai_data_pipeline_spark.operators.mutations import latest_live
 from iheardai_data_pipeline_spark.operators.pq import (
     normalize_rows,
     pq_adc_topk,
@@ -94,6 +93,8 @@ from iheardai_data_pipeline_spark.operators.similarity import (
 from iheardai_data_pipeline_spark.sources.batch import eval_once
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    WriteOnceFlag,
+    pin_index_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON (same contract as
@@ -135,21 +136,13 @@ class PersistentAnnIndex:
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
-        meta_path = os.path.join(path, "_ann_meta.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"no ANN index at {path} — build one with bootstrap()"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("format") != FORMAT_VERSION:
-            old = meta.get("format", "1 (pre-versioned, unversioned rows)")
-            raise ValueError(
-                f"ANN index at {path} uses on-disk format {old}; this "
-                f"build reads format {FORMAT_VERSION}. Rebuild the index "
-                "(bootstrap a fresh path) — opening would mix row "
-                "schemas and drop pre-upgrade rows from serving."
-            )
+        meta = pin_index_meta(
+            path,
+            "_ann_meta.json",
+            {"format": FORMAT_VERSION},
+            "ANN index",
+            publish=False,
+        )
         self.centroids: list[list[float]] = meta["centroids"]
         self.books: list[list[list[float]]] = meta["books"]
         self._store = MultiRelationTransactionalStore(
@@ -162,11 +155,11 @@ class PersistentAnnIndex:
             },
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
         # tombstone fast-path flag — see MinHashBandIndex (append-only
         # serving pays zero for the delete capability until one happens)
-        self._flag_path = os.path.join(path, "_has_tombstones")
+        self._has_tombstones = WriteOnceFlag(
+            os.path.join(path, "_has_tombstones")
+        )
 
     @classmethod
     def bootstrap(
@@ -185,8 +178,8 @@ class PersistentAnnIndex:
         tools/regen_ann_artifacts.py's recipe or inject the shipped
         plans/ann_artifact.py constants) and index the corpus.
 
-        Race/retry semantics: the meta file is claimed with an
-        exclusive link (first creator wins). A caller that LOSES the
+        Race/retry semantics: the meta file is published once (first
+        creator wins, see ``pin_index_meta``). A caller that LOSES the
         race (or retries after a crash) with IDENTICAL artifacts
         proceeds — the corpus append is guarded by a fixed bootstrap
         epoch, so whichever caller commits first wins and every other
@@ -197,31 +190,20 @@ class PersistentAnnIndex:
         did not supply. Concurrent bootstraps with equal artifacts but
         different corpora are caller error (bootstrap is one-time;
         use :meth:`append` for additional batches)."""
-        os.makedirs(path, exist_ok=True)
-        meta = {
-            "format": FORMAT_VERSION,
-            "centroids": [[float(x) for x in v] for v in centroids],
-            "books": [
-                [[float(x) for x in c] for c in book] for book in books
-            ],
-        }
-        meta_path = os.path.join(path, "_ann_meta.json")
-        tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        try:
-            os.link(tmp, meta_path)  # exclusive: first creator wins
-        except FileExistsError:
-            with open(meta_path) as fh:
-                existing = json.load(fh)
-            if existing != meta:
-                raise ValueError(
-                    f"ANN index at {path} already exists with different "
-                    "artifacts — refusing to append a corpus encoded "
-                    "against codebooks the index was not built with"
-                )
-        finally:
-            os.unlink(tmp)
+        pin_index_meta(
+            path,
+            "_ann_meta.json",
+            {
+                "format": FORMAT_VERSION,
+                "centroids": [[float(x) for x in v] for v in centroids],
+                "books": [
+                    [[float(x) for x in c] for c in book] for book in books
+                ],
+            },
+            "ANN index",
+            "different artifacts: refusing to append a corpus encoded "
+            "against codebooks the index was not built with",
+        )
         idx = cls(spark, path, id_col, vec_col, n_buckets=n_buckets)
         idx.append(corpus, epoch="__bootstrap__")
         return idx
@@ -256,7 +238,7 @@ class PersistentAnnIndex:
         only the touched buckets (the key frame is nprobe literal rows
         — the touched-bucket collect is a constant-size local job);
         scan-all layouts read every dir and let the filter prune."""
-        if self._prune_probes:
+        if self._store.prunes_probes:
             keys = self.spark.createDataFrame(
                 [(int(i),) for i in probe_ids], "centroid_id int"
             )
@@ -266,41 +248,19 @@ class PersistentAnnIndex:
             return None
         return rows.filter(F.col("centroid_id").isin(probe_ids))
 
-    @property
-    def _has_tombstones(self) -> bool:
-        return os.path.exists(self._flag_path)
-
-    def _latest_live(self, rows: DataFrame, cols: list[str]) -> DataFrame:
-        """LWW collapse per id: greatest seq wins, tombstone wins ties
-        (delete-biased — the conservative retraction-race resolution);
-        returns live rows projected to ``cols``. Exact under pruned
+    def _serving(self, rel: str, probe_ids: list[int]) -> DataFrame | None:
+        """The live rows of ``rel`` in the probed clusters: raw
+        versioned rows on the append-only fast path, LWW-collapsed once
+        any delete has happened. The collapse is exact under pruned
         reads: a tombstone lands in the SAME cluster bucket as the
         version it kills (the ids-relation lookup in :meth:`delete`),
         so whatever clusters a probe reads, every stale row it sees is
         accompanied by its killer."""
-        ic = self.id_col
-        order = F.struct(
-            F.col("seq"), F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1))
-        )
-        payload = [c for c in cols if c != ic]
-        if "live" not in payload:
-            payload.append("live")
-        latest = rows.groupBy(ic).agg(
-            F.max_by(F.struct(*payload), order).alias("s")
-        )
-        return latest.filter(F.col("s.live")).select(
-            ic, *[F.col(f"s.{c}").alias(c) for c in cols if c != ic]
-        )
-
-    def _serving(self, rel: str, probe_ids: list[int]) -> DataFrame | None:
-        """The live rows of ``rel`` in the probed clusters: raw
-        versioned rows on the append-only fast path, LWW-collapsed once
-        any delete has happened."""
         rows = self._read_probed(rel, probe_ids)
         if rows is None or not self._has_tombstones:
             return rows
         payload = "codes" if rel == "codes" else self.vec_col
-        return self._latest_live(rows, [self.id_col, payload, "centroid_id"])
+        return latest_live(rows, [self.id_col], [payload, "centroid_id"])
 
     def _stamped(self, assigned: DataFrame, codes: DataFrame, seq: int) -> dict:
         """All three relations' rows for one batch with the LWW version
@@ -350,20 +310,12 @@ class PersistentAnnIndex:
         stale-replay-after-compaction caveat as the sibling indexes).
         Deleting an unknown id is a no-op."""
         ic = self.id_col
-        try:
-            with open(self._flag_path, "x"):
-                pass
-        except FileExistsError:
-            pass
+        self._has_tombstones.set()
         key_frame = ids.select(ic)
-        lookup = (
-            self._store.read_keys("ids", key_frame)
-            if self._prune_probes
-            else self._store.read("ids")
-        )
+        lookup = self._store.read_probe("ids", key_frame)
         if lookup is None:
             return
-        old = self._latest_live(lookup, [ic, "centroid_id"]).join(
+        old = latest_live(lookup, [ic], ["centroid_id"]).join(
             F.broadcast(key_frame), ic, "left_semi"
         )
         s = F.lit(seq).cast("long").alias("seq")
@@ -604,20 +556,20 @@ class PersistentAnnIndex:
 
         # -- 3. probed codes (bounded key frame: <= n_centroids rows) -----
         probe_keys = exploded.select("centroid_id").distinct()
-        if self._prune_probes:
-            codes = self._store.read_keys(
-                "codes", probe_keys, broadcast_keys=True
-            )
-        else:
-            codes = self._store.read("codes")
-            if codes is not None:
-                codes = codes.join(
-                    F.broadcast(probe_keys), "centroid_id", "left_semi"
-                )
+
+        def probed(rel: str) -> DataFrame | None:
+            # a scan-all read is cut to the probed clusters here, before
+            # the LWW collapse and the joins (a pruned read already is)
+            rows = self._store.read_probe(rel, probe_keys, broadcast_keys=True)
+            if rows is None or self._store.prunes_probes:
+                return rows
+            return rows.join(F.broadcast(probe_keys), "centroid_id", "left_semi")
+
+        codes = probed("codes")
         if codes is None:
             raise ValueError(f"ANN index at {self.path} holds no vectors")
         if self._has_tombstones:
-            codes = self._latest_live(codes, [ic, "codes", "centroid_id"])
+            codes = latest_live(codes, [ic], ["codes", "centroid_id"])
         if allowed is not None:
             # post-tombstone, pre-ADC: identical placement to topk()'s
             # filter, so batch == per-query row-for-row with the same
@@ -646,16 +598,9 @@ class PersistentAnnIndex:
         )
 
         # -- 5. exact re-rank over the probed clusters' vectors ------------
-        if self._prune_probes:
-            vecs = self._store.read_keys(
-                "vectors", probe_keys, broadcast_keys=True
-            )
-        else:
-            vecs = self._store.read("vectors").join(
-                F.broadcast(probe_keys), "centroid_id", "left_semi"
-            )
+        vecs = probed("vectors")
         if self._has_tombstones:
-            vecs = self._latest_live(vecs, [ic, vc, "centroid_id"])
+            vecs = latest_live(vecs, [ic], [vc, "centroid_id"])
         l2 = _fold(
             F.zip_with(
                 F.col(vc),
@@ -725,11 +670,7 @@ class PersistentAnnIndex:
         if other._has_tombstones:
             # flag BEFORE the commit (delete()'s ordering): a reader
             # that sees merged tombstones must already LWW-collapse
-            try:
-                with open(self._flag_path, "x"):
-                    pass
-            except FileExistsError:
-                pass
+            self._has_tombstones.set()
         self._store.append_keyed(upd, epoch=epoch)
 
     def doc_topk(
@@ -848,19 +789,7 @@ class PersistentAnnIndex:
                 "vectors": [vc, "centroid_id"],
                 "ids": ["centroid_id"],
             }[rel]
-            order = F.struct(
-                F.col("seq"),
-                F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1)),
-            )
-            latest = current.groupBy(ic).agg(
-                F.max_by(F.struct(*payload, "seq", "live"), order).alias("s")
-            )
-            return latest.filter(F.col("s.live")).select(
-                ic,
-                *[F.col(f"s.{c}").alias(c) for c in payload],
-                F.col("s.seq").alias("seq"),
-                F.col("s.live").alias("live"),
-            )
+            return latest_live(current, [ic], payload, keep_version=True)
 
         self._store.apply_keyed_all_buckets(fold)
 

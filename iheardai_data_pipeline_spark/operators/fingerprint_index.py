@@ -47,9 +47,7 @@ as operators/neardup_index.py.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,6 +61,7 @@ from iheardai_data_pipeline_spark.operators.text import fingerprint_md5
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    pin_index_meta,
 )
 
 FORMAT_VERSION = 1
@@ -111,29 +110,13 @@ class FingerprintIndex:
         self.id_col = id_col
         self.text_col = text_col
         self.fp_col = fp_col
-        os.makedirs(path, exist_ok=True)
-        meta = {"format": FORMAT_VERSION, "m": m, "k": k}
-        meta_path = os.path.join(path, "_fp_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted != meta:
-                raise ValueError(
-                    f"fingerprint index at {path} was created with "
-                    f"{persisted}; got {meta} — one Bloom layout per index"
-                )
-        else:
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    if json.load(fh) != meta:
-                        raise
-            finally:
-                os.unlink(tmp)
+        pin_index_meta(
+            path,
+            "_fp_meta.json",
+            {"format": FORMAT_VERSION, "m": m, "k": k},
+            "fingerprint index",
+            "one Bloom layout per index",
+        )
         self.m, self.k = m, k
         self._store = MultiRelationTransactionalStore(
             spark,
@@ -141,8 +124,6 @@ class FingerprintIndex:
             relations={"fingerprints": [fp_col], "bloom_bits": ["bit"]},
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
         self._words: list[int] | None = None
         self._words_version: int = -1
 
@@ -308,16 +289,14 @@ class FingerprintIndex:
         suspects = flagged.filter(F.col("__maybe_present")).drop(
             "__maybe_present"
         )
-        if self._prune_probes:
+        if self._store.prunes_probes:
             # the pruning collect executes the key-frame plan — pin the
             # (batch-sized) suspects once so the collect, the anti-join
             # and the union don't re-run the hash/window chain
             suspects = suspects.localCheckpoint(eager=True)
-            stored = self._store.read_keys(
-                "fingerprints", suspects.select(self.fp_col)
-            )
-        else:
-            stored = self._store.read("fingerprints")
+        stored = self._store.read_probe(
+            "fingerprints", suspects.select(self.fp_col)
+        )
         if stored is None:
             survivors = definite_new.unionByName(suspects)
         else:

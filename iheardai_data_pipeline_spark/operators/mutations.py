@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -36,6 +36,47 @@ def last_write_wins(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def lww_order_key() -> Column:
+    """The versioned-row order of the persistent indexes: greatest
+    ``seq`` wins and, at one ``seq``, a tombstone (``live`` false) beats
+    a live row (delete-biased — the conservative resolution of a
+    retraction race). Linearized into ONE BIGINT, ``2*seq + (0 if live
+    else 1)``, which orders rows exactly as the (seq, tombstone) struct
+    would for ``|seq| < 2^62``: a primitive ordering key lets ``max_by``
+    hash-aggregate, where a struct key forces a Sort + SortAggregate.
+    Live winners have an even key, and their seq is ``key DIV 2``."""
+    return F.col("seq") * 2 + F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1))
+
+
+def latest_live(
+    rows: DataFrame,
+    key_cols: Sequence[str],
+    cols: Sequence[str],
+    keep_version: bool = False,
+) -> DataFrame:
+    """M1/M2 for versioned (seq, live) rows: collapse each key to its
+    latest version under :func:`lww_order_key` and drop keys whose
+    latest version is a tombstone. Returns ``key_cols`` + ``cols`` of
+    the live winners; ``keep_version`` also keeps their ``seq`` and
+    ``live`` stamp, so a compaction's survivors still order against
+    later writes."""
+    okey = lww_order_key()
+    payload = [c for c in cols if c not in key_cols]
+    # a lone payload column stays primitive, so max_by can hash-aggregate
+    value = F.col(payload[0]) if len(payload) == 1 else F.struct(*payload)
+    latest = rows.groupBy(*key_cols).agg(
+        F.max_by(value, okey).alias("__v"), F.max(okey).alias("__okey")
+    )
+    out = [F.col(c) for c in key_cols] + (
+        [F.col("__v").alias(payload[0])]
+        if len(payload) == 1
+        else [F.col(f"__v.{c}").alias(c) for c in payload]
+    )
+    if keep_version:
+        out += [F.expr("__okey DIV 2").alias("seq"), F.lit(True).alias("live")]
+    return latest.filter(F.col("__okey") % 2 == 0).select(*out)
 
 
 def merge_upsert(

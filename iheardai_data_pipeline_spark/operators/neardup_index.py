@@ -27,10 +27,11 @@ Feeding id-ordered batches therefore reproduces the one-shot
 ``incremental_minhash_dedup(all_incoming, corpus)`` answer exactly
 (same shingle, signature, band-key, and half-up Jaccard arithmetic).
 
-Scale posture: the band store buckets on the 8-byte band key, so a
-probe reads only the buckets its keys hash to (``read_keys``); the
-profile store is touched only for verified CANDIDATES. Both stores
-append via OCC partial rewrites (only touched buckets rewritten).
+Scale posture: the band relation buckets on the 8-byte band key, so a
+probe reads only the buckets its keys hash to (the store's
+``read_probe``, which prunes on large layouts and scans rig-small
+ones); the profile relation is touched only for verified CANDIDATES.
+Both append through the store's O(batch) add-files commit.
 ``n_buckets`` is a layout constant — size it so one bucket's band rows
 fit an executor (e.g. thousands at corpus scale; the rig default 16).
 
@@ -41,9 +42,7 @@ production variant its own docs promised for the r4 incremental gate.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,9 +52,12 @@ from iheardai_data_pipeline_spark.operators.dedup import (
     _minhash_from_set,
     shingle_array,
 )
+from iheardai_data_pipeline_spark.operators.mutations import latest_live
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism, eval_once
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    WriteOnceFlag,
+    pin_index_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON. Bump whenever the
@@ -64,7 +66,7 @@ from iheardai_data_pipeline_spark.streaming.stores import (
 #   2        — r7 layout: 5-column versioned profiles (+seq, +live)
 # An index written under an older layout REFUSES to open: parquet reads
 # over mixed-width files either fail on the missing columns or surface
-# old rows with live=NULL, which _latest_live would silently drop —
+# old rows with live=NULL, which the LWW collapse would silently drop —
 # the entire pre-upgrade corpus would vanish from the dedup gate.
 FORMAT_VERSION = 2
 
@@ -108,8 +110,7 @@ class MinHashBandIndex:
 
     The LSH parameters are part of the on-disk layout (mixing two
     bandings in one index silently loses candidates), so the creator
-    pins them in ``_lsh_meta.json`` and later opens must match or pass
-    defaults-by-inheritance.
+    pins them in ``_lsh_meta.json`` and later opens must match.
 
     ``n_buckets``: pass ``expected_docs=`` to size it with
     :func:`buckets_for_corpus` (preferred — it is a layout constant you
@@ -138,46 +139,19 @@ class MinHashBandIndex:
         self.path = path
         self.id_col = id_col
         self.text_col = text_col
-        os.makedirs(path, exist_ok=True)
-        meta = {
-            "format": FORMAT_VERSION,
-            "n": n,
-            "k": k,
-            "bands": bands,
-            "threshold": threshold,
-        }
-        meta_path = os.path.join(path, "_lsh_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted.get("format") != FORMAT_VERSION:
-                old = persisted.get(
-                    "format", "1 (pre-versioned, 3-column profiles)"
-                )
-                raise ValueError(
-                    f"index at {path} uses on-disk format {old}; this "
-                    f"build reads format {FORMAT_VERSION}. Opening would "
-                    "mix profile schemas in one relation and silently "
-                    "drop pre-upgrade rows from the gate — rebuild the "
-                    "index (re-append the corpus into a fresh path)."
-                )
-            if persisted != meta:
-                raise ValueError(
-                    f"index at {path} was created with {persisted}; got {meta} "
-                    "— one banding per index"
-                )
-        else:
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    if json.load(fh) != meta:
-                        raise
-            finally:
-                os.unlink(tmp)
+        pin_index_meta(
+            path,
+            "_lsh_meta.json",
+            {
+                "format": FORMAT_VERSION,
+                "n": n,
+                "k": k,
+                "bands": bands,
+                "threshold": threshold,
+            },
+            "MinHash band index",
+            "one banding per index",
+        )
         self.n, self.k, self.bands, self.threshold = n, k, bands, threshold
         # ONE transactional store for BOTH relations: each ingest batch
         # commits its band keys and shingle profiles atomically in a
@@ -191,18 +165,14 @@ class MinHashBandIndex:
             relations={"bands": ["bkey"], "profiles": [id_col]},
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule: the touched-bucket collect is a whole
-        # Spark job over the probe keys; at rig-small bucket counts
-        # lazily listing every bucket dir (the LEFT SEMI still filters)
-        # is cheaper than running it. Large layouts (buckets_for_corpus
-        # sizing) MUST prune — that is what makes probes O(batch).
-        self._prune_probes = self._store.n_buckets > 64
         # delete/tombstone fast-path flag: until the first delete(), no
         # tombstone rows exist and the probe path skips the LWW collapse
         # entirely — the append-only hot path pays ZERO for the upsert
         # capability. Once set, the flag stays (LWW over all-live rows
         # is a no-op, and clearing it would race a concurrent delete).
-        self._flag_path = os.path.join(path, "_has_tombstones")
+        self._has_tombstones = WriteOnceFlag(
+            os.path.join(path, "_has_tombstones")
+        )
 
     # -- row-local derivations (no shuffle) -----------------------------------
 
@@ -293,30 +263,6 @@ class MinHashBandIndex:
             F.lit(True).alias("live"),
         )
 
-    def _latest_live(self, prof_rows: DataFrame) -> DataFrame:
-        """LWW collapse of multi-version profile rows to (id, sh_set,
-        n_sh) of the CURRENT live version per doc: greatest seq wins;
-        on a seq tie the tombstone wins (deterministic, delete-biased —
-        the conservative resolution for a retraction race). Rows of one
-        doc share a bucket (profiles are keyed by id), so this is exact
-        under bucket-pruned reads."""
-        ic = self.id_col
-        order = F.struct(
-            F.col("seq"), F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1))
-        )
-        latest = prof_rows.groupBy(ic).agg(
-            F.max_by(F.struct("sh_set", "n_sh", "live"), order).alias("s")
-        )
-        return latest.filter(F.col("s.live")).select(
-            ic,
-            F.col("s.sh_set").alias("sh_set"),
-            F.col("s.n_sh").alias("n_sh"),
-        )
-
-    @property
-    def _has_tombstones(self) -> bool:
-        return os.path.exists(self._flag_path)
-
     # -- public API -----------------------------------------------------------
 
     def append(self, docs: DataFrame, epoch=None, seq: int = 0) -> None:
@@ -363,11 +309,7 @@ class MinHashBandIndex:
         (ties resolve to the tombstone). ``epoch`` = idempotent-commit
         marker, as on ingest."""
         ic = self.id_col
-        try:
-            with open(self._flag_path, "x"):
-                pass
-        except FileExistsError:
-            pass
+        self._has_tombstones.set()
         tomb = ids.select(
             F.col(ic),
             F.lit(None).cast("array<bigint>").alias("sh_set"),
@@ -415,11 +357,7 @@ class MinHashBandIndex:
         else:
             bands = bands.select("bkey", F.col(oc).alias(sc))
         if other._has_tombstones:
-            try:
-                with open(self._flag_path, "x"):
-                    pass
-            except FileExistsError:
-                pass
+            self._has_tombstones.set()
         self._store.append_keyed(
             {
                 "bands": bands,
@@ -461,14 +399,8 @@ class MinHashBandIndex:
                 .distinct()
             )
             right_prof = prof.select(ic, "sh_set", "n_sh")
-            # scan-all regime (rig-small layouts): plain read() — the
-            # equi-joins below already filter, and read_keys' LEFT SEMI
-            # would embed its key-frame plan a second time
-            stored = (
-                self._store.read_keys("bands", bands_inc.select("bkey"))
-                if self._prune_probes
-                else self._store.read("bands")
-            )
+            # the equi-joins below filter a scan-all read
+            stored = self._store.read_probe("bands", bands_inc.select("bkey"))
             if stored is not None:
                 # REPLAY GUARD: a crash-replayed batch (appended to the
                 # store but not stream-checkpointed — the at-least-once
@@ -491,7 +423,7 @@ class MinHashBandIndex:
                     .select("id_a", "id_b")
                     .distinct()
                 )
-                if self._prune_probes:
+                if self._store.prunes_probes:
                     # candidate pairs are few (banding's whole point) but
                     # their plan reads store buckets + two joins — when
                     # the profile read PRUNES, its touched-bucket collect
@@ -499,19 +431,17 @@ class MinHashBandIndex:
                     # scan-all regime nothing collects cand before the
                     # verify pass, so a checkpoint would only ADD a job.
                     cand = cand.localCheckpoint(eager=True)
-                idx_prof = (
-                    self._store.read_keys(
-                        "profiles", cand.select(F.col("id_b").alias(ic))
-                    )
-                    if self._prune_probes
-                    else self._store.read("profiles")
+                idx_prof = self._store.read_probe(
+                    "profiles", cand.select(F.col("id_b").alias(ic))
                 )
                 if idx_prof is not None and self._has_tombstones:
                     # LWW collapse only once a delete() has ever
                     # happened: deleted/superseded versions stop
                     # matching here (their band rows above only made
-                    # candidates, which this inner join now starves)
-                    idx_prof = self._latest_live(idx_prof)
+                    # candidates, which this inner join now starves).
+                    # Rows of one doc share a bucket (profiles are keyed
+                    # by id), so the collapse is exact under pruned reads
+                    idx_prof = latest_live(idx_prof, [ic], ["sh_set", "n_sh"])
                 if idx_prof is not None:
                     # ONE fused verify pass: index and intra-batch
                     # candidate id_b spaces are disjoint (the guard
@@ -573,13 +503,17 @@ class MinHashBandIndex:
             if rel == "profiles":
                 if not self._has_tombstones:
                     return current.dropDuplicates([ic])
-                return self._versioned_latest_rows(current)
+                return latest_live(
+                    current, [ic], ["sh_set", "n_sh"], keep_version=True
+                )
             if not self._has_tombstones:
                 return current.dropDuplicates(["bkey", ic])
             # rebuild bands from the store's live profiles (read inside
             # the fold: the OCC retry re-reads, so a lost race refolds
             # against the new base — never a pinned stale frame)
-            live = self._latest_live(self._store.read("profiles"))
+            live = latest_live(
+                self._store.read("profiles"), [ic], ["sh_set", "n_sh"]
+            )
             return self._band_rows(
                 live.select(
                     ic, _minhash_from_set(F.col("sh_set"), self.k).alias("sig")
@@ -587,24 +521,6 @@ class MinHashBandIndex:
             )
 
         self._store.apply_keyed_all_buckets(fold)
-
-    def _versioned_latest_rows(self, prof_rows: DataFrame) -> DataFrame:
-        """Full 5-column live-latest rows (compaction keeps the version
-        stamp so later writes still LWW against the survivors)."""
-        ic = self.id_col
-        order = F.struct(
-            F.col("seq"), F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1))
-        )
-        latest = prof_rows.groupBy(ic).agg(
-            F.max_by(F.struct("sh_set", "n_sh", "seq", "live"), order).alias("s")
-        )
-        return latest.filter(F.col("s.live")).select(
-            ic,
-            F.col("s.sh_set").alias("sh_set"),
-            F.col("s.n_sh").alias("n_sh"),
-            F.col("s.seq").alias("seq"),
-            F.col("s.live").alias("live"),
-        )
 
     def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
         self._store.vacuum(keep, grace_seconds)

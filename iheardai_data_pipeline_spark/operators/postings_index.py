@@ -71,8 +71,8 @@ commit log —
 
 SEQ CONTRACT (the family's LWW rule, specialized): every mutation of a
 doc id must carry a seq STRICTLY GREATER than any previous mutation of
-that id; ties collapse tombstone-first (delete-biased, as in
-semantic_index._latest_live). Single-writer-per-index is the supported
+that id; ties collapse tombstone-first (delete-biased —
+mutations.lww_order_key, shared by every index). Single-writer-per-index is the supported
 deployment (see FingerprintIndex.words' multi-writer note) — the stats
 deltas are computed against the pre-commit state and would double-count
 under concurrent distinct writers.
@@ -92,17 +92,20 @@ the persistent variant of x_text_bm25_topk.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iheardai_data_pipeline_spark.operators.mutations import (
+    latest_live,
+    lww_order_key,
+)
 from iheardai_data_pipeline_spark.operators.text import normalize_text
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    pin_index_meta,
 )
 
 # 2 = the round-13 layout: + forward (doc -> term list) and termstats
@@ -180,52 +183,14 @@ class PostingsIndex:
         # 1.0 keeps the unfielded serve bit-identical (x / 1.0 == x in
         # IEEE); 1000.0 maps milli tf/dl back to weighted-token units
         self._tf_scale = 1000.0 if self._w_milli else 1.0
-        os.makedirs(path, exist_ok=True)
-        meta = {
-            "format": FORMAT_VERSION,
-            "k1": k1,
-            "b": b,
-            "fields": self._w_milli,
-        }
-        meta_path = os.path.join(path, "_bm25_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted.get("format") != FORMAT_VERSION:
-                # a format mismatch is NOT a parameterization clash —
-                # say what it actually is (ADVICE r13): an older layout
-                # lacks the forward/termstats relations the maintained-
-                # stats serve needs, and no open-time shim can backfill
-                # them (their deltas are computed against pre-commit
-                # state at each mutation)
-                raise ValueError(
-                    f"postings index at {path} has on-disk format "
-                    f"{persisted.get('format')}; this build reads format "
-                    f"{FORMAT_VERSION} — older layouts lack columns/"
-                    "relations this serve depends on (format 1: the "
-                    "forward/termstats relations; format 2: the in-row "
-                    "postings dl) and no open-time shim can backfill "
-                    "them — the index must be REBUILT from the source "
-                    "corpus"
-                )
-            if persisted != meta:
-                raise ValueError(
-                    f"postings index at {path} was created with "
-                    f"{persisted}; got {meta} — one BM25 parameterization "
-                    "per index (scores are not comparable across k1/b)"
-                )
-        else:
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    if json.load(fh) != meta:
-                        raise
-            finally:
-                os.unlink(tmp)
+        pin_index_meta(
+            path,
+            "_bm25_meta.json",
+            {"format": FORMAT_VERSION, "k1": k1, "b": b, "fields": self._w_milli},
+            "postings index",
+            "one BM25 parameterization per index (scores are not comparable "
+            "across k1/b)",
+        )
         self.k1, self.b = k1, b
         self._store = MultiRelationTransactionalStore(
             spark,
@@ -239,8 +204,6 @@ class PostingsIndex:
             },
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
 
     # -- internals ------------------------------------------------------------
 
@@ -329,36 +292,10 @@ class PostingsIndex:
             perdoc.select(ic, "terms", s),
         )
 
-    @staticmethod
-    def _lww_okey() -> F.Column:
-        """The doclens LWW order (seq ascending, tombstone wins ties)
-        linearized into ONE BIGINT: ``2*seq + (0 if live else 1)`` —
-        max picks the greatest seq, and between a live row and a
-        tombstone at the SAME seq the tombstone's +1 wins (the
-        delete-biased tie rule). Linearizing matters for plan shape
-        (round 15): a struct ordering key gives max_by a struct
-        aggregation buffer, which HashAggregate cannot hold, forcing
-        every doclens collapse into a Sort + SortAggregate pair; with
-        primitive value/ordering columns the collapse hash-aggregates.
-        Sound for 0 <= seq < 2^62 (the family's seq contract)."""
-        return F.col("seq") * 2 + F.when(
-            F.col("live"), F.lit(0)
-        ).otherwise(F.lit(1))
-
     def _live_doclens(self, rows: DataFrame) -> DataFrame:
-        """LWW collapse per doc: greatest seq wins, tombstone wins ties
-        (delete-biased); returns live (doc_id, dl, seq). Runs as a
-        HashAggregate over the linearized order key (see
-        :meth:`_lww_okey`); live winners have an even key, and their
-        seq is ``okey div 2`` exactly."""
-        ic = self.id_col
-        latest = rows.groupBy(ic).agg(
-            F.max_by(F.col("dl"), self._lww_okey()).alias("dl"),
-            F.max(self._lww_okey()).alias("__okey"),
-        )
-        return latest.filter(F.col("__okey") % 2 == 0).select(
-            ic, "dl", F.expr("__okey DIV 2").alias("seq")
-        )
+        """The live latest (doc_id, dl, seq, live) per doc (the family's
+        LWW rule, :func:`latest_live`)."""
+        return latest_live(rows, [self.id_col], ["dl"], keep_version=True)
 
     def _current_live_for(
         self,
@@ -378,11 +315,7 @@ class PostingsIndex:
         read doclens AS OF that committed store version (the serve
         paths pin one version for every read — see :meth:`topk`)."""
         key_frame = ids.select(self.id_col)
-        rows = (
-            self._store.read_keys("doclens", key_frame, version=version)
-            if self._prune_probes
-            else self._store.read("doclens", version=version)
-        )
+        rows = self._store.read_probe("doclens", key_frame, version=version)
         if rows is None:
             return self.spark.createDataFrame(
                 [], f"{self.id_col} long, dl long, seq long"
@@ -424,11 +357,7 @@ class PostingsIndex:
         Returns None when the index has no forward rows at all."""
         ic = self.id_col
         key_frame = ids.select(ic).distinct()
-        rows = (
-            self._store.read_keys("forward", key_frame, version=version)
-            if self._prune_probes
-            else self._store.read("forward", version=version)
-        )
+        rows = self._store.read_probe("forward", key_frame, version=version)
         if rows is None:
             return None
         if live is None:
@@ -471,12 +400,8 @@ class PostingsIndex:
         scales with the terms' postings volume. Terms whose df folded
         to <= 0 (all their docs deleted) are dropped."""
         td = terms.select("term").distinct()
-        rows = (
-            self._store.read_keys(
-                "termstats", td, broadcast_keys=True, version=version
-            )
-            if self._prune_probes
-            else self._store.read("termstats", version=version)
+        rows = self._store.read_probe(
+            "termstats", td, broadcast_keys=True, version=version
         )
         if rows is None:
             return None
@@ -535,12 +460,8 @@ class PostingsIndex:
         serving passes True and keeps the array-carrying collapse."""
         ic = self.id_col
         td = terms.select("term").distinct()
-        pl = (
-            self._store.read_keys(
-                "postings", td, broadcast_keys=True, version=version
-            )
-            if self._prune_probes
-            else self._store.read("postings", version=version)
+        pl = self._store.read_probe(
+            "postings", td, broadcast_keys=True, version=version
         )
         if pl is None:
             return None
@@ -939,9 +860,9 @@ class PostingsIndex:
         m = (
             doclens.filter((F.col("seq") > 0) | (~F.col("live")))
             .groupBy(ic)
-            # linearized LWW key (see _lww_okey): one BIGINT max keeps
+            # linearized LWW key (lww_order_key): one BIGINT max keeps
             # the collapse a HashAggregate; m_seq/m_live unpack exactly
-            .agg(F.max(self._lww_okey()).alias("__okey"))
+            .agg(F.max(lww_order_key()).alias("__okey"))
             .select(
                 ic,
                 F.expr("__okey DIV 2").alias("m_seq"),
@@ -995,12 +916,8 @@ class PostingsIndex:
         max_by. Returns None when the store has no postings."""
         ic = self.id_col
         td = terms.select("term").distinct()
-        pl = (
-            self._store.read_keys(
-                "postings", td, broadcast_keys=True, version=version
-            )
-            if self._prune_probes
-            else self._store.read("postings", version=version)
+        pl = self._store.read_probe(
+            "postings", td, broadcast_keys=True, version=version
         )
         if pl is None:
             return None
@@ -1295,7 +1212,7 @@ class PostingsIndex:
             )
             if allowed_ids is not None:
                 cand = cand.join(allowed_ids, ic, "left_semi")
-            if self._prune_probes or diag is not None:
+            if self._store.prunes_probes or diag is not None:
                 # the bucket-pruned forward lookup collects over cdocs
                 # (and diag counts cand) — pin once; in the scan-all
                 # regime cand stays lazy inside the scoring job (its
@@ -1313,15 +1230,10 @@ class PostingsIndex:
             # (no doclens read), and dl is the in-row sum of the
             # forward term list (== the doclens dl by construction:
             # both are SUM(tf) over the same per-batch tf relation)
-            if self._prune_probes:
-                # read_keys semi-joins the candidate ids itself
-                fraw = self._store.read_keys(
-                    "forward", cdocs, version=version
-                )
-            else:
-                fraw = self._store.read("forward", version=version)
-                if fraw is not None:
-                    fraw = fraw.join(cdocs, ic, "left_semi")
+            fraw = self._store.read_probe("forward", cdocs, version=version)
+            if fraw is not None and not self._store.prunes_probes:
+                # a pruned read semi-joins the candidate ids itself
+                fraw = fraw.join(cdocs, ic, "left_semi")
             if fraw is None:
                 fwd = self.spark.createDataFrame(
                     [], f"{ic} long, dl long, term string, tf long"
@@ -1708,11 +1620,7 @@ class PostingsIndex:
             # a tombstone whose seq outranks the other side's live seq
             # serves the doc dead while the live +1 delta still counts
             shard_ids = other_doclens.select(self.id_col).distinct()
-            mine = (
-                self._store.read_keys("doclens", shard_ids)
-                if self._prune_probes
-                else self._store.read("doclens")
-            )
+            mine = self._store.read_probe("doclens", shard_ids)
             sample = (
                 []
                 if mine is None
@@ -1820,10 +1728,7 @@ class PostingsIndex:
 
         def fold(rel: str, current: DataFrame, upd) -> DataFrame:
             if rel == "doclens":
-                lw = self._live_doclens(current)
-                return lw.select(
-                    ic, "dl", "seq", F.lit(True).alias("live")
-                )
+                return self._live_doclens(current)
             # round 15 (both row relations): resolve LIVENESS FIRST —
             # the seq-equality join kills stale upsert versions and
             # deleted docs without any aggregation — then fold the

@@ -12,7 +12,8 @@ an incoming batch:
 
 1. assigns itself to the pinned centroids (narrow argmax — no shuffle),
 2. reads ONLY the stored vectors of the clusters it touches
-   (bucket-pruned ``read_keys`` on centroid_id),
+   (the store's ``read_probe`` on centroid_id: bucket-pruned on large
+   layouts, a scan the cluster join filters on rig-small ones),
 3. drops members with an exact cosine >= ``threshold`` against a stored
    vector (replay-guarded) or a LOWER-id batch peer in the same
    cluster, and
@@ -39,13 +40,12 @@ operators/neardup_index.py.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iheardai_data_pipeline_spark.operators.mutations import latest_live
 from iheardai_data_pipeline_spark.operators.similarity import (
     _assign_to_centroids,
     _collect_centroids,
@@ -55,6 +55,8 @@ from iheardai_data_pipeline_spark.operators.similarity import (
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    WriteOnceFlag,
+    pin_index_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON (same contract as
@@ -62,8 +64,8 @@ from iheardai_data_pipeline_spark.streaming.stores import (
 #   (absent) — r6 layout: one 3-column "vectors" relation, no versions
 #   2        — r7 layout: versioned vectors (+seq, +live) + "ids" relation
 # Older layouts refuse to open: a mixed-schema relation either fails on
-# the missing columns or reads old rows with live=NULL, which
-# _latest_live silently drops — the pre-upgrade corpus would vanish.
+# the missing columns or reads old rows with live=NULL, which the LWW
+# collapse silently drops — the pre-upgrade corpus would vanish.
 FORMAT_VERSION = 2
 
 
@@ -91,27 +93,14 @@ class SemanticDedupIndex:
         self.threshold = threshold
         self.id_col = id_col
         self.vec_col = vec_col
-        meta_path = os.path.join(path, "_centroids.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"no semantic index at {path} — build one with bootstrap()"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("format") != FORMAT_VERSION:
-            old = meta.get("format", "1 (pre-versioned, unversioned rows)")
-            raise ValueError(
-                f"index at {path} uses on-disk format {old}; this build "
-                f"reads format {FORMAT_VERSION}. Rebuild the index "
-                "(bootstrap a fresh path from the corpus) — opening "
-                "would mix row schemas and drop pre-upgrade rows from "
-                "the gate."
-            )
-        if abs(meta["threshold"] - threshold) > 1e-12:
-            raise ValueError(
-                f"index at {path} was created with threshold="
-                f"{meta['threshold']}; got {threshold}"
-            )
+        meta = pin_index_meta(
+            path,
+            "_centroids.json",
+            {"format": FORMAT_VERSION, "threshold": threshold},
+            "semantic index",
+            "one threshold per index",
+            publish=False,
+        )
         self.centroids: list[list[float]] = meta["centroids"]
         # two relations, one commit log: "vectors" (cluster-keyed — the
         # probe side) and "ids" (id-keyed — the delete-path lookup: a
@@ -124,11 +113,11 @@ class SemanticDedupIndex:
             relations={"vectors": ["centroid_id"], "ids": [id_col]},
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
         # tombstone fast-path flag — see MinHashBandIndex (append-only
         # ingest pays zero for the upsert capability until a delete)
-        self._flag_path = os.path.join(path, "_has_tombstones")
+        self._has_tombstones = WriteOnceFlag(
+            os.path.join(path, "_has_tombstones")
+        )
 
     @classmethod
     def bootstrap(
@@ -149,6 +138,11 @@ class SemanticDedupIndex:
         index build; it NEVER changes afterwards (re-centering would
         silently re-assign old vectors — rebuild instead).
 
+        Race/retry semantics are :meth:`PersistentAnnIndex.bootstrap`'s:
+        the first creator's meta wins, a caller whose corpus yields the
+        same centroids (and threshold) proceeds and its epoch-guarded
+        corpus append no-ops, and one with different artifacts raises.
+
         ``n_centroids=None`` applies the IVF sqrt(N) sizing rule
         (similarity.resolve_n_centroids) — THE scale knob: probe cost
         per batch vector is its cluster's stored population, so cluster
@@ -160,7 +154,6 @@ class SemanticDedupIndex:
             resolve_n_centroids,
         )
 
-        os.makedirs(path, exist_ok=True)
         live = corpus.where(F.col(vec_col).isNotNull())
         n_centroids = resolve_n_centroids(live, n_centroids)
         cent = _collect_centroids(
@@ -170,25 +163,22 @@ class SemanticDedupIndex:
             vec_col,
             "first",
         )
-        meta = {
-            "format": FORMAT_VERSION,
-            "threshold": threshold,
-            "centroids": [v for _, v in cent],
-        }
-        meta_path = os.path.join(path, "_centroids.json")
-        tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        try:
-            os.link(tmp, meta_path)  # exclusive: first creator wins
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        pin_index_meta(
+            path,
+            "_centroids.json",
+            {
+                "format": FORMAT_VERSION,
+                "threshold": threshold,
+                "centroids": [v for _, v in cent],
+            },
+            "semantic index",
+            "different artifacts: refusing to append a corpus assigned to "
+            "centroids the index was not built with",
+        )
         idx = cls(
             spark, path, threshold, id_col, vec_col, n_buckets=n_buckets
         )
-        idx.append(corpus)
+        idx.append(corpus, epoch="__bootstrap__")
         return idx
 
     # -- internals --------------------------------------------------------------
@@ -209,10 +199,6 @@ class SemanticDedupIndex:
     def _cos(self, a, b):
         return _dot(a, b) / (_norm(a) * _norm(b))
 
-    @property
-    def _has_tombstones(self) -> bool:
-        return os.path.exists(self._flag_path)
-
     def _updates(self, assigned: DataFrame, seq: int) -> dict:
         """Both relations' rows for one batch, stamped with the LWW
         version (seq, live=true)."""
@@ -223,28 +209,6 @@ class SemanticDedupIndex:
             "vectors": assigned.select(ic, vc, "centroid_id", s, live),
             "ids": assigned.select(ic, "centroid_id", s, live),
         }
-
-    def _latest_live(self, rows: DataFrame, cols: list[str]) -> DataFrame:
-        """LWW collapse per vec id: greatest seq wins, tombstone wins
-        ties (delete-biased — the conservative retraction-race
-        resolution); returns live rows projected to ``cols``. Exact
-        under pruned reads: a tombstone is written into the SAME
-        cluster bucket as the version it kills, so whatever subset of
-        clusters a probe reads, every stale row it sees is accompanied
-        by its killer."""
-        ic = self.id_col
-        order = F.struct(
-            F.col("seq"), F.when(F.col("live"), F.lit(0)).otherwise(F.lit(1))
-        )
-        payload = [c for c in cols if c != ic]
-        if "live" not in payload:
-            payload.append("live")
-        latest = rows.groupBy(ic).agg(
-            F.max_by(F.struct(*payload), order).alias("s")
-        )
-        return latest.filter(F.col("s.live")).select(
-            ic, *[F.col(f"s.{c}").alias(c) for c in cols if c != ic]
-        )
 
     # -- public API ---------------------------------------------------------------
 
@@ -279,20 +243,12 @@ class SemanticDedupIndex:
         Scale note: cost = the ids-relation buckets the delete batch
         hashes to, plus one batch-sized commit — never the corpus."""
         ic = self.id_col
-        try:
-            with open(self._flag_path, "x"):
-                pass
-        except FileExistsError:
-            pass
+        self._has_tombstones.set()
         key_frame = ids.select(ic)
-        lookup = (
-            self._store.read_keys("ids", key_frame)
-            if self._prune_probes
-            else self._store.read("ids")
-        )
+        lookup = self._store.read_probe("ids", key_frame)
         if lookup is None:
             return
-        old = self._latest_live(lookup, [ic, "centroid_id"]).join(
+        old = latest_live(lookup, [ic], ["centroid_id"]).join(
             F.broadcast(key_frame), ic, "left_semi"
         )
         s = F.lit(seq).cast("long").alias("seq")
@@ -335,11 +291,7 @@ class SemanticDedupIndex:
         oc, sc = other.id_col, self.id_col
         ov, sv = other.vec_col, self.vec_col
         if other._has_tombstones:
-            try:
-                with open(self._flag_path, "x"):
-                    pass
-            except FileExistsError:
-                pass
+            self._has_tombstones.set()
         self._store.append_keyed(
             {
                 "vectors": vecs.select(
@@ -396,21 +348,16 @@ class SemanticDedupIndex:
             .select("id_a")
         )
         dropped = intra
-        # scan-all regime (rig-small layouts): plain read() — the
-        # cluster equi-join below already filters (see neardup_index)
-        stored = (
-            self._store.read_keys(
-                "vectors",
-                assigned.select("centroid_id"),
-                broadcast_keys=True,
-            )
-            if self._prune_probes
-            else self._store.read("vectors")
+        # the cluster equi-join below filters a scan-all read
+        stored = self._store.read_probe(
+            "vectors", assigned.select("centroid_id"), broadcast_keys=True
         )
         if stored is not None and self._has_tombstones:
             # LWW collapse only once a delete() has ever happened —
-            # retracted/superseded versions stop matching here
-            stored = self._latest_live(stored, [ic, vc, "centroid_id"])
+            # retracted/superseded versions stop matching here. Exact
+            # under pruned reads: a tombstone is written into the SAME
+            # cluster bucket as the version it kills
+            stored = latest_live(stored, [ic], [vc, "centroid_id"])
         if stored is not None:
             probe = (
                 # REPLAY GUARD (see neardup_index.ingest): a replayed
@@ -449,12 +396,8 @@ class SemanticDedupIndex:
         def fold(rel: str, current: DataFrame, upd) -> DataFrame:
             if not self._has_tombstones:
                 return current.dropDuplicates([ic])
-            cols = (
-                [ic, vc, "centroid_id", "seq", "live"]
-                if rel == "vectors"
-                else [ic, "centroid_id", "seq", "live"]
-            )
-            return self._latest_live(current, cols)
+            payload = [vc, "centroid_id"] if rel == "vectors" else ["centroid_id"]
+            return latest_live(current, [ic], payload, keep_version=True)
 
         self._store.apply_keyed_all_buckets(fold)
 

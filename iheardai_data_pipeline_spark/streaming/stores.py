@@ -5,7 +5,7 @@ inside a connection transaction, enhanced_kpi_consumer.py:395-434). This
 module restates them as ONE optimistic-concurrency commit log on a plain
 filesystem, :class:`MultiRelationTransactionalStore`: every commit stages
 its rows under a unique snapshot directory, then atomically claims the
-next version number with an exclusive hard link (``os.link`` fails with
+next version number with an exclusive hard link (the link fails with
 EEXIST if the version is taken — the same claim primitive Delta's log
 protocol relies on for its ``_delta_log/N.json`` files). A losing writer
 re-reads the new base, re-applies its fold, and retries; readers only
@@ -28,12 +28,21 @@ Two one-relation views of that log serve the keyed upserts, selected by
 
 Both expose ``read`` / ``merge`` / ``apply_keyed`` / ``write_snapshot``
 / ``vacuum``, so the foreachBatch logic is identical across them.
+
+The persistent indexes (``operators/*_index.py``) keep their relations
+in a :class:`MultiRelationTransactionalStore` and take the rest of
+their storage scaffold from here too: :func:`pin_index_meta` (the
+index's pinned parameters and format), :class:`WriteOnceFlag` (the
+tombstone flag) and :meth:`MultiRelationTransactionalStore.read_probe`
+(the prune-vs-scan rule for probe reads). Every file this module
+publishes goes through :func:`_publish_once`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import reprlib
 import shutil
 import uuid
 
@@ -58,6 +67,91 @@ LAYOUT_VERSION = 1
 # retry re-reads the winner's commit, so only a writer starved by
 # unserialized contenders on one store ever reaches the limit.
 OCC_MAX_RETRIES = 10
+
+# Probe reads (read_probe) prune to the touched buckets only on stores
+# with MORE buckets than this. The pruning collect is a whole Spark job
+# over the probe keys; at rig-small bucket counts lazily listing every
+# bucket dir is cheaper than running it, while large layouts
+# (buckets_for_corpus sizing) must prune — that is what keeps a probe
+# O(batch).
+PRUNE_PROBES_ABOVE_BUCKETS = 64
+
+
+def _publish_once(path: str, data: str) -> bool:
+    """Publish ``data`` at ``path`` exactly once: write a temp file
+    beside it, fsync, hard-link it into place (the link fails with
+    EEXIST when the name is taken) and drop the temp. A reader that can
+    see the file sees it complete. True iff this call created it."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(data)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def pin_index_meta(
+    path: str,
+    filename: str,
+    want: dict,
+    what: str,
+    reason: str = "",
+    publish: bool = True,
+) -> dict:
+    """The meta pin of a persistent index at ``path``: publish ``want``
+    as ``filename`` if it is missing (first creator wins; with
+    ``publish=False`` a missing file is refused instead), then check
+    the persisted copy — a ``format`` other than ``want["format"]`` is
+    refused, and so is any other key of ``want`` that differs (``reason``
+    says why the index cannot mix them). Returns the persisted meta."""
+    meta_path = os.path.join(path, filename)
+    if not os.path.exists(meta_path):
+        if not publish:
+            raise ValueError(f"no {what} at {path} — build one with bootstrap()")
+        os.makedirs(path, exist_ok=True)
+        _publish_once(meta_path, json.dumps(want))
+    with open(meta_path) as fh:
+        persisted = json.load(fh)
+    if persisted.get("format") != want["format"]:
+        raise ValueError(
+            f"{what} at {path} has on-disk format "
+            f"{persisted.get('format', 'none (pre-versioned)')}; this build "
+            f"reads format {want['format']}. Opening would mix row layouts "
+            "and drop or misread the older rows — the index must be REBUILT "
+            "from its source into a fresh path"
+        )
+    clash = [k for k in want if persisted.get(k) != want[k]]
+    if clash:
+        raise ValueError(
+            f"{what} at {path} was created with "
+            + ", ".join(
+                f"{k}={reprlib.repr(persisted.get(k))} "
+                f"(got {reprlib.repr(want[k])})"
+                for k in clash
+            )
+            + (f" — {reason}" if reason else "")
+        )
+    return persisted
+
+
+class WriteOnceFlag:
+    """A flag that, once set, stays set: an empty file published with
+    :func:`_publish_once`. Truthy iff the file exists."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+
+    def __bool__(self) -> bool:
+        return os.path.exists(self.path)
+
+    def set(self) -> None:
+        _publish_once(self.path, "")
 
 
 def _occ_current_version(commits_dir: str) -> int:
@@ -140,18 +234,8 @@ def _epochs_generation(epochs_dir: str) -> str | None:
             return fh.read()
     except OSError:
         pass
-    tmp = os.path.join(epochs_dir, f".tmp-gen-{uuid.uuid4().hex}")
     try:
-        with open(tmp, "w") as fh:
-            fh.write(uuid.uuid4().hex)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        _publish_once(marker, uuid.uuid4().hex)
         with open(marker) as fh:
             return fh.read()
     except OSError:
@@ -278,38 +362,7 @@ def _occ_retire_epochs(commits_dir: str, versions: list) -> None:
     _epochs_generation(epochs_dir)
     payload = json.dumps({"epochs": epochs}, sort_keys=True, default=str)
     digest = hashlib.md5(payload.encode()).hexdigest()
-    tmp = os.path.join(epochs_dir, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        fh.write(payload)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, os.path.join(epochs_dir, digest))
-    except FileExistsError:
-        pass
-    finally:
-        os.unlink(tmp)
-
-
-def _occ_try_claim(commits_dir: str, version: int, payload: dict) -> bool:
-    """Atomically claim ``version`` with ``payload`` as the marker body.
-
-    The content is fully written and fsynced BEFORE the exclusive
-    ``os.link`` publishes it, so any reader that can see the marker sees
-    a complete pointer. Returns False when another writer already owns
-    the version (EEXIST)."""
-    tmp = os.path.join(commits_dir, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, os.path.join(commits_dir, str(version)))
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
+    _publish_once(os.path.join(epochs_dir, digest), payload)
 
 
 def _layout_error(path: str, found) -> ValueError:
@@ -445,15 +498,7 @@ class MultiRelationTransactionalStore:
             "relations": {r: list(self.relations[r]) for r in self._rel_names},
         }
         if not os.path.exists(meta_path):
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(want, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                pass
-            finally:
-                os.unlink(tmp)
+            _publish_once(meta_path, json.dumps(want))  # first creator wins
         with open(meta_path) as fh:
             persisted = json.load(fh)
         if persisted.get("layout") != LAYOUT_VERSION:
@@ -512,10 +557,14 @@ class MultiRelationTransactionalStore:
     def _try_commit(
         self, version: int, manifest: dict[str, dict[str, list[str]]], epoch=None
     ) -> bool:
+        """Claim ``version`` with this manifest; False when another
+        writer already owns it."""
         payload: dict = {"manifest": manifest}
         if epoch is not None:
             payload["epoch"] = epoch
-        return _occ_try_claim(self._commits_dir(), version, payload)
+        return _publish_once(
+            os.path.join(self._commits_dir(), str(version)), json.dumps(payload)
+        )
 
     def _snapshot_dir(self, snapshot: str) -> str:
         return os.path.join(self.path, "_snapshots", snapshot)
@@ -655,7 +704,6 @@ class MultiRelationTransactionalStore:
         self,
         rel: str,
         keys: DataFrame,
-        prune: bool = True,
         broadcast_keys: bool = False,
         version: int | None = None,
     ) -> DataFrame | None:
@@ -668,15 +716,9 @@ class MultiRelationTransactionalStore:
         the symmetric read optimization). The bucket set is a bounded
         collect (<= n_buckets rows, same bound as apply_keyed). Returns
         None when the store is empty or no requested bucket has data
-        (no rows either way).
-
-        ``prune=False`` skips the touched-bucket collect and lists every
-        bucket dir lazily (the LEFT SEMI still filters the rows — the
-        result is identical). The collect is a full Spark job over the
-        key frame; at small bucket counts scanning all dirs is cheaper
-        than running it, so probe-heavy callers use the rule: prune
-        when ``n_buckets`` is large (the 100 TB layout), scan when it
-        is rig-small (see MinHashBandIndex._prune_probes).
+        (no rows either way). The collect is a full Spark job over the
+        key frame, so probe-heavy callers go through :meth:`read_probe`,
+        which skips it on rig-small layouts.
 
         ``broadcast_keys=True`` hints the semi-join to broadcast the
         key frame — pass it ONLY when the key set is bounded by
@@ -698,15 +740,13 @@ class MultiRelationTransactionalStore:
         if not manifest or not manifest.get(rel):
             return None
         kd = keys.select(*self.relations[rel]).distinct()
-        touched = None
-        if prune:
-            touched = {
-                str(r["__bucket"])
-                for r in kd.withColumn("__bucket", self._bucket_expr(rel))
-                .select("__bucket")
-                .distinct()
-                .collect()
-            }
+        touched = {
+            str(r["__bucket"])
+            for r in kd.withColumn("__bucket", self._bucket_expr(rel))
+            .select("__bucket")
+            .distinct()
+            .collect()
+        }
         rows = self._read_rel(manifest, rel, touched)
         if rows is None:
             return None
@@ -715,6 +755,33 @@ class MultiRelationTransactionalStore:
 
             kd = F.broadcast(kd)
         return rows.join(kd, self.relations[rel], "left_semi")
+
+    @property
+    def prunes_probes(self) -> bool:
+        """Whether :meth:`read_probe` prunes (more than
+        ``PRUNE_PROBES_ABOVE_BUCKETS`` buckets) or scans. Callers test
+        it only for work that pays off on one side alone, e.g. pinning
+        a key frame the pruning collect would otherwise re-run."""
+        return self.n_buckets > PRUNE_PROBES_ABOVE_BUCKETS
+
+    def read_probe(
+        self,
+        rel: str,
+        keys: DataFrame,
+        broadcast_keys: bool = False,
+        version: int | None = None,
+    ) -> DataFrame | None:
+        """The rows of ``rel`` a probe by ``keys`` must see, under the
+        store's prune-vs-scan rule: a pruning layout returns
+        :meth:`read_keys` (only the keys' buckets, LEFT SEMI the keys);
+        a scan-all layout returns the whole relation, lazily and with no
+        collect, and leaves the filtering to the caller's own key join.
+        ``broadcast_keys`` and ``version`` are :meth:`read_keys`'."""
+        if self.prunes_probes:
+            return self.read_keys(
+                rel, keys, broadcast_keys=broadcast_keys, version=version
+            )
+        return self.read(rel, version)
 
     def apply_keyed(self, updates: dict[str, DataFrame], fn, epoch=None) -> None:
         """Atomic multi-relation OCC partial-rewrite read-modify-write.
@@ -1036,16 +1103,19 @@ class BucketedTransactionalStore:
             epoch=epoch,
         )
 
-    def merge(self, updates: DataFrame) -> None:
+    def merge(self, updates: DataFrame, epoch=None) -> None:
         """Partial-rewrite last-writer-wins merge: stage only the touched
-        buckets, inherit the rest from the base manifest by pointer."""
+        buckets, inherit the rest from the base manifest by pointer.
+        Several versions of one key in ``updates`` resolve to the latest
+        by ``order_cols``. ``epoch``: idempotent-commit marker (see
+        :class:`MultiRelationTransactionalStore`)."""
 
         def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
                 return last_write_wins(upd, self.key_cols, self.order_cols)
             return merge_upsert(current, upd, self.key_cols, self.order_cols)
 
-        self.apply_keyed(updates, fn)
+        self.apply_keyed(updates, fn, epoch=epoch)
 
     def write_snapshot(self, df: DataFrame) -> None:
         """Full replace: every bucket rewritten into one snapshot dir."""

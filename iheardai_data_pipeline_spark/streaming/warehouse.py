@@ -5,42 +5,46 @@ drains Kafka topics and ``write_pandas``-appends each poll batch into a
 per-topic warehouse table (chunked, keyed tables). The Spark
 restatement is a foreachBatch-able loader with the same split the Kafka
 reader uses (``streaming/readers.py:read_kafka_stream``): the
-engine-side semantics — in-batch last-write-wins dedup on the key,
-and, for both ``make_upsert_store`` formats, exactly-once via the
-stream checkpoint + idempotent keyed merge — are real and tested.
+engine-side semantics — last-write-wins on the key within a batch and
+across batches, and, for both ``make_upsert_store`` formats,
+exactly-once delivery — are real and tested. The store formats hand
+the batch straight to the store's keyed merge, which resolves several
+versions of one key in the batch itself, and :meth:`foreach_batch`
+passes the stream's epoch so a replayed micro-batch commits nothing.
 The ``snowflake`` format is connector-lazy (resolved at write time;
-this rig has no warehouse) and is a plain ``mode('append')`` save:
-that path is APPEND-ONLY / AT-LEAST-ONCE — a micro-batch replayed
-after a crash between write and checkpoint commit appends its rows
-again, and the in-batch dedup does not make the table-level append
-idempotent. A production deployment wanting exactly-once on Snowflake
-stages each batch into a temp table and issues a keyed server-side
-MERGE (the store formats model exactly that contract locally).
+this rig has no warehouse) and is a plain ``mode('append')`` save of
+the batch after an in-batch last-write-wins: that path is APPEND-ONLY /
+AT-LEAST-ONCE — a micro-batch replayed after a crash between write and
+checkpoint commit appends its rows again. A production deployment
+wanting exactly-once on Snowflake stages each batch into a temp table
+and issues a keyed server-side MERGE (the store formats model exactly
+that contract locally).
 
-At scale the loader is shuffle-minimal: the only exchange per batch is
-the key-partitioned window for in-batch dedup (micro-batch sized, not
-table sized); the merge itself is the chosen store's contract
-(bucket-partial rewrites for ``parquet_bucketed``, server-side MERGE
-for a real warehouse connector).
+At scale the loader adds no exchange of its own: the merge is the
+chosen store's contract (bucket-partial rewrites for
+``parquet_bucketed``, server-side MERGE for a real warehouse
+connector).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
 
 
 class WarehouseBatchLoader:
-    """K6 batch loader: dedup-within-batch then merge/append to a
-    warehouse table or a local store stand-in.
+    """K6 batch loader: last-write-wins merge (or, for Snowflake,
+    append) of each batch into a warehouse table or a local store
+    stand-in.
 
     ``fmt='snowflake'`` targets the spark-snowflake connector
     (``target`` = dbtable, ``connector_options`` = sfURL/sfUser/... as
     documented by the connector) with append-only / at-least-once
     delivery (see module doc); either :func:`make_upsert_store` format
     (``parquet_txn``, ``parquet_bucketed``) makes ``target`` a local
-    path and gives real keyed-upsert, replay-idempotent semantics — the same K2 pattern the coverage doc
-    promised for K6.
+    path and gives real keyed-upsert, replay-idempotent semantics — the
+    same K2 pattern the coverage doc promised for K6.
     """
 
     def __init__(
@@ -60,25 +64,14 @@ class WarehouseBatchLoader:
         self.connector_options = dict(connector_options or {})
         self._store = None
 
-    def _dedup_batch(self, df: DataFrame) -> DataFrame:
-        """Last-write-wins within one batch: a poll batch can carry
-        several versions of one key (the reference appends them all and
-        leans on downstream views; the loader resolves them up front so
-        the merge is deterministic and idempotent on replay)."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.desc(c) for c in self.order_cols]
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
-    def load_batch(self, df: DataFrame) -> None:
-        batch = self._dedup_batch(df)
+    def load_batch(self, df: DataFrame, epoch=None) -> None:
+        """Load one batch. A poll batch can carry several versions of
+        one key (the reference appends them all and leans on downstream
+        views); the latest by ``order_cols`` wins. ``epoch``: the store
+        formats' idempotent-commit marker — a batch whose epoch was
+        already committed is a no-op (Snowflake ignores it)."""
         if self.fmt == "snowflake":
+            batch = last_write_wins(df, self.key_cols, self.order_cols)
             try:
                 (
                     batch.write.format("snowflake")
@@ -102,7 +95,7 @@ class WarehouseBatchLoader:
             self._store = make_upsert_store(
                 self.spark, self.target, self.key_cols, self.order_cols, self.fmt
             )
-        self._store.merge(batch)
+        self._store.merge(df, epoch=epoch)
 
     def read(self) -> DataFrame:
         """Current stand-in table contents (store formats only)."""
@@ -113,11 +106,13 @@ class WarehouseBatchLoader:
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch`` — the streaming K6
         path, the reference's manual-commit loop restated. Store
-        formats: checkpointed offsets + idempotent keyed merge =
-        effective exactly-once. ``fmt='snowflake'``: at-least-once
-        (append-only; see module doc)."""
+        formats: exactly-once — each batch commits with the stream's
+        epoch (``sinks._stream_epoch``), so a replayed batch commits
+        nothing. ``fmt='snowflake'``: at-least-once (append-only; see
+        module doc)."""
+        from iheardai_data_pipeline_spark.streaming.sinks import _stream_epoch
 
         def _fn(df: DataFrame, epoch_id: int) -> None:
-            self.load_batch(df)
+            self.load_batch(df, epoch=_stream_epoch(df, epoch_id))
 
         return _fn

@@ -10,6 +10,19 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    # DataFrame.collect() reads its rows through a socket makefile
+    # (pyspark.util._load_from_socket) and leaves the socket for the GC,
+    # whose last reference drops inside socket.SocketIO.close — so under
+    # `python -X dev` every collect warns. Ignore exactly that warning,
+    # by message and by the module it is attributed to; every other
+    # ResourceWarning stays visible.
+    config.addinivalue_line(
+        "filterwarnings",
+        r"ignore:unclosed <socket\.socket:ResourceWarning:socket\Z",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from iheardai_data_pipeline_spark.session import get_spark

@@ -224,7 +224,7 @@ def test_compact_preserves_serve_and_reclaims(spark, tmp_path):
 
 def test_serve_reads_only_probed_term_buckets(spark, tmp_path):
     idx = PostingsIndex(spark, str(tmp_path / "pp"), n_buckets=128)
-    assert idx._prune_probes
+    assert idx._store.prunes_probes
     idx.append(_docs(spark), seq=0)
     out = idx.topk(_queries(spark, [(0, "dog")]), k=3)
     rows = out.collect()
@@ -294,7 +294,7 @@ def test_phrase_serve_survives_compact(spark, tmp_path):
 
 def test_phrase_serve_reads_only_probed_term_buckets(spark, tmp_path):
     idx = PostingsIndex(spark, str(tmp_path / "php"), n_buckets=128)
-    assert idx._prune_probes
+    assert idx._store.prunes_probes
     idx.append(_docs(spark), seq=0)
     out = idx.phrase_topk(
         spark.createDataFrame(

@@ -49,6 +49,31 @@ def test_bootstrap_gate_and_reopen(spark, tmp_path):
         SemanticDedupIndex(spark, path, threshold=0.5)
 
 
+def test_bootstrap_race_loser_appends_nothing_extra(spark, tmp_path):
+    """A second bootstrap of the same corpus (crash-retry / race loser)
+    pins the same centroids and must not duplicate the corpus: the
+    bootstrap append is epoch-guarded. A different corpus yields other
+    centroids and must raise — never append vectors assigned to
+    centroids the index was not built with."""
+    path = str(tmp_path / "semr")
+    corpus = _vecs(spark, [(0, A), (1, B), (2, C), (3, A2)])
+    idx = SemanticDedupIndex.bootstrap(
+        spark, path, corpus, n_centroids=2, threshold=0.9
+    )
+    n0 = idx._store.read("vectors").count()
+    assert n0 == 4
+    idx2 = SemanticDedupIndex.bootstrap(
+        spark, path, corpus, n_centroids=2, threshold=0.9
+    )
+    assert idx2._store.read("vectors").count() == n0  # no duplicate corpus
+    other = _vecs(spark, [(5, C), (6, B), (7, A), (8, B2)])
+    with pytest.raises(ValueError, match="different artifacts"):
+        SemanticDedupIndex.bootstrap(
+            spark, path, other, n_centroids=2, threshold=0.9
+        )
+    assert idx._store.read("vectors").count() == n0
+
+
 def test_split_batches_equal_one_shot(spark, tmp_path):
     corpus = _vecs(spark, [(0, A)])
     incoming = [

@@ -318,20 +318,38 @@ def test_bucketed_deletion_fold_empties_bucket_cleanly(spark, tmp_path):
     assert "a" not in remaining  # deleted; store stays readable
 
 
-def test_warehouse_loader_stand_in_upsert(spark, tmp_path):
-    """K6 loader against the parquet_txn stand-in: in-batch LWW dedup,
+@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
+def test_warehouse_loader_stand_in_upsert(spark, tmp_path, fmt):
+    """K6 loader against both store stand-ins: in-batch LWW dedup,
     cross-batch keyed merge."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
-    ld = WarehouseBatchLoader(
-        spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt="parquet_txn"
-    )
+    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt=fmt)
     # batch 1 carries two versions of key 'a' -> seq 2 wins in-batch
     ld.load_batch(spark.createDataFrame([("a", 1, "v1"), ("a", 2, "v2")], SCHEMA))
     got = {r["k"]: r["v"] for r in ld.read().collect()}
     assert got == {"a": "v2"}
     # batch 2 updates 'a' and inserts 'b'
     ld.load_batch(spark.createDataFrame([("a", 3, "v3"), ("b", 1, "b1")], SCHEMA))
+    got = {r["k"]: (r["seq"], r["v"]) for r in ld.read().collect()}
+    assert got == {"a": (3, "v3"), "b": (1, "b1")}
+
+
+@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
+def test_warehouse_loader_foreach_batch_replay_is_exactly_once(spark, tmp_path, fmt):
+    """foreachBatch replays a micro-batch after a crash between the
+    write and the checkpoint: the replay must commit nothing."""
+    from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
+
+    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt=fmt)
+    fb = ld.foreach_batch()
+    batch0 = spark.createDataFrame([("a", 1, "v1"), ("a", 2, "v2")], SCHEMA)
+    fb(batch0, 0)
+    assert ld._store.current_version() == 1
+    fb(batch0, 0)  # replay
+    assert ld._store.current_version() == 1
+    fb(spark.createDataFrame([("a", 3, "v3"), ("b", 1, "b1")], SCHEMA), 1)
+    assert ld._store.current_version() == 2
     got = {r["k"]: (r["seq"], r["v"]) for r in ld.read().collect()}
     assert got == {"a": (3, "v3"), "b": (1, "b1")}
 
