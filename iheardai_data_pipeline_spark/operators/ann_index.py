@@ -558,12 +558,11 @@ class PersistentAnnIndex:
         probe_keys = exploded.select("centroid_id").distinct()
 
         def probed(rel: str) -> DataFrame | None:
-            # a scan-all read is cut to the probed clusters here, before
-            # the LWW collapse and the joins (a pruned read already is)
-            rows = self._store.read_probe(rel, probe_keys, broadcast_keys=True)
-            if rows is None or self._store.prunes_probes:
-                return rows
-            return rows.join(F.broadcast(probe_keys), "centroid_id", "left_semi")
+            # exactly the probed clusters' rows, before the LWW collapse
+            # and the joins, whether the read pruned or scanned
+            return self._store.read_probe(
+                rel, probe_keys, broadcast_keys=True, exact=True
+            )
 
         codes = probed("codes")
         if codes is None:

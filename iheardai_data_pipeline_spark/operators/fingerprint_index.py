@@ -83,8 +83,10 @@ class FingerprintIndex:
     ``n_buckets``: pass ``expected_docs=`` to size the fingerprint
     relation's bucket count with the shared
     :func:`~iheardai_data_pipeline_spark.operators.neardup_index.buckets_for_corpus`
-    rule (one fingerprint row per doc → ``bands=1``); the bare default
-    (16, scan-all regime) is only right for rig-scale corpora.
+    rule (one fingerprint row per doc → ``bands=1``). Without either,
+    the store is sized to its data (one bucket at first, refitted by
+    each ``compact``), which keeps rig-scale corpora in the scan-all
+    regime.
     """
 
     def __init__(

@@ -32,8 +32,10 @@ probe reads only the buckets its keys hash to (the store's
 ``read_probe``, which prunes on large layouts and scans rig-small
 ones); the profile relation is touched only for verified CANDIDATES.
 Both append through the store's O(batch) add-files commit.
-``n_buckets`` is a layout constant — size it so one bucket's band rows
-fit an executor (e.g. thousands at corpus scale; the rig default 16).
+An explicit ``n_buckets`` (or ``expected_docs=``) pins the bucket count
+— size it so one bucket's band rows fit an executor (e.g. thousands at
+corpus scale). Without one the store is sized to its data: one bucket
+at first, refitted by each ``compact`` to the bytes it rewrites.
 
 Reference parity: the reference has no persistent near-dup index; this
 is part of the training-data extension set (SURVEY §2 extensions), the
@@ -83,8 +85,10 @@ def buckets_for_corpus(
     clamped to [16, 65536]. The default target (250k rows ≈ a few MB of
     (bkey, id) pairs) keeps any single probe's bucket reads executor-
     sized; a 1B-doc corpus at 16 bands → 16B band rows → 65536 buckets,
-    each ~244k rows. Power-of-two so a later split/merge re-shard halves
-    or doubles cleanly.
+    each ~244k rows. The count is pinned for the index's life. A
+    power of two, like the counts a data-sized store
+    (``n_buckets=None``) moves between on its full rewrites, and the
+    same cap (``streaming.stores.MAX_BUCKETS``).
     """
     if expected_docs <= 0:
         raise ValueError(f"expected_docs must be positive, got {expected_docs}")
@@ -113,9 +117,10 @@ class MinHashBandIndex:
     pins them in ``_lsh_meta.json`` and later opens must match.
 
     ``n_buckets``: pass ``expected_docs=`` to size it with
-    :func:`buckets_for_corpus` (preferred — it is a layout constant you
-    cannot change later without re-sharding); the bare default (16) is
-    only right for rig-scale corpora.
+    :func:`buckets_for_corpus` (preferred at corpus scale — a pinned
+    count cannot change later without re-sharding). Without either,
+    the store is sized to its data: one bucket at first, refitted by
+    each ``compact``.
     """
 
     def __init__(

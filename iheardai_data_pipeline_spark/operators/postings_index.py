@@ -134,8 +134,9 @@ class PostingsIndex:
     relation with the shared ``buckets_for_corpus`` rule (terms per doc
     ~ doclen, but postings rows per doc are DISTINCT terms — the
     ``bands=32`` default below approximates a short-document corpus;
-    override for long documents). The bare default (16, scan-all
-    regime) is only right for rig-scale corpora.
+    override for long documents). Without either, the store is sized
+    to its data (one bucket at first, refitted by each ``compact``),
+    which keeps rig-scale corpora in the scan-all regime.
     """
 
     def __init__(
@@ -1230,10 +1231,9 @@ class PostingsIndex:
             # (no doclens read), and dl is the in-row sum of the
             # forward term list (== the doclens dl by construction:
             # both are SUM(tf) over the same per-batch tf relation)
-            fraw = self._store.read_probe("forward", cdocs, version=version)
-            if fraw is not None and not self._store.prunes_probes:
-                # a pruned read semi-joins the candidate ids itself
-                fraw = fraw.join(cdocs, ic, "left_semi")
+            fraw = self._store.read_probe(
+                "forward", cdocs, version=version, exact=True
+            )
             if fraw is None:
                 fwd = self.spark.createDataFrame(
                     [], f"{ic} long, dl long, term string, tf long"

@@ -140,8 +140,11 @@ def session_state_foreach_batch(
     Each batch keeps only its own max-seq row per key, then merges with
     the store keeping the larger seq — stale updates are dropped exactly
     like the reference's `seq <= current` check. The seq-guard
-    last-write-wins is key-local and idempotent, so the bucketed
-    partial rewrite applies and a replayed batch changes nothing.
+    last-write-wins is key-local, so the bucketed partial rewrite
+    applies. It is also idempotent, but a replay would still rewrite
+    the touched buckets as a new version: each commit carries the
+    batch's epoch (see :func:`_stream_epoch`), so a replay commits
+    nothing.
     """
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -156,7 +159,7 @@ def session_state_foreach_batch(
                 current.unionByName(upd), store.key_cols, [seq_col]
             )
 
-        store.apply_keyed(newest, merge_fn)
+        store.apply_keyed(newest, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
 
     return apply
 

@@ -26,6 +26,12 @@ Two one-relation views of that log serve the keyed upserts, selected by
   is what lets :meth:`TransactionalParquetStore.apply` run a fold that
   is not key-local.
 
+A store opened without ``n_buckets`` is sized to its data: each
+relation starts at one bucket, and a commit that rewrites the whole
+relation picks its next power-of-two bucket count from the bytes it
+staged (see :class:`MultiRelationTransactionalStore`). An explicit
+``n_buckets`` pins the count.
+
 Both expose ``read`` / ``merge`` / ``apply_keyed`` / ``write_snapshot``
 / ``vacuum``, so the foreachBatch logic is identical across them.
 
@@ -61,19 +67,25 @@ from iheardai_data_pipeline_spark.operators.mutations import (
 # On-disk layout version, pinned in _meta.json by a store's creator.
 # Every open refuses any other version (and a store without one) instead
 # of guessing how to read it; bump it whenever the layout changes.
-LAYOUT_VERSION = 1
+# History: 1 — one bucket count per store, pinned in _meta.json;
+# 2 — each commit records each relation's bucket count.
+LAYOUT_VERSION = 2
+
+# The most buckets a data-sized store gives one relation: the cap
+# operators/neardup_index.py:buckets_for_corpus sizes indexes to.
+MAX_BUCKETS = 65536
 
 # Consecutive lost commit races a writer retries before giving up. Every
 # retry re-reads the winner's commit, so only a writer starved by
 # unserialized contenders on one store ever reaches the limit.
 OCC_MAX_RETRIES = 10
 
-# Probe reads (read_probe) prune to the touched buckets only on stores
-# with MORE buckets than this. The pruning collect is a whole Spark job
-# over the probe keys; at rig-small bucket counts lazily listing every
-# bucket dir is cheaper than running it, while large layouts
-# (buckets_for_corpus sizing) must prune — that is what keeps a probe
-# O(batch).
+# Probe reads (read_probe) prune to the touched buckets only on
+# relations with MORE buckets than this. The pruning collect is a whole
+# Spark job over the probe keys; at rig-small bucket counts lazily
+# listing every bucket dir is cheaper than running it, while large
+# layouts (buckets_for_corpus sizing, or a data-sized relation past
+# 64 splits) must prune — that is what keeps a probe O(batch).
 PRUNE_PROBES_ABOVE_BUCKETS = 64
 
 
@@ -399,34 +411,48 @@ class MultiRelationTransactionalStore:
     every relation. Halves the per-batch fixed cost and makes the
     cross-relation state transactional.
 
-    The key space of each relation hash-partitions into ``n_buckets``,
-    so a key-local fold (:meth:`apply_keyed`) reads and rewrites ONLY
-    the buckets holding updated keys, and the manifest inherits every
-    untouched bucket by pointer: a 1-key update into a 10 TB store
-    rewrites ~1/n_buckets of it. A bucket's manifest entry is a LIST of
-    snapshot dirs (Delta's add-file model): :meth:`append_keyed` — the
-    ingest hot path — stages ONLY the update rows and appends a
-    pointer, so an append commit costs O(batch) however big the store
-    is. Reads concatenate a bucket's dir list; :meth:`compact` folds
-    each list back to one dir on the maintenance cadence, bounding
-    small-file growth.
+    The key space of each relation hash-partitions into buckets, a key
+    going to bucket ``pmod(xxhash64(key), count)``, so a key-local fold
+    (:meth:`apply_keyed`) reads and rewrites ONLY the buckets holding
+    updated keys, and the manifest inherits every untouched bucket by
+    pointer: a 1-key update into a 10 TB store rewrites ~1/count of it.
+    A bucket's manifest entry is a LIST of snapshot dirs (Delta's
+    add-file model): :meth:`append_keyed` — the ingest hot path —
+    stages ONLY the update rows and appends a pointer, so an append
+    commit costs O(batch) however big the store is. Reads concatenate a
+    bucket's dir list; :meth:`compact` folds each list back to one dir
+    on the maintenance cadence, bounding small-file growth.
+
+    Bucket counts. Each relation's count is a power of two between 1
+    and :data:`MAX_BUCKETS`, recorded in every commit. A store opened
+    with ``n_buckets=None`` starts each relation at ONE bucket; a commit
+    that rewrites every bucket of a relation anyway (a full-touch
+    :meth:`apply_keyed`, :meth:`apply_keyed_all_buckets`,
+    :meth:`compact`, :meth:`write_snapshot`) gives it the smallest count
+    whose staged bytes per bucket stay at or under Spark's
+    ``spark.sql.files.maxPartitionBytes`` (one bucket then reads as at
+    most one scan split). Every other commit keeps the count of the base
+    it commits on. An explicit ``n_buckets`` is the same rule with the
+    count pinned to ``n_buckets`` (which need not be a power of two).
 
     Layout under ``path``::
 
-        _meta.json                  {"layout": LAYOUT_VERSION, "n_buckets": N,
+        _meta.json                  {"layout": LAYOUT_VERSION,
+                                     "n_buckets": N or null (data-sized),
                                      "relations": {name: key_cols}}
-                                    — pinned by the first creator; every
-                                    writer MUST use the same bucketing or
-                                    merges would read the wrong buckets
-        _snapshots/<uuid>/__rel=<tag>/__bucket=<b>/  touched buckets
+                                    — pinned by the first creator; a later
+                                    open passes None or the same N
+        _snapshots/<uuid>/__rel=<tag>/__bucket=<b>/  staged buckets
         _commits/<N>                {"manifest": {rel: {"<b>": ["<uuid>", ...]}},
+                                     "buckets": {rel: count},
                                      "epoch": optional idempotence marker}
         _commits/_epochs/           epochs of vacuumed markers (see vacuum)
 
     A relation's ``<tag>`` is its index among the sorted relation names
     (the order ``_meta.json`` pins): staging an int partition value is
     measurably cheaper than staging the name string. ``<b>`` is the
-    bucket number, ``0 <= b < n_buckets``.
+    bucket number, ``0 <= b < count`` for the count the commit records;
+    reads go by the manifest's paths, so a resize needs no reader change.
 
     Every open checks the layout version: a ``_meta.json`` with another
     version or none, and a ``_commits/`` holding markers with no
@@ -486,15 +512,15 @@ class MultiRelationTransactionalStore:
             raise _layout_error(path, "none (commit markers without _meta.json)")
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(commits, exist_ok=True)
-        # n_buckets and the relations are part of the on-disk layout: a
-        # writer opening an existing store with another bucketing would
-        # hash keys into the WRONG buckets and silently duplicate them.
-        # The first creator pins both in _meta.json; later opens inherit
-        # n_buckets (None) or must match, and must name the same
+        # the bucketing rule and the relations are part of the on-disk
+        # layout: a writer opening an existing store with another one
+        # would hash keys into the WRONG buckets and silently duplicate
+        # them. The first creator pins both in _meta.json; later opens
+        # inherit n_buckets (None) or must match, and must name the same
         # relations with the same keys.
         want = {
             "layout": LAYOUT_VERSION,
-            "n_buckets": 16 if n_buckets is None else n_buckets,
+            "n_buckets": n_buckets,
             "relations": {r: list(self.relations[r]) for r in self._rel_names},
         }
         if not os.path.exists(meta_path):
@@ -514,7 +540,13 @@ class MultiRelationTransactionalStore:
                 f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
                 "pass None to inherit"
             )
+        # the pinned count, or None: sized to the data
         self.n_buckets = persisted["n_buckets"]
+        # the count a relation starts at, and the finest one it can
+        # reach: every reachable count divides it, so a bucket number
+        # hashed at the finest count maps to any other by ``b % count``
+        self._start = 1 if self.n_buckets is None else self.n_buckets
+        self._finest = MAX_BUCKETS if self.n_buckets is None else self.n_buckets
 
     # -- commit-log primitives (shared OCC protocol) ---------------------------
 
@@ -544,22 +576,44 @@ class MultiRelationTransactionalStore:
         manifest = self._manifest(self.current_version())
         return bool(manifest and manifest.get(rel))
 
+    def _base(self, version: int) -> tuple[dict, dict[str, int]]:
+        """(manifest, bucket counts) committed at ``version``. The
+        manifest is {rel: {bucket: [snapshot, ...]}} — a bucket's rows
+        are the concatenation of its snapshot-dir list (appends add
+        pointers; rewrites/compaction collapse the list to one); the
+        counts are {rel: count}. An uncommitted (or vacuumed) version
+        has an empty manifest, every relation at its starting count."""
+        try:
+            # no exists() check first: vacuum may unlink the marker
+            # between the check and the open
+            with open(os.path.join(self._commits_dir(), str(version))) as fh:
+                record = json.load(fh)
+        except FileNotFoundError:
+            return {}, dict.fromkeys(self._rel_names, self._start)
+        return record["manifest"], record["buckets"]
+
     def _manifest(self, version: int) -> dict[str, dict[str, list[str]]] | None:
-        """{rel: {bucket: [snapshot, ...]}} — a bucket's rows are the
-        concatenation of its snapshot-dir list (appends add pointers;
-        rewrites/compaction collapse the list to one)."""
-        marker = os.path.join(self._commits_dir(), str(version))
-        if version <= 0 or not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            return json.load(fh)["manifest"]
+        """The manifest of committed ``version`` (see :meth:`_base`), or
+        None when it is not committed."""
+        return self._base(version)[0] or None
+
+    def bucket_count(self, rel: str, version: int | None = None) -> int:
+        """``rel``'s bucket count at committed ``version`` (default the
+        latest); before the first commit, its starting count."""
+        if version is None:
+            version = self.current_version()
+        return self._base(version)[1][rel]
 
     def _try_commit(
-        self, version: int, manifest: dict[str, dict[str, list[str]]], epoch=None
+        self,
+        version: int,
+        manifest: dict[str, dict[str, list[str]]],
+        buckets: dict[str, int],
+        epoch=None,
     ) -> bool:
-        """Claim ``version`` with this manifest; False when another
-        writer already owns it."""
-        payload: dict = {"manifest": manifest}
+        """Claim ``version`` with this manifest and these bucket counts;
+        False when another writer already owns it."""
+        payload: dict = {"manifest": manifest, "buckets": buckets}
         if epoch is not None:
             payload["epoch"] = epoch
         return _publish_once(
@@ -601,12 +655,10 @@ class MultiRelationTransactionalStore:
             return df
         return self.spark.read.schema(self._file_schema).parquet(*paths)
 
-    def _bucket_expr(self, rel: str):
+    def _bucket_expr(self, rel: str, count: int):
         from pyspark.sql import functions as F
 
-        return F.pmod(
-            F.xxhash64(*self.relations[rel]), F.lit(self.n_buckets)
-        ).cast("int")
+        return F.pmod(F.xxhash64(*self.relations[rel]), F.lit(count)).cast("int")
 
     def _check_relations(self, op: str, frames: dict[str, DataFrame]) -> None:
         if set(frames) != set(self.relations):
@@ -616,11 +668,12 @@ class MultiRelationTransactionalStore:
             )
 
     def _stage(
-        self, frames: dict[str, DataFrame], n_groups: int
+        self, frames: dict[str, DataFrame], buckets: dict[str, int]
     ) -> tuple[str, dict[str, set[str]]]:
-        """Stage every relation's rows under ONE new snapshot dir with
-        ONE Spark write job; returns the dir name and, per relation of
-        the store, the buckets the write actually produced.
+        """Stage every relation's rows, each hashed into its count in
+        ``buckets``, under ONE new snapshot dir with ONE Spark write
+        job; returns the dir name and, per relation of the store, the
+        buckets the write actually produced.
 
         Each (rel, bucket) group is co-located before partitionBy, so a
         commit writes ONE file per group instead of (tasks x groups)
@@ -642,7 +695,7 @@ class MultiRelationTransactionalStore:
         parts = [
             frames[rel]
             .withColumn("__rel", F.lit(self._rel_names.index(rel)))
-            .withColumn("__bucket", self._bucket_expr(rel))
+            .withColumn("__bucket", self._bucket_expr(rel, buckets[rel]))
             for rel in self._rel_names
             if rel in frames
         ]
@@ -655,6 +708,7 @@ class MultiRelationTransactionalStore:
             )
         )
         name = uuid.uuid4().hex
+        n_groups = sum(buckets[rel] for rel in frames)
         (
             all_df.repartition(
                 _staged_write_tasks(self.spark, n_groups), "__rel", "__bucket"
@@ -679,6 +733,81 @@ class MultiRelationTransactionalStore:
 
     def _drop_snapshot(self, snapshot: str) -> None:
         shutil.rmtree(self._snapshot_dir(snapshot), ignore_errors=True)
+
+    def _fitted_count(self, snapshot: str, rel: str) -> int:
+        """The bucket count for ``rel`` rewritten whole into
+        ``snapshot``: the pinned count, or the smallest power of two
+        whose staged bytes per bucket stay at or under Spark's
+        ``spark.sql.files.maxPartitionBytes``, capped at MAX_BUCKETS."""
+        if self.n_buckets is not None:
+            return self.n_buckets
+        staged = sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(
+                os.path.join(self._snapshot_dir(snapshot), self._rel_dir(rel))
+            )
+            for f in files
+            if not f.startswith((".", "_"))  # checksums, _SUCCESS
+        )
+        conf = self.spark._jsparkSession.sessionState().conf()
+        target = conf.filesMaxPartitionBytes()
+        count = 1
+        while count < MAX_BUCKETS and staged > count * target:
+            count *= 2
+        return count
+
+    def _commit_fold(
+        self,
+        version: int,
+        base: dict,
+        buckets: dict[str, int],
+        merged: dict[str, DataFrame],
+        touched: dict[str, set[str] | None],
+        epoch=None,
+    ) -> bool:
+        """Stage a fold's output and try to claim ``version`` on
+        ``base``; True iff committed (a lost claim drops the staged dir).
+
+        ``merged`` holds each relation's new rows for its ``touched``
+        buckets, hashed at its base count in ``buckets``; a relation
+        whose ``touched`` is None is rewritten whole (one left out of
+        ``merged`` is committed empty) and takes its fitted count
+        (:meth:`_fitted_count`). When that moves any count, the staged
+        rows are re-staged once, from the staged files, at the new
+        counts. The manifest keeps the base's other buckets by pointer
+        and lists only buckets the write produced: a key-local fold may
+        legitimately empty a touched bucket (deletion fold), and a
+        pointer to a nonexistent dir would make every later read throw."""
+        name, written = self._stage(merged, buckets)
+        fitted = {
+            rel: self._fitted_count(name, rel) if touched[rel] is None else n
+            for rel, n in buckets.items()
+        }
+        if fitted != buckets:
+            staged = {
+                rel: self._read_rel({rel: {b: [name] for b in written[rel]}}, rel)
+                for rel in self._rel_names
+                if written[rel]
+            }
+            if staged:
+                resized, written = self._stage(staged, fitted)
+                self._drop_snapshot(name)
+                name = resized
+        manifest = {}
+        for rel in self._rel_names:
+            if touched[rel] is None:
+                manifest[rel] = {b: [name] for b in written[rel]}
+                continue
+            kept = base.get(rel, {})
+            manifest[rel] = {b: v for b, v in kept.items() if b not in touched[rel]}
+            # a fold REPLACES each touched bucket's whole dir list
+            manifest[rel].update(
+                {b: [name] for b in touched[rel] if b in written[rel]}
+            )
+        if self._try_commit(version, manifest, fitted, epoch=epoch):
+            return True
+        self._drop_snapshot(name)
+        return False
 
     # -- store interface --------------------------------------------------------
 
@@ -710,15 +839,16 @@ class MultiRelationTransactionalStore:
         """Bucket-pruned keyed lookup on one relation: scan ONLY the
         buckets the requested keys hash to, then LEFT SEMI the key set.
 
-        A point lookup in an N-bucket store therefore reads ~1/N of its
-        files — the serving-path read the bucketed layout exists for
+        A point lookup in an N-bucket relation therefore reads ~1/N of
+        its files — the serving-path read the bucketed layout exists for
         (the write side already rewrites only touched buckets; this is
         the symmetric read optimization). The bucket set is a bounded
-        collect (<= n_buckets rows, same bound as apply_keyed). Returns
-        None when the store is empty or no requested bucket has data
-        (no rows either way). The collect is a full Spark job over the
-        key frame, so probe-heavy callers go through :meth:`read_probe`,
-        which skips it on rig-small layouts.
+        collect (<= count rows); a one-bucket relation skips it and goes
+        straight to the semi-join. Returns None when the store is empty
+        or no requested bucket has data (no rows either way). The
+        collect is a full Spark job over the key frame, so probe-heavy
+        callers go through :meth:`read_probe`, which skips it on
+        rig-small layouts.
 
         ``broadcast_keys=True`` hints the semi-join to broadcast the
         key frame — pass it ONLY when the key set is bounded by
@@ -734,19 +864,22 @@ class MultiRelationTransactionalStore:
 
         ``version``: read AS OF that committed version (see
         :meth:`read`) instead of the call-time latest."""
-        manifest = self._manifest(
+        manifest, buckets = self._base(
             self.current_version() if version is None else version
         )
-        if not manifest or not manifest.get(rel):
+        if not manifest.get(rel):
             return None
         kd = keys.select(*self.relations[rel]).distinct()
-        touched = {
-            str(r["__bucket"])
-            for r in kd.withColumn("__bucket", self._bucket_expr(rel))
-            .select("__bucket")
-            .distinct()
-            .collect()
-        }
+        touched = None  # one bucket: every key hashes to it
+        if buckets[rel] > 1:
+            touched = {
+                str(r["__bucket"])
+                for r in kd.select(
+                    self._bucket_expr(rel, buckets[rel]).alias("__bucket")
+                )
+                .distinct()
+                .collect()
+            }
         rows = self._read_rel(manifest, rel, touched)
         if rows is None:
             return None
@@ -758,11 +891,13 @@ class MultiRelationTransactionalStore:
 
     @property
     def prunes_probes(self) -> bool:
-        """Whether :meth:`read_probe` prunes (more than
-        ``PRUNE_PROBES_ABOVE_BUCKETS`` buckets) or scans. Callers test
-        it only for work that pays off on one side alone, e.g. pinning
-        a key frame the pruning collect would otherwise re-run."""
-        return self.n_buckets > PRUNE_PROBES_ABOVE_BUCKETS
+        """Whether :meth:`read_probe` prunes some relation at the latest
+        version (one with more than ``PRUNE_PROBES_ABOVE_BUCKETS``
+        buckets). Callers test it only for work that pays off on one
+        side alone, e.g. pinning a key frame the pruning collect would
+        otherwise re-run."""
+        _, buckets = self._base(self.current_version())
+        return max(buckets.values()) > PRUNE_PROBES_ABOVE_BUCKETS
 
     def read_probe(
         self,
@@ -770,18 +905,53 @@ class MultiRelationTransactionalStore:
         keys: DataFrame,
         broadcast_keys: bool = False,
         version: int | None = None,
+        exact: bool = False,
     ) -> DataFrame | None:
         """The rows of ``rel`` a probe by ``keys`` must see, under the
-        store's prune-vs-scan rule: a pruning layout returns
+        store's prune-vs-scan rule for ``rel``'s bucket count at the
+        version read: above ``PRUNE_PROBES_ABOVE_BUCKETS`` it returns
         :meth:`read_keys` (only the keys' buckets, LEFT SEMI the keys);
-        a scan-all layout returns the whole relation, lazily and with no
-        collect, and leaves the filtering to the caller's own key join.
-        ``broadcast_keys`` and ``version`` are :meth:`read_keys`'."""
-        if self.prunes_probes:
+        otherwise the whole relation, lazily and with no collect, which
+        leaves the filtering to the caller's own key join — or, with
+        ``exact=True``, to a LEFT SEMI join with ``keys`` here, so the
+        rows are exactly the keys' either way. ``broadcast_keys`` and
+        ``version`` are :meth:`read_keys`'."""
+        if version is None:
+            version = self.current_version()
+        if self.bucket_count(rel, version) > PRUNE_PROBES_ABOVE_BUCKETS:
             return self.read_keys(
                 rel, keys, broadcast_keys=broadcast_keys, version=version
             )
-        return self.read(rel, version)
+        rows = self.read(rel, version)
+        if rows is None or not exact:
+            return rows
+        if broadcast_keys:
+            from pyspark.sql import functions as F
+
+            keys = F.broadcast(keys)
+        return rows.join(keys, self.relations[rel], "left_semi")
+
+    def _touched_finest(self, updates: dict[str, DataFrame]) -> dict[str, set[int]]:
+        """Per relation, the buckets its update keys hash to at the
+        finest count: ONE bounded collect across all relations. Any
+        count the relation can have divides the finest, so ``b % count``
+        maps them to it on the driver, and one collect serves every
+        retry of a call, however the base's counts move."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        tagged = [
+            df.select(
+                F.lit(self._rel_names.index(rel)).alias("__rel"),
+                self._bucket_expr(rel, self._finest).alias("__bucket"),
+            ).distinct()
+            for rel, df in updates.items()
+        ]
+        touched: dict[str, set[int]] = {rel: set() for rel in self.relations}
+        for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
+            touched[self._rel_names[r["__rel"]]].add(r["__bucket"])
+        return touched
 
     def apply_keyed(self, updates: dict[str, DataFrame], fn, epoch=None) -> None:
         """Atomic multi-relation OCC partial-rewrite read-modify-write.
@@ -791,61 +961,40 @@ class MultiRelationTransactionalStore:
         be key-local per relation — a key's output rows derive only from
         that key's current + update rows (upserts, per-key aggregate
         folds). That property is what makes restricting ``current`` to
-        the touched buckets exact. One touched-bucket collect, ONE
-        staged write job over all relations, one commit claim. A lost
-        commit race re-reads the new base manifest and re-applies
-        ``fn``, so concurrent commits (including to the same bucket) are
-        never lost. ``epoch`` = idempotent-commit marker (see the class
+        the touched buckets exact. At most one touched-bucket collect
+        (none while every relation has one bucket, which every commit
+        touches — so every such call commits a version), ONE staged
+        write job over all relations, one commit claim. A relation whose
+        every bucket is touched is rewritten whole and may change its
+        bucket count (see the class docstring). A lost commit race
+        re-reads the new base manifest and re-applies ``fn``, so
+        concurrent commits (including to the same bucket) are never
+        lost. ``epoch`` = idempotent-commit marker (see the class
         docstring).
         """
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
         self._check_relations("apply_keyed", updates)
-        upd = {
-            rel: df.withColumn("__bucket", self._bucket_expr(rel))
-            for rel, df in updates.items()
-        }
-        # ONE bounded collect across all relations (<= n_rel * n_buckets)
-        tagged = [
-            df.select(
-                F.lit(self._rel_names.index(rel)).alias("__rel"), "__bucket"
-            ).distinct()
-            for rel, df in upd.items()
-        ]
-        touched: dict[str, list[str]] = {rel: [] for rel in self.relations}
-        for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
-            touched[self._rel_names[r["__rel"]]].append(str(r["__bucket"]))
-        n_touched = sum(len(v) for v in touched.values())
-        if n_touched == 0:
-            return
-        upd_data = {rel: df.drop("__bucket") for rel, df in upd.items()}
+        finest = None  # collected once a base has a relation above one bucket
         for _ in range(OCC_MAX_RETRIES):
             if self.epoch_committed(epoch):
                 return
             base_version = self.current_version()
-            base = self._manifest(base_version) or {}
+            base, buckets = self._base(base_version)
+            if finest is None and max(buckets.values()) > 1:
+                finest = self._touched_finest(updates)
+            touched: dict[str, set[str] | None] = {}
+            for rel, n in buckets.items():
+                hit = None if n == 1 else {str(b % n) for b in finest[rel]}
+                touched[rel] = None if hit is None or len(hit) == n else hit
+            if not any(t is None or t for t in touched.values()):
+                return
             merged = {
-                rel: fn(rel, self._read_rel(base, rel, touched[rel]), upd_data[rel])
+                rel: fn(rel, self._read_rel(base, rel, touched[rel]), updates[rel])
                 for rel in self._rel_names
             }
-            name, written = self._stage(merged, n_touched)
-            # manifest entries come from the dirs the write ACTUALLY
-            # produced: a key-local fn may legitimately empty a touched
-            # bucket (deletion fold), and pointing the manifest at a
-            # nonexistent dir would make every subsequent read() throw
-            manifest = {rel: dict(base.get(rel, {})) for rel in self.relations}
-            for rel in self.relations:
-                for b in touched[rel]:
-                    if b in written[rel]:
-                        # a fold REPLACES the bucket's whole dir list
-                        manifest[rel][b] = [name]
-                    else:
-                        manifest[rel].pop(b, None)
-            if self._try_commit(base_version + 1, manifest, epoch=epoch):
+            if self._commit_fold(
+                base_version + 1, base, buckets, merged, touched, epoch=epoch
+            ):
                 return
-            self._drop_snapshot(name)
         raise RuntimeError(
             f"apply_keyed on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
@@ -872,38 +1021,46 @@ class MultiRelationTransactionalStore:
         tolerate duplicates — the band index's do).
         """
         self._check_relations("append_keyed", updates)
-        name, written = self._stage(
-            updates, len(self.relations) * self.n_buckets
-        )
-        if not any(written.values()):
-            self._drop_snapshot(name)
-            return None
-        # the staged dir is version-independent (pure batch rows), so a
-        # lost race only re-points the manifest — nothing is re-staged
+        name = staged_buckets = None
         for _ in range(OCC_MAX_RETRIES):
             if self.epoch_committed(epoch):
-                self._drop_snapshot(name)
-                return None
+                break
             base_version = self.current_version()
-            base = self._manifest(base_version) or {}
+            base, buckets = self._base(base_version)
+            # the staged dir is pure batch rows, so a lost race only
+            # re-points the manifest — unless the winner resized a
+            # relation: rows hashed at another count must be re-staged
+            if buckets != staged_buckets:
+                if name is not None:
+                    self._drop_snapshot(name)
+                name, written = self._stage(updates, buckets)
+                staged_buckets = buckets
+                if not any(written.values()):
+                    break
             manifest = {rel: dict(base.get(rel, {})) for rel in self.relations}
             for rel in self.relations:
                 for b in written[rel]:
                     manifest[rel][b] = manifest[rel].get(b, []) + [name]
-            if self._try_commit(base_version + 1, manifest, epoch=epoch):
+            if self._try_commit(base_version + 1, manifest, buckets, epoch=epoch):
                 return base_version + 1
-        self._drop_snapshot(name)
-        raise RuntimeError(
-            f"append_keyed on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
-        )
+        else:
+            self._drop_snapshot(name)
+            raise RuntimeError(
+                f"append_keyed on {self.path} lost {OCC_MAX_RETRIES} "
+                "consecutive commit races"
+            )
+        if name is not None:
+            self._drop_snapshot(name)
+        return None
 
     def compact(self, epoch=None) -> None:
         """Fold every bucket's snapshot-dir list back to ONE dir (small-
         file hygiene after many appends). One read+rewrite of the whole
         store through the normal commit protocol — maintenance cadence,
-        not the ingest path. Rows are preserved verbatim; row-level
-        cleanup (e.g. dropping duplicates replayed un-epoched appends
-        created) is the caller's semantics — pass its fold to
+        not the ingest path — so it also refits each relation's bucket
+        count. Rows are preserved verbatim; row-level cleanup (e.g.
+        dropping duplicates replayed un-epoched appends created) is the
+        caller's semantics — pass its fold to
         :meth:`apply_keyed_all_buckets` directly."""
         self.apply_keyed_all_buckets(
             lambda rel, current, upd: current, epoch=epoch
@@ -917,7 +1074,7 @@ class MultiRelationTransactionalStore:
         None)`` runs once per relation that has rows — never with a
         None ``current`` — and an empty store commits nothing. Same
         commit protocol as apply_keyed, but 'touched' = all buckets in
-        the base manifest.
+        the base manifest, so each relation takes its fitted count.
 
         ``require_version``: abort with :class:`StoreVersionConflict`
         (no commit, no retry) if the store's current version is not
@@ -948,8 +1105,9 @@ class MultiRelationTransactionalStore:
     def _rewrite_all(self, fold, epoch=None, require_version=None) -> None:
         """The full-rewrite commit loop. ``fold(base_manifest)`` returns
         ``{rel: rows}``, each relation's WHOLE new contents (a relation
-        it leaves out is committed empty), or None to commit nothing. A
-        lost race re-reads the new base and re-runs ``fold``; see
+        it leaves out is committed empty), or None to commit nothing.
+        Every relation takes its fitted count. A lost race re-reads the
+        new base and re-runs ``fold``; see
         :meth:`apply_keyed_all_buckets` for ``require_version``."""
         for _ in range(OCC_MAX_RETRIES):
             if self.epoch_committed(epoch):
@@ -961,20 +1119,15 @@ class MultiRelationTransactionalStore:
                     f"(caller pinned {require_version}) — recompute the "
                     "snapshot-derived fold state and retry"
                 )
-            base = self._manifest(base_version) or {}
+            base, buckets = self._base(base_version)
             merged = fold(base)
             if merged is None:
                 return
-            # one write task per populated bucket; n_buckets for a
-            # relation that has none yet
-            n_groups = sum(len(base.get(rel, ())) or self.n_buckets for rel in merged)
-            name, written = self._stage(merged, n_groups)
-            manifest = {
-                rel: {b: [name] for b in written[rel]} for rel in self.relations
-            }
-            if self._try_commit(base_version + 1, manifest, epoch=epoch):
+            whole = dict.fromkeys(self._rel_names)
+            if self._commit_fold(
+                base_version + 1, base, buckets, merged, whole, epoch=epoch
+            ):
                 return
-            self._drop_snapshot(name)
         raise RuntimeError(
             f"full rewrite of {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
@@ -1038,7 +1191,10 @@ class BucketedTransactionalStore:
 
     A merge rewrites ONLY the buckets containing updated keys and
     inherits the rest by pointer (see the multi-relation store for the
-    commit protocol, the epoch contract and the layout). The store's
+    commit protocol, the epoch contract, the bucket-count rule and the
+    layout). Opened without ``n_buckets``, the store is sized to its
+    data: a small one stays at one bucket, which every merge rewrites
+    whole with no touched-bucket collect. The store's
     single relation is named ``rows``, keyed on ``key_cols``;
     ``order_cols`` orders :meth:`merge`'s last-writer-wins.
 
@@ -1066,7 +1222,8 @@ class BucketedTransactionalStore:
         )
 
     @property
-    def n_buckets(self) -> int:
+    def n_buckets(self) -> int | None:
+        """The pinned bucket count, or None for a data-sized store."""
         return self._store.n_buckets
 
     def current_version(self) -> int:
@@ -1133,11 +1290,11 @@ class TransactionalParquetStore(BucketedTransactionalStore):
     What the single bucket buys is :meth:`apply`, a read-modify-write
     whose fold sees the WHOLE current snapshot and so need not be
     key-local (the t14–t19 streaming sketches merge their bounded
-    state this way). :meth:`apply_keyed` (and so :meth:`merge`) runs
-    through :meth:`apply`, so every call commits a version, as the
-    full-snapshot store always did; every other method is the bucketed
-    view's. A commit whose rows are empty reads back as None, like an
-    empty store.
+    state this way). Every other method is the bucketed view's: at one
+    bucket its :meth:`apply_keyed` (and so :meth:`merge`) skips the
+    touched-bucket collect and rewrites the whole relation, so every
+    call commits a version, as the full-snapshot store always did. A
+    commit whose rows are empty reads back as None, like an empty store.
     """
 
     def __init__(
@@ -1167,12 +1324,6 @@ class TransactionalParquetStore(BucketedTransactionalStore):
             epoch=epoch,
         )
 
-    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
-        """:meth:`BucketedTransactionalStore.apply_keyed` as a full
-        rewrite: the one bucket is touched by every commit, so the
-        touched-bucket collect job is skipped."""
-        self.apply(lambda current: fn(current, updates), epoch=epoch)
-
 
 def make_upsert_store(
     spark: SparkSession,
@@ -1183,7 +1334,7 @@ def make_upsert_store(
 ) -> BucketedTransactionalStore:
     """Factory over the two views of the commit log: ``parquet_txn``
     (one bucket, full-snapshot rewrites) and ``parquet_bucketed``
-    (partial bucket rewrites — the scale path)."""
+    (data-sized buckets, partial bucket rewrites — the scale path)."""
     if fmt == "parquet_txn":
         return TransactionalParquetStore(spark, path, key_cols, order_cols)
     if fmt == "parquet_bucketed":

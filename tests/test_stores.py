@@ -46,9 +46,11 @@ def test_first_commit_dedups_within_batch(spark, tmp_path):
 
 def test_commit_claim_is_exclusive(spark, tmp_path):
     log = _store(spark, tmp_path)._store  # the commit log under the view
-    assert log._try_commit(1, {"rows": {"0": ["snap-a"]}})
-    assert not log._try_commit(1, {"rows": {"0": ["snap-b"]}})  # version already owned
-    assert log._try_commit(2, {"rows": {"0": ["snap-c"]}})
+    one = {"rows": 1}  # the relation's bucket count, recorded per commit
+    assert log._try_commit(1, {"rows": {"0": ["snap-a"]}}, one)
+    # version already owned
+    assert not log._try_commit(1, {"rows": {"0": ["snap-b"]}}, one)
+    assert log._try_commit(2, {"rows": {"0": ["snap-c"]}}, one)
 
 
 def test_lost_race_retries_against_new_base(spark, tmp_path):
@@ -154,7 +156,7 @@ def test_vacuum_grace_spares_inflight_staging(spark, tmp_path):
     st.merge(spark.createDataFrame([("a", 1, "v1")], SCHEMA))
     # simulate another writer's staged-but-not-yet-committed snapshot
     inflight, _ = st._store._stage(
-        {"rows": spark.createDataFrame([("b", 1, "bv")], SCHEMA)}, 1
+        {"rows": spark.createDataFrame([("b", 1, "bv")], SCHEMA)}, {"rows": 1}
     )
     st.vacuum(keep=1)  # default grace: the young dir must survive
     snaps = os.path.join(st.path, "_snapshots")
@@ -401,6 +403,27 @@ def test_bucketed_read_keys_multi_and_missing(spark, tmp_path):
     # empty store -> None
     empty = _bstore(spark, tmp_path, name="e", n_buckets=8)
     assert empty.read_keys(spark.createDataFrame([("k1",)], "k string")) is None
+
+
+def test_read_keys_on_one_bucket_is_the_semi_join(spark, tmp_path):
+    """A one-bucket relation's read_keys runs no bucket collect: it is
+    the semi-join of the whole relation with the keys."""
+    st = _store(spark, tmp_path)
+    rows = [(f"k{i}", 1, f"v{i}") for i in range(20)]
+    st.merge(spark.createDataFrame(rows, SCHEMA))
+    keys = spark.createDataFrame([("k3",), ("k7",), ("k7",), ("nope",)], "k string")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-keys-one-bucket", "read_keys plan only")
+    try:
+        got = st.read_keys(keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-keys-one-bucket") == []
+    want = st.read().join(keys, ["k"], "left_semi")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert sorted(r["k"] for r in got.collect()) == ["k3", "k7"]
+    empty = _store(spark, tmp_path, name="e")
+    assert empty.read_keys(keys) is None
 
 
 def test_apply_epoch_is_idempotent(spark, tmp_path):
@@ -1027,6 +1050,180 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     assert store.current_version() == 8
 
 
+# --- data-sized bucket counts -------------------------------------------------------
+
+
+@pytest.fixture
+def small_splits(spark):
+    """A 2 KB ``spark.sql.files.maxPartitionBytes``: the size target a
+    data-sized store fits its bucket count to, so a few hundred rows
+    already need several buckets."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2k")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _grow_rows(n, seq=1):
+    # hex payloads parquet cannot compress away
+    import hashlib
+
+    return [
+        (f"k{i}", seq, hashlib.sha256(f"{i}".encode()).hexdigest()) for i in range(n)
+    ]
+
+
+def _assert_rows_in_their_buckets(log, rel="rows"):
+    """Every latest row sits in the bucket its key hashes to at the
+    bucket count the latest commit records."""
+    from functools import reduce
+
+    manifest, counts = log._base(log.current_version())
+    n = counts[rel]
+    parts = [
+        log._read_rel({rel: {b: names}}, rel).withColumn("__b", F.lit(int(b)))
+        for b, names in manifest[rel].items()
+    ]
+    placed = reduce(lambda a, b: a.unionByName(b), parts)
+    key = F.pmod(F.xxhash64(*log.relations[rel]), F.lit(n))
+    assert placed.filter(key != F.col("__b")).count() == 0
+    assert len(manifest[rel]) <= n
+
+
+def test_data_sized_store_grows_on_full_touch_commit(spark, tmp_path, small_splits):
+    st = BucketedTransactionalStore(spark, str(tmp_path / "grow"), ["k"], ["seq"])
+    assert st.n_buckets is None and st._store.bucket_count("rows") == 1
+    rows = _grow_rows(400)
+    # at one bucket every merge rewrites the whole relation, so it
+    # fits the count to the bytes it staged
+    st.merge(spark.createDataFrame(rows, SCHEMA))
+    n = st._store.bucket_count("rows")
+    assert n > 1 and n & (n - 1) == 0
+    assert sorted(map(tuple, st.read().collect())) == sorted(rows)
+    _assert_rows_in_their_buckets(st._store)
+    # a merge touching one bucket keeps the count and the other buckets
+    before = st._manifest(st.current_version())
+    st.merge(spark.createDataFrame([("k0", 2, "new")], SCHEMA))
+    assert st._store.bucket_count("rows") == n
+    after = st._manifest(st.current_version())
+    assert sum(before[b] != after[b] for b in after) == 1
+    got = {r["k"]: r["v"] for r in st.read().collect()}
+    assert len(got) == 400 and got["k0"] == "new" and got["k1"] == rows[1][2]
+
+
+def test_pinned_store_never_changes_its_count(spark, tmp_path, small_splits):
+    st = _bstore(spark, tmp_path, n_buckets=8)
+    st.merge(spark.createDataFrame(_grow_rows(400), SCHEMA))  # touches all 8
+    st.write_snapshot(st.read())
+    st._store.compact()
+    st.merge(spark.createDataFrame([("k0", 2, "new")], SCHEMA))
+    assert st.current_version() == 4
+    assert [st._store.bucket_count("rows", v) for v in range(1, 5)] == [8] * 4
+    _assert_rows_in_their_buckets(st._store)
+    assert st.read().count() == 400
+
+
+def test_second_handle_reads_bucket_count_from_manifest(
+    spark, tmp_path, small_splits
+):
+    path = str(tmp_path / "handles")
+    a = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    a.merge(spark.createDataFrame(_grow_rows(400), SCHEMA))
+    n = a._store.bucket_count("rows")
+    assert n > 1
+    b = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert b.n_buckets is None and b._store.bucket_count("rows") == n
+    # b hashes its merge at the manifest's count, not at its start count
+    b.merge(spark.createDataFrame([("k1", 2, "from-b")], SCHEMA))
+    assert a._store.bucket_count("rows") == n
+    _assert_rows_in_their_buckets(a._store)
+    got = {r["k"]: r["v"] for r in a.read().collect()}
+    assert len(got) == 400 and got["k1"] == "from-b"
+    # an explicit count cannot reopen a data-sized store
+    with pytest.raises(ValueError, match="n_buckets"):
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=n)
+
+
+def test_resize_racing_a_merge_loses_no_update(spark, tmp_path, small_splits):
+    """Two threads: one merge grows the store past one bucket while the
+    other merges a single key. Whichever loses the claim retries on the
+    winner's base, at the winner's bucket count."""
+    path = str(tmp_path / "race")
+    seed = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    seed.merge(spark.createDataFrame([("seed", 1, "s")], SCHEMA))
+    grow = _grow_rows(400)
+    start = threading.Barrier(2)
+    errs = []
+
+    def write(rows):
+        try:
+            st = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+            start.wait()
+            st.merge(spark.createDataFrame(rows, SCHEMA))
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    threads = [
+        threading.Thread(target=write, args=(rows,))
+        for rows in (grow, [("point", 1, "p")])
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errs
+    assert seed.current_version() == 3
+    assert seed._store.bucket_count("rows") > 1
+    assert {r["k"] for r in seed.read().collect()} == {
+        "seed", "point", *(k for k, _, _ in grow)
+    }
+    _assert_rows_in_their_buckets(seed._store)
+
+
+@pytest.mark.parametrize("op", ["merge", "append"])
+def test_writer_retries_at_the_resized_count(spark, tmp_path, small_splits, op):
+    """A writer whose claim is lost to a resize stages its retry at the
+    new count: a merge re-folds on the new base (no second collect), an
+    append re-stages its rows instead of re-pointing dirs hashed at the
+    old count."""
+    from iheardai_data_pipeline_spark.streaming.stores import (
+        MultiRelationTransactionalStore,
+    )
+
+    path = str(tmp_path / op)
+    grower = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    grower.merge(spark.createDataFrame([("seed", 1, "s")], SCHEMA))
+    log = MultiRelationTransactionalStore(spark, path, {"rows": ["k"]})
+    real_stage = log._stage
+    staged_at = []
+
+    def stage_then_lose_to_a_resize(frames, buckets):
+        staged = real_stage(frames, buckets)
+        staged_at.append(buckets["rows"])
+        if len(staged_at) == 1:
+            grower.merge(spark.createDataFrame(_grow_rows(400), SCHEMA))
+        return staged
+
+    log._stage = stage_then_lose_to_a_resize
+    upd = spark.createDataFrame([("late", 1, "l")], SCHEMA)
+    if op == "merge":
+        log.apply_keyed(
+            {"rows": upd},
+            lambda rel, cur, u: u if cur is None else cur.unionByName(u),
+        )
+    else:
+        log.append_keyed({"rows": upd})
+    n = log.bucket_count("rows")
+    assert staged_at == [1, n] and n > 1
+    assert log.current_version() == 3
+    _assert_rows_in_their_buckets(log)
+    keys = [r["k"] for r in log.read("rows").collect()]
+    assert len(keys) == 402 and {"seed", "late"} <= set(keys)
+
+
 # --- layout versioning ---------------------------------------------------------------
 
 
@@ -1084,3 +1281,22 @@ def test_open_refuses_commit_markers_without_meta(spark, tmp_path):
             view()
         assert path in str(err.value)
     assert not os.path.exists(os.path.join(path, "_meta.json"))
+
+
+def test_open_refuses_layout_1_store(spark, tmp_path):
+    """Layout 1 pinned one bucket count per store in _meta.json; its
+    commits record no counts, so it is refused, not misread."""
+    import json
+    import os
+
+    path = str(tmp_path / "layout1")
+    os.makedirs(path)
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        json.dump({"layout": 1, "n_buckets": 16, "relations": {"rows": ["k"]}}, fh)
+    for view in (
+        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
+        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
+    ):
+        with pytest.raises(ValueError, match="layout version 1;") as err:
+            view()
+        assert path in str(err.value)

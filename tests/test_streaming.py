@@ -101,6 +101,26 @@ def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
     assert got == {"s1": (3, "engaged"), "s2": (5, "converted")}
 
 
+@pytest.mark.parametrize("fmt", STORE_BACKENDS)
+def test_foreachbatch_session_state_replay_commits_nothing(spark, tmp_path, fmt):
+    """A replayed session-state batch is skipped by its epoch: the
+    seq-guarded fold would leave the rows as they are, but without the
+    epoch it would still commit a rewrite as a new version."""
+    store = make_upsert_store(
+        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt=fmt
+    )
+    fb = session_state_foreach_batch(store)
+    b1 = spark.createDataFrame(
+        [("s1", 3, "engaged"), ("s2", 1, "new")], "session_id string, seq int, stage string"
+    )
+    fb(b1, 0)
+    assert store.current_version() == 1
+    fb(b1, 0)  # the replay
+    assert store.current_version() == 1
+    got = {r["session_id"]: (r["seq"], r["stage"]) for r in store.read().collect()}
+    assert got == {"s1": (3, "engaged"), "s2": (1, "new")}
+
+
 def _kpi_batch(spark, rows):
     """(user_id, epoch seconds, value) rows as an events micro-batch."""
     return spark.createDataFrame(
