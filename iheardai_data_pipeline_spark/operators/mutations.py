@@ -15,6 +15,7 @@ shuffle-free. No driver-side state, no collects.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -91,14 +92,49 @@ def merge_upsert(
     INSERT`` with update-priority; expressed as union + window dedup so it
     is parquet-safe and oracle-checkable.
     """
-    tagged_t = target.withColumn("__prio", F.lit(0))
-    tagged_u = updates.withColumn("__prio", F.lit(1))
-    merged = tagged_t.unionByName(tagged_u)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("__prio").desc(), *[F.col(c).desc() for c in order_cols]
+    return merge_upsert_chain([target, updates], key_cols, order_cols)
+
+
+def merge_upsert_chain(
+    parts: Sequence[DataFrame],
+    key_cols: Sequence[str],
+    order_cols: Sequence[str] = (),
+) -> DataFrame:
+    """:func:`merge_upsert` folded over ``parts``, oldest first: per key,
+    the rows of the LATEST part holding the key win (update priority),
+    and among those the newest by ``order_cols`` (sorted DESC). One
+    union and one window, however many parts. A merge-on-read store
+    resolves a bucket's snapshot-dir list with it (streaming/stores.py)."""
+    return latest_by_priority(tag_priority(parts, order_cols), key_cols)
+
+
+def tag_priority(
+    parts: Sequence[DataFrame], order_cols: Sequence[str] = ()
+) -> DataFrame:
+    """The union of ``parts`` with each row's priority as ``__prio``:
+    its part index (oldest 0), then its ``order_cols`` — a struct when
+    there are any, which orders as the index DESC then each column DESC
+    NULLS LAST. The input of :func:`latest_by_priority`."""
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            p.withColumn(
+                "__prio",
+                F.struct(F.lit(i), *order_cols) if order_cols else F.lit(i),
+            )
+            for i, p in enumerate(parts)
+        ],
     )
+
+
+def latest_by_priority(tagged: DataFrame, key_cols: Sequence[str]) -> DataFrame:
+    """Per key of ``tagged`` (see :func:`tag_priority`), the row with
+    the greatest ``__prio``; ``__prio`` dropped. One window, whose
+    exchange Spark skips when the input is already hash-partitioned on
+    a subset of ``key_cols``."""
+    w = Window.partitionBy(*key_cols).orderBy(F.col("__prio").desc())
     return (
-        merged.withColumn("__rn", F.row_number().over(w))
+        tagged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prio")
     )

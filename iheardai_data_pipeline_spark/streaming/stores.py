@@ -14,17 +14,24 @@ crash mid-write leaves at most an unreferenced staging dir (reclaimed by
 ``vacuum``).
 
 Two one-relation views of that log serve the keyed upserts, selected by
-:func:`make_upsert_store`:
+:func:`make_upsert_store`. Both are MERGE-ON-READ: a last-write-wins
+merge stages only the batch and appends its dir to each touched
+bucket's dir list, folding the list's tail in the same write when the
+tail is no bigger than what is being added (a binary counter, as in a
+size-tiered LSM tree), so a merge costs O(batch) and a list holds
+O(log n) dirs after n merges; a read resolves a bucket whose list
+holds more than one dir to the latest dir holding each key:
 
 - :class:`BucketedTransactionalStore` (``parquet_bucketed``) — the key
-  space is hash-bucketed and a merge rewrites ONLY the buckets it
-  touches (the commit manifest inherits untouched buckets by pointer —
-  the same idea as Delta's file-level MERGE).
+  space is hash-bucketed; a merge touches only the buckets its keys
+  hash to, and a key-local :meth:`~BucketedTransactionalStore.apply_keyed`
+  rewrites only those buckets (the commit manifest inherits untouched
+  buckets by pointer — the same idea as Delta's file-level MERGE).
 
 - :class:`TransactionalParquetStore` (``parquet_txn``) — the same view
-  pinned to ONE bucket: every commit rewrites the whole snapshot, which
-  is what lets :meth:`TransactionalParquetStore.apply` run a fold that
-  is not key-local.
+  pinned to ONE bucket, which is what lets
+  :meth:`TransactionalParquetStore.apply` run a fold that is not
+  key-local over the whole resolved snapshot.
 
 A store opened without ``n_buckets`` is sized to its data: each
 relation starts at one bucket, and a commit that rewrites the whole
@@ -51,12 +58,14 @@ import os
 import reprlib
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
 from iheardai_data_pipeline_spark.operators.mutations import (
-    last_write_wins,
-    merge_upsert,
+    latest_by_priority,
+    merge_upsert_chain,
+    tag_priority,
 )
 
 
@@ -68,8 +77,10 @@ from iheardai_data_pipeline_spark.operators.mutations import (
 # Every open refuses any other version (and a store without one) instead
 # of guessing how to read it; bump it whenever the layout changes.
 # History: 1 — one bucket count per store, pinned in _meta.json;
-# 2 — each commit records each relation's bucket count.
-LAYOUT_VERSION = 2
+# 2 — each commit records each relation's bucket count; 3 — _meta.json
+# pins "merge_on_read", and a merge-on-read store's bucket dir list
+# resolves latest-dir-wins per key (layout-2 code would concatenate it).
+LAYOUT_VERSION = 3
 
 # The most buckets a data-sized store gives one relation: the cap
 # operators/neardup_index.py:buckets_for_corpus sizes indexes to.
@@ -164,6 +175,44 @@ class WriteOnceFlag:
 
     def set(self) -> None:
         _publish_once(self.path, "")
+
+
+def _bytes_under(path: str) -> int:
+    """Bytes of the data files under ``path`` (checksums, markers and
+    other hidden files left out); 0 when it does not exist."""
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (``sizeInBytes`` of its
+    optimized plan): the input files' bytes for a file scan or a
+    file-stream micro-batch, ``spark.sql.defaultSizeInBytes`` (huge)
+    when the plan has no statistics. No Spark job runs."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _fold_start(sizes: list[int], adding: float) -> int:
+    """Where a merge's fold of a bucket's dir list starts, given the
+    list's dir sizes (oldest first) and the bytes the merge adds: the
+    first index ``i`` with ``sizes[i] <= adding + sum(sizes[i+1:])``,
+    or ``len(sizes)`` (fold nothing). With accurate sizes this is the
+    binary counter (fold the tail while it is no bigger than what is
+    being added), and every dir the fold leaves is bigger than all the
+    later dirs together, so a list stays at about log2 n + 2 dirs after
+    n equal merges. Scanning past the first tail that is too big keeps
+    that bound when ``adding`` is a poor estimate: with ``adding`` 0,
+    two equal dirs still fold."""
+    start, later = len(sizes), adding
+    for i in range(len(sizes) - 1, -1, -1):
+        if sizes[i] <= later:
+            start = i
+        later += sizes[i]
+    return start
 
 
 def _occ_current_version(commits_dir: str) -> int:
@@ -417,11 +466,24 @@ class MultiRelationTransactionalStore:
     updated keys, and the manifest inherits every untouched bucket by
     pointer: a 1-key update into a 10 TB store rewrites ~1/count of it.
     A bucket's manifest entry is a LIST of snapshot dirs (Delta's
-    add-file model): :meth:`append_keyed` — the ingest hot path —
-    stages ONLY the update rows and appends a pointer, so an append
-    commit costs O(batch) however big the store is. Reads concatenate a
-    bucket's dir list; :meth:`compact` folds each list back to one dir
-    on the maintenance cadence, bounding small-file growth.
+    add-file model), read one of two ways, pinned per store in
+    ``_meta.json``:
+
+    - concatenated (the default; the persistent indexes):
+      :meth:`append_keyed` — their ingest hot path — stages ONLY the
+      update rows and appends a pointer, so an append commit costs
+      O(batch) however big the store is; readers resolve versions
+      themselves, and :meth:`compact` folds each list back to one dir
+      on the maintenance cadence, bounding small-file growth;
+    - ``merge_on_read=True`` (the keyed-upsert views below; one
+      relation): each dir holds at most one row per key, and a bucket whose list holds more
+      than one dir reads as the latest dir holding each key
+      (:func:`~iheardai_data_pipeline_spark.operators.mutations.merge_upsert_chain`);
+      a one-dir bucket stays a plain scan. :meth:`merge` appends the
+      batch's last-write-wins rows and folds the list's tail in the
+      same staged write (:func:`_fold_start`), so a merge costs O(batch)
+      and a list stays O(log n) long. Every read — :meth:`read`,
+      :meth:`read_keys` and the ``current`` handed to folds — resolves.
 
     Bucket counts. Each relation's count is a power of two between 1
     and :data:`MAX_BUCKETS`, recorded in every commit. A store opened
@@ -439,9 +501,10 @@ class MultiRelationTransactionalStore:
 
         _meta.json                  {"layout": LAYOUT_VERSION,
                                      "n_buckets": N or null (data-sized),
+                                     "merge_on_read": bool,
                                      "relations": {name: key_cols}}
                                     — pinned by the first creator; a later
-                                    open passes None or the same N
+                                    open passes None or the same values
         _snapshots/<uuid>/__rel=<tag>/__bucket=<b>/  staged buckets
         _commits/<N>                {"manifest": {rel: {"<b>": ["<uuid>", ...]}},
                                      "buckets": {rel: count},
@@ -453,6 +516,7 @@ class MultiRelationTransactionalStore:
     measurably cheaper than staging the name string. ``<b>`` is the
     bucket number, ``0 <= b < count`` for the count the commit records;
     reads go by the manifest's paths, so a resize needs no reader change.
+    A bucket's list is in commit order, oldest first.
 
     Every open checks the layout version: a ``_meta.json`` with another
     version or none, and a ``_commits/`` holding markers with no
@@ -485,9 +549,12 @@ class MultiRelationTransactionalStore:
         path: str,
         relations: dict[str, list[str]],
         n_buckets: int | None = None,
+        merge_on_read: bool | None = None,
     ):
         if not relations:
             raise ValueError("need at least one relation")
+        if merge_on_read and len(relations) != 1:
+            raise ValueError("a merge-on-read store holds exactly one relation")
         self.spark = spark
         self.path = path
         self.relations = dict(relations)
@@ -512,15 +579,18 @@ class MultiRelationTransactionalStore:
             raise _layout_error(path, "none (commit markers without _meta.json)")
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(commits, exist_ok=True)
-        # the bucketing rule and the relations are part of the on-disk
-        # layout: a writer opening an existing store with another one
-        # would hash keys into the WRONG buckets and silently duplicate
-        # them. The first creator pins both in _meta.json; later opens
-        # inherit n_buckets (None) or must match, and must name the same
+        # the bucketing rule, the list reading and the relations are part
+        # of the on-disk layout: a writer opening an existing store with
+        # another bucketing would hash keys into the WRONG buckets and
+        # silently duplicate them, a reader concatenating merge-on-read
+        # lists would return superseded rows. The first creator pins all
+        # three in _meta.json; later opens inherit n_buckets and
+        # merge_on_read (None) or must match, and must name the same
         # relations with the same keys.
         want = {
             "layout": LAYOUT_VERSION,
             "n_buckets": n_buckets,
+            "merge_on_read": bool(merge_on_read),
             "relations": {r: list(self.relations[r]) for r in self._rel_names},
         }
         if not os.path.exists(meta_path):
@@ -534,12 +604,13 @@ class MultiRelationTransactionalStore:
                 f"store at {path} has relations {persisted.get('relations')}; "
                 f"got {want['relations']}"
             )
-        if n_buckets is not None and persisted["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"store at {path} was created with "
-                f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
-                "pass None to inherit"
-            )
+        for key, value in (("n_buckets", n_buckets), ("merge_on_read", merge_on_read)):
+            if value is not None and persisted[key] != value:
+                raise ValueError(
+                    f"store at {path} was created with "
+                    f"{key}={persisted[key]}; got {value} — pass None to inherit"
+                )
+        self.merge_on_read = persisted["merge_on_read"]
         # the pinned count, or None: sized to the data
         self.n_buckets = persisted["n_buckets"]
         # the count a relation starts at, and the finest one it can
@@ -636,14 +707,51 @@ class MultiRelationTransactionalStore:
 
     def _read_rel(self, manifest: dict, rel: str, buckets=None) -> DataFrame | None:
         """``rel``'s rows in ``manifest`` (only those of ``buckets``,
-        when given), or None when no bucket dir is listed."""
-        paths = [
-            self._bucket_path(s, rel, b)
+        when given), or None when no bucket dir is listed. The one place
+        a bucket's dir list becomes rows: concatenated, or on a
+        merge-on-read store resolved to the latest dir per key wherever
+        the list holds more than one dir."""
+        lists = {
+            b: names
             for b, names in manifest.get(rel, {}).items()
             if buckets is None or b in buckets
+        }
+        stacked = {
+            b: names
+            for b, names in lists.items()
+            if self.merge_on_read and len(names) > 1
+        }
+        paths = [
+            self._bucket_path(s, rel, b)
+            for b, names in lists.items()
+            if b not in stacked
             for s in names
         ]
-        return self._read_parquet(*paths) if paths else None
+        parts = [self._read_parquet(*paths)] if paths else []
+        if stacked:
+            parts.append(
+                merge_upsert_chain(
+                    self._list_scans(rel, stacked), self.relations[rel]
+                )
+            )
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
+    def _list_scans(self, rel: str, lists: dict[str, list[str]]) -> list[DataFrame]:
+        """One scan per list position, oldest first: scan ``p`` reads
+        the ``p``-th dir of every list in ``lists`` longer than ``p``.
+        A key lives in one bucket, so only positions within one list
+        are ever compared."""
+        depth = max(map(len, lists.values()), default=0)
+        return [
+            self._read_parquet(
+                *(
+                    self._bucket_path(names[p], rel, b)
+                    for b, names in lists.items()
+                    if len(names) > p
+                )
+            )
+            for p in range(depth)
+        ]
 
     def _read_parquet(self, *paths: str) -> DataFrame:
         """Parquet read with the cached union file schema (all staged
@@ -675,20 +783,26 @@ class MultiRelationTransactionalStore:
         job; returns the dir name and, per relation of the store, the
         buckets the write actually produced.
 
+        Rows that carry ``__prio`` (:func:`tag_priority`; a
+        merge-on-read :meth:`merge`) are resolved to each key's latest
+        row (:func:`latest_by_priority`). That window runs after the
+        write's own bucket repartition (or one-task coalesce) and
+        partitions by the bucket too, so it adds a sort within each
+        write task but no shuffle.
+
         Each (rel, bucket) group is co-located before partitionBy, so a
         commit writes ONE file per group instead of (tasks x groups)
         shards — the group-sized shuffle is tiny next to listing and
         opening hundreds of micro-files on every later read. The task
         count is parallelism-capped (_staged_write_tasks): same files,
-        fewer write tasks. The file schema cache is primed from the
+        fewer write tasks; at one task the rows are coalesced into it
+        instead of shuffled. The file schema cache is primed from the
         staged frame BEFORE the commit claim: partitionBy moves
         __rel/__bucket into directory names, so the files hold exactly
         the remaining columns, and since every commit stages the same
         union schema (the class's documented constraint) a schema from a
         write that later fails or loses its claim still describes every
         committed file (ADVICE r14)."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
@@ -704,16 +818,28 @@ class MultiRelationTransactionalStore:
         )
         self._file_schema = _nullable_schema(
             StructType(
-                [f for f in all_df.schema if f.name not in ("__rel", "__bucket")]
+                [
+                    f
+                    for f in all_df.schema
+                    if f.name not in ("__rel", "__bucket", "__prio")
+                ]
             )
         )
         name = uuid.uuid4().hex
-        n_groups = sum(buckets[rel] for rel in frames)
-        (
-            all_df.repartition(
-                _staged_write_tasks(self.spark, n_groups), "__rel", "__bucket"
+        n_tasks = _staged_write_tasks(self.spark, sum(buckets[rel] for rel in frames))
+        # one task holds every group anyway: gather the rows without a shuffle
+        staged = (
+            all_df.coalesce(1)
+            if n_tasks == 1
+            else all_df.repartition(n_tasks, "__rel", "__bucket")
+        )
+        if "__prio" in all_df.columns:
+            (rel,) = self._rel_names
+            staged = latest_by_priority(
+                staged, ["__rel", "__bucket", *self.relations[rel]]
             )
-            .write.partitionBy("__rel", "__bucket")
+        (
+            staged.write.partitionBy("__rel", "__bucket")
             .mode("overwrite")
             .parquet(self._snapshot_dir(name))
         )
@@ -741,13 +867,8 @@ class MultiRelationTransactionalStore:
         ``spark.sql.files.maxPartitionBytes``, capped at MAX_BUCKETS."""
         if self.n_buckets is not None:
             return self.n_buckets
-        staged = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(
-                os.path.join(self._snapshot_dir(snapshot), self._rel_dir(rel))
-            )
-            for f in files
-            if not f.startswith((".", "_"))  # checksums, _SUCCESS
+        staged = _bytes_under(
+            os.path.join(self._snapshot_dir(snapshot), self._rel_dir(rel))
         )
         conf = self.spark._jsparkSession.sessionState().conf()
         target = conf.filesMaxPartitionBytes()
@@ -762,21 +883,24 @@ class MultiRelationTransactionalStore:
         base: dict,
         buckets: dict[str, int],
         merged: dict[str, DataFrame],
-        touched: dict[str, set[str] | None],
+        touched: dict[str, dict[str, int] | None],
         epoch=None,
     ) -> bool:
         """Stage a fold's output and try to claim ``version`` on
         ``base``; True iff committed (a lost claim drops the staged dir).
 
-        ``merged`` holds each relation's new rows for its ``touched``
-        buckets, hashed at its base count in ``buckets``; a relation
-        whose ``touched`` is None is rewritten whole (one left out of
+        ``touched`` maps each relation to ``{bucket: keep}``: the fold
+        replaced all but the first ``keep`` dirs of each such bucket's
+        list (``keep`` 0 for a rewrite of the whole bucket), and
+        ``merged`` holds the relation's new rows for those buckets,
+        hashed at its base count in ``buckets``. A relation whose
+        ``touched`` is None is rewritten whole (one left out of
         ``merged`` is committed empty) and takes its fitted count
         (:meth:`_fitted_count`). When that moves any count, the staged
         rows are re-staged once, from the staged files, at the new
         counts. The manifest keeps the base's other buckets by pointer
-        and lists only buckets the write produced: a key-local fold may
-        legitimately empty a touched bucket (deletion fold), and a
+        and points only at buckets the write produced: a key-local fold
+        may legitimately empty a touched bucket (deletion fold), and a
         pointer to a nonexistent dir would make every later read throw."""
         name, written = self._stage(merged, buckets)
         fitted = {
@@ -798,12 +922,12 @@ class MultiRelationTransactionalStore:
             if touched[rel] is None:
                 manifest[rel] = {b: [name] for b in written[rel]}
                 continue
-            kept = base.get(rel, {})
-            manifest[rel] = {b: v for b, v in kept.items() if b not in touched[rel]}
-            # a fold REPLACES each touched bucket's whole dir list
-            manifest[rel].update(
-                {b: [name] for b in touched[rel] if b in written[rel]}
-            )
+            lists = base.get(rel, {})
+            manifest[rel] = {b: v for b, v in lists.items() if b not in touched[rel]}
+            for b, keep in touched[rel].items():
+                names = lists.get(b, [])[:keep] + ([name] if b in written[rel] else [])
+                if names:
+                    manifest[rel][b] = names
         if self._try_commit(version, manifest, fitted, epoch=epoch):
             return True
         self._drop_snapshot(name)
@@ -937,8 +1061,6 @@ class MultiRelationTransactionalStore:
         count the relation can have divides the finest, so ``b % count``
         maps them to it on the driver, and one collect serves every
         retry of a call, however the base's counts move."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
         tagged = [
@@ -961,18 +1083,83 @@ class MultiRelationTransactionalStore:
         be key-local per relation — a key's output rows derive only from
         that key's current + update rows (upserts, per-key aggregate
         folds). That property is what makes restricting ``current`` to
-        the touched buckets exact. At most one touched-bucket collect
-        (none while every relation has one bucket, which every commit
-        touches — so every such call commits a version), ONE staged
-        write job over all relations, one commit claim. A relation whose
-        every bucket is touched is rewritten whole and may change its
-        bucket count (see the class docstring). A lost commit race
-        re-reads the new base manifest and re-applies ``fn``, so
-        concurrent commits (including to the same bucket) are never
-        lost. ``epoch`` = idempotent-commit marker (see the class
-        docstring).
+        the touched buckets exact; the fold's output replaces each
+        touched bucket's whole dir list. At most one touched-bucket
+        collect (none while every relation has one bucket, which every
+        commit touches — so every such call commits a version), ONE
+        staged write job over all relations, one commit claim. A
+        relation whose every populated bucket is touched is rewritten
+        whole and may change its bucket count (see the class
+        docstring). A lost commit race re-reads the new base manifest
+        and re-applies ``fn``, so concurrent commits (including to the
+        same bucket) are never lost. ``epoch`` = idempotent-commit
+        marker (see the class docstring).
         """
-        self._check_relations("apply_keyed", updates)
+        self._keyed_commit(
+            "apply_keyed",
+            updates,
+            lambda rel, tails, upd: fn(rel, self._read_rel({rel: tails}, rel), upd),
+            lambda rel, lists, hit: dict.fromkeys(hit, 0),
+            epoch,
+        )
+
+    def merge(
+        self, updates: dict[str, DataFrame], order_cols: list[str], epoch=None
+    ) -> None:
+        """Merge-on-read last-write-wins upsert (merge-on-read stores
+        only): per relation, each key's latest row in the update frame
+        by ``order_cols`` replaces the key's current row, whatever the
+        current row's order — :func:`merge_upsert`'s update priority.
+
+        O(batch): the commit stages the batch's last-write-wins rows and
+        appends their dir to each touched bucket's list; the in-batch
+        resolution rides in the staged write's own repartition (see
+        :meth:`_stage`). In the SAME staged write it folds the list's
+        tail chosen by :func:`_fold_start` from the on-disk dir sizes
+        and Catalyst's size estimate of the update frame, so a fold
+        costs no second write job. A fold covering every dir of every bucket of a
+        relation is a whole-relation rewrite and refits the bucket
+        count (see the class docstring). The fold choice changes cost,
+        never results. A lost claim re-decides the fold on the winner's
+        base and re-stages. Same collect, epoch and retry rules as
+        :meth:`apply_keyed`."""
+        if not self.merge_on_read:
+            raise ValueError(
+                f"store at {self.path} concatenates its dir lists; merge "
+                "needs a merge_on_read store"
+            )
+        adding = {rel: _estimated_bytes(df) for rel, df in updates.items()}
+
+        def fold_from(rel, lists, hit):
+            per_bucket = adding[rel] / len(hit)
+            return {
+                b: _fold_start(
+                    [
+                        _bytes_under(self._bucket_path(s, rel, b))
+                        for s in lists.get(b, [])
+                    ],
+                    per_bucket,
+                )
+                for b in hit
+            }
+
+        self._keyed_commit(
+            "merge",
+            updates,
+            lambda rel, tails, upd: tag_priority(
+                self._list_scans(rel, tails) + [upd], order_cols
+            ),
+            fold_from,
+            epoch,
+        )
+
+    def _keyed_commit(self, op: str, updates, fold, fold_from, epoch) -> None:
+        """The commit loop of :meth:`apply_keyed` and :meth:`merge`.
+        Per relation, ``fold_from(rel, base_lists, hit)`` says where the
+        rewritten tail of each hit bucket's list starts, and
+        ``fold(rel, tails, upd)`` returns the new rows for those tails
+        (``tails``: ``{bucket: dirs}``, the folded part of each list)."""
+        self._check_relations(op, updates)
         finest = None  # collected once a base has a relation above one bucket
         for _ in range(OCC_MAX_RETRIES):
             if self.epoch_committed(epoch):
@@ -981,22 +1168,29 @@ class MultiRelationTransactionalStore:
             base, buckets = self._base(base_version)
             if finest is None and max(buckets.values()) > 1:
                 finest = self._touched_finest(updates)
-            touched: dict[str, set[str] | None] = {}
+            touched: dict[str, dict[str, int] | None] = {}
+            tails = {}
             for rel, n in buckets.items():
-                hit = None if n == 1 else {str(b % n) for b in finest[rel]}
-                touched[rel] = None if hit is None or len(hit) == n else hit
+                lists = base.get(rel, {})
+                hit = {"0"} if n == 1 else {str(b % n) for b in finest[rel]}
+                start = fold_from(rel, lists, hit) if hit else {}
+                # a fold of every dir of every bucket rewrites the relation
+                whole = bool(hit) and all(start.get(b) == 0 for b in lists)
+                touched[rel] = None if whole else start
+                tails[rel] = lists if whole else {
+                    b: lists[b][k:] for b, k in start.items() if lists.get(b, [])[k:]
+                }
             if not any(t is None or t for t in touched.values()):
                 return
             merged = {
-                rel: fn(rel, self._read_rel(base, rel, touched[rel]), updates[rel])
-                for rel in self._rel_names
+                rel: fold(rel, tails[rel], updates[rel]) for rel in self._rel_names
             }
             if self._commit_fold(
                 base_version + 1, base, buckets, merged, touched, epoch=epoch
             ):
                 return
         raise RuntimeError(
-            f"apply_keyed on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
+            f"{op} on {self.path} lost {OCC_MAX_RETRIES} consecutive commit races"
         )
 
     def append_keyed(
@@ -1185,18 +1379,23 @@ class MultiRelationTransactionalStore:
 
 
 class BucketedTransactionalStore:
-    """Keyed upsert store with PARTIAL rewrites: Delta-style file-level
-    MERGE on plain parquet, as a one-relation view of
-    :class:`MultiRelationTransactionalStore`.
+    """Keyed upsert store, merge-on-read: a one-relation view of
+    :class:`MultiRelationTransactionalStore` with ``merge_on_read``.
 
-    A merge rewrites ONLY the buckets containing updated keys and
-    inherits the rest by pointer (see the multi-relation store for the
-    commit protocol, the epoch contract, the bucket-count rule and the
-    layout). Opened without ``n_buckets``, the store is sized to its
-    data: a small one stays at one bucket, which every merge rewrites
-    whole with no touched-bucket collect. The store's
-    single relation is named ``rows``, keyed on ``key_cols``;
-    ``order_cols`` orders :meth:`merge`'s last-writer-wins.
+    :meth:`merge` is an O(batch) commit: it stages the batch's
+    last-write-wins rows and appends their dir to each touched bucket's
+    dir list, folding the list's tail in the same write (a binary
+    counter over dir sizes), and every read resolves a list of more
+    than one dir to the latest dir holding each key. A key-local
+    :meth:`apply_keyed` rewrites ONLY the buckets containing updated
+    keys, each back to one dir, and inherits the rest by pointer (see
+    the multi-relation store for the commit protocol, the epoch
+    contract, the bucket-count rule and the layout). Opened without
+    ``n_buckets``, the store is sized to its data: a small one stays at
+    one bucket, which every commit touches with no touched-bucket
+    collect. The store's single relation is named ``rows``, keyed on
+    ``key_cols`` and holding one row per key; ``order_cols`` orders
+    :meth:`merge`'s last-writer-wins within a batch.
 
     ``merge`` semantics match :func:`operators.mutations.merge_upsert`
     last-writer-wins on ``order_cols`` per ``key_cols`` — the reference's
@@ -1218,7 +1417,7 @@ class BucketedTransactionalStore:
         self.key_cols = key_cols
         self.order_cols = order_cols
         self._store = MultiRelationTransactionalStore(
-            spark, path, {self._REL: key_cols}, n_buckets
+            spark, path, {self._REL: key_cols}, n_buckets, merge_on_read=True
         )
 
     @property
@@ -1249,8 +1448,10 @@ class BucketedTransactionalStore:
 
     def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
         """OCC partial-rewrite read-modify-write:
-        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``.
-        ``fn`` MUST be key-local; a cross-key fn needs
+        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``,
+        where ``current`` is the touched buckets' resolved rows and the
+        output must hold one row per key. ``fn`` MUST be key-local; a
+        cross-key fn needs
         :meth:`TransactionalParquetStore.apply`. ``epoch``:
         idempotent-commit marker (see
         :class:`MultiRelationTransactionalStore`)."""
@@ -1261,18 +1462,13 @@ class BucketedTransactionalStore:
         )
 
     def merge(self, updates: DataFrame, epoch=None) -> None:
-        """Partial-rewrite last-writer-wins merge: stage only the touched
-        buckets, inherit the rest from the base manifest by pointer.
-        Several versions of one key in ``updates`` resolve to the latest
-        by ``order_cols``. ``epoch``: idempotent-commit marker (see
+        """O(batch) last-writer-wins merge: append the batch, folding
+        each touched list's tail in the same write (see
+        :meth:`MultiRelationTransactionalStore.merge`). Several versions
+        of one key in ``updates`` resolve to the latest by
+        ``order_cols``. ``epoch``: idempotent-commit marker (see
         :class:`MultiRelationTransactionalStore`)."""
-
-        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
-            if current is None:
-                return last_write_wins(upd, self.key_cols, self.order_cols)
-            return merge_upsert(current, upd, self.key_cols, self.order_cols)
-
-        self.apply_keyed(updates, fn, epoch=epoch)
+        self._store.merge({self._REL: updates}, self.order_cols, epoch=epoch)
 
     def write_snapshot(self, df: DataFrame) -> None:
         """Full replace: every bucket rewritten into one snapshot dir."""
@@ -1284,17 +1480,18 @@ class BucketedTransactionalStore:
 
 class TransactionalParquetStore(BucketedTransactionalStore):
     """Full-snapshot keyed upsert store: a
-    :class:`BucketedTransactionalStore` pinned to ONE bucket, so every
-    commit rewrites the whole relation.
+    :class:`BucketedTransactionalStore` pinned to ONE bucket.
 
     What the single bucket buys is :meth:`apply`, a read-modify-write
-    whose fold sees the WHOLE current snapshot and so need not be
-    key-local (the t14–t19 streaming sketches merge their bounded
-    state this way). Every other method is the bucketed view's: at one
-    bucket its :meth:`apply_keyed` (and so :meth:`merge`) skips the
-    touched-bucket collect and rewrites the whole relation, so every
-    call commits a version, as the full-snapshot store always did. A
-    commit whose rows are empty reads back as None, like an empty store.
+    whose fold sees the WHOLE current snapshot, resolved, and so need
+    not be key-local (the t14–t19 streaming sketches merge their
+    bounded state this way); it rewrites the relation into one dir.
+    Every other method is the bucketed view's: at one bucket its
+    :meth:`apply_keyed` skips the touched-bucket collect and rewrites
+    the whole relation, and :meth:`merge` appends to (and folds the
+    tail of) the one bucket's dir list; every call of either commits a
+    version. A commit whose rows are empty reads back as None, like an
+    empty store.
     """
 
     def __init__(
@@ -1332,9 +1529,11 @@ def make_upsert_store(
     order_cols: list[str],
     fmt: str = "parquet_txn",
 ) -> BucketedTransactionalStore:
-    """Factory over the two views of the commit log: ``parquet_txn``
-    (one bucket, full-snapshot rewrites) and ``parquet_bucketed``
-    (data-sized buckets, partial bucket rewrites — the scale path)."""
+    """Factory over the two merge-on-read views of the commit log:
+    ``parquet_txn`` (one bucket) and ``parquet_bucketed`` (data-sized
+    buckets — the scale path). In both a merge appends the batch plus a
+    logarithmic fold of the touched lists' tails, and reads resolve the
+    lists last-write-wins."""
     if fmt == "parquet_txn":
         return TransactionalParquetStore(spark, path, key_cols, order_cols)
     if fmt == "parquet_bucketed":

@@ -21,9 +21,13 @@ and issues a keyed server-side MERGE (the store formats model exactly
 that contract locally).
 
 At scale the loader adds no exchange of its own: the merge is the
-chosen store's contract (bucket-partial rewrites for
-``parquet_bucketed``, server-side MERGE for a real warehouse
-connector).
+chosen store's contract (for both store formats a merge-on-read
+commit — the batch's last-write-wins rows are appended to each touched
+bucket's dir list with a logarithmic fold of its tail, so a batch
+costs O(batch) and a read resolves the list last-write-wins; a
+server-side MERGE for a real warehouse connector). A loader reads the
+store at ``target`` whoever wrote it, so a restarted process reads its
+own table.
 """
 
 from __future__ import annotations
@@ -87,6 +91,12 @@ class WarehouseBatchLoader:
                     "and sfURL/sfUser/... set in connector_options"
                 ) from e
             return
+        self._table().merge(df, epoch=epoch)
+
+    def _table(self):
+        """The store at ``target``, opened on first use."""
+        if self.fmt == "snowflake":
+            raise RuntimeError("fmt='snowflake' has no local table to read")
         if self._store is None:
             from iheardai_data_pipeline_spark.streaming.stores import (
                 make_upsert_store,
@@ -95,13 +105,13 @@ class WarehouseBatchLoader:
             self._store = make_upsert_store(
                 self.spark, self.target, self.key_cols, self.order_cols, self.fmt
             )
-        self._store.merge(df, epoch=epoch)
+        return self._store
 
-    def read(self) -> DataFrame:
-        """Current stand-in table contents (store formats only)."""
-        if self._store is None:
-            raise RuntimeError("nothing loaded yet (or fmt='snowflake')")
-        return self._store.read()
+    def read(self) -> DataFrame | None:
+        """Current stand-in table contents (store formats only), or None
+        while the table is empty. A fresh loader reads what any earlier
+        one committed at ``target``."""
+        return self._table().read()
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch`` — the streaming K6

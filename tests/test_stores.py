@@ -1,4 +1,4 @@
-"""The OCC stores: commit protocol, snapshot isolation,
+"""The OCC stores: commit protocol, snapshot isolation, merge-on-read,
 retry-on-conflict, vacuum, layout versioning. The foreachBatch contract
 itself is covered backend-parametrized in test_streaming.py."""
 
@@ -1300,3 +1300,313 @@ def test_open_refuses_layout_1_store(spark, tmp_path):
         with pytest.raises(ValueError, match="layout version 1;") as err:
             view()
         assert path in str(err.value)
+
+
+def test_open_refuses_layout_2_store(spark, tmp_path):
+    """Layout 2 concatenated every bucket's dir list; a merge-on-read
+    list read that way returns superseded rows, so it is refused."""
+    import json
+    import os
+
+    from iheardai_data_pipeline_spark.streaming import stores as st_mod
+
+    path = str(tmp_path / "layout2")
+    os.makedirs(path)
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        json.dump({"layout": 2, "n_buckets": None, "relations": {"rows": ["k"]}}, fh)
+    for view in (
+        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
+        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
+    ):
+        with pytest.raises(ValueError, match="layout version 2;") as err:
+            view()
+        assert path in str(err.value)
+        assert f"layout version {st_mod.LAYOUT_VERSION} only" in str(err.value)
+
+
+def test_view_refuses_a_concatenating_store(spark, tmp_path):
+    """A store created to concatenate its dir lists cannot be opened as
+    a merge-on-read view, nor merged into."""
+    from iheardai_data_pipeline_spark.streaming.stores import (
+        MultiRelationTransactionalStore,
+    )
+
+    path = str(tmp_path / "concat")
+    log = MultiRelationTransactionalStore(spark, path, {"rows": ["k"]})
+    assert not log.merge_on_read
+    with pytest.raises(ValueError, match="merge_on_read=False"):
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    with pytest.raises(ValueError, match="merge_on_read store"):
+        log.merge({"rows": spark.createDataFrame([("a", 1, "v")], SCHEMA)}, ["seq"])
+
+
+# --- merge-on-read merges ------------------------------------------------------------
+
+
+def _payload(key, seq):
+    # hex payloads parquet cannot compress away
+    import hashlib
+
+    return hashlib.sha256(f"{key}/{seq}".encode()).hexdigest()
+
+
+def _file_batch(spark, root, name, rows):
+    """``rows`` as a frame read back from a parquet file, so Catalyst
+    sizes it by its bytes as it sizes a file-stream micro-batch (a
+    ``createDataFrame`` frame has no size estimate and folds whole)."""
+    import os
+
+    path = os.path.join(str(root), name)
+    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _lww_oracle(state, rows):
+    """``state`` after a merge of ``rows``: the batch's newest row per
+    key by seq replaces the key's row, whatever its seq (update
+    priority, as ``merge_upsert``)."""
+    newest = {}
+    for row in rows:
+        if row[0] not in newest or row[1] > newest[row[0]][1]:
+            newest[row[0]] = row
+    return {**state, **newest}
+
+
+def _merge_sequence(n_merges=20, per_batch=24, seed=6):
+    """Equal-sized batches of ``(k, seq, v)`` rows: new keys, replays
+    (exact re-deliveries of earlier rows), re-sends of existing keys at
+    a random, often lower, seq (late events), and a key's versions twice
+    in one batch. One key never carries two different rows at one seq
+    in a batch, so the in-batch winner is defined."""
+    import random
+
+    rng = random.Random(seed)
+    delivered, batches, fresh = [], [], 0
+    for _ in range(n_merges):
+        rows, seen = [], {}
+        while len(rows) < per_batch:
+            r = rng.random()
+            if delivered and r < 0.2:
+                row = rng.choice(delivered)
+            elif delivered and r < 0.45:
+                key = rng.choice(delivered)[0]
+                seq = rng.randint(0, 9)
+                row = (key, seq, _payload(key, seq))
+            elif rows and r < 0.55:
+                key = rng.choice(rows)[0]
+                seq = rng.randint(0, 9)
+                row = (key, seq, _payload(key, seq))
+            else:
+                key, seq = f"k{fresh}", rng.randint(1, 9)
+                fresh += 1
+                row = (key, seq, _payload(key, seq))
+            row = seen.setdefault((row[0], row[1]), row)
+            rows.append(row)
+        delivered.extend(rows)
+        batches.append(rows)
+    return batches
+
+
+REPLAYED_STEPS = (6, 13)  # these batches are delivered twice, same epoch
+
+
+@pytest.fixture(scope="module")
+def merge_history(spark, tmp_path_factory):
+    """One seeded run of 20 epoch-stamped merges into a one-bucket view
+    and a pinned 4-bucket view, each vacuumed to 3 versions after every
+    merge; two batches are replayed. Per store and step it records the
+    ``_stage`` calls, the dir-list lengths, and the rows of every
+    retained version, beside the ``merge_upsert`` oracle."""
+    from functools import reduce
+
+    root = tmp_path_factory.mktemp("merge-history")
+    batches = _merge_sequence()
+    frames = [_file_batch(spark, root, f"in-{i}", rows) for i, rows in enumerate(batches)]
+    oracle = [{}]
+    for rows in batches:
+        oracle.append(_lww_oracle(oracle[-1], rows))
+    stores = {
+        "one_bucket": TransactionalParquetStore(spark, str(root / "txn"), ["k"], ["seq"]),
+        "four_buckets": BucketedTransactionalStore(
+            spark, str(root / "b4"), ["k"], ["seq"], n_buckets=4
+        ),
+    }
+    history = {}
+    for name, st in stores.items():
+        real_stage, stages = st._store._stage, []
+
+        def counting_stage(frames_, buckets, real_stage=real_stage, stages=stages):
+            stages.append(buckets)
+            return real_stage(frames_, buckets)
+
+        st._store._stage = counting_stage
+        steps = []
+        for i, df in enumerate(frames):
+            for replay in (False, True) if i in REPLAYED_STEPS else (False,):
+                del stages[:]
+                st.merge(df, epoch=f"batch-{i}")
+                st.vacuum(keep=3, grace_seconds=0.0)
+                version = st.current_version()
+                retained = [v for v in range(1, version + 1) if st.read_version(v) is not None]
+                # one job: read() tagged 0, each retained version tagged v
+                reads = [st.read()] + [st.read_version(v) for v in retained]
+                rows = reduce(
+                    lambda a, b: a.unionByName(b),
+                    [df.withColumn("__v", F.lit(v)) for v, df in zip([0] + retained, reads)],
+                ).collect()
+                got = {v: {} for v in [0] + retained}
+                for r in rows:
+                    assert r["k"] not in got[r["__v"]], f"{name}: {r['k']} twice at v{r['__v']}"
+                    got[r["__v"]][r["k"]] = (r["k"], r["seq"], r["v"])
+                steps.append(
+                    {
+                        "merges": i + 1,
+                        "replay": replay,
+                        "version": version,
+                        "stages": len(stages),
+                        "lists": [len(v) for v in st._manifest(version).values()],
+                        "latest": got.pop(0),
+                        "versions": got,
+                    }
+                )
+        st._store._stage = real_stage
+        history[name] = steps
+    return {"stores": stores, "oracle": oracle, "history": history, "root": root}
+
+
+@pytest.mark.parametrize("name", ["one_bucket", "four_buckets"])
+def test_merges_read_as_the_merge_upsert_oracle(merge_history, name):
+    """After every merge, read() and each retained read_version(v)
+    equal the merge_upsert fold of the batches up to v."""
+    oracle = merge_history["oracle"]
+    for step in merge_history["history"][name]:
+        assert step["version"] == step["merges"]  # one commit per merge, none per replay
+        assert step["latest"] == oracle[step["version"]]
+        assert len(step["versions"]) == min(3, step["version"])
+        for v, rows in step["versions"].items():
+            assert rows == oracle[v], f"{name}: version {v} after merge {step['merges']}"
+
+
+@pytest.mark.parametrize("name", ["one_bucket", "four_buckets"])
+def test_merge_dir_lists_stay_logarithmic(merge_history, name):
+    """After n equal merges no bucket lists more than floor(log2 n) + 2
+    dirs — and the lists do grow past one dir, so reads resolve."""
+    steps = merge_history["history"][name]
+    for step in steps:
+        n = step["merges"]
+        assert max(step["lists"]) <= n.bit_length() + 1, step
+    assert max(max(s["lists"]) for s in steps) > 1
+
+
+@pytest.mark.parametrize("name", ["one_bucket", "four_buckets"])
+def test_merge_stages_once_and_replays_commit_nothing(merge_history, name):
+    """A merge is ONE staged write (the fold rides in it; these pinned
+    stores never re-stage at a new count), and a replayed epoch stages
+    and commits nothing."""
+    for step in merge_history["history"][name]:
+        assert step["stages"] == (0 if step["replay"] else 1), step
+
+
+def test_folds_and_key_reads_see_resolved_rows(spark, merge_history, tmp_path):
+    """read_keys, a summing apply_keyed and a summing apply, run on
+    (copies of) the merged stores, each see one resolved row per key."""
+    import shutil
+
+    oracle = merge_history["oracle"][-1]
+    keys = sorted(oracle)[::7]
+    probe = spark.createDataFrame([(k,) for k in keys], "k string")
+    for name, st in merge_history["stores"].items():
+        assert max(len(v) for v in st._manifest(st.current_version()).values()) > 1
+        got = [tuple(r) for r in st.read_keys(probe).collect()]
+        assert sorted(got) == sorted(oracle[k] for k in keys), name
+        copy = str(tmp_path / name)
+        shutil.copytree(st.path, copy)
+        if name == "one_bucket":
+            view = TransactionalParquetStore(spark, copy, ["k"], ["seq"])
+            view.apply(
+                lambda current: current.groupBy().agg(
+                    F.lit("all").alias("k"),
+                    F.sum("seq").cast("int").alias("seq"),
+                    F.count("*").cast("string").alias("v"),
+                )
+            )
+            (row,) = view.read().collect()
+            assert (row["seq"], row["v"]) == (
+                sum(r[1] for r in oracle.values()),
+                str(len(oracle)),
+            )
+        else:
+            view = BucketedTransactionalStore(spark, copy, ["k"], ["seq"])
+
+            def add(current, upd):
+                return (
+                    current.unionByName(upd)
+                    .groupBy("k")
+                    .agg(F.sum("seq").cast("int").alias("seq"), F.max("v").alias("v"))
+                )
+
+            view.apply_keyed(
+                spark.createDataFrame([(k, 100, "") for k in keys], SCHEMA), add
+            )
+            got = {r["k"]: r["seq"] for r in view.read().collect()}
+            assert got == {
+                k: r[1] + (100 if k in keys else 0) for k, r in oracle.items()
+            }
+
+
+@pytest.mark.parametrize("path", ["append", "fold"])
+def test_lost_claim_refolds_on_the_winners_base(spark, tmp_path, path):
+    """A merge whose claim is lost re-decides its fold on the winner's
+    base and re-stages: nothing the winner wrote is lost or undone,
+    and the dir the loser first staged is never committed."""
+    big = [(f"a{i}", 1, _payload(f"a{i}", 1)) for i in range(300)]
+    small = lambda tag, n: [  # noqa: E731
+        (f"{tag}{i}", 2, _payload(f"{tag}{i}", 2)) for i in range(n)
+    ] + [("a0", 3, _payload(tag, 3))]
+    st = BucketedTransactionalStore(spark, str(tmp_path / "s"), ["k"], ["seq"])
+    winner = BucketedTransactionalStore(spark, st.path, ["k"], ["seq"])
+    batches = [big] + ([small("t", 20)] if path == "fold" else [])
+    for i, rows in enumerate(batches):
+        st.merge(_file_batch(spark, tmp_path, f"base-{i}", rows))
+    base_list = st._manifest(st.current_version())["0"]
+    assert len(base_list) == len(batches)  # the tail the loser folds, if any
+    w_rows, x_rows = small("w", 20), small("x", 20)
+    w_df = _file_batch(spark, tmp_path, "w", w_rows)
+    real_stage, staged = st._store._stage, []
+
+    def stage_then_lose(frames, buckets):
+        name, written = real_stage(frames, buckets)
+        staged.append(name)
+        if len(staged) == 1:
+            winner.merge(w_df)
+        return name, written
+
+    st._store._stage = stage_then_lose
+    st.merge(_file_batch(spark, tmp_path, "x", x_rows))
+    assert len(staged) == 2 and st.current_version() == len(batches) + 2
+    final = st._manifest(st.current_version())["0"]
+    assert staged[0] not in final and final[-1] == staged[1]
+    assert final[0] == base_list[0]  # the big dir is never folded
+    want = {}
+    for rows in batches + [w_rows, x_rows]:
+        want = _lww_oracle(want, rows)
+    assert {r["k"]: tuple(r) for r in st.read().collect()} == want
+
+
+@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
+def test_warehouse_loader_reads_a_table_another_loader_wrote(spark, tmp_path, fmt):
+    """A fresh loader on a committed target (a restarted process) reads
+    the table without loading anything; an empty target reads None."""
+    from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
+
+    path = str(tmp_path / "wh")
+    assert WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt).read() is None
+    first = WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt)
+    first.load_batch(spark.createDataFrame([("a", 1, "v1"), ("b", 1, "b1")], SCHEMA))
+    first.load_batch(spark.createDataFrame([("a", 2, "v2")], SCHEMA))
+    restarted = WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt)
+    got = {r["k"]: (r["seq"], r["v"]) for r in restarted.read().collect()}
+    assert got == {"a": (2, "v2"), "b": (1, "b1")}
+    sf = WarehouseBatchLoader(spark, "EVENTS", ["k"], ["seq"], fmt="snowflake")
+    with pytest.raises(RuntimeError, match="snowflake"):
+        sf.read()
