@@ -28,13 +28,6 @@ QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-bm25")
-
-
 def _python_bm25(k, k1=1.2, b=0.75):
     docs = {i: t.split() for i, t in DOCS if t is not None}
     n = len(docs)

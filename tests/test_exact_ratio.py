@@ -9,7 +9,6 @@ between the engines (round-1 a2/a5 hash failures).
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from iheardai_data_pipeline_spark.functions.exact import (
@@ -31,13 +30,6 @@ CASES = [
     (0, 7, 4),
     (123456789, 97, 6),  # non-terminating
 ]
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-exact")
 
 
 def test_ratio_matches_duckdb_bitwise(spark):

@@ -16,13 +16,6 @@ from iheardai_data_pipeline_spark.operators.similarity import (
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-ivf-refine")
-
-
-@pytest.fixture(scope="module")
 def emb(spark):
     # three tight clusters around orthogonal-ish anchors, deterministic
     anchors = [

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -10,13 +9,6 @@ from iheardai_data_pipeline_spark.operators.packing import (
     token_budget_shards,
     with_global_running_total,
 )
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-packing")
 
 
 def _naive(df, order_col, value_col):

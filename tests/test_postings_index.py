@@ -31,13 +31,6 @@ QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-postings-index")
-
-
 def _docs(spark, rows=DOCS):
     return spark.createDataFrame(rows, "doc_id long, text string")
 

@@ -1350,15 +1350,22 @@ def _payload(key, seq):
     return hashlib.sha256(f"{key}/{seq}".encode()).hexdigest()
 
 
-def _file_batch(spark, root, name, rows):
-    """``rows`` as a frame read back from a parquet file, so Catalyst
-    sizes it by its bytes as it sizes a file-stream micro-batch (a
-    ``createDataFrame`` frame has no size estimate and folds whole)."""
+def _file_batches(spark, root, name, batches):
+    """Each row list of ``batches`` as a frame read back from its own
+    parquet file, so Catalyst sizes it by its bytes as it sizes a
+    file-stream micro-batch (a ``createDataFrame`` frame has no size
+    estimate and folds whole). One write job stages them all."""
     import os
 
     path = os.path.join(str(root), name)
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(path)
-    return spark.read.parquet(path)
+    tagged = [(i, *row) for i, rows in enumerate(batches) for row in rows]
+    (
+        spark.createDataFrame(tagged, f"batch int, {SCHEMA}")
+        .coalesce(1)
+        .write.partitionBy("batch")
+        .parquet(path)
+    )
+    return [spark.read.parquet(os.path.join(path, f"batch={i}")) for i in range(len(batches))]
 
 
 def _lww_oracle(state, rows):
@@ -1421,7 +1428,7 @@ def merge_history(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("merge-history")
     batches = _merge_sequence()
-    frames = [_file_batch(spark, root, f"in-{i}", rows) for i, rows in enumerate(batches)]
+    frames = _file_batches(spark, root, "in", batches)
     oracle = [{}]
     for rows in batches:
         oracle.append(_lww_oracle(oracle[-1], rows))
@@ -1447,7 +1454,7 @@ def merge_history(spark, tmp_path_factory):
                 st.merge(df, epoch=f"batch-{i}")
                 st.vacuum(keep=3, grace_seconds=0.0)
                 version = st.current_version()
-                retained = [v for v in range(1, version + 1) if st.read_version(v) is not None]
+                retained = [v for v in range(1, version + 1) if st._manifest(v) is not None]
                 # one job: read() tagged 0, each retained version tagged v
                 reads = [st.read()] + [st.read_version(v) for v in retained]
                 rows = reduce(
@@ -1566,12 +1573,12 @@ def test_lost_claim_refolds_on_the_winners_base(spark, tmp_path, path):
     st = BucketedTransactionalStore(spark, str(tmp_path / "s"), ["k"], ["seq"])
     winner = BucketedTransactionalStore(spark, st.path, ["k"], ["seq"])
     batches = [big] + ([small("t", 20)] if path == "fold" else [])
-    for i, rows in enumerate(batches):
-        st.merge(_file_batch(spark, tmp_path, f"base-{i}", rows))
+    w_rows, x_rows = small("w", 20), small("x", 20)
+    *base_dfs, w_df, x_df = _file_batches(spark, tmp_path, "in", [*batches, w_rows, x_rows])
+    for df in base_dfs:
+        st.merge(df)
     base_list = st._manifest(st.current_version())["0"]
     assert len(base_list) == len(batches)  # the tail the loser folds, if any
-    w_rows, x_rows = small("w", 20), small("x", 20)
-    w_df = _file_batch(spark, tmp_path, "w", w_rows)
     real_stage, staged = st._store._stage, []
 
     def stage_then_lose(frames, buckets):
@@ -1582,7 +1589,7 @@ def test_lost_claim_refolds_on_the_winners_base(spark, tmp_path, path):
         return name, written
 
     st._store._stage = stage_then_lose
-    st.merge(_file_batch(spark, tmp_path, "x", x_rows))
+    st.merge(x_df)
     assert len(staged) == 2 and st.current_version() == len(batches) + 2
     final = st._manifest(st.current_version())["0"]
     assert staged[0] not in final and final[-1] == staged[1]
