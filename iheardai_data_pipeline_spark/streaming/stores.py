@@ -191,9 +191,15 @@ def _bytes_under(path: str) -> int:
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate of ``df`` (``sizeInBytes`` of its
     optimized plan): the input files' bytes for a file scan or a
-    file-stream micro-batch, ``spark.sql.defaultSizeInBytes`` (huge)
-    when the plan has no statistics. No Spark job runs."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    file-stream micro-batch. A plan without statistics (a
+    ``createDataFrame`` of local rows) reports
+    ``spark.sql.defaultSizeInBytes``, which says nothing; that reads as
+    0, so :func:`_fold_start` keeps its log bound instead of folding the
+    whole list. No Spark job runs."""
+    jdf = df._jdf
+    estimate = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    unknown = jdf.sparkSession().sessionState().conf().defaultSizeInBytes()
+    return 0 if estimate >= unknown else estimate
 
 
 def _fold_start(sizes: list[int], adding: float) -> int:

@@ -1,5 +1,5 @@
-"""The test session's PySpark worker daemon: ``pyspark.daemon`` with the
-zip importers' cache invalidation made a no-op.
+"""The engine's PySpark worker daemon: ``pyspark.daemon`` with the zip
+importers' cache invalidation made a no-op.
 
 Every Python task (one per partition of a ``createDataFrame`` frame
 built from local rows, on every job that reads it) starts with
@@ -13,8 +13,8 @@ work. The zips on the workers' path are Spark's own and never change
 while the session runs, so their cached directories stay valid.
 Filesystem finders still invalidate as before.
 
-``conftest.py`` starts the session's workers through this module
-(``spark.python.daemon.module``); it runs the stock daemon loop.
+``session.get_spark`` starts a local session's workers through this
+module (``spark.python.daemon.module``); it runs the stock daemon loop.
 """
 
 import zipimport

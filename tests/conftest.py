@@ -25,19 +25,10 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    """The one session of the run. Its Python workers start through
-    ``spark_worker_daemon`` (this directory, put on their path), which
-    spares each task a re-read of pyspark.zip's directory."""
+    """The one session of the run, built by the engine's ``get_spark``."""
     from iheardai_data_pipeline_spark.session import get_spark
 
-    s = get_spark(
-        app_name="iheardai-tests",
-        extra_conf={
-            "spark.driver.memory": "8g",
-            "spark.python.daemon.module": "spark_worker_daemon",
-            "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.abspath(__file__)),
-        },
-    )
+    s = get_spark(app_name="iheardai-tests", extra_conf={"spark.driver.memory": "8g"})
     yield s
 
 

@@ -1155,20 +1155,22 @@ def test_resize_racing_a_merge_loses_no_update(spark, tmp_path, small_splits):
     seed = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
     seed.merge(spark.createDataFrame([("seed", 1, "s")], SCHEMA))
     grow = _grow_rows(400)
+    # sized by its bytes, so its merge folds the seed's dir: a whole-relation rewrite
+    (grow_df,) = _file_batches(spark, tmp_path, "grow", [grow])
     start = threading.Barrier(2)
     errs = []
 
-    def write(rows):
+    def write(df):
         try:
             st = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
             start.wait()
-            st.merge(spark.createDataFrame(rows, SCHEMA))
+            st.merge(df)
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
     threads = [
-        threading.Thread(target=write, args=(rows,))
-        for rows in (grow, [("point", 1, "p")])
+        threading.Thread(target=write, args=(df,))
+        for df in (grow_df, spark.createDataFrame([("point", 1, "p")], SCHEMA))
     ]
     for t in threads:
         t.start()
@@ -1199,12 +1201,14 @@ def test_writer_retries_at_the_resized_count(spark, tmp_path, small_splits, op):
     log = MultiRelationTransactionalStore(spark, path, {"rows": ["k"]})
     real_stage = log._stage
     staged_at = []
+    # sized by its bytes, so its merge folds the seed's dir: a whole-relation rewrite
+    (grow_df,) = _file_batches(spark, tmp_path, "grow", [_grow_rows(400)])
 
     def stage_then_lose_to_a_resize(frames, buckets):
         staged = real_stage(frames, buckets)
         staged_at.append(buckets["rows"])
         if len(staged_at) == 1:
-            grower.merge(spark.createDataFrame(_grow_rows(400), SCHEMA))
+            grower.merge(grow_df)
         return staged
 
     log._stage = stage_then_lose_to_a_resize
@@ -1354,7 +1358,8 @@ def _file_batches(spark, root, name, batches):
     """Each row list of ``batches`` as a frame read back from its own
     parquet file, so Catalyst sizes it by its bytes as it sizes a
     file-stream micro-batch (a ``createDataFrame`` frame has no size
-    estimate and folds whole). One write job stages them all."""
+    estimate and merges as if it added nothing). One write job stages
+    them all."""
     import os
 
     path = os.path.join(str(root), name)
@@ -1559,6 +1564,28 @@ def test_folds_and_key_reads_see_resolved_rows(spark, merge_history, tmp_path):
             assert got == {
                 k: r[1] + (100 if k in keys else 0) for k, r in oracle.items()
             }
+
+
+@pytest.mark.parametrize("n_buckets", [1, 4])
+def test_merges_of_unsized_frames_stay_logarithmic(spark, tmp_path, n_buckets):
+    """``createDataFrame`` frames carry no size estimate (Catalyst
+    reports ``spark.sql.defaultSizeInBytes``); merging them still keeps
+    every list at most floor(log2 n) + 2 dirs instead of folding the
+    whole list each time, and reads as the merge_upsert oracle."""
+    batches = _merge_sequence(n_merges=10)
+    st = BucketedTransactionalStore(
+        spark, str(tmp_path / "s"), ["k"], ["seq"], n_buckets=n_buckets
+    )
+    oracle, longest = {}, 0
+    for n, rows in enumerate(batches, 1):
+        st.merge(spark.createDataFrame(rows, SCHEMA))
+        oracle = _lww_oracle(oracle, rows)
+        lists = [len(v) for v in st._manifest(st.current_version()).values()]
+        assert max(lists) <= n.bit_length() + 1, (n, lists)
+        longest = max(longest, *lists)
+    assert longest > 1
+    got = [tuple(r) for r in st.read().collect()]
+    assert len(got) == len(oracle) and dict((r[0], r) for r in got) == oracle
 
 
 @pytest.mark.parametrize("path", ["append", "fold"])

@@ -24,13 +24,6 @@ DOCS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from iheardai_data_pipeline_spark.session import get_spark
-
-    return get_spark(app_name="test-text-fused")
-
-
 def test_fused_equals_column_helpers(spark):
     df = spark.createDataFrame(DOCS, "doc_id int, text string")
     t = F.col("text")
