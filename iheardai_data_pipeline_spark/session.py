@@ -11,8 +11,9 @@ capture is off (it cost about 10 py4j round trips per ``Column`` or
 ``functions`` call), and the generated-class cache holds
 ``CODEGEN_CACHE_ENTRIES`` classes, so a session re-running the same
 queries stops recompiling them. A local session also starts its Python
-workers through :mod:`worker_daemon`. :func:`get_spark` gives the
-measured reasons.
+workers through :mod:`worker_daemon` and writes streaming checkpoints
+without spawning processes. :func:`get_spark` gives the measured
+reasons.
 """
 
 from __future__ import annotations
@@ -25,6 +26,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Spark's default is 100, split over 4 LRU segments of 25.
 CODEGEN_CACHE_ENTRIES = 1000
+
+# The streaming checkpoint's file manager on a local master (see get_spark).
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def parallel_legs(*thunks):
@@ -96,11 +103,25 @@ def get_spark(
       warm session recompiles none. Static: it takes effect when the
       JVM starts.
 
-    On a ``local`` master the Python workers start through
-    :mod:`iheardai_data_pipeline_spark.worker_daemon`, with the
-    package's parent directory on their path, which saves about 0.25 s
-    of worker CPU per Python task. A cluster's executors may not have
-    the package installed, so other masters start the stock daemon.
+    On a ``local`` master:
+
+    - the Python workers start through
+      :mod:`iheardai_data_pipeline_spark.worker_daemon`, with the
+      package's parent directory on their path, which saves about
+      0.25 s of worker CPU per Python task. A cluster's executors may
+      not have the package installed, so other masters start the stock
+      daemon.
+    - streaming checkpoints go through Spark's
+      ``FileSystemBasedCheckpointFileManager``
+      (``spark.sql.streaming.checkpointFileManagerClass``). Without the
+      native Hadoop library (``libhadoop.so``), every rename of the
+      default ``FileContext``-based manager makes the local filesystem
+      spawn a ``readlink`` process, at about 4 ms of CPU each: about 24
+      per micro-batch of a file stream, for the ``offsets/``,
+      ``commits/`` and ``sources/`` logs. The ``FileSystem``-based
+      manager renames through ``java.io.File`` instead, and on a local
+      disk both renames give the same guarantee. Other masters keep
+      Spark's choice for their storage.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -130,9 +151,16 @@ def get_spark(
     )
     if master.startswith("local"):
         package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        builder = builder.config(
-            "spark.python.daemon.module", "iheardai_data_pipeline_spark.worker_daemon"
-        ).config("spark.executorEnv.PYTHONPATH", package_parent)
+        builder = (
+            builder.config(
+                "spark.python.daemon.module", "iheardai_data_pipeline_spark.worker_daemon"
+            )
+            .config("spark.executorEnv.PYTHONPATH", package_parent)
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                LOCAL_CHECKPOINT_FILE_MANAGER,
+            )
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

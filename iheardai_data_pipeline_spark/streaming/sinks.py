@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
 from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 
 # the staged type of the KPI money sum, wide enough for any fold of it
@@ -90,42 +91,44 @@ def session_kpis_foreach_batch(
 
     The reference recomputes the session_kpis row for every session
     touched by the batch (enhanced_kpi_consumer.py:210-250,560-609).
-    Batch analog: aggregate the micro-batch per key, then merge into the
-    snapshot combining counts/sums/min/max associatively — the streaming
-    equivalent of recompute-touched-keys without rereading the base table.
+    Batch analog: fold the micro-batch's events straight into the
+    touched keys' snapshot rows with ONE aggregate, combining
+    counts/sums/min/max associatively — the streaming equivalent of
+    recompute-touched-keys without rereading the base table. Each event
+    enters the fold as a one-event KPI row; Spark's partial aggregation
+    combines the batch's rows per key before any exchange, so no
+    separate pre-aggregation runs. At one bucket the store hands the
+    fold one-partition inputs, and the commit is one Spark job with no
+    shuffle (``MultiRelationTransactionalStore.apply_keyed`` in
+    :mod:`streaming.stores`).
 
     The fold sums, so a replayed batch would double-count: each commit
     carries the batch's epoch (see :func:`_stream_epoch`) and a replay
-    is a no-op. The partial and the fold stage the same column types
-    (``bigint`` count, ``decimal(38,2)`` money), as the store requires
-    of every commit.
+    is a no-op. Every commit stages the same column types (``bigint``
+    count, ``decimal(38,2)`` money), as the store requires.
     """
 
-    def merge_fn(current: DataFrame | None, partial: DataFrame) -> DataFrame:
-        if current is None:
-            return partial
-        return (
-            current.unionByName(partial)
-            .groupBy(user_col)
-            .agg(
-                F.sum("n_events").cast("bigint").alias("n_events"),
-                F.sum("sum_value_dec").cast(_MONEY).alias("sum_value_dec"),
-                F.min("started_at_s").alias("started_at_s"),
-                F.max("ended_at_s").alias("ended_at_s"),
-            )
+    def merge_fn(current: DataFrame | None, batch: DataFrame) -> DataFrame:
+        ts = F.unix_seconds(F.col(ts_col))
+        rows = batch.select(
+            user_col,
+            F.lit(1).cast("bigint").alias("n_events"),
+            F.col(value_col).cast("decimal(18,2)").cast(_MONEY).alias("sum_value_dec"),
+            ts.alias("started_at_s"),
+            ts.alias("ended_at_s"),
+        )
+        if current is not None:
+            rows = current.unionByName(rows)
+        return rows.groupBy(user_col).agg(
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.sum("sum_value_dec").cast(_MONEY).alias("sum_value_dec"),
+            F.min("started_at_s").alias("started_at_s"),
+            F.max("ended_at_s").alias("ended_at_s"),
         )
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = batch_df.groupBy(user_col).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(F.col(value_col).cast("decimal(18,2)"))
-            .cast(_MONEY)
-            .alias("sum_value_dec"),
-            F.min(F.unix_seconds(F.col(ts_col))).alias("started_at_s"),
-            F.max(F.unix_seconds(F.col(ts_col))).alias("ended_at_s"),
-        )
         # the per-user fold is key-local, so only touched buckets rewrite
-        store.apply_keyed(partial, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
+        store.apply_keyed(batch_df, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
 
     return apply
 
@@ -137,29 +140,23 @@ def session_state_foreach_batch(
     """J4/K5/W3: per-key mutable session state with a monotonic seq guard
     (reference Redis HSET + seq compare, enhanced_kpi_consumer.py:638-673).
 
-    Each batch keeps only its own max-seq row per key, then merges with
-    the store keeping the larger seq — stale updates are dropped exactly
-    like the reference's `seq <= current` check. The seq-guard
-    last-write-wins is key-local, so the bucketed partial rewrite
-    applies. It is also idempotent, but a replay would still rewrite
-    the touched buckets as a new version: each commit carries the
-    batch's epoch (see :func:`_stream_epoch`), so a replay commits
-    nothing.
+    ONE last-write-wins window over the touched keys' stored rows and
+    the batch's rows keeps each key's largest seq — stale updates are
+    dropped exactly like the reference's `seq <= current` check. The
+    seq-guard last-write-wins is key-local, so the bucketed partial
+    rewrite applies, and at one bucket the window runs in the staged
+    write's own task (one Spark job, no shuffle). It is also
+    idempotent, but a replay would still rewrite the touched buckets as
+    a new version: each commit carries the batch's epoch (see
+    :func:`_stream_epoch`), so a replay commits nothing.
     """
 
+    def merge_fn(current: DataFrame | None, batch: DataFrame) -> DataFrame:
+        rows = batch if current is None else current.unionByName(batch)
+        return last_write_wins(rows, store.key_cols, [seq_col])
+
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
-
-        newest = last_write_wins(batch_df, store.key_cols, [seq_col])
-
-        def merge_fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
-            if current is None:
-                return upd
-            return last_write_wins(
-                current.unionByName(upd), store.key_cols, [seq_col]
-            )
-
-        store.apply_keyed(newest, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
+        store.apply_keyed(batch_df, merge_fn, epoch=_stream_epoch(batch_df, epoch_id))
 
     return apply
 

@@ -711,12 +711,16 @@ class MultiRelationTransactionalStore:
             self._snapshot_dir(snapshot), self._rel_dir(rel), f"__bucket={bucket}"
         )
 
-    def _read_rel(self, manifest: dict, rel: str, buckets=None) -> DataFrame | None:
+    def _read_rel(
+        self, manifest: dict, rel: str, buckets=None, one_task: bool = False
+    ) -> DataFrame | None:
         """``rel``'s rows in ``manifest`` (only those of ``buckets``,
         when given), or None when no bucket dir is listed. The one place
         a bucket's dir list becomes rows: concatenated, or on a
         merge-on-read store resolved to the latest dir per key wherever
-        the list holds more than one dir."""
+        the list holds more than one dir. ``one_task``: coalesce every
+        scan to one partition (see :meth:`_keyed_commit`), so the rows
+        come out as one partition with no shuffle."""
         lists = {
             b: names
             for b, names in manifest.get(rel, {}).items()
@@ -733,20 +737,22 @@ class MultiRelationTransactionalStore:
             if b not in stacked
             for s in names
         ]
-        parts = [self._read_parquet(*paths)] if paths else []
+        parts = [self._read_parquet(*paths, one_task=one_task)] if paths else []
         if stacked:
             parts.append(
                 merge_upsert_chain(
-                    self._list_scans(rel, stacked), self.relations[rel]
+                    self._list_scans(rel, stacked, one_task), self.relations[rel]
                 )
             )
         return reduce(DataFrame.unionByName, parts) if parts else None
 
-    def _list_scans(self, rel: str, lists: dict[str, list[str]]) -> list[DataFrame]:
+    def _list_scans(
+        self, rel: str, lists: dict[str, list[str]], one_task: bool = False
+    ) -> list[DataFrame]:
         """One scan per list position, oldest first: scan ``p`` reads
         the ``p``-th dir of every list in ``lists`` longer than ``p``.
         A key lives in one bucket, so only positions within one list
-        are ever compared."""
+        are ever compared. ``one_task`` is :meth:`_read_rel`'s."""
         depth = max(map(len, lists.values()), default=0)
         return [
             self._read_parquet(
@@ -754,20 +760,23 @@ class MultiRelationTransactionalStore:
                     self._bucket_path(names[p], rel, b)
                     for b, names in lists.items()
                     if len(names) > p
-                )
+                ),
+                one_task=one_task,
             )
             for p in range(depth)
         ]
 
-    def _read_parquet(self, *paths: str) -> DataFrame:
+    def _read_parquet(self, *paths: str, one_task: bool = False) -> DataFrame:
         """Parquet read with the cached union file schema (all staged
         files carry it — the class's documented schema constraint), so
-        footer inference runs at most once per store instance."""
+        footer inference runs at most once per store instance;
+        ``one_task`` coalesces it to one partition."""
         if self._file_schema is None:
             df = self.spark.read.parquet(*paths)
             self._file_schema = _nullable_schema(df.schema)
-            return df
-        return self.spark.read.schema(self._file_schema).parquet(*paths)
+        else:
+            df = self.spark.read.schema(self._file_schema).parquet(*paths)
+        return df.coalesce(1) if one_task else df
 
     def _bucket_expr(self, rel: str, count: int):
         from pyspark.sql import functions as F
@@ -808,7 +817,12 @@ class MultiRelationTransactionalStore:
         the remaining columns, and since every commit stages the same
         union schema (the class's documented constraint) a schema from a
         write that later fails or loses its claim still describes every
-        committed file (ADVICE r14)."""
+        committed file (ADVICE r14).
+
+        The write leaves no ``_SUCCESS`` file: a staged dir counts only
+        once a commit claim points at it, and nothing reads the marker.
+        Without the native Hadoop library the local filesystem spawns a
+        ``chmod`` process for each marker file it creates."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
@@ -847,6 +861,7 @@ class MultiRelationTransactionalStore:
         (
             staged.write.partitionBy("__rel", "__bucket")
             .mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
             .parquet(self._snapshot_dir(name))
         )
         written = {}
@@ -1093,7 +1108,12 @@ class MultiRelationTransactionalStore:
         touched bucket's whole dir list. At most one touched-bucket
         collect (none while every relation has one bucket, which every
         commit touches — so every such call commits a version), ONE
-        staged write job over all relations, one commit claim. A
+        staged write job over all relations, one commit claim. When that
+        write is one task (one relation at one bucket), ``fn`` gets
+        ``current`` and ``upd`` as one partition each, so a key-local
+        aggregate or window over their union runs in the write's own
+        task: the whole commit is one Spark job with no shuffle (see
+        :meth:`_keyed_commit`). A
         relation whose every populated bucket is touched is rewritten
         whole and may change its bucket count (see the class
         docstring). A lost commit race re-reads the new base manifest
@@ -1104,7 +1124,9 @@ class MultiRelationTransactionalStore:
         self._keyed_commit(
             "apply_keyed",
             updates,
-            lambda rel, tails, upd: fn(rel, self._read_rel({rel: tails}, rel), upd),
+            lambda rel, tails, upd, one_task: fn(
+                rel, self._read_rel({rel: tails}, rel, one_task=one_task), upd
+            ),
             lambda rel, lists, hit: dict.fromkeys(hit, 0),
             epoch,
         )
@@ -1152,8 +1174,8 @@ class MultiRelationTransactionalStore:
         self._keyed_commit(
             "merge",
             updates,
-            lambda rel, tails, upd: tag_priority(
-                self._list_scans(rel, tails) + [upd], order_cols
+            lambda rel, tails, upd, one_task: tag_priority(
+                self._list_scans(rel, tails, one_task) + [upd], order_cols
             ),
             fold_from,
             epoch,
@@ -1163,8 +1185,19 @@ class MultiRelationTransactionalStore:
         """The commit loop of :meth:`apply_keyed` and :meth:`merge`.
         Per relation, ``fold_from(rel, base_lists, hit)`` says where the
         rewritten tail of each hit bucket's list starts, and
-        ``fold(rel, tails, upd)`` returns the new rows for those tails
-        (``tails``: ``{bucket: dirs}``, the folded part of each list)."""
+        ``fold(rel, tails, upd, one_task)`` returns the new rows for
+        those tails (``tails``: ``{bucket: dirs}``, the folded part of
+        each list).
+
+        When the base's bucket counts give the staged write one task
+        (:func:`_staged_write_tasks`; one relation at one bucket on any
+        cluster), the fold gets its inputs as one partition each: the
+        update frame coalesced, and ``one_task`` True so every scan of
+        ``current`` is coalesced too. A union of one-partition children
+        stays one partition (``spark.sql.unionOutputPartitioning``), so
+        a key-local aggregate or window over it plans no shuffle, and
+        fold and staged write run as ONE job of one task; :meth:`_stage`
+        would gather the rows into that one task anyway."""
         self._check_relations(op, updates)
         finest = None  # collected once a base has a relation above one bucket
         for _ in range(OCC_MAX_RETRIES):
@@ -1172,6 +1205,7 @@ class MultiRelationTransactionalStore:
                 return
             base_version = self.current_version()
             base, buckets = self._base(base_version)
+            one_task = _staged_write_tasks(self.spark, sum(buckets.values())) == 1
             if finest is None and max(buckets.values()) > 1:
                 finest = self._touched_finest(updates)
             touched: dict[str, dict[str, int] | None] = {}
@@ -1189,7 +1223,13 @@ class MultiRelationTransactionalStore:
             if not any(t is None or t for t in touched.values()):
                 return
             merged = {
-                rel: fold(rel, tails[rel], updates[rel]) for rel in self._rel_names
+                rel: fold(
+                    rel,
+                    tails[rel],
+                    updates[rel].coalesce(1) if one_task else updates[rel],
+                    one_task,
+                )
+                for rel in self._rel_names
             }
             if self._commit_fold(
                 base_version + 1, base, buckets, merged, touched, epoch=epoch
@@ -1458,7 +1498,10 @@ class BucketedTransactionalStore:
         where ``current`` is the touched buckets' resolved rows and the
         output must hold one row per key. ``fn`` MUST be key-local; a
         cross-key fn needs
-        :meth:`TransactionalParquetStore.apply`. ``epoch``:
+        :meth:`TransactionalParquetStore.apply`. At one bucket both
+        frames arrive as one partition each, so ``fn``'s aggregate or
+        window runs in the staged write's task (see
+        :meth:`MultiRelationTransactionalStore.apply_keyed`). ``epoch``:
         idempotent-commit marker (see
         :class:`MultiRelationTransactionalStore`)."""
         self._store.apply_keyed(

@@ -532,3 +532,109 @@ def test_t22_postings_checkpoint_restart_replays_as_noop(spark, tmp_path):
         .count()
         == 0
     )
+
+
+def test_ingest_pair_checkpoint_restart_replays_as_noop(spark, tmp_path):
+    """The ingest pair — a warehouse loader and the KPI sink, both
+    fed by one file stream — through a kill-and-restart: a crash after
+    batch 1's side effects (both stores committed, offset not yet
+    marked complete) replays batch 1 with the same epoch, which commits
+    nothing, and both stores end equal to the one-shot answers. The
+    local session checkpoints through the FileSystem-based manager."""
+    from iheardai_data_pipeline_spark.session import LOCAL_CHECKPOINT_FILE_MANAGER
+    from iheardai_data_pipeline_spark.streaming.sinks import (
+        session_kpis_foreach_batch,
+    )
+    from iheardai_data_pipeline_spark.streaming.stores import (
+        BucketedTransactionalStore,
+    )
+    from iheardai_data_pipeline_spark.streaming.warehouse import (
+        WarehouseBatchLoader,
+    )
+
+    schema = "event_id long, user_id string, t long, value double"
+    parts = [
+        [(1, "u0", 100, 1.25), (2, "u1", 110, 0.5), (3, "u0", 120, 2.0)],
+        [(4, "u2", 200, 3.0), (1, "u0", 210, 1.5)],  # event 1 re-delivered
+        [(5, "u1", 300, 0.75), (3, "u0", 90, 4.0), (6, "u2", 320, 1.0)],
+    ]
+    src_dir = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    wh_path = str(tmp_path / "warehouse")
+    kpi_path = str(tmp_path / "kpis")
+    crash_flag = str(tmp_path / "crashed-once")
+    for i, part in enumerate(parts):
+        spark.createDataFrame(part, schema).coalesce(1).write.parquet(
+            os.path.join(src_dir, f"part{i}")
+        )
+
+    def run_attempt():
+        # reopened, as a restarted driver would
+        load = WarehouseBatchLoader(
+            spark, wh_path, ["event_id"], ["ts"], fmt="parquet_bucketed"
+        ).foreach_batch()
+        kpis = session_kpis_foreach_batch(
+            BucketedTransactionalStore(spark, kpi_path, ["user_id"], ["ended_at_s"])
+        )
+
+        def ingest(batch, batch_id):
+            batch = batch.withColumn("ts", F.timestamp_seconds("t"))
+            load(batch, batch_id)
+            kpis(batch, batch_id)
+            if batch_id == 1 and not os.path.exists(crash_flag):
+                with open(crash_flag, "w") as fh:
+                    fh.write("crashed once")
+                raise RuntimeError("injected crash after both store commits")
+
+        (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(src_dir)
+            .writeStream.foreachBatch(ingest)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
+        )
+
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_attempt()
+    wh = BucketedTransactionalStore(spark, wh_path, ["event_id"], ["ts"])
+    kpi = BucketedTransactionalStore(spark, kpi_path, ["user_id"], ["ended_at_s"])
+    assert wh.current_version() == 2 and kpi.current_version() == 2
+    run_attempt()  # recovery: batch 1 replays (same epoch, no commit), then batch 2
+    # one commit per batch in each store: the replay committed nothing
+    assert wh.current_version() == 3 and kpi.current_version() == 3
+    # a later batch's row replaces the stored one whatever its ts (the
+    # store's update priority); no part repeats an event
+    delivered = [r for part in parts for r in part]
+    latest = {event_id: (user, t, value) for event_id, user, t, value in delivered}
+    got_wh = {
+        r["event_id"]: (r["user_id"], r["t"], r["value"]) for r in wh.read().collect()
+    }
+    assert got_wh == latest
+    want_kpis = {}
+    for _event_id, user, t, value in delivered:
+        n, total, lo, hi = want_kpis.get(user, (0, 0.0, t, t))
+        want_kpis[user] = (n + 1, total + value, min(lo, t), max(hi, t))
+    got_kpis = {
+        r["user_id"]: (
+            r["n_events"],
+            float(r["sum_value_dec"]),
+            r["started_at_s"],
+            r["ended_at_s"],
+        )
+        for r in kpi.read().collect()
+    }
+    assert got_kpis == want_kpis
+    # the checkpoint's metadata logs went through the FileSystem-based
+    # manager, which renames without spawning a process
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = managers.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(ckpt),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == LOCAL_CHECKPOINT_FILE_MANAGER

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,11 +15,25 @@ from iheardai_data_pipeline_spark.streaming.sinks import (
     session_kpis_foreach_batch,
     session_state_foreach_batch,
 )
-from iheardai_data_pipeline_spark.streaming.stores import make_upsert_store
+from iheardai_data_pipeline_spark.streaming.stores import (
+    BucketedTransactionalStore,
+    make_upsert_store,
+)
 from iheardai_data_pipeline_spark.streaming.windows import dedup_within_watermark
 
 # every upsert backend must satisfy the same foreachBatch contract
 STORE_BACKENDS = ["parquet_txn", "parquet_bucketed"]
+# ...and so must a store pinned to several buckets, whose keyed commits
+# fold the touched buckets with a shuffle instead of in one task
+PINNED_4 = "parquet_bucketed_pinned_4"
+
+
+def _open_store(spark, path, key_cols, order_cols, fmt):
+    if fmt == PINNED_4:
+        return BucketedTransactionalStore(
+            spark, path, key_cols, order_cols, n_buckets=4
+        )
+    return make_upsert_store(spark, path, key_cols, order_cols, fmt=fmt)
 
 
 def test_t5_watermark_dedup(spark, sf_dir, tmp_path):
@@ -57,15 +72,15 @@ def test_t7_archive_sink_partitioning(spark, sf_dir, tmp_path):
     assert n_out == n_src
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS)
+@pytest.mark.parametrize("fmt", STORE_BACKENDS + [PINNED_4])
 def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
     """Two micro-batches merged == one-shot batch aggregate (§3.2),
     identical across every upsert-store backend."""
     events = load_table(spark, sf_dir, "events")
     b1 = events.filter(F.col("event_id") % 2 == 0)
     b2 = events.filter(F.col("event_id") % 2 == 1)
-    store = make_upsert_store(
-        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt=fmt
+    store = _open_store(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt
     )
     fb = session_kpis_foreach_batch(store)
     fb(b1, 0)
@@ -80,11 +95,11 @@ def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS)
+@pytest.mark.parametrize("fmt", STORE_BACKENDS + [PINNED_4])
 def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
     """Stale updates (lower seq) never overwrite newer state (J4/W3)."""
-    store = make_upsert_store(
-        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt=fmt
+    store = _open_store(
+        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt
     )
     fb = session_state_foreach_batch(store)
     b1 = spark.createDataFrame(
@@ -133,6 +148,10 @@ def _kpis(store):
         r["user_id"]: (r["n_events"], float(r["sum_value_dec"]))
         for r in store.read().collect()
     }
+
+
+def _state(store):
+    return {r["session_id"]: (r["seq"], r["stage"]) for r in store.read().collect()}
 
 
 @pytest.mark.parametrize("fmt", STORE_BACKENDS)
@@ -200,3 +219,55 @@ def test_foreachbatch_session_kpis_streams_sharing_a_store(spark, tmp_path):
             with open(os.path.join(commits, f)) as fh:
                 epochs.append(json.load(fh)["epoch"])
     assert len(set(epochs)) == 2 and all(e.endswith(":0") for e in epochs)
+
+
+def _jobs_run_by(spark, group: str, fn) -> int:
+    """How many Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("sink", ["kpis", "state"])
+def test_one_bucket_keyed_commit_is_one_job(spark, tmp_path, sink):
+    """At one bucket a sink's commit folds the batch into the store and
+    stages the result in ONE Spark job: the fold's inputs arrive as one
+    partition each, so neither the aggregate nor the window shuffles.
+    The batches hold several rows per key and a stale update, and the
+    answers stay the one-shot aggregate and last-write-wins."""
+    path = str(tmp_path / sink)
+    if sink == "kpis":
+        store = BucketedTransactionalStore(spark, path, ["user_id"], ["ended_at_s"])
+        fb = session_kpis_foreach_batch(store)
+        batches = [
+            _kpi_batch(spark, [("u0", 100, 1.25), ("u0", 90, 0.5), ("u1", 150, 2.0)]),
+            _kpi_batch(spark, [("u0", 200, 2.0), ("u2", 300, 0.25), ("u2", 310, 1.0)]),
+        ]
+        want = {"u0": (3, 3.75), "u1": (1, 2.0), "u2": (2, 1.25)}
+        read = _kpis
+    else:
+        store = BucketedTransactionalStore(spark, path, ["session_id"], ["seq"])
+        fb = session_state_foreach_batch(store)
+        schema = "session_id string, seq int, stage string"
+        batches = [
+            spark.createDataFrame([("s1", 3, "engaged"), ("s1", 1, "new")], schema),
+            spark.createDataFrame(
+                [("s1", 2, "STALE"), ("s2", 4, "new"), ("s2", 5, "converted")],
+                schema,
+            ),
+        ]
+        want = {"s1": (3, "engaged"), "s2": (5, "converted")}
+        read = _state
+    for bid, batch in enumerate(batches):
+        n_jobs = _jobs_run_by(spark, f"one-job-{sink}-{bid}", partial(fb, batch, bid))
+        assert n_jobs == 1, (bid, n_jobs)
+    assert store._store.bucket_count("rows") == 1
+    assert read(store) == want
+    # no _SUCCESS marker in the staged dirs: the commit claim is the marker
+    snaps = os.path.join(path, "_snapshots")
+    assert not any("_SUCCESS" in files for _r, _d, files in os.walk(snaps))
