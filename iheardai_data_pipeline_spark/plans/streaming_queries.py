@@ -601,7 +601,8 @@ FROM regs r, s
     tags=("streaming", "sketch"),
     doc="Streaming-maintained HyperLogLog (round 5): each micro-batch "
     "computes its own (bucket, max_rank) registers and MAX-merges them "
-    "into a keyed store inside foreachBatch — bounded state (<=2^p "
+    "into a keyed store inside foreachBatch (one whole-relation "
+    "BucketedTransactionalStore.apply per batch) — bounded state (<=2^p "
     "rows) however long the stream runs, and because max is the "
     "sketch's merge, the final registers and estimate equal the batch "
     "answer BIT FOR BIT regardless of micro-batch splits. The "
@@ -617,11 +618,11 @@ def t14_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t14_root = tempfile.mkdtemp(prefix="t14_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t14_root, "hll"),
         key_cols=["bucket"],
@@ -720,7 +721,7 @@ ORDER BY e.est DESC, k.user_id LIMIT 20
     "cells and every estimate equal the one-shot batch sketch exactly. "
     "Unlike t14's max-merge (naturally idempotent), sum double-counts "
     "a crash-replayed batch, so each commit records its epoch in the "
-    "OCC commit marker (TransactionalParquetStore.apply's epoch guard) "
+    "OCC commit marker (BucketedTransactionalStore.apply's epoch guard) "
     "and already-merged epochs are skipped — "
     "exactly-once even though the store commits independently of the "
     "stream checkpoint. The frequency twin of t14's sketch.",
@@ -733,11 +734,11 @@ def t15_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.sources.batch import load_table
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t15_root = tempfile.mkdtemp(prefix="t15_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t15_root, "cms"),
         key_cols=["depth", "cell"],
@@ -850,11 +851,11 @@ def t16_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t16_root = tempfile.mkdtemp(prefix="t16_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t16_root, "bloom"),
         key_cols=["word_idx"],
@@ -937,11 +938,11 @@ def t17_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t17_root = tempfile.mkdtemp(prefix="t17_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t17_root, "ddq"),
         key_cols=["e", "m"],
@@ -1135,13 +1136,13 @@ def t19_stream_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.sources.batch import load_table
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     emb_schema = load_table(spark, sf_dir, "embeddings").schema
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     root = tempfile.mkdtemp(prefix="t19_", dir=shm)
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(root, "mom"),
         key_cols=["i", "j"],

@@ -5,8 +5,8 @@ refreshes the touched-session aggregate, and updates Redis session state
 (enhanced_kpi_consumer.py:137-250). The Spark restatement is one
 ``foreachBatch`` that (a) merges facts, (b) recomputes the per-session
 aggregate for the batch's touched keys, (c) maintains a session-state
-table with a seq guard. The stores are the OCC commit-log views of
-:mod:`streaming.stores`; each sink makes one ``apply_keyed`` call per
+table with a seq guard. The stores are the OCC commit log's keyed-upsert
+view, :class:`~streaming.stores.BucketedTransactionalStore`; each sink makes one ``apply_keyed`` call per
 micro-batch, so a lost commit race re-reads and re-merges instead of
 clobbering the winner.
 """

@@ -13,34 +13,26 @@ ever see fully-committed versions, so reads are snapshot-isolated and a
 crash mid-write leaves at most an unreferenced staging dir (reclaimed by
 ``vacuum``).
 
-Two one-relation views of that log serve the keyed upserts, selected by
-:func:`make_upsert_store`. Both are MERGE-ON-READ: a last-write-wins
+Keyed upserts go through :class:`BucketedTransactionalStore`, a
+one-relation view of that log. It is MERGE-ON-READ: a last-write-wins
 merge stages only the batch and appends its dir to each touched
 bucket's dir list, folding the list's tail in the same write when the
 tail is no bigger than what is being added (a binary counter, as in a
 size-tiered LSM tree), so a merge costs O(batch) and a list holds
 O(log n) dirs after n merges; a read resolves a bucket whose list
-holds more than one dir to the latest dir holding each key:
-
-- :class:`BucketedTransactionalStore` (``parquet_bucketed``) — the key
-  space is hash-bucketed; a merge touches only the buckets its keys
-  hash to, and a key-local :meth:`~BucketedTransactionalStore.apply_keyed`
-  rewrites only those buckets (the commit manifest inherits untouched
-  buckets by pointer — the same idea as Delta's file-level MERGE).
-
-- :class:`TransactionalParquetStore` (``parquet_txn``) — the same view
-  pinned to ONE bucket, which is what lets
-  :meth:`TransactionalParquetStore.apply` run a fold that is not
-  key-local over the whole resolved snapshot.
+holds more than one dir to the latest dir holding each key. The key
+space is hash-bucketed: a merge touches only the buckets its keys hash
+to, a key-local :meth:`~BucketedTransactionalStore.apply_keyed`
+rewrites only those buckets (the commit manifest inherits untouched
+buckets by pointer — the same idea as Delta's file-level MERGE), and
+:meth:`~BucketedTransactionalStore.apply` runs a fold that need not be
+key-local over the whole resolved relation.
 
 A store opened without ``n_buckets`` is sized to its data: each
 relation starts at one bucket, and a commit that rewrites the whole
 relation picks its next power-of-two bucket count from the bytes it
 staged (see :class:`MultiRelationTransactionalStore`). An explicit
 ``n_buckets`` pins the count.
-
-Both expose ``read`` / ``merge`` / ``apply_keyed`` / ``write_snapshot``
-/ ``vacuum``, so the foreachBatch logic is identical across them.
 
 The persistent indexes (``operators/*_index.py``) keep their relations
 in a :class:`MultiRelationTransactionalStore` and take the rest of
@@ -321,17 +313,13 @@ def _epochs_cache_key(epochs_dir: str) -> tuple | None:
 
 
 def _read_epoch_record(path: str) -> list:
-    """One retired-epoch record: either the r7 single-epoch shape
-    ``{"epoch": e}`` or the folded shape ``{"epochs": [...]}``."""
+    """The epochs of one retired-epoch record ``{"epochs": [...]}``
+    (the only shape :func:`_occ_retire_epochs` writes)."""
     try:
         with open(path) as fh:
-            rec = json.load(fh)
+            return list(json.load(fh).get("epochs", []))
     except (OSError, json.JSONDecodeError):
         return []
-    if "epochs" in rec:
-        return list(rec["epochs"])
-    e = rec.get("epoch")
-    return [] if e is None else [e]
 
 
 def _occ_committed_epochs(commits_dir: str) -> set:
@@ -481,9 +469,10 @@ class MultiRelationTransactionalStore:
       O(batch) however big the store is; readers resolve versions
       themselves, and :meth:`compact` folds each list back to one dir
       on the maintenance cadence, bounding small-file growth;
-    - ``merge_on_read=True`` (the keyed-upsert views below; one
-      relation): each dir holds at most one row per key, and a bucket whose list holds more
-      than one dir reads as the latest dir holding each key
+    - ``merge_on_read=True`` (:class:`BucketedTransactionalStore`, the
+      keyed-upsert view below; one relation): each dir holds at most
+      one row per key, and a bucket whose list holds more than one dir
+      reads as the latest dir holding each key
       (:func:`~iheardai_data_pipeline_spark.operators.mutations.merge_upsert_chain`);
       a one-dir bucket stays a plain scan. :meth:`merge` appends the
       batch's last-write-wins rows and folds the list's tail in the
@@ -496,7 +485,7 @@ class MultiRelationTransactionalStore:
     with ``n_buckets=None`` starts each relation at ONE bucket; a commit
     that rewrites every bucket of a relation anyway (a full-touch
     :meth:`apply_keyed`, :meth:`apply_keyed_all_buckets`,
-    :meth:`compact`, :meth:`write_snapshot`) gives it the smallest count
+    :meth:`compact`) gives it the smallest count
     whose staged bytes per bucket stay at or under Spark's
     ``spark.sql.files.maxPartitionBytes`` (one bucket then reads as at
     most one scan split). Every other commit keeps the count of the base
@@ -1336,12 +1325,6 @@ class MultiRelationTransactionalStore:
 
         self._rewrite_all(fold, epoch=epoch, require_version=require_version)
 
-    def write_snapshot(self, dfs: dict[str, DataFrame]) -> None:
-        """Full replace of EVERY relation in one atomic commit (replace
-        semantics: a lost race re-stages the same frames)."""
-        self._check_relations("write_snapshot", dfs)
-        self._rewrite_all(lambda _base: dfs)
-
     def _rewrite_all(self, fold, epoch=None, require_version=None) -> None:
         """The full-rewrite commit loop. ``fold(base_manifest)`` returns
         ``{rel: rows}``, each relation's WHOLE new contents (a relation
@@ -1434,12 +1417,13 @@ class BucketedTransactionalStore:
     counter over dir sizes), and every read resolves a list of more
     than one dir to the latest dir holding each key. A key-local
     :meth:`apply_keyed` rewrites ONLY the buckets containing updated
-    keys, each back to one dir, and inherits the rest by pointer (see
-    the multi-relation store for the commit protocol, the epoch
-    contract, the bucket-count rule and the layout). Opened without
-    ``n_buckets``, the store is sized to its data: a small one stays at
-    one bucket, which every commit touches with no touched-bucket
-    collect. The store's single relation is named ``rows``, keyed on
+    keys, each back to one dir, and inherits the rest by pointer;
+    :meth:`apply` folds the whole resolved relation, so its fold need
+    not be key-local (see the multi-relation store for the commit
+    protocol, the epoch contract, the bucket-count rule and the
+    layout). Opened without ``n_buckets``, the store is sized to its
+    data: a small one stays at one bucket, which every commit touches
+    with no touched-bucket collect. The store's single relation is named ``rows``, keyed on
     ``key_cols`` and holding one row per key; ``order_cols`` orders
     :meth:`merge`'s last-writer-wins within a batch.
 
@@ -1497,8 +1481,7 @@ class BucketedTransactionalStore:
         ``fn(current_touched_df_or_None, updates) -> merged_touched_df``,
         where ``current`` is the touched buckets' resolved rows and the
         output must hold one row per key. ``fn`` MUST be key-local; a
-        cross-key fn needs
-        :meth:`TransactionalParquetStore.apply`. At one bucket both
+        cross-key fn needs :meth:`apply`. At one bucket both
         frames arrive as one partition each, so ``fn``'s aggregate or
         window runs in the staged write's task (see
         :meth:`MultiRelationTransactionalStore.apply_keyed`). ``epoch``:
@@ -1519,72 +1502,27 @@ class BucketedTransactionalStore:
         :class:`MultiRelationTransactionalStore`)."""
         self._store.merge({self._REL: updates}, self.order_cols, epoch=epoch)
 
-    def write_snapshot(self, df: DataFrame) -> None:
-        """Full replace: every bucket rewritten into one snapshot dir."""
-        self._store.write_snapshot({self._REL: df})
-
-    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        self._store.vacuum(keep=keep, grace_seconds=grace_seconds)
-
-
-class TransactionalParquetStore(BucketedTransactionalStore):
-    """Full-snapshot keyed upsert store: a
-    :class:`BucketedTransactionalStore` pinned to ONE bucket.
-
-    What the single bucket buys is :meth:`apply`, a read-modify-write
-    whose fold sees the WHOLE current snapshot, resolved, and so need
-    not be key-local (the t14–t19 streaming sketches merge their
-    bounded state this way); it rewrites the relation into one dir.
-    Every other method is the bucketed view's: at one bucket its
-    :meth:`apply_keyed` skips the touched-bucket collect and rewrites
-    the whole relation, and :meth:`merge` appends to (and folds the
-    tail of) the one bucket's dir list; every call of either commits a
-    version. A commit whose rows are empty reads back as None, like an
-    empty store.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        order_cols: list[str],
-    ):
-        super().__init__(spark, path, key_cols, order_cols, n_buckets=1)
-
     def apply(self, fn, epoch=None) -> None:
-        """OCC read-modify-write: ``fn(current_df_or_None) -> merged_df``.
+        """OCC read-modify-write of the whole relation:
+        ``fn(current_df_or_None) -> merged_df``, where ``current`` is
+        every bucket's resolved rows, so ``fn`` need not be key-local
+        (the t14–t19 streaming sketches merge their bounded state this
+        way); one that ignores ``current`` is a full replace. The result
+        is rewritten whole at its fitted (or the pinned) bucket count; a
+        result with no rows reads back as None, like an empty store.
 
-        The ONLY safe way to compose a merge from the latest state: a
-        writer that loses a commit race re-reads the newest committed
-        snapshot and RE-APPLIES ``fn``, so it folds the winner's changes
-        into its next attempt instead of clobbering them. (A bare read →
-        compute → :meth:`write_snapshot` sequence would retry with its
-        stale result and silently lose the concurrent update.) ``epoch``:
+        A writer that loses a commit race re-reads the newest committed
+        rows and RE-APPLIES ``fn``, so it folds the winner's changes
+        into its next attempt instead of clobbering them (a bare read →
+        compute → write sequence would retry with its stale result and
+        silently lose the concurrent update). ``epoch``:
         idempotent-commit marker (see
-        :class:`MultiRelationTransactionalStore`).
-        """
+        :class:`MultiRelationTransactionalStore`)."""
         store = self._store
         store._rewrite_all(
             lambda base: {self._REL: fn(store._read_rel(base, self._REL))},
             epoch=epoch,
         )
 
-
-def make_upsert_store(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    fmt: str = "parquet_txn",
-) -> BucketedTransactionalStore:
-    """Factory over the two merge-on-read views of the commit log:
-    ``parquet_txn`` (one bucket) and ``parquet_bucketed`` (data-sized
-    buckets — the scale path). In both a merge appends the batch plus a
-    logarithmic fold of the touched lists' tails, and reads resolve the
-    lists last-write-wins."""
-    if fmt == "parquet_txn":
-        return TransactionalParquetStore(spark, path, key_cols, order_cols)
-    if fmt == "parquet_bucketed":
-        return BucketedTransactionalStore(spark, path, key_cols, order_cols)
-    raise ValueError(f"unknown store format {fmt!r}")
+    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
+        self._store.vacuum(keep=keep, grace_seconds=grace_seconds)

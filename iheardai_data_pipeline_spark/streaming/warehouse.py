@@ -6,50 +6,34 @@ per-topic warehouse table (chunked, keyed tables). The Spark
 restatement is a foreachBatch-able loader with the same split the Kafka
 reader uses (``streaming/readers.py:read_kafka_stream``): the
 engine-side semantics — last-write-wins on the key within a batch and
-across batches, and, for both ``make_upsert_store`` formats,
-exactly-once delivery — are real and tested. The store formats hand
-the batch straight to the store's keyed merge, which resolves several
-versions of one key in the batch itself, and :meth:`foreach_batch`
-passes the stream's epoch so a replayed micro-batch commits nothing.
-The ``snowflake`` format is connector-lazy (resolved at write time;
-this rig has no warehouse) and is a plain ``mode('append')`` save of
-the batch after an in-batch last-write-wins: that path is APPEND-ONLY /
-AT-LEAST-ONCE — a micro-batch replayed after a crash between write and
-checkpoint commit appends its rows again. A production deployment
-wanting exactly-once on Snowflake stages each batch into a temp table
-and issues a keyed server-side MERGE (the store formats model exactly
-that contract locally).
+across batches, and exactly-once delivery — are real and tested. The
+table is a local :class:`~streaming.stores.BucketedTransactionalStore`
+at ``target``, the same keyed MERGE contract a warehouse's server-side
+MERGE gives: the loader hands each batch straight to the store's keyed
+merge, which resolves several versions of one key in the batch itself,
+and :meth:`~WarehouseBatchLoader.foreach_batch` passes the stream's
+epoch so a replayed micro-batch commits nothing.
 
-At scale the loader adds no exchange of its own: the merge is the
-chosen store's contract (for both store formats a merge-on-read
-commit — the batch's last-write-wins rows are appended to each touched
-bucket's dir list with a logarithmic fold of its tail, so a batch
-costs O(batch) and a read resolves the list last-write-wins; a
-server-side MERGE for a real warehouse connector). A loader reads the
-store at ``target`` whoever wrote it, so a restarted process reads its
-own table.
+At scale the loader adds no exchange of its own: the merge is a
+merge-on-read commit — the batch's last-write-wins rows are appended
+to each touched bucket's dir list with a logarithmic fold of its tail,
+so a batch costs O(batch) and a read resolves the list last-write-wins.
+A loader reads the store at ``target`` whoever wrote it, so a restarted
+process reads its own table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 
 
 class WarehouseBatchLoader:
-    """K6 batch loader: last-write-wins merge (or, for Snowflake,
-    append) of each batch into a warehouse table or a local store
-    stand-in.
-
-    ``fmt='snowflake'`` targets the spark-snowflake connector
-    (``target`` = dbtable, ``connector_options`` = sfURL/sfUser/... as
-    documented by the connector) with append-only / at-least-once
-    delivery (see module doc); either :func:`make_upsert_store` format
-    (``parquet_txn``, ``parquet_bucketed``) makes ``target`` a local
-    path and gives real keyed-upsert, replay-idempotent semantics — the
-    same K2 pattern the coverage doc promised for K6.
-    """
+    """K6 batch loader: last-write-wins merge of each batch into the
+    keyed store at the local path ``target`` (data-sized buckets,
+    exactly-once under replays). ``fmt`` names the table format and
+    accepts only ``parquet_bucketed``."""
 
     def __init__(
         self,
@@ -57,69 +41,45 @@ class WarehouseBatchLoader:
         target: str,
         key_cols: list[str],
         order_cols: list[str],
-        fmt: str = "parquet_txn",
-        connector_options: dict | None = None,
+        fmt: str = "parquet_bucketed",
     ) -> None:
+        if fmt != "parquet_bucketed":
+            raise ValueError(
+                f"unknown warehouse format {fmt!r}; the loader writes "
+                "'parquet_bucketed' only"
+            )
         self.spark = spark
         self.target = target
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
-        self.fmt = fmt
-        self.connector_options = dict(connector_options or {})
         self._store = None
 
     def load_batch(self, df: DataFrame, epoch=None) -> None:
         """Load one batch. A poll batch can carry several versions of
         one key (the reference appends them all and leans on downstream
-        views); the latest by ``order_cols`` wins. ``epoch``: the store
-        formats' idempotent-commit marker — a batch whose epoch was
-        already committed is a no-op (Snowflake ignores it)."""
-        if self.fmt == "snowflake":
-            batch = last_write_wins(df, self.key_cols, self.order_cols)
-            try:
-                (
-                    batch.write.format("snowflake")
-                    .options(**self.connector_options)
-                    .option("dbtable", self.target)
-                    .mode("append")
-                    .save()
-                )
-            except Exception as e:  # connector-lazy: absent in this rig
-                raise RuntimeError(
-                    "snowflake write failed — the spark-snowflake connector "
-                    "must be on the classpath (net.snowflake:spark-snowflake) "
-                    "and sfURL/sfUser/... set in connector_options"
-                ) from e
-            return
+        views); the latest by ``order_cols`` wins. ``epoch``: the
+        idempotent-commit marker — a batch whose epoch was already
+        committed is a no-op."""
         self._table().merge(df, epoch=epoch)
 
-    def _table(self):
+    def _table(self) -> BucketedTransactionalStore:
         """The store at ``target``, opened on first use."""
-        if self.fmt == "snowflake":
-            raise RuntimeError("fmt='snowflake' has no local table to read")
         if self._store is None:
-            from iheardai_data_pipeline_spark.streaming.stores import (
-                make_upsert_store,
-            )
-
-            self._store = make_upsert_store(
-                self.spark, self.target, self.key_cols, self.order_cols, self.fmt
+            self._store = BucketedTransactionalStore(
+                self.spark, self.target, self.key_cols, self.order_cols
             )
         return self._store
 
     def read(self) -> DataFrame | None:
-        """Current stand-in table contents (store formats only), or None
-        while the table is empty. A fresh loader reads what any earlier
-        one committed at ``target``."""
+        """Current table contents, or None while the table is empty. A
+        fresh loader reads what any earlier one committed at ``target``."""
         return self._table().read()
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch`` — the streaming K6
-        path, the reference's manual-commit loop restated. Store
-        formats: exactly-once — each batch commits with the stream's
-        epoch (``sinks._stream_epoch``), so a replayed batch commits
-        nothing. ``fmt='snowflake'``: at-least-once (append-only; see
-        module doc)."""
+        path, the reference's manual-commit loop restated. Exactly-once:
+        each batch commits with the stream's epoch
+        (``sinks._stream_epoch``), so a replayed batch commits nothing."""
         from iheardai_data_pipeline_spark.streaming.sinks import _stream_epoch
 
         def _fn(df: DataFrame, epoch_id: int) -> None:

@@ -9,16 +9,32 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from iheardai_data_pipeline_spark.streaming.stores import (
-    BucketedTransactionalStore,
-    TransactionalParquetStore,
-)
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 
 SCHEMA = "k string, seq int, v string"
 
 
 def _store(spark, tmp_path, name="s"):
-    return TransactionalParquetStore(spark, str(tmp_path / name), ["k"], ["seq"])
+    return BucketedTransactionalStore(spark, str(tmp_path / name), ["k"], ["seq"])
+
+
+def _add_seq(spark):
+    """A fold for ``apply`` that is not idempotent: it adds 1 to key
+    ``a``'s seq (storing ``("a", 1, "x")`` first), as the t15/t17
+    sketches sum their cells."""
+    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
+
+    def fn(current):
+        if current is None:
+            return upd
+        return (
+            current.unionByName(upd)
+            .groupBy("k", "v")
+            .agg(F.sum("seq").alias("seq"))
+            .select("k", "seq", "v")
+        )
+
+    return fn
 
 
 def test_merge_last_writer_wins_and_versions(spark, tmp_path):
@@ -57,8 +73,8 @@ def test_lost_race_retries_against_new_base(spark, tmp_path):
     """A writer that loses the commit race must re-merge on the winner's
     data, not overwrite it (the reference's transactional guarantee)."""
     path = str(tmp_path / "s")
-    a = TransactionalParquetStore(spark, path, ["k"], ["seq"])
-    b = TransactionalParquetStore(spark, path, ["k"], ["seq"])
+    a = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    b = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
     a.merge(spark.createDataFrame([("a", 1, "base")], SCHEMA))
 
     # interleave: while A is mid-merge (after reading its base, before
@@ -87,7 +103,7 @@ def test_concurrent_writers_no_lost_update(spark, tmp_path):
 
     def write(key):
         try:
-            other = TransactionalParquetStore(
+            other = BucketedTransactionalStore(
                 spark, st.path, ["k"], ["seq"]
             )
             other.merge(spark.createDataFrame([(key, 1, key)], SCHEMA))
@@ -122,12 +138,12 @@ def test_time_travel_and_vacuum(spark, tmp_path):
 def test_apply_rereads_and_remerges_on_lost_race(spark, tmp_path):
     """A read-modify-write that loses the commit race must fold the
     winner's commit into its retry — the lost-update scenario a bare
-    read + write_snapshot sequence would hit."""
+    read-then-write sequence would hit."""
     from iheardai_data_pipeline_spark.operators.mutations import merge_upsert
 
     path = str(tmp_path / "s")
-    a = TransactionalParquetStore(spark, path, ["k"], ["seq"])
-    b = TransactionalParquetStore(spark, path, ["k"], ["seq"])
+    a = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    b = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
     a.merge(spark.createDataFrame([("seed", 1, "v0")], SCHEMA))
 
     fired = {"done": False}
@@ -320,13 +336,12 @@ def test_bucketed_deletion_fold_empties_bucket_cleanly(spark, tmp_path):
     assert "a" not in remaining  # deleted; store stays readable
 
 
-@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
-def test_warehouse_loader_stand_in_upsert(spark, tmp_path, fmt):
-    """K6 loader against both store stand-ins: in-batch LWW dedup,
+def test_warehouse_loader_stand_in_upsert(spark, tmp_path):
+    """K6 loader against its store stand-in: in-batch LWW dedup,
     cross-batch keyed merge."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
-    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt=fmt)
+    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"])
     # batch 1 carries two versions of key 'a' -> seq 2 wins in-batch
     ld.load_batch(spark.createDataFrame([("a", 1, "v1"), ("a", 2, "v2")], SCHEMA))
     got = {r["k"]: r["v"] for r in ld.read().collect()}
@@ -337,13 +352,12 @@ def test_warehouse_loader_stand_in_upsert(spark, tmp_path, fmt):
     assert got == {"a": (3, "v3"), "b": (1, "b1")}
 
 
-@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
-def test_warehouse_loader_foreach_batch_replay_is_exactly_once(spark, tmp_path, fmt):
+def test_warehouse_loader_foreach_batch_replay_is_exactly_once(spark, tmp_path):
     """foreachBatch replays a micro-batch after a crash between the
     write and the checkpoint: the replay must commit nothing."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
-    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt=fmt)
+    ld = WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"])
     fb = ld.foreach_batch()
     batch0 = spark.createDataFrame([("a", 1, "v1"), ("a", 2, "v2")], SCHEMA)
     fb(batch0, 0)
@@ -356,17 +370,15 @@ def test_warehouse_loader_foreach_batch_replay_is_exactly_once(spark, tmp_path, 
     assert got == {"a": (3, "v3"), "b": (1, "b1")}
 
 
-def test_warehouse_loader_snowflake_is_connector_lazy(spark, tmp_path):
-    """fmt='snowflake' must not fail at construction (connector-lazy);
-    the write itself raises the helpful classpath error in this rig."""
+def test_warehouse_loader_refuses_other_formats(spark, tmp_path):
+    """The loader writes one table format; any other is refused when
+    the loader is built, naming the one it writes."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
-    ld = WarehouseBatchLoader(
-        spark, "EVENTS", ["k"], ["seq"], fmt="snowflake",
-        connector_options={"sfURL": "example.snowflakecomputing.com"},
-    )
-    with pytest.raises(RuntimeError, match="spark-snowflake"):
-        ld.load_batch(spark.createDataFrame([("a", 1, "v1")], SCHEMA))
+    for fmt in ("snowflake", "parquet"):
+        with pytest.raises(ValueError, match="parquet_bucketed"):
+            WarehouseBatchLoader(spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt=fmt)
+    assert not (tmp_path / "wh").exists()
 
 
 def test_bucketed_read_keys_prunes_to_one_bucket(spark, tmp_path):
@@ -429,21 +441,10 @@ def test_read_keys_on_one_bucket_is_the_semi_join(spark, tmp_path):
 def test_apply_epoch_is_idempotent(spark, tmp_path):
     """A non-idempotent fold (sum-merge) replayed with the same epoch
     must be a no-op — the Delta txn-appId idea on the OCC marker."""
-    st = TransactionalParquetStore(
+    st = BucketedTransactionalStore(
         spark, str(tmp_path / "epoch"), key_cols=["k"], order_cols=["seq"]
     )
-    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
-
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
+    fn = _add_seq(spark)
     st.apply(fn, epoch=7)
     st.apply(fn, epoch=7)  # replay: skipped
     assert st.read().collect()[0]["seq"] == 1
@@ -562,7 +563,7 @@ def test_multi_relation_epoch_and_requires_all_relations(spark, tmp_path):
     assert st.current_version() == 1
 
 
-def test_multi_relation_write_snapshot_and_vacuum(spark, tmp_path):
+def test_multi_relation_full_rewrite_and_vacuum(spark, tmp_path):
     import os
 
     st = _multi(spark, tmp_path)
@@ -578,11 +579,9 @@ def test_multi_relation_write_snapshot_and_vacuum(spark, tmp_path):
             },
             _mr_append,
         )
-    st.write_snapshot(
-        {
-            "bands": st.read("bands").select("bkey", "doc_id").distinct(),
-            "profiles": st.read("profiles").select("doc_id", "sh_set").distinct(),
-        }
+    cols = {"bands": ["bkey", "doc_id"], "profiles": ["doc_id", "sh_set"]}
+    st.apply_keyed_all_buckets(
+        lambda rel, current, _upd: current.select(*cols[rel]).distinct()
     )
     assert st.read("bands").count() == 3
     st.vacuum(keep=1, grace_seconds=0.0)
@@ -772,21 +771,10 @@ def test_vacuum_preserves_epoch_idempotence(spark, tmp_path):
     still no-op: vacuum retires pruned markers' epochs into the durable
     _epochs/ sidecar, so retention never shrinks the idempotence window
     (a sum-fold like t15/t17 would double-count otherwise)."""
-    st = TransactionalParquetStore(
+    st = BucketedTransactionalStore(
         spark, str(tmp_path / "vep"), key_cols=["k"], order_cols=["seq"]
     )
-    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
-
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
+    fn = _add_seq(spark)
     for ep in (1, 2, 3, 4):
         st.apply(fn, epoch=ep)
     assert st.read().collect()[0]["seq"] == 4
@@ -828,21 +816,10 @@ def test_retired_epochs_fold_to_one_record_and_survive_cold_cache(
 
     from iheardai_data_pipeline_spark.streaming import stores as st_mod
 
-    st = TransactionalParquetStore(
+    st = BucketedTransactionalStore(
         spark, str(tmp_path / "fold"), key_cols=["k"], order_cols=["seq"]
     )
-    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
-
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
+    fn = _add_seq(spark)
     for ep in range(1, 7):
         st.apply(fn, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-5 together
@@ -867,21 +844,10 @@ def test_retired_epochs_read_without_generation_marker(
     'always correct, just slower', and that claim must be true)."""
     from iheardai_data_pipeline_spark.streaming import stores as st_mod
 
-    st = TransactionalParquetStore(
+    st = BucketedTransactionalStore(
         spark, str(tmp_path / "nogen"), key_cols=["k"], order_cols=["seq"]
     )
-    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
-
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
+    fn = _add_seq(spark)
     for ep in (1, 2, 3, 4):
         st.apply(fn, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-3
@@ -904,28 +870,17 @@ def test_recreated_store_does_not_inherit_retired_epochs(spark, tmp_path):
     import shutil
 
     path = str(tmp_path / "reborn")
-    st = TransactionalParquetStore(
+    st = BucketedTransactionalStore(
         spark, path, key_cols=["k"], order_cols=["seq"]
     )
-    upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
-
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
+    fn = _add_seq(spark)
     for ep in (1, 2, 3):
         st.apply(fn, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-2
     st.apply(fn, epoch=1)  # no-op; warms the per-process retired cache
     assert st.read().collect()[0]["seq"] == 3
     shutil.rmtree(path)
-    st2 = TransactionalParquetStore(
+    st2 = BucketedTransactionalStore(
         spark, path, key_cols=["k"], order_cols=["seq"]
     )
     st2.apply(fn, epoch=1)  # fresh history: must COMMIT, not skip
@@ -970,7 +925,7 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     """STREAM-level concurrent-writer proof (unit-level OCC races are
     covered above): two availableNow streaming queries run
     CONCURRENTLY, each foreachBatch apply()-appending its own disjoint
-    batches to ONE TransactionalParquetStore. A deliberate sleep
+    batches to ONE BucketedTransactionalStore. A deliberate sleep
     between each apply's read and its commit widens the lost-update
     window, so commits genuinely interleave and losers re-merge
     through the retry loop. The final state must be the EXACT union of
@@ -981,7 +936,7 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     import os as _os
     import time as _time
 
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark, str(tmp_path / "ccw"), key_cols=["k"], order_cols=["seq"]
     )
     srcs = []
@@ -1117,7 +1072,8 @@ def test_data_sized_store_grows_on_full_touch_commit(spark, tmp_path, small_spli
 def test_pinned_store_never_changes_its_count(spark, tmp_path, small_splits):
     st = _bstore(spark, tmp_path, n_buckets=8)
     st.merge(spark.createDataFrame(_grow_rows(400), SCHEMA))  # touches all 8
-    st.write_snapshot(st.read())
+    snapshot = st.read()
+    st.apply(lambda _current: snapshot)  # a full replace
     st._store.compact()
     st.merge(spark.createDataFrame([("k0", 2, "new")], SCHEMA))
     assert st.current_version() == 4
@@ -1267,7 +1223,7 @@ def test_open_refuses_unknown_layout_version(spark, tmp_path):
 
 def test_open_refuses_commit_markers_without_meta(spark, tmp_path):
     """The retired full-snapshot layout (``_commits/<N>`` markers naming
-    a snapshot dir, no ``_meta.json``) is refused by either view — not
+    a snapshot dir, no ``_meta.json``) is refused — not
     stamped with a fresh _meta.json and then misread."""
     import json
     import os
@@ -1277,13 +1233,9 @@ def test_open_refuses_commit_markers_without_meta(spark, tmp_path):
     os.makedirs(os.path.join(path, "_snapshots", "abc"))
     with open(os.path.join(path, "_commits", "1"), "w") as fh:
         json.dump({"snapshot": "abc"}, fh)
-    for view in (
-        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
-        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
-    ):
-        with pytest.raises(ValueError, match="without _meta.json") as err:
-            view()
-        assert path in str(err.value)
+    with pytest.raises(ValueError, match="without _meta.json") as err:
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert path in str(err.value)
     assert not os.path.exists(os.path.join(path, "_meta.json"))
 
 
@@ -1297,13 +1249,9 @@ def test_open_refuses_layout_1_store(spark, tmp_path):
     os.makedirs(path)
     with open(os.path.join(path, "_meta.json"), "w") as fh:
         json.dump({"layout": 1, "n_buckets": 16, "relations": {"rows": ["k"]}}, fh)
-    for view in (
-        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
-        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
-    ):
-        with pytest.raises(ValueError, match="layout version 1;") as err:
-            view()
-        assert path in str(err.value)
+    with pytest.raises(ValueError, match="layout version 1;") as err:
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert path in str(err.value)
 
 
 def test_open_refuses_layout_2_store(spark, tmp_path):
@@ -1318,14 +1266,41 @@ def test_open_refuses_layout_2_store(spark, tmp_path):
     os.makedirs(path)
     with open(os.path.join(path, "_meta.json"), "w") as fh:
         json.dump({"layout": 2, "n_buckets": None, "relations": {"rows": ["k"]}}, fh)
-    for view in (
-        lambda: TransactionalParquetStore(spark, path, ["k"], ["seq"]),
-        lambda: BucketedTransactionalStore(spark, path, ["k"], ["seq"]),
-    ):
-        with pytest.raises(ValueError, match="layout version 2;") as err:
-            view()
-        assert path in str(err.value)
-        assert f"layout version {st_mod.LAYOUT_VERSION} only" in str(err.value)
+    with pytest.raises(ValueError, match="layout version 2;") as err:
+        BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert path in str(err.value)
+    assert f"layout version {st_mod.LAYOUT_VERSION} only" in str(err.value)
+
+
+def test_one_bucket_store_reopens_with_its_pinned_count(spark, tmp_path):
+    """A store created pinned to one bucket (the ``_meta.json`` the
+    retired one-bucket view wrote) opens by default (``n_buckets=None``)
+    at its pinned count, and merges, applies and reads as it did."""
+    import json
+    import os
+
+    from iheardai_data_pipeline_spark.streaming import stores as st_mod
+
+    path = str(tmp_path / "one")
+    BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=1).merge(
+        spark.createDataFrame([("a", 1, "a1"), ("b", 1, "b1")], SCHEMA)
+    )
+    with open(os.path.join(path, "_meta.json")) as fh:
+        assert json.load(fh) == {
+            "layout": st_mod.LAYOUT_VERSION,
+            "n_buckets": 1,
+            "merge_on_read": True,
+            "relations": {"rows": ["k"]},
+        }
+    st = BucketedTransactionalStore(spark, path, ["k"], ["seq"])
+    assert st.n_buckets == 1
+    assert {r["k"]: r["v"] for r in st.read().collect()} == {"a": "a1", "b": "b1"}
+    st.merge(spark.createDataFrame([("a", 2, "a2"), ("c", 1, "c1")], SCHEMA))
+    st.apply(lambda current: current.withColumn("v", F.upper("v")))
+    got = {r["k"]: (r["seq"], r["v"]) for r in st.read().collect()}
+    assert got == {"a": (2, "A2"), "b": (1, "B1"), "c": (1, "C1")}
+    assert st.current_version() == 3
+    assert [st._store.bucket_count("rows", v) for v in (1, 2, 3)] == [1, 1, 1]
 
 
 def test_view_refuses_a_concatenating_store(spark, tmp_path):
@@ -1438,7 +1413,9 @@ def merge_history(spark, tmp_path_factory):
     for rows in batches:
         oracle.append(_lww_oracle(oracle[-1], rows))
     stores = {
-        "one_bucket": TransactionalParquetStore(spark, str(root / "txn"), ["k"], ["seq"]),
+        "one_bucket": BucketedTransactionalStore(
+            spark, str(root / "txn"), ["k"], ["seq"], n_buckets=1
+        ),
         "four_buckets": BucketedTransactionalStore(
             spark, str(root / "b4"), ["k"], ["seq"], n_buckets=4
         ),
@@ -1520,35 +1497,44 @@ def test_merge_stages_once_and_replays_commit_nothing(merge_history, name):
 
 
 def test_folds_and_key_reads_see_resolved_rows(spark, merge_history, tmp_path):
-    """read_keys, a summing apply_keyed and a summing apply, run on
-    (copies of) the merged stores, each see one resolved row per key."""
+    """read_keys, a summing apply on every store and a summing
+    apply_keyed on the bucketed one, run on (copies of) the merged
+    stores, each see one resolved row per key; the cross-key apply
+    keeps the store's bucket count, and its replayed epoch commits
+    nothing."""
     import shutil
 
     oracle = merge_history["oracle"][-1]
     keys = sorted(oracle)[::7]
     probe = spark.createDataFrame([(k,) for k in keys], "k string")
+
+    def total(current):
+        return current.groupBy().agg(
+            F.lit("all").alias("k"),
+            F.sum("seq").cast("int").alias("seq"),
+            F.count("*").cast("string").alias("v"),
+        )
+
     for name, st in merge_history["stores"].items():
         assert max(len(v) for v in st._manifest(st.current_version()).values()) > 1
         got = [tuple(r) for r in st.read_keys(probe).collect()]
         assert sorted(got) == sorted(oracle[k] for k in keys), name
-        copy = str(tmp_path / name)
-        shutil.copytree(st.path, copy)
-        if name == "one_bucket":
-            view = TransactionalParquetStore(spark, copy, ["k"], ["seq"])
-            view.apply(
-                lambda current: current.groupBy().agg(
-                    F.lit("all").alias("k"),
-                    F.sum("seq").cast("int").alias("seq"),
-                    F.count("*").cast("string").alias("v"),
-                )
+        copy = shutil.copytree(st.path, str(tmp_path / name))
+        view = BucketedTransactionalStore(spark, copy, ["k"], ["seq"])
+        view.apply(total, epoch="total")
+        version = view.current_version()
+        view.apply(total, epoch="total")  # the replay
+        assert view.current_version() == version, name
+        (row,) = view.read().collect()
+        assert (row["seq"], row["v"]) == (
+            sum(r[1] for r in oracle.values()),
+            str(len(oracle)),
+        ), name
+        assert view._store.bucket_count("rows") == st.n_buckets, name
+        if name == "four_buckets":
+            keyed = BucketedTransactionalStore(
+                spark, shutil.copytree(st.path, str(tmp_path / "keyed")), ["k"], ["seq"]
             )
-            (row,) = view.read().collect()
-            assert (row["seq"], row["v"]) == (
-                sum(r[1] for r in oracle.values()),
-                str(len(oracle)),
-            )
-        else:
-            view = BucketedTransactionalStore(spark, copy, ["k"], ["seq"])
 
             def add(current, upd):
                 return (
@@ -1557,10 +1543,10 @@ def test_folds_and_key_reads_see_resolved_rows(spark, merge_history, tmp_path):
                     .agg(F.sum("seq").cast("int").alias("seq"), F.max("v").alias("v"))
                 )
 
-            view.apply_keyed(
+            keyed.apply_keyed(
                 spark.createDataFrame([(k, 100, "") for k in keys], SCHEMA), add
             )
-            got = {r["k"]: r["seq"] for r in view.read().collect()}
+            got = {r["k"]: r["seq"] for r in keyed.read().collect()}
             assert got == {
                 k: r[1] + (100 if k in keys else 0) for k, r in oracle.items()
             }
@@ -1627,20 +1613,16 @@ def test_lost_claim_refolds_on_the_winners_base(spark, tmp_path, path):
     assert {r["k"]: tuple(r) for r in st.read().collect()} == want
 
 
-@pytest.mark.parametrize("fmt", ["parquet_txn", "parquet_bucketed"])
-def test_warehouse_loader_reads_a_table_another_loader_wrote(spark, tmp_path, fmt):
+def test_warehouse_loader_reads_a_table_another_loader_wrote(spark, tmp_path):
     """A fresh loader on a committed target (a restarted process) reads
     the table without loading anything; an empty target reads None."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
     path = str(tmp_path / "wh")
-    assert WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt).read() is None
-    first = WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt)
+    assert WarehouseBatchLoader(spark, path, ["k"], ["seq"]).read() is None
+    first = WarehouseBatchLoader(spark, path, ["k"], ["seq"])
     first.load_batch(spark.createDataFrame([("a", 1, "v1"), ("b", 1, "b1")], SCHEMA))
     first.load_batch(spark.createDataFrame([("a", 2, "v2")], SCHEMA))
-    restarted = WarehouseBatchLoader(spark, path, ["k"], ["seq"], fmt=fmt)
+    restarted = WarehouseBatchLoader(spark, path, ["k"], ["seq"])
     got = {r["k"]: (r["seq"], r["v"]) for r in restarted.read().collect()}
     assert got == {"a": (2, "v2"), "b": (1, "b1")}
-    sf = WarehouseBatchLoader(spark, "EVENTS", ["k"], ["seq"], fmt="snowflake")
-    with pytest.raises(RuntimeError, match="snowflake"):
-        sf.read()

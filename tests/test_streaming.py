@@ -15,25 +15,22 @@ from iheardai_data_pipeline_spark.streaming.sinks import (
     session_kpis_foreach_batch,
     session_state_foreach_batch,
 )
-from iheardai_data_pipeline_spark.streaming.stores import (
-    BucketedTransactionalStore,
-    make_upsert_store,
-)
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 from iheardai_data_pipeline_spark.streaming.windows import dedup_within_watermark
 
-# every upsert backend must satisfy the same foreachBatch contract
-STORE_BACKENDS = ["parquet_txn", "parquet_bucketed"]
-# ...and so must a store pinned to several buckets, whose keyed commits
-# fold the touched buckets with a shuffle instead of in one task
+# the data-sized store (one bucket at test scale, its keyed commits
+# folding in one task) must satisfy the same foreachBatch contract as a
+# store pinned to several buckets, whose keyed commits fold the touched
+# buckets with a shuffle instead
+DATA_SIZED = "parquet_bucketed"
 PINNED_4 = "parquet_bucketed_pinned_4"
 
 
-def _open_store(spark, path, key_cols, order_cols, fmt):
-    if fmt == PINNED_4:
-        return BucketedTransactionalStore(
-            spark, path, key_cols, order_cols, n_buckets=4
-        )
-    return make_upsert_store(spark, path, key_cols, order_cols, fmt=fmt)
+def _open_store(spark, path, key_cols, order_cols, layout):
+    n_buckets = 4 if layout == PINNED_4 else None
+    return BucketedTransactionalStore(
+        spark, path, key_cols, order_cols, n_buckets=n_buckets
+    )
 
 
 def test_t5_watermark_dedup(spark, sf_dir, tmp_path):
@@ -72,15 +69,15 @@ def test_t7_archive_sink_partitioning(spark, sf_dir, tmp_path):
     assert n_out == n_src
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS + [PINNED_4])
-def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
+@pytest.mark.parametrize("layout", [DATA_SIZED, PINNED_4])
+def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, layout):
     """Two micro-batches merged == one-shot batch aggregate (§3.2),
-    identical across every upsert-store backend."""
+    identical at every bucket layout."""
     events = load_table(spark, sf_dir, "events")
     b1 = events.filter(F.col("event_id") % 2 == 0)
     b2 = events.filter(F.col("event_id") % 2 == 1)
     store = _open_store(
-        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], layout
     )
     fb = session_kpis_foreach_batch(store)
     fb(b1, 0)
@@ -95,11 +92,11 @@ def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS + [PINNED_4])
-def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
+@pytest.mark.parametrize("layout", [DATA_SIZED, PINNED_4])
+def test_foreachbatch_session_state_seq_guard(spark, tmp_path, layout):
     """Stale updates (lower seq) never overwrite newer state (J4/W3)."""
     store = _open_store(
-        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt
+        spark, str(tmp_path / "state"), ["session_id"], ["seq"], layout
     )
     fb = session_state_foreach_batch(store)
     b1 = spark.createDataFrame(
@@ -116,13 +113,12 @@ def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
     assert got == {"s1": (3, "engaged"), "s2": (5, "converted")}
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS)
-def test_foreachbatch_session_state_replay_commits_nothing(spark, tmp_path, fmt):
+def test_foreachbatch_session_state_replay_commits_nothing(spark, tmp_path):
     """A replayed session-state batch is skipped by its epoch: the
     seq-guarded fold would leave the rows as they are, but without the
     epoch it would still commit a rewrite as a new version."""
-    store = make_upsert_store(
-        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt=fmt
+    store = BucketedTransactionalStore(
+        spark, str(tmp_path / "state"), ["session_id"], ["seq"]
     )
     fb = session_state_foreach_batch(store)
     b1 = spark.createDataFrame(
@@ -154,12 +150,11 @@ def _state(store):
     return {r["session_id"]: (r["seq"], r["stage"]) for r in store.read().collect()}
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS)
-def test_foreachbatch_session_kpis_replay_is_exactly_once(spark, tmp_path, fmt):
+def test_foreachbatch_session_kpis_replay_is_exactly_once(spark, tmp_path):
     """foreachBatch is at-least-once: a batch replayed after a crash
     must not add its counts and money to the summed KPIs a second time."""
-    store = make_upsert_store(
-        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt=fmt
+    store = BucketedTransactionalStore(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"]
     )
     fb = session_kpis_foreach_batch(store)
     fb(_kpi_batch(spark, [("u0", 100, 1.25)]), 0)
@@ -171,18 +166,15 @@ def test_foreachbatch_session_kpis_replay_is_exactly_once(spark, tmp_path, fmt):
     assert store.current_version() == 2
 
 
-@pytest.mark.parametrize("fmt", STORE_BACKENDS)
-def test_foreachbatch_session_kpis_second_handle_reads_every_commit(
-    spark, tmp_path, fmt
-):
+def test_foreachbatch_session_kpis_second_handle_reads_every_commit(spark, tmp_path):
     """Every KPI commit stages the same column types, so a second handle
     that read (and cached the file schema of) the store after the first
     commit still reads it after the fold of the second."""
     path = str(tmp_path / "kpis")
-    store = make_upsert_store(spark, path, ["user_id"], ["ended_at_s"], fmt=fmt)
+    store = BucketedTransactionalStore(spark, path, ["user_id"], ["ended_at_s"])
     fb = session_kpis_foreach_batch(store)
     fb(_kpi_batch(spark, [("u0", 100, 1.25)]), 0)
-    reader = make_upsert_store(spark, path, ["user_id"], ["ended_at_s"], fmt=fmt)
+    reader = BucketedTransactionalStore(spark, path, ["user_id"], ["ended_at_s"])
     assert _kpis(reader) == {"u0": (1, 1.25)}
     fb(_kpi_batch(spark, [("u0", 200, 2.0)]), 1)
     assert _kpis(reader) == {"u0": (2, 3.25)}
@@ -194,9 +186,8 @@ def test_foreachbatch_session_kpis_streams_sharing_a_store(spark, tmp_path):
     is skipped as a replay of the other's."""
     import json
 
-    store = make_upsert_store(
-        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"],
-        fmt="parquet_bucketed",
+    store = BucketedTransactionalStore(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"]
     )
     fb = session_kpis_foreach_batch(store)
     for w, rows in ((1, [("u0", 100, 1.25)]), (2, [("u0", 200, 2.0)])):
