@@ -1,6 +1,6 @@
 """The OCC stores: commit protocol, snapshot isolation, merge-on-read,
 retry-on-conflict, vacuum, layout versioning. The foreachBatch contract
-itself is covered backend-parametrized in test_streaming.py."""
+itself is covered in test_streaming.py, data-sized and at 4 pinned buckets."""
 
 from __future__ import annotations
 
