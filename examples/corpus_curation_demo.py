@@ -121,38 +121,17 @@ def main() -> None:
     assert assigned.filter(F.col("centroid_id") < 0).count() == 0
     assert centroids.count() == 8
 
-    # 7. round-3 corpus stages + observability
-    from iheardai_data_pipeline_spark.monitoring import (
-        AlertManager,
-        AlertRule,
-        SparkMetricsCollector,
-    )
+    # 7. round-3 corpus stages
     from iheardai_data_pipeline_spark.operators import corpus as corpus_ops
 
-    coll = SparkMetricsCollector(service="curation-demo")
-    with coll.time_operation("repetition_gate"):
-        rep = corpus_ops.repetition_metrics(docs)
-        n_rep_kept = rep.filter(F.col("keep")).count()
-    with coll.time_operation("lm_scores"):
-        lm = corpus_ops.corpus_lm_scores(docs)
-        assert lm.count() == n0
-    with coll.time_operation("temperature_mix"):
-        funnel = corpus_ops.curation_funnel(docs).collect()
+    rep = corpus_ops.repetition_metrics(docs)
+    n_rep_kept = rep.filter(F.col("keep")).count()
+    lm = corpus_ops.corpus_lm_scores(docs)
+    assert lm.count() == n0
+    funnel = corpus_ops.curation_funnel(docs).collect()
     assert sum(r.n_input for r in funnel) == n0
     for r in funnel:
         assert r.n_input >= r.n_quality >= r.n_unique >= r.n_sampled
-    coll.rows_processed.inc(n_rep_kept, stage="repetition_gate", service="curation-demo")
-    alerts = AlertManager(coll.registry)
-    alerts.add_rule(
-        AlertRule(
-            name="quality_gate_too_strict",
-            metric="pipeline_rows_processed_total",
-            threshold=n0 * 0.05,
-            above=False,
-            labels={"stage": "repetition_gate", "service": "curation-demo"},
-        )
-    )
-    fired = alerts.evaluate()
     n_sampled = sum(r.n_sampled for r in funnel)
 
     # 8. round-4 stages: span excision, semantic dedup, leakage-safe
@@ -237,12 +216,11 @@ def main() -> None:
         f"corpus curation OK: {n0} docs -> quality {n1} -> exact-dedup {n2} "
         f"-> near-dedup {n3} -> decontaminated {n4} -> {n_shards} shards; "
         f"embeddings quantized + {centroids.count()}-list IVF index built; "
-        f"repetition gate kept {n_rep_kept}, funnel sampled {n_sampled}, "
-        f"{len(fired)} alerts; late batch {late.count()} -> {admitted.count()} "
+        f"repetition gate kept {n_rep_kept}, funnel sampled {n_sampled}; "
+        f"late batch {late.count()} -> {admitted.count()} "
         f"via band index; {len(merges)}-merge BPE manifest over "
         f"{bpe_manifest.count()} docs; PQ codes {codes.count()}"
     )
-    print(coll.registry.prometheus_text()[:400])
 
 
 if __name__ == "__main__":

@@ -118,6 +118,10 @@ from iheardai_data_pipeline_spark.streaming.stores import (
 # A format-2 index's postings lack the column — rebuild.
 FORMAT_VERSION = 3
 
+# Largest mutation delta (rows) broadcast into the serve joins: about
+# 100 MB built. A larger backlog is left to the optimizer's join choice.
+BCAST_DELTA_ROWS = 4_000_000
+
 
 class PostingsIndex:
     """Persistent BM25-serving inverted index over a growing corpus.
@@ -883,12 +887,10 @@ class PostingsIndex:
         without the hint the checkpointed frame's unknown size stats
         make the initial plan a sort-merge join, and even AQE's runtime
         conversion has already paid the delta's exchange). Bounded by
-        SPARK_GRAFT_BCAST_DELTA_ROWS (default 4M rows ≈ ~100 MB built);
-        a larger backlog falls back to the optimizer's choice — the
-        scale-safe posture, env-tunable per deployment."""
+        :data:`BCAST_DELTA_ROWS`; a larger backlog falls back to the
+        optimizer's choice, the scale-safe posture."""
         n = getattr(m, "_graft_rows", None)
-        cap = int(os.environ.get("SPARK_GRAFT_BCAST_DELTA_ROWS", "4000000"))
-        return F.broadcast(m) if n is not None and n <= cap else m
+        return F.broadcast(m) if n is not None and n <= BCAST_DELTA_ROWS else m
 
     @staticmethod
     def _delta_alive() -> F.Column:

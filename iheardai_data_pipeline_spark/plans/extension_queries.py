@@ -22,6 +22,7 @@ from iheardai_data_pipeline_spark.functions.exact import sql_ratio_half_up
 from iheardai_data_pipeline_spark.operators import dedup, multimodal, similarity, text
 from iheardai_data_pipeline_spark.plans.catalog import register
 from iheardai_data_pipeline_spark.sources.batch import load_table
+from iheardai_data_pipeline_spark.streaming.sinks import ram_tempdir
 
 # Canonical text normalization, mirrored from operators/text.py::normalize_text
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -204,9 +205,6 @@ def x_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "all-pairs gate (operators/neardup_index.py).",
 )
 def x_dedup_indexed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from iheardai_data_pipeline_spark.operators.neardup_index import MinHashBandIndex
 
     docs = load_table(spark, sf_dir, "documents")
@@ -215,10 +213,9 @@ def x_dedup_indexed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     # RAM-backed store root when available: the demo index lives seconds
-    # and its OCC commit I/O is the dominant fixed cost (same trade as
-    # harness_checkpoint_dir; a real deployment points at durable storage)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bandidx_", dir=shm)
+    # and its OCC commit I/O is the dominant fixed cost (a real
+    # deployment points at durable storage)
+    root = ram_tempdir("bandidx_")
     try:
         idx = MinHashBandIndex(spark, root, threshold=0.7)
         idx.append(corpus)
@@ -302,9 +299,7 @@ WHERE d.doc_id % 5 IN (3, 4)
     "py:MinHashBandIndex.delete).",
 )
 def x_dedup_indexed_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.neardup_index import MinHashBandIndex
 
@@ -317,8 +312,7 @@ def x_dedup_indexed_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     deleted = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bandupd_", dir=shm)
+    root = ram_tempdir("bandupd_")
     try:
         idx = MinHashBandIndex(
             spark, root, threshold=0.7, expected_docs=docs.count()
@@ -1377,9 +1371,7 @@ def _ann_serving_artifacts(spark, sf_dir: str, emb: DataFrame):
     "(operators/ann_index.py:PersistentAnnIndex).",
 )
 def x_sim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1391,8 +1383,7 @@ def x_sim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     qid, qvec = _probe_vector(emb)
     shortlist = max(100, n // 5)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="annidx_", dir=shm)
+    root = ram_tempdir("annidx_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1425,9 +1416,7 @@ def x_sim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store (operators/ann_index.py:PersistentAnnIndex.topk_batch).",
 )
 def x_sim_index_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1444,8 +1433,7 @@ def x_sim_index_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(8)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="annbatch_", dir=shm)
+    root = ram_tempdir("annbatch_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1478,9 +1466,7 @@ def x_sim_index_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/ann_index.py:topk).",
 )
 def x_sim_index_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1493,8 +1479,7 @@ def x_sim_index_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qid, qvec = _probe_vector(emb)
     shortlist = max(100, n // 5)
     allowed = emb.where(F.col("vec_id") % 2 == 1).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="annfilt_", dir=shm)
+    root = ram_tempdir("annfilt_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1533,9 +1518,7 @@ def x_sim_index_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_sim_index_filtered_batch_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1552,8 +1535,7 @@ def x_sim_index_filtered_batch_topk(
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
     allowed = emb.where(F.col("vec_id") % 2 == 1).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="annfb_", dir=shm)
+    root = ram_tempdir("annfb_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1621,9 +1603,7 @@ SELECT {qid_out}label, best_l2 FROM (
     "doc_topk).",
 )
 def x_sim_doc_maxsim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1635,8 +1615,7 @@ def x_sim_doc_maxsim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     qid, qvec = _probe_vector(emb)
     shortlist = max(100, n // 5)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="anndoc_", dir=shm)
+    root = ram_tempdir("anndoc_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1671,9 +1650,7 @@ def x_sim_doc_maxsim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_sim_doc_maxsim_index_batch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1689,8 +1666,7 @@ def x_sim_doc_maxsim_index_batch(
         .limit(8)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="anndocb_", dir=shm)
+    root = ram_tempdir("anndocb_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, emb, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1751,9 +1727,7 @@ _INDEX_UPDATE_ORACLE = _index_serve_oracle(
     "(operators/ann_index.py:PersistentAnnIndex.delete).",
 )
 def x_sim_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1770,9 +1744,8 @@ def x_sim_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = emb.filter(F.col("vec_id") % 4 == 3)
     deleted = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id")
     final_state = emb.filter(F.col("vec_id") % 10 != 0)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="annupd_", dir=shm)
-    root2 = tempfile.mkdtemp(prefix="annupd_fresh_", dir=shm)
+    root = ram_tempdir("annupd_")
+    root2 = ram_tempdir("annupd_fresh_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -1871,9 +1844,7 @@ _INDEX_COMPACT_ORACLE = _index_serve_oracle(
     "(operators/ann_index.py:PersistentAnnIndex.compact).",
 )
 def x_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1891,8 +1862,7 @@ def x_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = emb.filter(F.col("vec_id") % 4 == 3)
     deleted = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id")
     final_state = emb.filter(F.col("vec_id") % 10 != 0)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="anncpt_", dir=shm)
+    root = ram_tempdir("anncpt_")
     try:
         idx = PersistentAnnIndex.bootstrap(
             spark, root, corpus, centroids=_SERVE_CENTROIDS, books=_SERVE_BOOKS
@@ -1962,9 +1932,7 @@ def x_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/ann_index.py:PersistentAnnIndex.merge).",
 )
 def x_sim_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -1979,9 +1947,8 @@ def x_sim_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     half_b = emb.filter(F.col("vec_id") % 2 == 1)
     deleted = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_a = tempfile.mkdtemp(prefix="annmrg_a_", dir=shm)
-    root_b = tempfile.mkdtemp(prefix="annmrg_b_", dir=shm)
+    root_a = ram_tempdir("annmrg_a_")
+    root_b = ram_tempdir("annmrg_b_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -2801,17 +2768,14 @@ def _bm25_serve(spark: SparkSession, idx) -> DataFrame:
     "(operators/postings_index.py:PostingsIndex).",
 )
 def x_text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25idx_", dir=shm)
+    root = ram_tempdir("bm25idx_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0, epoch="boot")
@@ -2843,17 +2807,14 @@ def x_text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:PostingsIndex.prf_topk).",
 )
 def x_text_bm25_prf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25prf_", dir=shm)
+    root = ram_tempdir("bm25prf_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0, epoch="boot")
@@ -2889,17 +2850,14 @@ def x_text_bm25_prf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:prf_topk).",
 )
 def x_text_bm25_prf_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25prfw_", dir=shm)
+    root = ram_tempdir("bm25prfw_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0, epoch="boot")
@@ -2937,17 +2895,14 @@ def x_text_bm25_prf_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:_topk_pruned).",
 )
 def x_text_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25wnd_", dir=shm)
+    root = ram_tempdir("bm25wnd_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0, epoch="boot")
@@ -2976,9 +2931,7 @@ def x_text_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:PostingsIndex.merge).",
 )
 def x_text_bm25_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
@@ -2987,9 +2940,8 @@ def x_text_bm25_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.session import parallel_legs
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_a = tempfile.mkdtemp(prefix="bm25mrg_a_", dir=shm)
-    root_b = tempfile.mkdtemp(prefix="bm25mrg_b_", dir=shm)
+    root_a = ram_tempdir("bm25mrg_a_")
+    root_b = ram_tempdir("bm25mrg_b_")
     try:
         # the two shard builds are independent (disjoint stores, disjoint
         # id spaces): overlap their driver-sequenced append jobs
@@ -3152,17 +3104,14 @@ def x_text_bm25f(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FINAL live corpus (operators/postings_index.py:PostingsIndex).",
 )
 def x_text_bm25f_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25f_", dir=shm)
+    root = ram_tempdir("bm25f_")
     try:
         idx = PostingsIndex(
             spark,
@@ -3201,9 +3150,7 @@ def x_text_bm25f_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:_topk_pruned).",
 )
 def x_text_bm25f_filtered_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
@@ -3211,8 +3158,7 @@ def x_text_bm25f_filtered_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
     allowed = boot.filter(F.col("doc_id") % 3 != 1).select("doc_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25fw_", dir=shm)
+    root = ram_tempdir("bm25fw_")
     try:
         idx = PostingsIndex(
             spark,
@@ -3407,9 +3353,7 @@ FROM ranked WHERE rnk <= 5
     "the fusion — fails the hash (operators/retrieval.py:rrf_fuse).",
 )
 def x_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -3434,9 +3378,8 @@ def x_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(4)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_p = tempfile.mkdtemp(prefix="hyb_pi_", dir=shm)
-    root_a = tempfile.mkdtemp(prefix="hyb_ann_", dir=shm)
+    root_p = ram_tempdir("hyb_pi_")
+    root_a = ram_tempdir("hyb_ann_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -3492,9 +3435,7 @@ def x_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/retrieval.py:rrf_fuse).",
 )
 def x_hybrid_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -3521,9 +3462,8 @@ def x_hybrid_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lex_allowed = docs.where(F.col("doc_id") % 3 != 1).select("doc_id")
     sem_allowed = emb.where(F.col("vec_id") % 3 != 1).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_p = tempfile.mkdtemp(prefix="hybf_pi_", dir=shm)
-    root_a = tempfile.mkdtemp(prefix="hybf_ann_", dir=shm)
+    root_p = ram_tempdir("hybf_pi_")
+    root_a = ram_tempdir("hybf_ann_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -3663,9 +3603,7 @@ FROM ranked WHERE rnk <= 5
     "(operators/retrieval.py:convex_fuse).",
 )
 def x_hybrid_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -3688,9 +3626,8 @@ def x_hybrid_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(4)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_p = tempfile.mkdtemp(prefix="hybc_pi_", dir=shm)
-    root_a = tempfile.mkdtemp(prefix="hybc_ann_", dir=shm)
+    root_p = ram_tempdir("hybc_pi_")
+    root_a = ram_tempdir("hybc_ann_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -3749,9 +3686,7 @@ def x_hybrid_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interaction is hash-gated (operators/retrieval.py:convex_fuse).",
 )
 def x_hybrid_convex_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -3776,9 +3711,8 @@ def x_hybrid_convex_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lex_allowed = docs.where(F.col("doc_id") % 3 != 1).select("doc_id")
     sem_allowed = emb.where(F.col("vec_id") % 3 != 1).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_p = tempfile.mkdtemp(prefix="hybcf_pi_", dir=shm)
-    root_a = tempfile.mkdtemp(prefix="hybcf_ann_", dir=shm)
+    root_p = ram_tempdir("hybcf_pi_")
+    root_a = ram_tempdir("hybcf_ann_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -3857,9 +3791,7 @@ def _hybrid_convex_prf_oracle() -> str:
     "and fails the hash (operators/retrieval.py:convex_fuse).",
 )
 def x_hybrid_convex_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
@@ -3882,9 +3814,8 @@ def x_hybrid_convex_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(4)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_p = tempfile.mkdtemp(prefix="hybp_pi_", dir=shm)
-    root_a = tempfile.mkdtemp(prefix="hybp_ann_", dir=shm)
+    root_p = ram_tempdir("hybp_pi_")
+    root_a = ram_tempdir("hybp_ann_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -4045,9 +3976,7 @@ _BM25_FILTERED_ORACLE = _bm25_oracle_sql(
     "rank cut (operators/postings_index.py:PostingsIndex.topk).",
 )
 def x_text_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
@@ -4055,8 +3984,7 @@ def x_text_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
     allowed = boot.filter(F.col("doc_id") % 3 != 1).select("doc_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25flt_", dir=shm)
+    root = ram_tempdir("bm25flt_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0)
@@ -4090,17 +4018,14 @@ _PHRASE_INDEXED_ORACLE = _phrase_oracle_sql(_BM25_SCENARIO_SRC)
     "(operators/postings_index.py:PostingsIndex.phrase_topk).",
 )
 def x_text_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="phridx_", dir=shm)
+    root = ram_tempdir("phridx_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0)
@@ -4130,17 +4055,14 @@ def x_text_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:PostingsIndex.compact).",
 )
 def x_text_bm25_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25cpt_", dir=shm)
+    root = ram_tempdir("bm25cpt_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0)
@@ -4202,17 +4124,14 @@ def x_text_bm25_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/postings_index.py:repair_stats).",
 )
 def x_text_bm25_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
 
     boot, upsert, dele = _bm25_scenario_frames(spark, sf_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="bm25rep_", dir=shm)
+    root = ram_tempdir("bm25rep_")
     try:
         idx = PostingsIndex(spark, root, k1=_BM25_K1, b=_BM25_B)
         idx.append(boot, seq=0, epoch="boot")
@@ -4956,9 +4875,7 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY fingerprint ORDER BY doc_id) = 1
     "fingerprints (operators/fingerprint_index.py:FingerprintIndex).",
 )
 def x_dedup_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.fingerprint_index import (
         FingerprintIndex,
@@ -4972,8 +4889,7 @@ def x_dedup_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", "lang", "text"
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="fpidx_", dir=shm)
+    root = ram_tempdir("fpidx_")
     try:
         idx = FingerprintIndex(
             spark, root, expected_docs=docs.count()
@@ -5032,9 +4948,7 @@ def x_dedup_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/fingerprint_index.py:FingerprintIndex.merge).",
 )
 def x_dedup_indexed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.fingerprint_index import (
         FingerprintIndex,
@@ -5050,9 +4964,8 @@ def x_dedup_indexed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", "lang", "text"
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root_a = tempfile.mkdtemp(prefix="fpmrg_a_", dir=shm)
-    root_b = tempfile.mkdtemp(prefix="fpmrg_b_", dir=shm)
+    root_a = ram_tempdir("fpmrg_a_")
+    root_b = ram_tempdir("fpmrg_b_")
     try:
         from iheardai_data_pipeline_spark.session import parallel_legs
 
@@ -6644,9 +6557,7 @@ WHERE i.vec_id NOT IN (SELECT vec_id FROM dropped)
     "(operators/semantic_index.py).",
 )
 def x_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.semantic_index import (
         SemanticDedupIndex,
@@ -6657,8 +6568,7 @@ def x_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.filter(F.col("vec_id") % 5 == 0)
     incoming = emb.filter(F.col("vec_id") % 5 != 0).select("vec_id", "embedding")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="semidx_", dir=shm)
+    root = ram_tempdir("semidx_")
     try:
         idx = SemanticDedupIndex.bootstrap(
             spark, root, corpus, n_centroids=16, threshold=0.4
@@ -6762,9 +6672,7 @@ WHERE i.vec_id NOT IN (SELECT vec_id FROM dropped)
     "(operators/semantic_index.py:SemanticDedupIndex.delete).",
 )
 def x_dedup_semantic_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.semantic_index import (
         SemanticDedupIndex,
@@ -6781,8 +6689,7 @@ def x_dedup_semantic_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     deleted = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="semupd_", dir=shm)
+    root = ram_tempdir("semupd_")
     try:
         idx = SemanticDedupIndex.bootstrap(
             spark, root, corpus, n_centroids=16, threshold=0.4
@@ -6887,9 +6794,7 @@ WHERE i.vec_id NOT IN (SELECT vec_id FROM dropped)
     "(operators/semantic_index.py:SemanticDedupIndex.bootstrap).",
 )
 def x_dedup_semantic_sqrt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from iheardai_data_pipeline_spark.operators.semantic_index import (
         SemanticDedupIndex,
@@ -6902,8 +6807,7 @@ def x_dedup_semantic_sqrt(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = emb.filter(F.col("vec_id") % 4 == 3).select(
         "vec_id", "embedding"
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="semsqrt_", dir=shm)
+    root = ram_tempdir("semsqrt_")
     try:
         idx = SemanticDedupIndex.bootstrap(
             spark, root, corpus, n_centroids=None, threshold=0.4

@@ -1,11 +1,16 @@
 """Streaming catalog queries (T3/T4): executed through Structured
-Streaming (file source -> availableNow -> memory sink) and compared to
-the SAME DuckDB oracles as their batch analogs — proving the streaming
-operators produce the batch-equivalent answer.
+Streaming (file source -> one bounded run over every file present ->
+memory sink or foreachBatch) and compared to the SAME DuckDB oracles as
+their batch analogs — proving the streaming operators produce the
+batch-equivalent answer. The runs go through ``streaming/sinks.py``
+(``run_to_memory``, ``run_foreach_batch``), which own and delete the
+checkpoints.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 import uuid
 
@@ -13,9 +18,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iheardai_data_pipeline_spark.plans.catalog import register
-from iheardai_data_pipeline_spark.streaming.readers import read_events_stream
-from iheardai_data_pipeline_spark.streaming.sinks import run_to_memory
+from iheardai_data_pipeline_spark.sources.batch import load_table
+from iheardai_data_pipeline_spark.streaming.readers import (
+    read_events_stream,
+    read_table_stream,
+)
+from iheardai_data_pipeline_spark.streaming.sinks import (
+    ram_tempdir,
+    run_foreach_batch,
+    run_to_memory,
+)
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 from iheardai_data_pipeline_spark.streaming.windows import session_windows, tumbling_usage
+
+
+def _count_by(spark: SparkSession, out_dir: str, col: str) -> DataFrame:
+    """Rows per ``col`` of the parquet under ``out_dir``, ordered by
+    ``col``. The rollup is small and pinned, so the caller can delete
+    the dir as soon as this returns."""
+    return (
+        spark.read.parquet(out_dir)
+        .groupBy(col)
+        .agg(F.count(F.lit(1)).alias("n_accepted"))
+        .localCheckpoint(eager=True)
+        .orderBy(col)
+    )
+
 
 _T3_ORACLE = """
 SELECT CAST(FLOOR(epoch(date_trunc('minute', ts))) AS BIGINT) AS bucket_start_s,
@@ -30,7 +58,7 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
     oracle=_T3_ORACLE,
     tags=("streaming",),
     doc="T3: 60s tumbling billing windows executed as a Structured "
-    "Streaming query (file source, availableNow, memory sink); equals the "
+    "Streaming query (file source, bounded run, memory sink); equals the "
     "batch A8 answer (reference config/config.yaml:208-212).",
 )
 def t3_stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,27 +164,18 @@ def t6_stream_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
     from iheardai_data_pipeline_spark.streaming.stateful import track_session_state
 
-    import shutil
-
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-
     stream = read_events_stream(spark, sf_dir)
-    # ttl_ms=None: TTL timeouts would keep the bounded availableNow
-    # replay alive forever (see streaming/stateful.py docstring)
+    # ttl_ms=None: TTL timeouts would keep the bounded replay alive
+    # forever (see streaming/stateful.py docstring)
     snapshots = track_session_state(stream, ttl_ms=None)
-    ckpt = harness_checkpoint_dir("t6_ckpt_")
-    try:
-        out = run_to_memory(
-            snapshots,
-            f"t6_out_{uuid.uuid4().hex[:8]}",
-            output_mode="update",
-            checkpoint_location=ckpt,
-            # per-key pandas batches run in Python workers: state I/O is not
-            # the bottleneck here, worker parallelism is — keep session width
-            state_partitions=None,
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_to_memory(
+        snapshots,
+        f"t6_out_{uuid.uuid4().hex[:8]}",
+        output_mode="update",
+        # per-key pandas batches run in Python workers: state I/O is not
+        # the bottleneck here, worker parallelism is — keep session width
+        state_partitions=None,
+    )
     # update mode appends one snapshot per (key, touching micro-batch);
     # the session's final state is the one with the highest event count
     final = last_write_wins(out, ["user_id"], ["n_events", "last_seen_s"])
@@ -235,11 +254,8 @@ ORDER BY f.source
     "anti-join + min-id answer, proving stream == batch.",
 )
 def t9_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from iheardai_data_pipeline_spark.operators.dedup import incremental_dedup
     from iheardai_data_pipeline_spark.operators.text import fingerprint_md5
-    from iheardai_data_pipeline_spark.sources.batch import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     seed_fps = (
@@ -251,7 +267,8 @@ def t9_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-memory build side instead of re-reading the corpus
     seed_fps.cache().count()
 
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="t9_"), "accepted")
+    root = tempfile.mkdtemp(prefix="t9_")
+    out_dir = os.path.join(root, "accepted")
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         # probe = seed index ∪ fingerprints ACCEPTED BY EARLIER BATCHES —
@@ -268,34 +285,14 @@ def t9_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(out_dir)
 
-    schema = docs.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    import shutil
-
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-
-    ckpt = harness_checkpoint_dir("t9_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
         )
+        return _count_by(spark, out_dir, "source")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    seed_fps.unpersist()
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_accepted"))
-        .orderBy("source")
-    )
+        seed_fps.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # --- T10 (extension): sliding windows ----------------------------------------------
@@ -370,8 +367,6 @@ ORDER BY cohort_day, e.event_type
     "(cohort, type). Streaming aggregate equals the batch join answer.",
 )
 def t11_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-
     # static dim: computed batch-side once (in production: a dim table)
     events_batch = load_table(spark, sf_dir, "events")
     cohort = (
@@ -443,12 +438,7 @@ FROM kept GROUP BY source ORDER BY source
     "arrival wins). Oracle = the exact all-pairs batch answer.",
 )
 def t12_stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.dedup import incremental_minhash_dedup
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
@@ -469,29 +459,14 @@ def t12_stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.select("doc_id", "source").write.mode("append").parquet(out_dir)
         inc.select("doc_id", "text").write.mode("append").parquet(seen_dir)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t12_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
         )
+        return _count_by(spark, out_dir, "source")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    corpus.unpersist()
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_accepted"))
-        .orderBy("source")
-    )
+        corpus.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -507,56 +482,30 @@ def t12_stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-banding. Oracle = the same exact all-pairs batch answer.",
 )
 def t13_stream_indexed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.neardup_index import MinHashBandIndex
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
 
     docs = load_table(spark, sf_dir, "documents")
-    # RAM-backed when available — the demo index's OCC commit I/O is the
-    # dominant fixed cost (same trade as harness_checkpoint_dir)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t13_", dir=shm)
+    # RAM-backed: the demo index's OCC commit I/O is the dominant fixed cost
+    root = ram_tempdir("t13_")
     out_dir = os.path.join(root, "accepted")
-    idx = MinHashBandIndex(spark, os.path.join(root, "idx"), threshold=0.7)
-    idx.append(docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text"))
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        inc = batch.filter(F.col("doc_id") % 5 != 0).select(
-            "doc_id", "source", "text"
-        )
-        idx.ingest(inc).select("doc_id", "source").write.mode("append").parquet(
-            out_dir
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t13_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = MinHashBandIndex(spark, os.path.join(root, "idx"), threshold=0.7)
+        idx.append(docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text"))
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            inc = batch.filter(F.col("doc_id") % 5 != 0).select(
+                "doc_id", "source", "text"
+            )
+            idx.ingest(inc).select("doc_id", "source").write.mode("append").parquet(
+                out_dir
+            )
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
         )
-        # pin the (tiny) rollup off the tmpfs files, then reclaim the
-        # whole index root — a leaked /dev/shm dir is leaked RAM
-        res = (
-            spark.read.parquet(out_dir)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_accepted"))
-            .localCheckpoint(eager=True)
-        )
+        return _count_by(spark, out_dir, "source")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res.orderBy("source")
 
 
 # --- T14 (extension): streaming-maintained HyperLogLog ------------------------------
@@ -609,22 +558,15 @@ FROM regs r, s
     "streaming twin of x_sketch_hll.",
 )
 def t14_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.sketch import (
         hll_estimate,
         hll_registers,
     )
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
 
-    t14_root = tempfile.mkdtemp(prefix="t14_")
+    root = tempfile.mkdtemp(prefix="t14_")
     store = BucketedTransactionalStore(
         spark,
-        os.path.join(t14_root, "hll"),
+        os.path.join(root, "hll"),
         key_cols=["bucket"],
         order_cols=["max_rank"],
     )
@@ -645,28 +587,18 @@ def t14_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         store.apply(fn)
 
-    stream = read_events_stream(spark, sf_dir)
-    ckpt = harness_checkpoint_dir("t14_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        run_foreach_batch(read_events_stream(spark, sf_dir), merge_batch)
+        regs = store.read()
+        summary = regs.agg(F.round(hll_estimate(p=6), 6).alias("est_distinct"))
+        return (
+            regs.select("bucket", F.col("max_rank").cast("int").alias("max_rank"))
+            .crossJoin(F.broadcast(summary))
+            # <=2^p rows: pin them so the store's tmp dir can be reclaimed
+            .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    regs = store.read()
-    summary = regs.agg(F.round(hll_estimate(p=6), 6).alias("est_distinct"))
-    res = (
-        regs.select("bucket", F.col("max_rank").cast("int").alias("max_rank"))
-        .crossJoin(F.broadcast(summary))
-        # <=2^p rows: pin them so the store's tmp dir can be reclaimed
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(t14_root, ignore_errors=True)
-    return res
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # --- T15 (extension): streaming-maintained Count-Min sketch -------------------------
@@ -727,20 +659,12 @@ ORDER BY e.est DESC, k.user_id LIMIT 20
     "stream checkpoint. The frequency twin of t14's sketch.",
 )
 def t15_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.sketch import cms_build, cms_estimate
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
 
-    t15_root = tempfile.mkdtemp(prefix="t15_")
+    root = tempfile.mkdtemp(prefix="t15_")
     store = BucketedTransactionalStore(
         spark,
-        os.path.join(t15_root, "cms"),
+        os.path.join(root, "cms"),
         key_cols=["depth", "cell"],
         order_cols=["cnt"],
     )
@@ -761,21 +685,12 @@ def t15_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replayed micro-batch a no-op instead of a double count
         store.apply(fn, epoch=int(batch_id))
 
-    stream = read_events_stream(spark, sf_dir)
-    ckpt = harness_checkpoint_dir("t15_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
-        )
+        run_foreach_batch(read_events_stream(spark, sf_dir), merge_batch)
+        # d*w rows: pin the sketch so the store's tmp dir can be reclaimed
+        sketch = store.read().localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    # d*w rows: pin the sketch so the store's tmp dir can be reclaimed
-    sketch = store.read().localCheckpoint(eager=True)
-    shutil.rmtree(t15_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     events = load_table(spark, sf_dir, "events")
     est = cms_estimate(sketch, events.select("user_id"), "user_id", depth=4, width=64)
     exact = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -842,22 +757,15 @@ FROM words
     "sketch trio.",
 )
 def t16_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.sketch import (
         bloom_build,
         bloom_pack_words,
     )
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
 
-    t16_root = tempfile.mkdtemp(prefix="t16_")
+    root = tempfile.mkdtemp(prefix="t16_")
     store = BucketedTransactionalStore(
         spark,
-        os.path.join(t16_root, "bloom"),
+        os.path.join(root, "bloom"),
         key_cols=["word_idx"],
         order_cols=["word"],
     )
@@ -882,21 +790,12 @@ def t16_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         store.apply(fn)
 
-    stream = read_events_stream(spark, sf_dir)
-    ckpt = harness_checkpoint_dir("t16_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
-        )
+        run_foreach_batch(read_events_stream(spark, sf_dir), merge_batch)
+        # <= m/64 rows: pin them so the store's tmp dir can be reclaimed
+        words = store.read().localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    # <= m/64 rows: pin them so the store's tmp dir can be reclaimed
-    words = store.read().localCheckpoint(eager=True)
-    shutil.rmtree(t16_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     return words.select(
         "word_idx", "word", F.bit_count("word").cast("int").alias("n_bits")
     )
@@ -929,22 +828,15 @@ def _t17_oracle() -> str:
     "(sum), Bloom (or), quantile (sum).",
 )
 def t17_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.sketch import (
         ddq_build,
         ddq_quantiles,
     )
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
 
-    t17_root = tempfile.mkdtemp(prefix="t17_")
+    root = tempfile.mkdtemp(prefix="t17_")
     store = BucketedTransactionalStore(
         spark,
-        os.path.join(t17_root, "ddq"),
+        os.path.join(root, "ddq"),
         key_cols=["e", "m"],
         order_cols=["cnt"],
     )
@@ -963,21 +855,12 @@ def t17_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         store.apply(fn, epoch=int(batch_id))
 
-    stream = read_events_stream(spark, sf_dir)
-    ckpt = harness_checkpoint_dir("t17_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
-        )
+        run_foreach_batch(read_events_stream(spark, sf_dir), merge_batch)
+        # ~256 rows: pin them so the store's tmp dir can be reclaimed
+        sketch = store.read().localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    # ~256 rows: pin them so the store's tmp dir can be reclaimed
-    sketch = store.read().localCheckpoint(eager=True)
-    shutil.rmtree(t17_root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
     return ddq_quantiles(sketch, qs=(0.5, 0.9, 0.99))
 
 
@@ -1017,61 +900,38 @@ ORDER BY e.label
     "x_dedup_semantic_ingest, as t13 is of x_dedup_indexed_ingest.",
 )
 def t18_stream_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.semantic_index import (
         SemanticDedupIndex,
     )
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t18_", dir=shm)
+    root = ram_tempdir("t18_")
     out_dir = os.path.join(root, "accepted")
-    idx = SemanticDedupIndex.bootstrap(
-        spark,
-        os.path.join(root, "idx"),
-        emb.filter(F.col("vec_id") % 5 == 0),
-        n_centroids=16,
-        threshold=0.4,
-    )
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        inc = batch.filter(
-            F.col("embedding").isNotNull() & (F.col("vec_id") % 5 != 0)
-        ).select("vec_id", "label", "embedding")
-        idx.ingest(inc, epoch=int(batch_id)).select(
-            "vec_id", "label"
-        ).write.mode("append").parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t18_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = SemanticDedupIndex.bootstrap(
+            spark,
+            os.path.join(root, "idx"),
+            emb.filter(F.col("vec_id") % 5 == 0),
+            n_centroids=16,
+            threshold=0.4,
         )
-        res = (
-            spark.read.parquet(out_dir)
-            .groupBy("label")
-            .agg(F.count(F.lit(1)).alias("n_accepted"))
-            .localCheckpoint(eager=True)
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            inc = batch.filter(
+                F.col("embedding").isNotNull() & (F.col("vec_id") % 5 != 0)
+            ).select("vec_id", "label", "embedding")
+            idx.ingest(inc, epoch=int(batch_id)).select(
+                "vec_id", "label"
+            ).write.mode("append").parquet(out_dir)
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "embeddings", emb.schema), ingest_batch
         )
+        return _count_by(spark, out_dir, "label")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res.orderBy("label")
 
 
 # --- T19 (extension): streaming PCA co-moment maintenance ---------------------------
@@ -1128,20 +988,11 @@ FROM mom JOIN ds sa ON mom.i = sa.i JOIN ds sb ON mom.j = sb.i
     "without rescans (operators/embedred.py:comoment_sums).",
 )
 def t19_stream_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.embedred import comoment_sums
     from iheardai_data_pipeline_spark.plans.pca_artifact import PCA_SCALE
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
 
     emb_schema = load_table(spark, sf_dir, "embeddings").schema
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t19_", dir=shm)
+    root = ram_tempdir("t19_")
     store = BucketedTransactionalStore(
         spark,
         os.path.join(root, "mom"),
@@ -1168,24 +1019,13 @@ def t19_stream_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         store.apply(fn, epoch=int(batch_id))
 
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t19_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "embeddings", emb_schema), merge_batch
         )
         # 2080 rows: pin them so the store's tmp dir can be reclaimed
         res = store.read().localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
     return res.select("i", "j", "sxy", "si", "sj", "n")
 
@@ -1236,71 +1076,46 @@ FROM fresh GROUP BY lang
     "up per language.",
 )
 def t20_stream_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.fingerprint_index import (
         FingerprintIndex,
-    )
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import (
-        harness_checkpoint_dir,
     )
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t20_", dir=shm)
+    root = ram_tempdir("t20_")
     out_dir = os.path.join(root, "accepted")
-    idx = FingerprintIndex(
-        spark, os.path.join(root, "idx"), expected_docs=docs.count()
-    )
-    idx.append(
-        docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text"),
-        epoch="t20-bootstrap",
-    )
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        inc = batch.filter(
-            (F.col("doc_id") % 3 == 0) & F.col("text").isNotNull()
-        ).select("doc_id", "lang", "text")
-        # per-batch OVERWRITE dir, not a flat append: a checkpoint-
-        # recovered replay of this batch re-runs with the SAME batch_id
-        # (and ingest's replay guard returns the first run's exact
-        # survivors), so the rewrite is a byte-identical no-op instead
-        # of a double-append — exactly-once through a real restart
-        # (pinned by test_stream_restart.py, round 10)
-        idx.ingest(inc, epoch=f"t20-{batch_id}").select(
-            "doc_id", "lang"
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"b={batch_id}")
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t20_ckpt_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = FingerprintIndex(
+            spark, os.path.join(root, "idx"), expected_docs=docs.count()
         )
-        res = (
-            spark.read.parquet(out_dir)
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_accepted"))
-            .localCheckpoint(eager=True)
+        idx.append(
+            docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text"),
+            epoch="t20-bootstrap",
         )
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            inc = batch.filter(
+                (F.col("doc_id") % 3 == 0) & F.col("text").isNotNull()
+            ).select("doc_id", "lang", "text")
+            # per-batch OVERWRITE dir, not a flat append: a checkpoint-
+            # recovered replay of this batch re-runs with the SAME batch_id
+            # (and ingest's replay guard returns the first run's exact
+            # survivors), so the rewrite is a byte-identical no-op instead
+            # of a double-append — exactly-once through a real restart
+            # (pinned by test_stream_restart.py, round 10)
+            idx.ingest(inc, epoch=f"t20-{batch_id}").select(
+                "doc_id", "lang"
+            ).write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"b={batch_id}")
+            )
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
+        )
+        return _count_by(spark, out_dir, "lang")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res.orderBy("lang")
 
 
 # --- T21 (extension): streaming ingest into the persistent ANN index ---------------
@@ -1343,9 +1158,6 @@ _T21_ORACLE = _t21_oracle()
     "one-shot build, since x_sim_index_topk pins one-shot == replay).",
 )
 def t21_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.ann_index import (
         PersistentAnnIndex,
     )
@@ -1354,10 +1166,6 @@ def t21_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SERVE_CENTROIDS,
         _probe_vector,
     )
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import (
-        harness_checkpoint_dir,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
@@ -1365,43 +1173,30 @@ def t21_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     qid, qvec = _probe_vector(emb)
     shortlist = max(100, n // 5)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t21_", dir=shm)
-    idx = PersistentAnnIndex.bootstrap(
-        spark,
-        os.path.join(root, "stream_idx"),
-        emb.filter(F.col("vec_id") % 2 == 0),
-        centroids=_SERVE_CENTROIDS,
-        books=_SERVE_BOOKS,
-    )
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        inc = batch.filter(
-            (F.col("vec_id") % 2 == 1) & F.col("embedding").isNotNull()
-        ).select("vec_id", "embedding")
-        idx.append(inc, epoch=f"t21-{batch_id}", seq=1)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t21_ckpt_")
+    root = ram_tempdir("t21_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = PersistentAnnIndex.bootstrap(
+            spark,
+            os.path.join(root, "stream_idx"),
+            emb.filter(F.col("vec_id") % 2 == 0),
+            centroids=_SERVE_CENTROIDS,
+            books=_SERVE_BOOKS,
         )
-        res = idx.topk(
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            inc = batch.filter(
+                (F.col("vec_id") % 2 == 1) & F.col("embedding").isNotNull()
+            ).select("vec_id", "embedding")
+            idx.append(inc, epoch=f"t21-{batch_id}", seq=1)
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "embeddings", emb.schema), ingest_batch
+        )
+        return idx.topk(
             qvec, k=10, nprobe=4, shortlist=shortlist, exclude_id=qid
         ).localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res
 
 
 # --- T22 (extension): streaming ingest into the persistent postings index ----------
@@ -1435,9 +1230,6 @@ _T22_ORACLE = _t22_oracle()
     "deflates them, either fails the hash.",
 )
 def t22_stream_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
@@ -1446,46 +1238,29 @@ def t22_stream_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _BM25_K1,
         _bm25_query_frame,
     )
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import (
-        harness_checkpoint_dir,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t22_", dir=shm)
-    idx = PostingsIndex(
-        spark, os.path.join(root, "idx"), k1=_BM25_K1, b=_BM25_B
-    )
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        idx.append(
-            batch.where(F.col("text").isNotNull()).select("doc_id", "text"),
-            seq=0,
-            epoch=f"t22-{batch_id}",
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t22_ckpt_")
+    root = ram_tempdir("t22_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = PostingsIndex(
+            spark, os.path.join(root, "idx"), k1=_BM25_K1, b=_BM25_B
         )
-        res = idx.topk(_bm25_query_frame(spark), k=5).localCheckpoint(
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            idx.append(
+                batch.where(F.col("text").isNotNull()).select("doc_id", "text"),
+                seq=0,
+                epoch=f"t22-{batch_id}",
+            )
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
+        )
+        return idx.topk(_bm25_query_frame(spark), k=5).localCheckpoint(
             eager=True
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res
 
 
 # --- T23 (extension): streaming ingest into the FIELDED (BM25F) postings index ----
@@ -1523,9 +1298,6 @@ _T23_ORACLE = _t23_oracle()
     "unfielded index.",
 )
 def t23_stream_bm25f_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from iheardai_data_pipeline_spark.operators.postings_index import (
         PostingsIndex,
     )
@@ -1536,51 +1308,34 @@ def t23_stream_bm25f_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bm25_query_frame,
         _bm25f_doc_fields,
     )
-    from iheardai_data_pipeline_spark.sources.batch import load_table
-    from iheardai_data_pipeline_spark.streaming.sinks import (
-        harness_checkpoint_dir,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    root = tempfile.mkdtemp(prefix="t23_", dir=shm)
-    idx = PostingsIndex(
-        spark,
-        os.path.join(root, "idx"),
-        k1=_BM25_K1,
-        b=_BM25_B,
-        field_weights=_BM25F_WEIGHTS,
-    )
-
-    def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        idx.append(
-            _bm25f_doc_fields(
-                batch.where(F.col("text").isNotNull()).select(
-                    "doc_id", "text"
-                )
-            ),
-            seq=0,
-            epoch=f"t23-{batch_id}",
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    ckpt = harness_checkpoint_dir("t23_ckpt_")
+    root = ram_tempdir("t23_")
     try:
-        (
-            stream.writeStream.foreachBatch(ingest_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
+        idx = PostingsIndex(
+            spark,
+            os.path.join(root, "idx"),
+            k1=_BM25_K1,
+            b=_BM25_B,
+            field_weights=_BM25F_WEIGHTS,
         )
-        res = idx.topk(_bm25_query_frame(spark), k=5).localCheckpoint(
+
+        def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+            idx.append(
+                _bm25f_doc_fields(
+                    batch.where(F.col("text").isNotNull()).select(
+                        "doc_id", "text"
+                    )
+                ),
+                seq=0,
+                epoch=f"t23-{batch_id}",
+            )
+
+        run_foreach_batch(
+            read_table_stream(spark, sf_dir, "documents", docs.schema), ingest_batch
+        )
+        return idx.topk(_bm25_query_frame(spark), k=5).localCheckpoint(
             eager=True
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)
-    return res

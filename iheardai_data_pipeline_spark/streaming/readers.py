@@ -102,6 +102,20 @@ def read_file_stream(
     return reader.load(path)
 
 
+def read_table_stream(
+    spark: SparkSession, sf_dir: str, table: str, schema: StructType
+) -> DataFrame:
+    """Stream one table of an sf dir (``<sf_dir>/<table>.parquet``)
+    through the file source with its declared ``schema``. The file
+    source wants a directory, so this streams the sf dir with a glob
+    filter that selects just the table's file."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the driver's events table through the file source, with the
     same timestamp normalization as the batch loader (ns->us flooring,
@@ -121,13 +135,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in schema.fields
         ]
     )
-    # the file source wants a directory: stream the sf dir with a glob
-    # filter selecting just the events file
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = read_table_stream(spark, sf_dir, "events", schema)
     if dict(stream.dtypes).get("ts") == "bigint":
         from iheardai_data_pipeline_spark.sources.batch import (
             bigint_epoch_to_ts,

@@ -14,10 +14,13 @@ clobbering the winner.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
 from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
@@ -26,20 +29,44 @@ from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalS
 _MONEY = "decimal(38,2)"
 
 
-def harness_checkpoint_dir(prefix: str = "ckpt_") -> str:
-    """Checkpoint dir for the BOUNDED local availableNow harness:
-    RAM-backed (/dev/shm) when the platform provides it, else a normal
-    tempdir. Every stateful operator commits one state-store delta file
-    per shuffle partition per micro-batch into the checkpoint — for a
-    replay that lives a few seconds this disk I/O IS the dominant fixed
-    cost (measured: the stream-stream join drops ~20% from the move to
-    RAM alone). Production deployments must point checkpointLocation at
-    durable cluster storage instead — this helper is only for replays
-    whose checkpoint is discarded at the end."""
-    import tempfile
-
+def ram_tempdir(prefix: str) -> str:
+    """A fresh temp dir in RAM (/dev/shm) when the platform provides
+    it, else a normal tempdir, for short-lived local state that the
+    caller deletes when its run ends (a leaked /dev/shm dir is leaked
+    RAM): the checkpoints of bounded availableNow replays, and the demo
+    stores and indexes of catalog entries. Every stateful
+    operator commits one state-store delta file per shuffle partition
+    per micro-batch into the checkpoint; for a replay that lives a few
+    seconds this disk I/O IS the dominant fixed cost (measured: the
+    stream-stream join drops ~20% from the move to RAM alone).
+    Production deployments must point checkpointLocation at durable
+    cluster storage instead."""
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _drain(writer: DataStreamWriter, prefix: str) -> None:
+    """Run ``writer``'s query over every batch its source has now
+    (availableNow) with a fresh :func:`ram_tempdir` checkpoint, and
+    delete the checkpoint whether the query succeeds or fails."""
+    ckpt = ram_tempdir(prefix)
+    try:
+        writer.trigger(availableNow=True).option(
+            "checkpointLocation", ckpt
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_foreach_batch(
+    stream: DataFrame, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Call ``fn(batch_df, batch_id)`` on every micro-batch ``stream``
+    has now, then return: the bounded local harness for the
+    ``foreachBatch`` entries of the streaming catalog. The checkpoint
+    is deleted afterwards; an error raised by ``fn`` stops the query
+    and reaches the caller as a ``StreamingQueryException``."""
+    _drain(stream.writeStream.foreachBatch(fn), "foreach_ckpt_")
 
 
 def archive_sink(
@@ -165,7 +192,6 @@ def run_to_memory(
     result: DataFrame,
     name: str,
     output_mode: str = "complete",
-    checkpoint_location: str | None = None,
     state_partitions: int | None = 4,
 ) -> DataFrame:
     """Execute a streaming aggregation to completion into an in-memory
@@ -183,37 +209,22 @@ def run_to_memory(
     deployment would do — state partitioning is fixed at first
     checkpoint, so size it for peak key cardinality there).
 
-    The checkpoint defaults to :func:`harness_checkpoint_dir` (RAM-
-    backed, deleted after the replay). Pass ``checkpoint_location``
-    explicitly to keep ownership of the directory — required for
-    stateful Python operators (applyInPandasWithState), where Spark's
-    auto-created ``/tmp/temporary-*`` checkpoint has shown a state-dir
-    creation race under many state partitions.
+    The checkpoint is a :func:`ram_tempdir` owned by this call and
+    deleted after the replay; Spark's own auto-created
+    ``/tmp/temporary-*`` checkpoint has shown a state-dir creation race
+    for stateful Python operators (applyInPandasWithState) under many
+    state partitions.
     """
-    import shutil
-
     spark = result.sparkSession
-    own_ckpt = None
-    if checkpoint_location is None:
-        own_ckpt = checkpoint_location = harness_checkpoint_dir(f"{name}_ckpt_")
-    writer = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_location)
-    )
+    writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = writer.start()
-        q.awaitTermination()
+        _drain(writer, f"{name}_ckpt_")
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if own_ckpt is not None:
-            shutil.rmtree(own_ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -269,8 +280,6 @@ def compact_archive_partition(
     invocation (the dot-backup is restored before compacting).
     Returns the number of data files after compaction.
     """
-    import shutil
-
     part_dir = os.path.join(root, f"dt={dt}")
     src = os.path.join(part_dir, f"topic={topic}")
     # dot-prefixed siblings: invisible to partition discovery, so a

@@ -1,14 +1,24 @@
-"""K1 Kafka message shape + T8 progress listener."""
+"""K1 Kafka message shape, T8 progress listener, the bounded
+foreachBatch runner and archive compaction."""
 
 from __future__ import annotations
 
 import json
+import os
+import tempfile
 import time
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from iheardai_data_pipeline_spark.streaming import sinks
 from iheardai_data_pipeline_spark.streaming.monitoring import ProgressMonitor
-from iheardai_data_pipeline_spark.streaming.sinks import kafka_message_frame
+from iheardai_data_pipeline_spark.streaming.readers import read_file_stream
+from iheardai_data_pipeline_spark.streaming.sinks import (
+    kafka_message_frame,
+    run_foreach_batch,
+)
 
 
 def test_kafka_message_frame_shape(spark):
@@ -120,3 +130,70 @@ def test_compaction_crash_repair(spark, tmp_path):
     n = compact_archive_partition(spark, root, "2024-01-01", "click")
     assert n == 1
     assert sorted(r["id"] for r in spark.read.parquet(part).collect()) == list(range(15))
+
+
+def _three_file_stream(spark, tmp_path):
+    """A JSON file stream of three files, read one file per micro-batch."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        (src / f"part-{i}.json").write_text(
+            "".join(json.dumps({"id": 10 * i + j}) + "\n" for j in range(2))
+        )
+    return read_file_stream(
+        spark, str(src), "id bigint", fmt="json", max_files_per_trigger=1
+    )
+
+
+def _recorded_checkpoints(monkeypatch):
+    """The checkpoint dirs that run_foreach_batch makes from here on."""
+    made = []
+    real = sinks.ram_tempdir
+
+    def record(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(sinks, "ram_tempdir", record)
+    return made
+
+
+def test_run_foreach_batch_sees_every_batch(spark, tmp_path, monkeypatch):
+    made = _recorded_checkpoints(monkeypatch)
+    seen = []
+    run_foreach_batch(
+        _three_file_stream(spark, tmp_path),
+        lambda batch, batch_id: seen.append(
+            (batch_id, sorted(r["id"] for r in batch.collect()))
+        ),
+    )
+    assert [batch_id for batch_id, _ in seen] == [0, 1, 2]
+    assert sorted(i for _, ids in seen for i in ids) == [0, 1, 10, 11, 20, 21]
+    assert len(made) == 1 and not os.path.exists(made[0])
+
+
+def test_run_foreach_batch_failure_reaches_caller(spark, tmp_path, monkeypatch):
+    made = _recorded_checkpoints(monkeypatch)
+
+    def fail(batch, batch_id):
+        raise ValueError("batch rejected")
+
+    with pytest.raises(StreamingQueryException, match="batch rejected"):
+        run_foreach_batch(_three_file_stream(spark, tmp_path), fail)
+    assert len(made) == 1 and not os.path.exists(made[0])
+
+
+@pytest.mark.parametrize(
+    "name", ["t9_stream_ingest_dedup", "t12_stream_ingest_neardup"]
+)
+def test_foreach_entries_delete_their_temp_root(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """The entry's result is pinned before its temp root goes, so
+    collecting it leaves nothing under the temp dir."""
+    from iheardai_data_pipeline_spark.plans.catalog import CATALOG, _ensure_loaded
+
+    _ensure_loaded()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert CATALOG[name].fn(spark, sf_dir).collect()
+    assert os.listdir(tmp_path) == []

@@ -15,10 +15,7 @@ Steps (each timed, each with an unambiguous PASS/FAIL):
   3. full-catalog oracle sweep at sf0.1 (sf0.01 with --fast)
   4. bench.py — must exit 0 and print one JSON line with the driver's
      keys (this alone would have caught the round-8 registration bug)
-  5. phase timings — tools/phase_timings.py regenerates
-     docs/PHASE_TIMINGS.md (the build/serve split for the index
-     entries, so a serving regression can't hide in bootstrap noise)
-  6. docs gate — tools/regen_docs.py --round N
+  5. docs gate — tools/regen_docs.py --round N
 
 Every step's FULL stdout+stderr is teed to
 /tmp/gauntlet_r{N}_{step}.log (VERDICT r11 #2: the round-11 sweep
@@ -105,7 +102,7 @@ def main() -> int:
             log("integrity"),
         )
     )
-    print(f"[1/6] integrity: {'PASS' if results[-1][1] else 'FAIL'}")
+    print(f"[1/5] integrity: {'PASS' if results[-1][1] else 'FAIL'}")
 
     def pytest_check(p):
         if p.returncode == 0:
@@ -122,7 +119,7 @@ def main() -> int:
             log("pytest"),
         )
     )
-    print(f"[2/6] pytest: {'PASS' if results[-1][1] else 'FAIL'}")
+    print(f"[2/5] pytest: {'PASS' if results[-1][1] else 'FAIL'}")
 
     sf = "/root/testdata/sf0.01" if args.fast else "/root/testdata/sf0.1"
 
@@ -150,7 +147,7 @@ def main() -> int:
         run("sweep", [py, "tools/sweep_oracle.py", sf], sweep_check,
             log("sweep"))
     )
-    print(f"[3/6] sweep@{os.path.basename(sf)}: "
+    print(f"[3/5] sweep@{os.path.basename(sf)}: "
           f"{'PASS' if results[-1][1] else 'FAIL'}")
 
     def bench_check(p):
@@ -169,19 +166,7 @@ def main() -> int:
         )
 
     results.append(run("bench", [py, "bench.py"], bench_check, log("bench")))
-    print(f"[4/6] bench: {'PASS' if results[-1][1] else 'FAIL'}")
-
-    results.append(
-        run(
-            "phases",
-            [py, "tools/phase_timings.py"]
-            + (["--sf-dir", "/root/testdata/sf0.01", "--repeats", "1"]
-               if args.fast else []),
-            lambda p: (p.returncode == 0, tail(p, 1)),
-            log("phases"),
-        )
-    )
-    print(f"[5/6] phase timings: {'PASS' if results[-1][1] else 'FAIL'}")
+    print(f"[4/5] bench: {'PASS' if results[-1][1] else 'FAIL'}")
 
     results.append(
         run(
@@ -191,7 +176,7 @@ def main() -> int:
             log("docs"),
         )
     )
-    print(f"[6/6] docs: {'PASS' if results[-1][1] else 'FAIL'}")
+    print(f"[5/5] docs: {'PASS' if results[-1][1] else 'FAIL'}")
 
     print("\n== gauntlet ==")
     failed = 0
